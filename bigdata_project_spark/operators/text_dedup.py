@@ -2,18 +2,30 @@
 training-data-pipeline surface (BASELINE.json north star; absent from the
 reference, which only ever needed row-level MERGE dedup).
 
-Four families, each a registered query with a DuckDB oracle:
+Exact dedup is one hash aggregate (md5 of normalized text → min doc_id
+per hash). Every NEAR-dup family finds its candidate pairs through one
+shared pipeline:
 
-- **exact**        : md5 of normalized text → keep min doc_id per hash.
+    blocking key → :func:`blocking_melt` → :func:`skew_bounded_self_pairs`
+                 → per-site verify → the caller's ``.distinct()``
+
+The families differ only in the blocking key and the verify:
+
 - **MinHash+LSH**  : word-3-gram shingles → k=12 portable min-hashes →
-                     4 bands × 3 rows → band-bucket self-join for candidate
-                     pairs → verified Jaccard filter.
-- **SimHash**      : 32-bit simhash over token hashes; near-pairs found
-                     by 8-bit band blocking + Hamming ≤ 3 verification.
-- **n-gram Jaccard**: exact Jaccard over shingles with PPJoin prefix
-                     filtering, so candidate generation is bounded; the
-                     unfiltered all-pairs form (``_jaccard_pairs``) stays
-                     as the tests/oracle quality baseline.
+                     4 bands × 3 rows (the recall sweep melts all six
+                     geometries at once, geometry id in the key) →
+                     verified set-Jaccard (``_set_jaccard``).
+- **SimHash**      : 32-bit simhash (:func:`simhash_column`) → one row
+                     per 8-bit band → Hamming ≤ 3 verify in the join.
+- **fuzzy edit**   : the same simhash → one row per PAIR of bands →
+                     banded Levenshtein ≤ 5 on 40-char prefixes.
+- **n-gram Jaccard**: PPJoin prefix shingles as the key → count-Jaccard
+                     verify (``_count_jaccard``); the unfiltered all-pairs
+                     form (``_jaccard_pairs``) stays as the tests/oracle
+                     quality baseline.
+
+The span, LCP and paragraph profiles below share no candidate join; the
+incremental screen reuses the LSH melt against a stored band table.
 
 Portability: hashes derive from md5 hex strings (identical in both
 engines); min-hashes are a universal-hash family (a·v+b mod P) over the
@@ -133,15 +145,14 @@ _SHINGLES_SQL = """
 
 # -------------------------------------------------------- n-gram Jaccard --
 
-def _jaccard_pairs(sh: DataFrame) -> DataFrame:
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+def _shingle_counts(sh: DataFrame) -> DataFrame:
+    return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
+
+
+def _count_jaccard(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """Jaccard tail, count form: (doc_a, doc_b, n_common) joined to both
+    sides' shingle counts, |A∩B| / (|A| + |B| - |A∩B|)."""
+    cnt = _shingle_counts(sh)
     ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("c").alias("ca"))
     cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("c").alias("cb"))
     return (
@@ -152,6 +163,28 @@ def _jaccard_pairs(sh: DataFrame) -> DataFrame:
             F.col("n_common") / (F.col("ca") + F.col("cb") - F.col("n_common")),
         )
     )
+
+
+def _set_jaccard(pairs: DataFrame, sh_a: str, sh_b: str) -> DataFrame:
+    """Jaccard tail, set form: ``pairs`` already carries both sides'
+    shingle arrays; adds n_common and jaccard."""
+    return pairs.withColumn(
+        "n_common", F.size(F.array_intersect(sh_a, sh_b))
+    ).withColumn(
+        "jaccard",
+        F.col("n_common") / (F.size(sh_a) + F.size(sh_b) - F.col("n_common")),
+    )
+
+
+def _jaccard_pairs(sh: DataFrame) -> DataFrame:
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return _count_jaccard(inter, sh)
 
 
 # Jaccard threshold as an exact rational (9/10): prefix lengths must be
@@ -175,8 +208,10 @@ _J_NUM, _J_DEN = 9, 10
 #:
 #: Default is SCALE-DEPENDENT (parameterized per the round rules, env
 #: overridable both ways): ON (1024) under any cluster master — every
-#: production deployment gets the bound without hand-configuration —
-#: and OFF under local[*] masters, where (a) the fixture headroom is
+#: production deployment gets the bound without hand-configuration;
+#: ``local-cluster[...]`` has separate executor JVMs and counts as a
+#: cluster — and OFF under ``local`` / ``local[...]`` masters, where
+#: (a) the fixture headroom is
 #: probe-verified (max observed bucket at sf0.1 is 20 rows —
 #: tools/lsh_bucket_stats_r17.json: recall melt 12×1 geometry; 7 for the
 #: registered 4×3, 9 for the prefix buckets — 51× under the threshold,
@@ -195,9 +230,35 @@ _LSH_SALT_DEFAULT = 1024
 def _salt_threshold(df: DataFrame) -> int:
     env = os.environ.get(_LSH_SALT_ENV)
     if env is not None:
-        return int(env)
+        try:
+            t = int(env)
+        except ValueError:
+            raise ValueError(f"{_LSH_SALT_ENV}={env!r} is not an integer") from None
+        if t < 0:
+            raise ValueError(f"{_LSH_SALT_ENV}={env!r} must be >= 0")
+        return t
     master = df.sparkSession.conf.get("spark.master", "") or ""
-    return 0 if master.startswith("local") else _LSH_SALT_DEFAULT
+    local = master == "local" or master.startswith("local[")
+    return 0 if local else _LSH_SALT_DEFAULT
+
+
+def blocking_melt(df: DataFrame, keep: list[str], entries: list[dict]) -> DataFrame:
+    """The one blocking-key melt: each row of ``df`` becomes one row per
+    entry, carrying ``keep`` plus the entry's fields. An entry maps field
+    name → literal (band / geometry id) or Column (the band value); all
+    entries share field names and order. Per-row explode of a struct
+    array — no shuffle."""
+    structs = [
+        F.struct(*[F.lit(v).alias(k) for k, v in e.items()]) for e in entries
+    ]
+    return df.select(*keep, F.explode(F.array(*structs)).alias("bs")).select(
+        *keep, *[F.col(f"bs.{k}").alias(k) for k in entries[0]]
+    )
+
+
+#: working columns of the salted self-join; a melt carrying any of them
+#: would be silently overwritten
+_SALT_COLS = ("__bn", "__ns_hot", "__ns", "__salt")
 
 
 def skew_bounded_self_pairs(
@@ -244,42 +305,40 @@ def skew_bounded_self_pairs(
     simhash pair verify needs both sides' hashes). Callers apply their
     own ``.distinct()`` (pairs can repeat ACROSS buckets, exactly as
     with the plain self-join).
+
+    ``melt`` must be deterministic: both join sides re-evaluate it (on
+    the salted path, both re-evaluate ``sized``), so a melt that draws
+    differently per evaluation would pair rows that never coexisted.
+    It must not carry the reserved working columns ``_SALT_COLS``
+    (ValueError).
     """
+    clash = [c for c in _SALT_COLS if c in melt.columns]
+    if clash:
+        raise ValueError(f"melt has reserved salt column(s) {clash}")
     t = _salt_threshold(melt) if threshold is None else threshold
+    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     if t <= 0:
         a, b = melt.alias("a"), melt.alias("b")
-        cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-        for k in reversed(keys):
-            cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
-        if extra_cond is not None:
-            cond = cond & extra_cond
-        return a.join(b, cond).select(
-            *[F.col(f"a.{c}").alias(c) for c in carry],
-            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry_b],
-            F.col(f"a.{id_col}").alias(out_a),
-            F.col(f"b.{id_col}").alias(out_b),
+    else:
+        hot = (
+            melt.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("__bn"))
+            .filter(F.col("__bn") > t)
+            .select(
+                *keys,
+                F.ceil(F.col("__bn") / F.lit(t)).cast("int").alias("__ns_hot"),
+            )
         )
-    hot = (
-        melt.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") > t)
-        .select(
-            *keys,
-            F.ceil(F.col("__bn") / F.lit(t)).cast("int").alias("__ns_hot"),
+        sized = melt.join(hot, list(keys), "left").withColumn(
+            "__ns", F.coalesce(F.col("__ns_hot"), F.lit(1))
         )
-    )
-    sized = melt.join(hot, list(keys), "left").withColumn(
-        "__ns", F.coalesce(F.col("__ns_hot"), F.lit(1))
-    )
-    a = sized.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.col("__ns")).cast("int")
-    ).alias("a")
-    b = sized.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.col("__ns") - 1))
-    ).alias("b")
-    cond = (F.col("a.__salt") == F.col("b.__salt")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    )
+        a = sized.withColumn(
+            "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.col("__ns")).cast("int")
+        ).alias("a")
+        b = sized.withColumn(
+            "__salt", F.explode(F.sequence(F.lit(0), F.col("__ns") - 1))
+        ).alias("b")
+        cond = (F.col("a.__salt") == F.col("b.__salt")) & cond
     for k in reversed(keys):
         cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
     if extra_cond is not None:
@@ -313,7 +372,7 @@ def _prefix_filtered_pairs(
     intersection for surviving candidates — all codegen, no HOFs."""
     from pyspark.sql import Window as W
 
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
+    cnt = _shingle_counts(sh)
     df_freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
     ranked = sh.join(df_freq, "shingle").withColumn(
         "pos",
@@ -358,7 +417,7 @@ def _prefix_filtered_pairs(
     # comparable-length docs (MEASURED: truth pass 7.1 → ~3 s at sf0.1).
     # r17: the self-join runs through the §2.5 skew bound (hot prefix
     # buckets salt-split; no-op at fixture scale — see
-    # _LSH_SALT_THRESHOLD).
+    # _LSH_SALT_ENV).
     cand = skew_bounded_self_pairs(
         prefix,
         ["shingle"],
@@ -375,16 +434,7 @@ def _prefix_filtered_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("c").alias("ca"))
-    cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("c").alias("cb"))
-    return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("ca") + F.col("cb") - F.col("n_common")),
-        )
-    )
+    return _count_jaccard(inter, sh)
 
 
 def query_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,91 +480,6 @@ FROM ({_JACCARD_SQL})
 WHERE jaccard >= 0.9
 """
 
-# -------------------------------------------------------- fuzzy (edit) --
-
-
-def query_dedup_fuzzy_lev(
-    spark: SparkSession, sf_dir: str, bits: int = 32, band_bits: int = 8
-) -> DataFrame:
-    """Edit-distance near-dup pairs over the FULL dup corpus: levenshtein
-    ≤ 5 on 40-char prefixes, blocked on PAIRS of simhash bands — two
-    bands must agree at once (pigeonhole: any pair within
-    simhash-Hamming ≤ 2 shares an exact 2-band key; exact copies share
-    all six).
-
-    Why 2-band and not the simhash_pairs 1-band melt: MEASURED at sf0.1
-    the single-band key (÷256) left 2.9M candidate pairs (hot bucket
-    1358 docs — templated synthetic text clusters simhashes) and 74 s of
-    Levenshtein DP; the 2-band key (÷65536) cuts that to 0.3M (hot
-    bucket 297). The DP is the per-pair scale term, so blocking
-    resolution must grow with corpus size — ``bits``/``band_bits`` is
-    that dial: the default 32/8 (16-bit pair keys) fits sf0.1; pass
-    64/16 (32-bit pair keys, same 4-band pigeonhole bound) for larger
-    corpora. tests/test_text_dedup_blocking.py property-tests that both
-    widths find identical ≤5-edit pairs on the dup fixture. Both
-    engines implement the same classic Levenshtein DP, so the distances
-    are identical integers."""
-    corpus = _corpus_with_dups(spark, sf_dir)
-    # NOTE: no materialization needed for the self-join — both sides hash-
-    # partition on the same band key, so Spark plans a ReusedExchange and
-    # the simhash aggregation runs once (plan-verified; an explicit
-    # localCheckpoint was MEASURED slower at sf0.1)
-    melted = simhash_band_pair_keys(corpus, bits=bits, band_bits=band_bits)
-    # candidates carry ONLY ids through the join+distinct (MEASURED 2.2×
-    # at sf0.1 vs melting the prefixes in: the 40-char strings double the
-    # shuffle width of the hot distinct); prefixes join back afterwards —
-    # a per-doc-keyed join AQE broadcasts at small scale and hash-joins
-    # at large, either way off the candidate join's critical path.
-    # r17 (§2.5): the band-pair self-join routes through
-    # skew_bounded_self_pairs like the other candidate sites — the
-    # docstring's own numbers (hot bucket 297 at sf0.1, growing with
-    # corpus dup mass) are a single-key straggler AQE cannot split.
-    cand = skew_bounded_self_pairs(melted, ["bi", "bj", "ni", "nj"]).distinct()
-    pre = corpus.select("doc_id", F.substring("text", 1, 40).alias("prefix"))
-    pa = pre.select(F.col("doc_id").alias("doc_a"), F.col("prefix").alias("prefix_a"))
-    pb = pre.select(F.col("doc_id").alias("doc_b"), F.col("prefix").alias("prefix_b"))
-    return (
-        cand.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        # banded DP: the threshold form fills only the 2k+1 diagonal band
-        # (O(k·n) vs O(n²) cells) and short-circuits on |len_a − len_b| > k,
-        # returning -1 past the threshold — exact distance otherwise, so
-        # `>= 0` ≡ the oracle's `lev <= 5` (MEASURED at sf0.1: the
-        # unbanded DP was 4.1 s over the 269k candidates, banded 0.6 s)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.levenshtein(F.col("prefix_a"), F.col("prefix_b"), 5).alias("lev"),
-        )
-        .filter(F.col("lev") >= 0)
-    )
-
-
-# assembled at the bottom of the module: needs _SIMHASH_SQL_T and the
-# band-pair struct list from the simhash section below.
-_ORACLE_DEDUP_FUZZY_LEV_T = f"""
-WITH corpus AS ({_CORPUS_SQL}),
-sims AS ({{simhash_corpus}}),
-melted AS (
-    SELECT doc_id, bs.bi, bs.bj, bs.ni, bs.nj
-    FROM sims, UNNEST([{{band_pair_nibs}}]) AS t(bs)
-),
-pre AS (SELECT doc_id, substring(text, 1, 40) AS prefix FROM corpus),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM melted a JOIN melted b
-      ON a.bi = b.bi AND a.bj = b.bj AND a.ni = b.ni AND a.nj = b.nj
-     AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, levenshtein(pa.prefix, pb.prefix) AS lev
-FROM cand
-JOIN pre pa ON pa.doc_id = doc_a
-JOIN pre pb ON pb.doc_id = doc_b
-WHERE abs(length(pa.prefix) - length(pb.prefix)) <= 5
-  AND levenshtein(pa.prefix, pb.prefix) <= 5
-"""
-
-
 # --------------------------------------------------------- MinHash + LSH --
 
 N_HASHES = 12
@@ -533,8 +498,6 @@ _MH_B = [7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43, 47]
 
 def minhash_signatures(sh: DataFrame) -> DataFrame:
     """k universal-hash min-hashes per doc in ONE aggregate pass."""
-    from bigdata_project_spark.functions.text import hex32_to_int
-
     v = hex32_to_int(F.md5(F.encode(F.col("shingle"), "UTF-8")))
     with_v = sh.withColumn("v", v)
     aggs = [
@@ -544,64 +507,31 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
     return with_v.groupBy("doc_id").agg(*aggs)
 
 
-def _band_melt(
-    sigs: DataFrame,
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> DataFrame:
-    """(doc_id, band, sig) melt of a signature frame — the LSH bucket
-    key rows both the self-join (within-corpus pairs) and the
-    asymmetric join (incremental new-vs-existing) bucket on."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"mh{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ],
-                ).alias("sig"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sigs.select("doc_id", F.explode(bands).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
+def _lsh_bands(n_bands: int, rows_per_band: int) -> list[dict]:
+    """Blocking entries of one banding geometry: band ``b`` keys on the
+    '|'-joined min-hashes ``mh{b·r} .. mh{b·r + r - 1}``."""
+    return [
+        {
+            "band": b,
+            "sig": F.concat_ws(
+                "|", *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
+            ),
+        }
+        for b in range(n_bands)
+    ]
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> DataFrame:
-    """Band the signatures and bucket: candidates agree on ≥1 band.
-    Banding geometry is parameterizable for the recall sweep; the
-    registered near-dup default stays 4×3.
-
-    r16 settled: the melt self-join, unpinned, is the right form. Two
-    alternatives were measured and REVERTED this round: (a) a bucket
-    groupBy + collect_list + in-bucket pair explode — big buckets copy
-    the whole id array once per member before the second explode
-    (O(n²) array cells per bucket, measured 2-3× slower at sf0.1 under
-    the recall sweep's degenerate geometry) while the hash-probe join
-    streams the same pairs; (b) a lazy localCheckpoint pin on the
-    signature table — the materialization round-trip costs more than
-    the recompute it saves (interleaved A/B at sf0.1, and still true
-    with broadcast disabled, i.e. under the SMJ plan a 100 TB corpus
-    gets, where runtime stage reuse single-evaluates the signature
-    subtree anyway)."""
-    melted = _band_melt(sigs, n_bands, rows_per_band)
-    # r17: routed through the §2.5 skew bound (hot (band, sig) buckets
-    # salt-split; no-op at fixture scale — see _LSH_SALT_THRESHOLD).
-    return skew_bounded_self_pairs(melted, ["band", "sig"]).distinct()
+def _band_melt(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, sig) melt of a signature frame at the registered
+    4×3 geometry — the LSH bucket key rows both the self-join
+    (within-corpus pairs) and the asymmetric join (incremental
+    new-vs-existing) bucket on."""
+    return blocking_melt(sigs, ["doc_id"], _lsh_bands(N_BANDS, ROWS_PER_BAND))
 
 
 def lsh_verified_pairs(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
-    """(doc_a, doc_b, jaccard) near-dup pairs: LSH candidates verified by
-    true Jaccard ≥ ``threshold``.
+    """(doc_a, doc_b, jaccard) near-dup pairs: LSH candidates (pairs
+    agreeing on ≥1 band) verified by true Jaccard ≥ ``threshold``.
 
     Verification joins the per-doc shingle *sets* onto the (few) candidate
     pairs and intersects them there — never the all-pairs shingle join the
@@ -622,20 +552,21 @@ def lsh_verified_pairs(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
     # single-evaluates the duplicated exchange subtrees under SMJ while
     # each pin adds a full materialization round-trip.
     sh = shingle_rows(docs)
-    cands = lsh_candidate_pairs(minhash_signatures(sh))
+    # r16 settled: the melt self-join, unpinned, is the right form. A
+    # bucket groupBy + collect_list + in-bucket pair explode was measured
+    # and REVERTED — big buckets copy the whole id array once per member
+    # before the second explode (O(n²) array cells per bucket, 2-3×
+    # slower at sf0.1 under the recall sweep's degenerate geometry)
+    # while the hash-probe join streams the same pairs. r17: routed
+    # through the §2.5 skew bound (hot (band, sig) buckets salt-split;
+    # no-op at fixture scale — see _LSH_SALT_ENV).
+    cands = skew_bounded_self_pairs(
+        _band_melt(minhash_signatures(sh)), ["band", "sig"]
+    ).distinct()
     sets = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("shingles"))
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    verified = (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("n_common")),
-        )
-    )
+    verified = _set_jaccard(cands.join(sa, "doc_a").join(sb, "doc_b"), "sh_a", "sh_b")
     return verified.filter(F.col("jaccard") >= threshold).select(
         "doc_a", "doc_b", "jaccard"
     )
@@ -654,13 +585,21 @@ def query_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _mh_cols = ",\n           ".join(
     f"MIN((v * {_MH_A[i]} + {_MH_B[i]}) % {_MH_P}) AS mh{i}" for i in range(N_HASHES)
 )
-_band_rows = ", ".join(
-    "struct_pack(band := {b}, sig := {sig})".format(
-        b=b,
-        sig=" || '|' || ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
+
+
+def _band_structs_sql(nb: int, rpb: int) -> str:
+    """DuckDB twin of :func:`_lsh_bands`: the struct list one banding
+    geometry UNNESTs into (band, sig) rows."""
+    return ", ".join(
+        "struct_pack(band := {b}, sig := {sig})".format(
+            b=b,
+            sig=" || '|' || ".join(f"mh{b * rpb + r}" for r in range(rpb)),
+        )
+        for b in range(nb)
     )
-    for b in range(N_BANDS)
-)
+
+
+_band_rows = _band_structs_sql(N_BANDS, ROWS_PER_BAND)
 
 def lsh_verified_pairs_sql(src: str, threshold: str = "0.9") -> str:
     """DuckDB twin of :func:`lsh_verified_pairs` for an arbitrary relation
@@ -724,26 +663,27 @@ _RECALL_J_NUM, _RECALL_J_DEN = 7, 10
 
 
 def _corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ deterministic NEAR-dup variants (first 40 docs with
-    ≥15 tokens, last 3 tokens dropped, re-keyed +2e6): exact copies
-    (J=1) are recalled by every banding, so the exact-dup corpus used
-    by the other dedup queries cannot separate the configs — these
-    variants land at J ≈ (len-5)/(len-2) ∈ [0.75, 0.97), where the
-    1-(1-J^r)^b curves fan out."""
+    """documents ∪ the deterministic NEAR-dup :func:`_drop3_variants`:
+    exact copies (J=1) are recalled by every banding, so the exact-dup
+    corpus used by the other dedup queries cannot separate the configs
+    — these variants land where the 1-(1-J^r)^b curves fan out."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.unionByName(_drop3_variants(docs))
+
+
+def _drop3_variants(docs: DataFrame) -> DataFrame:
+    """Docs 0..39 with ≥15 tokens, last 3 tokens dropped, re-keyed +2e6
+    — J ≈ (len-5)/(len-2) ∈ [0.75, 0.97) against their originals."""
     t = tokens(F.col("text"))
-    variants = (
+    return (
         docs.filter(F.col("doc_id") < 40)
         .select("doc_id", t.alias("t"))
         .filter(F.size("t") >= 15)
         .select(
             (F.col("doc_id") + 2_000_000).alias("doc_id"),
-            F.concat_ws(
-                " ", F.slice(F.col("t"), 1, F.size("t") - 3)
-            ).alias("text"),
+            F.concat_ws(" ", F.slice(F.col("t"), 1, F.size("t") - 3)).alias("text"),
         )
     )
-    return docs.unionByName(variants)
 
 
 # DuckDB list slice t[1:n] is 1-based inclusive == Spark slice(t, 1, n);
@@ -803,28 +743,14 @@ def query_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one melt across every geometry: cfg (= n_bands, unique per
     # factorization of 12) joins into the bucket key, so one shuffle
     # carries all six candidate generations
-    all_bands = F.array(
-        *[
-            F.struct(
-                F.lit(nb).alias("cfg"),
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"mh{b * rpb + r}")
-                        for r in range(rpb)
-                    ],
-                ).alias("sig"),
-            )
+    melted = blocking_melt(
+        sigs,
+        ["doc_id"],
+        [
+            {"cfg": nb, **band}
             for nb, rpb in MINHASH_RECALL_CONFIGS
-            for b in range(nb)
-        ]
-    )
-    melted = sigs.select("doc_id", F.explode(all_bands).alias("bs")).select(
-        "doc_id",
-        F.col("bs.cfg").alias("cfg"),
-        F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
+            for band in _lsh_bands(nb, rpb)
+        ],
     )
     # r16 settled: melt self-join, unpinned (the signature subtree
     # derives from the eagerly checkpointed `sh`, so a per-side
@@ -886,16 +812,6 @@ def query_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_band_structs(nb: int, rpb: int) -> str:
-    return ", ".join(
-        "struct_pack(band := {b}, sig := {sig})".format(
-            b=b,
-            sig=" || '|' || ".join(f"mh{b * rpb + r}" for r in range(rpb)),
-        )
-        for b in range(nb)
-    )
-
-
 _recall_cfg_blocks = "\nUNION ALL\n".join(
     f"""SELECT CAST({nb} AS BIGINT) AS n_bands,
        CAST({rpb} AS BIGINT) AS rows_per_band,
@@ -905,9 +821,9 @@ _recall_cfg_blocks = "\nUNION ALL\n".join(
 FROM (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM (SELECT doc_id, bs.band AS band, bs.sig AS sig
-          FROM sigs, UNNEST([{_recall_band_structs(nb, rpb)}]) AS u(bs)) a
+          FROM sigs, UNNEST([{_band_structs_sql(nb, rpb)}]) AS u(bs)) a
     JOIN (SELECT doc_id, bs.band AS band, bs.sig AS sig
-          FROM sigs, UNNEST([{_recall_band_structs(nb, rpb)}]) AS u(bs)) b
+          FROM sigs, UNNEST([{_band_structs_sql(nb, rpb)}]) AS u(bs)) b
       ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
 ) c
 LEFT JOIN truth t ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b"""
@@ -1024,161 +940,19 @@ def query_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DEDUP_SIMHASH = _SIMHASH_SQL
 
 
-def simhash_band_melt(sims: DataFrame) -> DataFrame:
-    """(doc_id, simhash, band, nib): one row per 8-bit simhash band — the
-    shared blocking key for simhash near-pairs and fuzzy (edit-distance)
-    dedup. Pure per-row arithmetic, no shuffle."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.floor(F.col("simhash") / (2 ** (8 * b))).cast("bigint").__mod__(256).alias("nib"),
-            )
-            for b in range(4)
-        ]
-    )
-    return sims.select("doc_id", "simhash", F.explode(bands).alias("bs")).select(
-        "doc_id", "simhash", F.col("bs.band").alias("band"), F.col("bs.nib").alias("nib")
-    )
+def _simhash_band(b: int):
+    """8-bit band ``b`` of the ``simhash`` column — integer-lane shift
+    and mask, bit-identical to the oracle's ``CAST(floor(simhash /
+    2^(8b)) AS BIGINT) % 256`` for the non-negative 32-bit simhash, and
+    non-nullable, so the band join needs no null filter."""
+    return F.shiftright(F.col("simhash"), 8 * b).bitwiseAND(F.lit(255))
+
+
+def _simhash_band_sql(b: int) -> str:
+    return f"CAST(floor(simhash / {2 ** (8 * b)}) AS BIGINT) % 256"
 
 
 _BAND_PAIRS = [(i, j) for i in range(4) for j in range(i + 1, 4)]
-
-
-def simhash_band_pair_melt(sims: DataFrame) -> DataFrame:
-    """(doc_id, bi, bj, ni, nj): one row per PAIR of 8-bit simhash bands —
-    a 16-bit blocking key (÷65536 pair-space cut vs the single band's
-    ÷256) that still guarantees a shared bucket for simhash-Hamming ≤ 2
-    (≤2 bit flips corrupt ≤2 of the 4 bands, leaving one clean pair).
-    Pure per-row arithmetic, no shuffle; 6 rows per doc."""
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("bi"),
-                F.lit(j).alias("bj"),
-                (F.floor(F.col("simhash") / (2 ** (8 * i))).cast("bigint") % 256).alias("ni"),
-                (F.floor(F.col("simhash") / (2 ** (8 * j))).cast("bigint") % 256).alias("nj"),
-            )
-            for i, j in _BAND_PAIRS
-        ]
-    )
-    return sims.select("doc_id", F.explode(entries).alias("bs")).select(
-        "doc_id", "bs.bi", "bs.bj", "bs.ni", "bs.nj"
-    )
-
-
-def simhash_band_nibbles(
-    corpus: DataFrame, bits: int = 32, band_bits: int = 8
-) -> DataFrame:
-    """(doc_id, n0..n{nbands-1}): per-band values of a term-frequency-
-    weighted simhash at a parameterized width, assembled straight from
-    the per-bit sign sums — no combined simhash integer, so a 64-bit
-    width never risks BIGINT overflow on bit 63. Extra hash bits come
-    from further 8-char slices of the same md5 hex (engine-portable).
-
-    Scale: explode + ONE hash aggregate (``bits`` conditional sums,
-    combiner-friendly); the aggregate widens with ``bits`` but the
-    shuffle shape is unchanged.
-    """
-    # md5 supplies exactly four 32-bit words — beyond 128 bits the
-    # substring slices would read past the hex and hash to constant 0.
-    # band_bits range is checked FIRST so band_bits=0 raises this
-    # ValueError, not a bare ZeroDivisionError from the modulo
-    if (
-        not 0 < band_bits <= 16
-        or bits % 32
-        or not 32 <= bits <= 128
-        or bits % band_bits
-    ):
-        raise ValueError(f"unsupported simhash geometry {bits}/{band_bits}")
-    nbands = bits // band_bits
-    md5 = F.md5(F.encode(F.col("w"), "UTF-8"))
-    words = corpus.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("w")
-    ).select(
-        "doc_id",
-        *[
-            hex32_to_int(F.substring(md5, 1 + 8 * i, 8)).alias(f"h{i}")
-            for i in range(bits // 32)
-        ],
-    )
-
-    def _bit(j: int):
-        # integer-lane bit extract per WORD row (same win as
-        # simhash_column; the oracle keeps the floor/div form)
-        h = F.col(f"h{j // 32}")
-        return F.shiftright(h, j % 32).bitwiseAND(F.lit(1)) == 1
-
-    bit_sums = words.groupBy("doc_id").agg(
-        *[
-            F.sum(F.when(_bit(j), 1).otherwise(-1)).alias(f"b{j}")
-            for j in range(bits)
-        ]
-    )
-
-    def _nib(b: int):
-        acc = None
-        for t in range(band_bits):
-            term = F.when(
-                F.col(f"b{band_bits * b + t}") > 0, F.lit(2**t)
-            ).otherwise(F.lit(0))
-            acc = term if acc is None else acc + term
-        return acc.cast("bigint")
-
-    return bit_sums.select(
-        "doc_id", *[_nib(b).alias(f"n{b}") for b in range(nbands)]
-    )
-
-
-def simhash_band_pair_keys(
-    corpus: DataFrame, bits: int = 32, band_bits: int = 8
-) -> DataFrame:
-    """(doc_id, bi, bj, ni, nj): band-PAIR blocking keys for a term-
-    frequency-weighted simhash at a parameterized width — the scale dial
-    the fuzzy-lev docstring promises: 32-bit hash / 8-bit bands (default,
-    matches ``ORACLE_DEDUP_FUZZY_LEV``) for ~100k-doc corpora, 64-bit /
-    16-bit bands for larger ones (÷2^32 pair-key space instead of
-    ÷2^16). Both widths keep 4 bands, so the pigeonhole guarantee has
-    the same shape — a pair within Hamming ≤ 2 OF THAT WIDTH'S hash
-    shares ≥1 exact 2-band key. The guarantees are width-relative, not
-    identical: 64-bit Hamming ≤ 2 implies 32-bit (low-word) Hamming ≤ 2
-    but not vice versa, so on such pairs both widths agree, while the
-    narrow key space additionally collides a few unrelated docs per
-    2^16 keys — bonus candidates the verify step keeps honest
-    (property-tested in tests/test_text_dedup_blocking.py).
-
-    Built on :func:`simhash_band_nibbles`; at the 32/8 default the keys
-    are bit-identical to ``simhash_band_pair_melt(simhash_column(c))``
-    (also property-tested), so ``ORACLE_DEDUP_FUZZY_LEV`` is unchanged.
-    The melt is per-row — same shuffle shape at either width; only the
-    aggregate width and key selectivity change.
-    """
-    # nibbles validates the geometry (incl. band_bits > 0) before any
-    # division here
-    nibs = simhash_band_nibbles(corpus, bits=bits, band_bits=band_bits)
-    nbands = bits // band_bits
-    # the ≤2-flip pigeonhole needs ≥2 clean bands to form one clean
-    # pair, i.e. ≥4 bands — e.g. 32/16 (2 bands) would silently drop
-    # guaranteed near-dup pairs
-    if nbands < 4:
-        raise ValueError(
-            f"band-pair blocking needs >= 4 bands, got {nbands} ({bits}/{band_bits})"
-        )
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("bi"),
-                F.lit(j).alias("bj"),
-                F.col(f"n{i}").alias("ni"),
-                F.col(f"n{j}").alias("nj"),
-            )
-            for i in range(nbands)
-            for j in range(i + 1, nbands)
-        ]
-    )
-    return nibs.select("doc_id", F.explode(entries).alias("bs")).select(
-        "doc_id", "bs.bi", "bs.bj", "bs.ni", "bs.nj"
-    )
 
 
 def query_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1208,7 +982,11 @@ def query_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 32-bit-sum aggregate TWICE (2 scans, no exchange reuse — verified
     # in the executed plan); at corpus scale that is two full tokenize
     # passes vs storing ~12 bytes/doc
-    melted = simhash_band_melt(simhash_column(docs).localCheckpoint(eager=False))
+    melted = blocking_melt(
+        simhash_column(docs).localCheckpoint(eager=False),
+        ["doc_id", "simhash"],
+        [{"band": b, "nib": _simhash_band(b)} for b in range(4)],
+    )
     hamming_ab = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     pairs = skew_bounded_self_pairs(
         melted,
@@ -1229,8 +1007,7 @@ def query_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _band_nibs = ", ".join(
-    f"struct_pack(band := {b}, nib := CAST(floor(simhash / {2 ** (8 * b)}) AS BIGINT) % 256)"
-    for b in range(4)
+    f"struct_pack(band := {b}, nib := {_simhash_band_sql(b)})" for b in range(4)
 )
 
 ORACLE_DEDUP_SIMHASH_PAIRS = f"""
@@ -1250,21 +1027,94 @@ FROM pairs
 WHERE bit_count(xor(sim_a, sim_b)) <= 3
 """
 
-# Fuzzy-lev oracle assembly (template lives in the fuzzy section above;
-# the simhash SQL twins it needs are defined in this section).
-_band_pair_nibs = ", ".join(
-    "struct_pack(bi := {i}, bj := {j}, "
-    "ni := CAST(floor(simhash / {pi}) AS BIGINT) % 256, "
-    "nj := CAST(floor(simhash / {pj}) AS BIGINT) % 256)".format(
-        i=i, j=j, pi=2 ** (8 * i), pj=2 ** (8 * j)
+# -------------------------------------------------------- fuzzy (edit) --
+
+
+def query_dedup_fuzzy_lev(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance near-dup pairs over the FULL dup corpus: levenshtein
+    ≤ 5 on 40-char prefixes, blocked on PAIRS of the 8-bit bands of
+    :func:`simhash_column` — two bands must agree at once (pigeonhole:
+    ≤ 2 flipped bits corrupt ≤ 2 of the 4 bands, so any pair within
+    simhash-Hamming ≤ 2 shares an exact 2-band key; exact copies share
+    all six).
+
+    Why 2-band and not the simhash_pairs 1-band melt: MEASURED at sf0.1
+    the single-band key (÷256) left 2.9M candidate pairs (hot bucket
+    1358 docs — templated synthetic text clusters simhashes) and 74 s of
+    Levenshtein DP; the 2-band key (÷65536) cuts that to 0.3M (hot
+    bucket 297). The DP is the per-pair scale term; hot buckets past that
+    are the skew bound's job (below). Both engines implement the same
+    classic Levenshtein DP, so the distances are identical integers."""
+    corpus = _corpus_with_dups(spark, sf_dir)
+    # NOTE: no materialization needed for the self-join — both sides hash-
+    # partition on the same band key, so Spark plans a ReusedExchange and
+    # the simhash aggregation runs once (plan-verified; an explicit
+    # localCheckpoint was MEASURED slower at sf0.1)
+    melted = blocking_melt(
+        simhash_column(corpus),
+        ["doc_id"],
+        [
+            {"bi": i, "bj": j, "ni": _simhash_band(i), "nj": _simhash_band(j)}
+            for i, j in _BAND_PAIRS
+        ],
     )
+    # candidates carry ONLY ids through the join+distinct (MEASURED 2.2×
+    # at sf0.1 vs melting the prefixes in: the 40-char strings double the
+    # shuffle width of the hot distinct); prefixes join back afterwards —
+    # a per-doc-keyed join AQE broadcasts at small scale and hash-joins
+    # at large, either way off the candidate join's critical path.
+    # r17 (§2.5): the band-pair self-join routes through
+    # skew_bounded_self_pairs like the other candidate sites — the
+    # docstring's own numbers (hot bucket 297 at sf0.1, growing with
+    # corpus dup mass) are a single-key straggler AQE cannot split.
+    cand = skew_bounded_self_pairs(melted, ["bi", "bj", "ni", "nj"]).distinct()
+    pre = corpus.select("doc_id", F.substring("text", 1, 40).alias("prefix"))
+    pa = pre.select(F.col("doc_id").alias("doc_a"), F.col("prefix").alias("prefix_a"))
+    pb = pre.select(F.col("doc_id").alias("doc_b"), F.col("prefix").alias("prefix_b"))
+    return (
+        cand.join(pa, "doc_a")
+        .join(pb, "doc_b")
+        # banded DP: the threshold form fills only the 2k+1 diagonal band
+        # (O(k·n) vs O(n²) cells) and short-circuits on |len_a − len_b| > k,
+        # returning -1 past the threshold — exact distance otherwise, so
+        # `>= 0` ≡ the oracle's `lev <= 5` (MEASURED at sf0.1: the
+        # unbanded DP was 4.1 s over the 269k candidates, banded 0.6 s)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.levenshtein(F.col("prefix_a"), F.col("prefix_b"), 5).alias("lev"),
+        )
+        .filter(F.col("lev") >= 0)
+    )
+
+
+_band_pair_nibs = ", ".join(
+    f"struct_pack(bi := {i}, bj := {j}, "
+    f"ni := {_simhash_band_sql(i)}, nj := {_simhash_band_sql(j)})"
     for i, j in _BAND_PAIRS
 )
 
-ORACLE_DEDUP_FUZZY_LEV = _ORACLE_DEDUP_FUZZY_LEV_T.format(
-    simhash_corpus=_SIMHASH_SQL_T.format(src="corpus"),
-    band_pair_nibs=_band_pair_nibs,
+ORACLE_DEDUP_FUZZY_LEV = f"""
+WITH corpus AS ({_CORPUS_SQL}),
+sims AS ({_SIMHASH_SQL_T.format(src="corpus")}),
+melted AS (
+    SELECT doc_id, bs.bi, bs.bj, bs.ni, bs.nj
+    FROM sims, UNNEST([{_band_pair_nibs}]) AS t(bs)
+),
+pre AS (SELECT doc_id, substring(text, 1, 40) AS prefix FROM corpus),
+cand AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM melted a JOIN melted b
+      ON a.bi = b.bi AND a.bj = b.bj AND a.ni = b.ni AND a.nj = b.nj
+     AND a.doc_id < b.doc_id
 )
+SELECT doc_a, doc_b, levenshtein(pa.prefix, pb.prefix) AS lev
+FROM cand
+JOIN pre pa ON pa.doc_id = doc_a
+JOIN pre pb ON pb.doc_id = doc_b
+WHERE abs(length(pa.prefix) - length(pb.prefix)) <= 5
+  AND levenshtein(pa.prefix, pb.prefix) <= 5
+"""
 
 
 # ----------------------------------------------- paragraph-level dedup --
@@ -1343,6 +1193,22 @@ GROUP BY doc_id
 SPAN_W = 8
 
 
+def _window_hashes(toks: DataFrame, w: int, name: str) -> DataFrame:
+    """(doc_id, pos, ``name``): md5 of every ``w``-token window of
+    ``toks`` (doc_id, t), ``pos`` 1-based. One HOF projection per doc, no
+    shuffle. Callers keep only docs with size(t) >= w: for a shorter
+    doc Spark's sequence() counts DOWN instead of coming back empty."""
+    return toks.select(
+        "doc_id",
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(1, size(t) - {w} + 1),"
+                f" i -> md5(encode(array_join(slice(t, i, {w}), ' '), 'UTF-8')))"
+            )
+        ).alias("pos0", name),
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), name)
+
+
 def query_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplication profile (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better" signal):
@@ -1370,16 +1236,7 @@ def query_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("t") >= SPAN_W
     )
     wins = (
-        toks.select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, size(t) - {SPAN_W} + 1),"
-                    f" i -> md5(encode(array_join(slice(t, i, {SPAN_W}), ' '), 'UTF-8')))"
-                )
-            ).alias("pos0", "gh"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gh")
+        _window_hashes(toks, SPAN_W, "gh")
         # consumed twice (occurrence count + flag join): truncate lineage
         # so the tokenize+window explode runs once, as in shingle_rows
         .localCheckpoint(eager=False)
@@ -1484,15 +1341,7 @@ def query_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode("t").alias("pos0", "tok")
     ).select("doc_id", (F.col("pos0") + 1).alias("p"), "tok")
 
-    wins = toks.filter(F.size("t") >= SPAN_W).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, size(t) - {SPAN_W} + 1),"
-                f" i -> md5(encode(array_join(slice(t, i, {SPAN_W}), ' '), 'UTF-8')))"
-            )
-        ).alias("pos0", "gh"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "gh")
+    wins = _window_hashes(toks.filter(F.size("t") >= SPAN_W), SPAN_W, "gh")
 
     w = Window.partitionBy("gh").orderBy("doc_id", "pos")
     repeats = wins.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") > 1)
@@ -1631,17 +1480,8 @@ def lcp_profile(corpus: DataFrame) -> DataFrame:
     # melt multiplies the checkpoint by doc length (measured 2-4x the
     # whole query); candidates re-join it per doc below instead.
     base = (
-        toks.filter(F.size("t") >= SA_T)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, size(t) - {SA_T} + 1),"
-                    f" i -> md5(encode(array_join(slice(t, i, {SA_T}), ' '), 'UTF-8')))"
-                )
-            ).alias("pos0", "ph"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).cast("bigint").alias("pos"), "ph")
+        _window_hashes(toks.filter(F.size("t") >= SA_T), SA_T, "ph")
+        .withColumn("pos", F.col("pos").cast("bigint"))
         # consumed twice (occurrence count + flag join): truncate lineage
         # so the tokenize + window build runs once
         .localCheckpoint(eager=False)
@@ -1764,20 +1604,10 @@ def _incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     their originals) plus EXACT re-submissions of docs 40..59 — the
     at-least-once-delivery case."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    t = tokens(F.col("text"))
-    variants = (
-        docs.filter(F.col("doc_id") < 40)
-        .select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= 15)
-        .select(
-            (F.col("doc_id") + 2_000_000).alias("doc_id"),
-            F.concat_ws(" ", F.slice(F.col("t"), 1, F.size("t") - 3)).alias("text"),
-        )
-    )
     exact = docs.filter(
         (F.col("doc_id") >= _INCR_EXACT_LO) & (F.col("doc_id") < _INCR_EXACT_HI)
     ).select((F.col("doc_id") + 3_000_000).alias("doc_id"), "text")
-    return variants.unionByName(exact)
+    return _drop3_variants(docs).unionByName(exact)
 
 
 _INCR_BATCH_SQL = f"""
@@ -1815,6 +1645,19 @@ def _with_hash_prefix(df: DataFrame) -> DataFrame:
     return df.withColumn("hp", F.substring("content_hash", 1, _HP_CHARS))
 
 
+def _exact_hashes(docs: DataFrame) -> DataFrame:
+    """(content_hash, exact_match = lowest doc_id with that hash): the
+    hash-table rows of the signature store."""
+    return (
+        docs.select(
+            content_hash(F.col("text")).alias("content_hash"),
+            F.col("doc_id").alias("ex_id"),
+        )
+        .groupBy("content_hash")
+        .agg(F.min("ex_id").alias("exact_match"))
+    )
+
+
 def build_sig_store(
     spark: SparkSession,
     corpus: DataFrame,
@@ -1843,27 +1686,15 @@ def build_sig_store(
         replace_table,
     )
 
-    ex_hash = (
-        corpus.select(
-            content_hash(F.col("text")).alias("content_hash"),
-            F.col("doc_id").alias("ex_id"),
-        )
-        .groupBy("content_hash")
-        .agg(F.min("ex_id").alias("exact_match"))
-    )
-    if partition_by_hash_prefix:
-        drop_table_and_orphan_location(spark, hash_t)
-        replace_table(_with_hash_prefix(ex_hash), hash_t, partition_by=["hp"])
-        ex_melt = _band_melt(minhash_signatures(shingle_rows(corpus)))
-        drop_table_and_orphan_location(spark, band_t)
-        replace_table(ex_melt.coalesce(4), band_t)
-        return
+    ex_hash = _exact_hashes(corpus)
     ex_melt = _band_melt(minhash_signatures(shingle_rows(corpus)))
-    for t, df in ((hash_t, ex_hash), (band_t, ex_melt)):
+    # flat tables: few small files — the store is read whole per batch
+    # screen, so scan cost is file-open count, not size
+    hp = ["hp"] if partition_by_hash_prefix else None
+    hash_df = _with_hash_prefix(ex_hash) if hp else ex_hash.coalesce(4)
+    for t, df, parts in ((hash_t, hash_df, hp), (band_t, ex_melt.coalesce(4), None)):
         drop_table_and_orphan_location(spark, t)
-        # few small files: the store is read whole per batch
-        # screen, so scan cost is file-open count, not size
-        replace_table(df.coalesce(4), t)
+        replace_table(df, t, partition_by=parts)
 
 
 def append_batch_to_store(
@@ -1890,14 +1721,7 @@ def append_batch_to_store(
     file size — the knob, not the semantics, is what flips at 100 TB."""
     from bigdata_project_spark.sources.sinks import append_table
 
-    new_hash = (
-        kept.select(
-            content_hash(F.col("text")).alias("content_hash"),
-            F.col("doc_id").alias("ex_id"),
-        )
-        .groupBy("content_hash")
-        .agg(F.min("ex_id").alias("exact_match"))
-    )
+    new_hash = _exact_hashes(kept)
     if "hp" in spark.table(hash_t).columns:
         append_table(
             _with_hash_prefix(new_hash).coalesce(out_partitions),
@@ -2133,17 +1957,12 @@ def screen_batch_against_store(
     ex_sh = shingle_rows(existing.join(F.broadcast(cand_ex), "doc_id", "left_semi"))
     ex_sets = ex_sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh_e"))
     new_sets = new_sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh_n"))
-    verified = (
+    verified = _set_jaccard(
         cand.join(ex_sets.select(F.col("doc_id").alias("ex_id"), "sh_e"), "ex_id")
-        .join(F.broadcast(new_sets), "doc_id")
-        .withColumn("n_common", F.size(F.array_intersect("sh_e", "sh_n")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.size("sh_e") + F.size("sh_n") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= 0.9)
-    )
+        .join(F.broadcast(new_sets), "doc_id"),
+        "sh_e",
+        "sh_n",
+    ).filter(F.col("jaccard") >= 0.9)
     # deterministic match: lowest verified existing doc id
     from pyspark.sql import Window as W
 

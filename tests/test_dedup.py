@@ -385,7 +385,7 @@ def test_prefix_filter_equals_all_pairs_on_random_corpora(spark):
             assert got == want, f"seed={seed} t={t}"
 
 
-def test_skew_bounded_self_pairs_hot_bucket(spark):
+def test_skew_bounded_self_pairs_hot_bucket(spark, monkeypatch):
     """§2.5 skew bound (r17): an adversarial hot bucket must (a) produce
     the IDENTICAL pair set as the plain self-join, (b) actually engage
     the salt split (ceil(n/T) slices in the plan, bounded side-a slice
@@ -439,18 +439,15 @@ def test_skew_bounded_self_pairs_hot_bucket(spark):
     # turns it on (production default on any cluster master) — output
     # equal either way, and no bucket here reaches the 1024 production
     # threshold, so the salt never fires (ns=1 everywhere).
-    import os
-
     from bigdata_project_spark.operators.text_dedup import _LSH_SALT_ENV
 
+    monkeypatch.delenv(_LSH_SALT_ENV, raising=False)
     assert pair_set(skew_bounded_self_pairs(melt, ["sig"])) == want
-    os.environ[_LSH_SALT_ENV] = "1024"
-    try:
+    with monkeypatch.context() as mp:
+        mp.setenv(_LSH_SALT_ENV, "1024")
         df_on = skew_bounded_self_pairs(melt, ["sig"])
         assert pair_set(df_on) == want
         assert "__salt" in df_on._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        os.environ.pop(_LSH_SALT_ENV, None)
 
     # extra_cond + carry plumbing (the PPJoin/recall call shapes)
     melt2 = melt.withColumn("c", F.col("doc_id") % 5 + 10)
@@ -484,3 +481,93 @@ def test_skew_bounded_self_pairs_hot_bucket(spark):
     assert got_b == want_b
     by_pair = {(a, b): (ca, cb) for a, b, ca, cb in want_b}
     assert by_pair[(0, 1)] == (10, 11)  # doc 0 carries c=10, doc 1 c=11
+
+
+def test_skew_bounded_self_pairs_rejects_reserved_columns(spark):
+    """A melt already carrying one of the salted join's working columns
+    must fail loudly instead of having it silently overwritten."""
+    import pytest
+
+    from bigdata_project_spark.operators.text_dedup import (
+        skew_bounded_self_pairs,
+    )
+
+    base = spark.createDataFrame(
+        [(i, "HOT") for i in range(100)], "doc_id long, sig string"
+    )
+    for col in ("__bn", "__ns_hot", "__ns", "__salt"):
+        melt = base.withColumn(col, F.lit(7))
+        with pytest.raises(ValueError, match=col):
+            skew_bounded_self_pairs(melt, ["sig"], threshold=64)
+        with pytest.raises(ValueError, match=col):
+            skew_bounded_self_pairs(melt, ["sig"], threshold=0)
+
+
+def _fake_frame(master):
+    """Stand-in exposing only what _salt_threshold reads: the master."""
+    from types import SimpleNamespace
+
+    conf = SimpleNamespace(get=lambda key, default=None: master)
+    return SimpleNamespace(sparkSession=SimpleNamespace(conf=conf))
+
+
+def test_salt_threshold_master_classification(monkeypatch):
+    from bigdata_project_spark.operators.text_dedup import (
+        _LSH_SALT_DEFAULT,
+        _LSH_SALT_ENV,
+        _salt_threshold,
+    )
+
+    monkeypatch.delenv(_LSH_SALT_ENV, raising=False)
+    for master in ("local", "local[4]", "local[*]"):
+        assert _salt_threshold(_fake_frame(master)) == 0, master
+    for master in ("local-cluster[2,1,1024]", "spark://host:7077", "yarn"):
+        assert _salt_threshold(_fake_frame(master)) == _LSH_SALT_DEFAULT, master
+    # the env override wins over the master in both directions
+    monkeypatch.setenv(_LSH_SALT_ENV, "0")
+    assert _salt_threshold(_fake_frame("spark://host:7077")) == 0
+    monkeypatch.setenv(_LSH_SALT_ENV, "64")
+    assert _salt_threshold(_fake_frame("local[4]")) == 64
+
+
+def test_salt_threshold_bad_env_names_the_variable(monkeypatch):
+    import pytest
+
+    from bigdata_project_spark.operators.text_dedup import (
+        _LSH_SALT_ENV,
+        _salt_threshold,
+    )
+
+    for bad in ("lots", "1e3", "-1"):
+        monkeypatch.setenv(_LSH_SALT_ENV, bad)
+        with pytest.raises(ValueError, match=_LSH_SALT_ENV):
+            _salt_threshold(_fake_frame("local[4]"))
+
+
+#: every registered query whose candidate join routes through
+#: skew_bounded_self_pairs
+SALT_ROUTED = (
+    "dedup_ngram_jaccard",
+    "dedup_fuzzy_lev",
+    "dedup_minhash_lsh",
+    "dedup_minhash_recall",
+    "dedup_simhash_pairs",
+    "dedup_cluster_cc",
+)
+
+
+def test_forced_salt_matches_oracles(spark, duck, sf_dir, monkeypatch):
+    """With the threshold forced down to 4, the fixture's buckets really
+    salt-split, and every salt-routed query must still match its DuckDB
+    oracle."""
+    from bigdata_project_spark import registry
+    from bigdata_project_spark.operators.text_dedup import _LSH_SALT_ENV
+    from bigdata_project_spark.oracle_check import compare_one
+
+    monkeypatch.setenv(_LSH_SALT_ENV, "4")
+    queries, oracles = registry.queries(), registry.oracles(sf_dir)
+    for name in SALT_ROUTED:
+        problems = compare_one(
+            spark, duck, name, queries[name], oracles[name], sf_dir
+        )
+        assert not problems, f"{name}: " + "; ".join(problems)

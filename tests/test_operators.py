@@ -24,6 +24,26 @@ def test_merge_keyed_incoming_wins(spark):
     assert got == {1: "new", 2: "keep", 3: "ins"}
 
 
+def test_merge_keyed_null_keys(spark):
+    """NULL keys follow the anti-join and window semantics: a NULL key
+    never equals another NULL in the anti-join, so an old NULL-key row
+    survives next to an incoming one; but the batch dedup partitions
+    NULLs together, so two incoming NULL-key rows collapse to one."""
+    schema = "k int, v string"
+    old = spark.createDataFrame([(None, "old"), (1, "old1")], schema)
+    new = spark.createDataFrame([(None, "b"), (None, "a"), (2, "new2")], schema)
+    got = sorted(
+        (r["k"] is None, r["k"], r["v"])
+        for r in merge_keyed(old, new, ["k"]).collect()
+    )
+    assert got == [
+        (False, 1, "old1"),
+        (False, 2, "new2"),
+        (True, None, "a"),  # the batch's NULL rows collapse to the first
+        (True, None, "old"),  # the old NULL row is not replaced
+    ]
+
+
 def test_merge_keyed_map_column_deterministic(spark):
     """Duplicate-key rows differing only in a MAP column resolve to the
     row whose canonical (key-sorted JSON) serialization sorts first —

@@ -1,110 +1,53 @@
-"""Property tests for the parameterized simhash band-pair blocking
-behind ``dedup_fuzzy_lev`` (r7 verdict item 5): the width dial must not
-change what the blocking GUARANTEES at the fixture scale.
+"""Blocking keys and the signature store behind the text-dedup queries.
 
-1. At the 32/8 default, the direct-from-bit-sums key builder
-   (``simhash_band_pair_keys``) is bit-identical to the legacy
-   combined-integer path (``simhash_band_pair_melt(simhash_column)``),
-   so the DuckDB oracle stays valid unchanged.
-2. The pigeonhole contract — any pair within Hamming ≤ 2 of a width's
-   hash shares an exact 2-band key at that width — is exercised
-   end-to-end on the subset BOTH widths guarantee (64-bit Hamming ≤ 2,
-   which implies low-word/32-bit Hamming ≤ 2): there the two widths
-   emit identical ≤5-edit pairs, and every planted exact duplicate
-   (Hamming 0) is found by both.
-
-Measured reality the test encodes (rather than wishing away): the raw
-pair sets are NOT identical across widths — at sf0.001 the 32/8 key
-space (2^16 per band pair) yields a handful of accidental collisions on
-prefix-identical but content-divergent docs (wide-hash Hamming > 2),
-bonus recall the 2^32 key space at 64/16 doesn't replicate. Those
-extras are verified true ≤5-edit pairs either way (the Levenshtein
-filter runs after blocking), so each width is sound; only the
-common-guarantee subset is stable by construction, and that is what
-the property asserts.
+1. The simhash band keys that ``dedup_simhash_pairs`` and
+   ``dedup_fuzzy_lev`` block on equal the DuckDB oracles' formula
+   ``CAST(floor(simhash / 2^(8b)) AS BIGINT) % 256`` bit for bit, for
+   both the 1-band and the band-pair melt.
+2. The incremental store lifecycle (build → screen → append → compact →
+   screen) classifies batches exactly as a full recompute does, on both
+   store layouts.
 """
 
 from __future__ import annotations
 
-import pytest
-
 from bigdata_project_spark.operators.text_dedup import (
+    _BAND_PAIRS,
     _corpus_with_dups,
-    query_dedup_fuzzy_lev,
-    simhash_band_nibbles,
-    simhash_band_pair_keys,
-    simhash_band_pair_melt,
+    _simhash_band,
+    blocking_melt,
     simhash_column,
 )
 
 
-def test_band_pair_keys_match_legacy_melt_at_default(spark, sf_dir):
-    corpus = _corpus_with_dups(spark, sf_dir)
-    new = simhash_band_pair_keys(corpus, bits=32, band_bits=8)
-    old = simhash_band_pair_melt(simhash_column(corpus)).select(
-        "doc_id", "bi", "bj", "ni", "nj"
-    )
-    assert new.exceptAll(old).isEmpty()
-    assert old.exceptAll(new).isEmpty()
+def test_simhash_band_keys_match_oracle_formula(spark, sf_dir):
+    sims = simhash_column(_corpus_with_dups(spark, sf_dir))
+    by_doc = {r["doc_id"]: r["simhash"] for r in sims.collect()}
+    assert by_doc and all(0 <= h < 2**32 for h in by_doc.values())
 
+    def band(h, b):  # the oracle's floor-division form
+        return (h // 2 ** (8 * b)) % 256
 
-def test_fuzzy_lev_guaranteed_pairs_identical_across_widths(spark, sf_dir):
-    corpus = _corpus_with_dups(spark, sf_dir)
-    # ground truth for the COMMON pigeonhole guarantee: pairs within
-    # 64-bit-hash Hamming ≤ 2 (implies low-word/32-bit Hamming ≤ 2, so
-    # both widths must block them). Wide hash reassembled from the
-    # 16-bit band nibbles: h64 = n0 | n1<<16 | n2<<32 | n3<<48.
-    sims = {
-        r["doc_id"]: r["n0"] | (r["n1"] << 16) | (r["n2"] << 32) | (r["n3"] << 48)
-        for r in simhash_band_nibbles(corpus, bits=64, band_bits=16).collect()
-    }
-    ids = sorted(sims)
-    guaranteed = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if bin(sims[a] ^ sims[b]).count("1") <= 2
-    }
-    assert guaranteed, "fixture must contain Hamming<=2 pairs"
+    single = blocking_melt(
+        sims,
+        ["doc_id"],
+        [{"band": b, "nib": _simhash_band(b)} for b in range(4)],
+    ).collect()
+    assert len(single) == 4 * len(by_doc)
+    assert all(r["nib"] == band(by_doc[r["doc_id"]], r["band"]) for r in single)
 
-    def pairs(bits, band_bits):
-        rows = query_dedup_fuzzy_lev(
-            spark, sf_dir, bits=bits, band_bits=band_bits
-        ).collect()
-        return {(r["doc_a"], r["doc_b"], r["lev"]) for r in rows}
-
-    narrow = pairs(32, 8)
-    wide = pairs(64, 16)
-
-    g = lambda s: {(a, b, l) for a, b, l in s if (a, b) in guaranteed}
-    assert g(narrow) == g(wide)
-    # planted exact duplicates (re-keyed copies, Hamming 0, lev 0) are
-    # found by BOTH widths — recall on true dups never regresses
-    planted = {
-        (a, b, 0) for a, b, l in narrow if b == a + 1_000_000 and l == 0
-    }
-    assert planted and planted <= wide
-    # each width only ever emits verified <=5-edit pairs
-    assert all(0 <= l <= 5 for _, _, l in narrow | wide)
-
-
-def test_unsupported_geometry_rejected(spark, sf_dir):
-    corpus = _corpus_with_dups(spark, sf_dir)
-    with pytest.raises(ValueError):
-        simhash_band_pair_keys(corpus, bits=48, band_bits=8)
-    with pytest.raises(ValueError):
-        simhash_band_pair_keys(corpus, bits=64, band_bits=24)
-    # md5 has only four 32-bit words — wider hashes would silently
-    # read past the hex and block on constant-zero bands
-    with pytest.raises(ValueError):
-        simhash_band_pair_keys(corpus, bits=160, band_bits=16)
-    # 2 bands cannot give the <=2-flip one-clean-pair pigeonhole
-    with pytest.raises(ValueError):
-        simhash_band_pair_keys(corpus, bits=32, band_bits=16)
-    # band_bits=0 must raise the documented ValueError, not a bare
-    # ZeroDivisionError from the geometry modulo
-    with pytest.raises(ValueError):
-        simhash_band_pair_keys(corpus, bits=32, band_bits=0)
+    pairs = blocking_melt(
+        sims,
+        ["doc_id"],
+        [
+            {"bi": i, "bj": j, "ni": _simhash_band(i), "nj": _simhash_band(j)}
+            for i, j in _BAND_PAIRS
+        ],
+    ).collect()
+    assert len(pairs) == 6 * len(by_doc)
+    for r in pairs:
+        h = by_doc[r["doc_id"]]
+        assert (r["ni"], r["nj"]) == (band(h, r["bi"]), band(h, r["bj"]))
 
 
 def test_incremental_store_append_two_batches(spark, duck, sf_dir):
