@@ -270,3 +270,11 @@ FROM payloads
 GROUP BY md5(payload)
 HAVING COUNT(*) > 1
 """
+
+
+QUERIES = {
+    "multimodal_binary_meta": (query_binary_meta, ORACLE_BINARY_META),
+    "multimodal_dedup_binary": (query_multimodal_dedup_binary, ORACLE_MULTIMODAL_DEDUP_BINARY),
+    "multimodal_features": (query_features, ORACLE_FEATURES),
+    "multimodal_frame_sample": (query_frame_sample, ORACLE_FRAME_SAMPLE),
+}

@@ -214,3 +214,8 @@ FROM counts
 
 # the oracle's row-preserving membership spells out one join per hash
 assert BLOOM_K == 3, "update ORACLE_JOIN_BLOOM_PREFILTER's p0/p1/p2 joins"
+
+
+QUERIES = {
+    "join_bloom_prefilter": (query_join_bloom_prefilter, ORACLE_JOIN_BLOOM_PREFILTER),
+}

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.text import tokens
-from bigdata_project_spark.registry import DRIVER_CHECK_SF_DIR
 from bigdata_project_spark.sources.readers import load_table
 
 log = logging.getLogger(__name__)
@@ -141,17 +140,14 @@ GROUP BY w
 """
 
 
-def oracle_bpe_merges_sql(sf_dir: str | None = None) -> str | None:
-    """Build the oracle at registration time: DuckDB counts the words of
-    the driver's correctness fixture (sf0.01 — the only SF the driver
-    cross-checks at), the same pinned merge loop runs on those counts, and
-    the result is emitted as a VALUES literal. The merge loop itself is
-    guarded by the hand-computed pin in tests/test_bpe.py (a train_merges
-    bug would slip past a VALUES oracle built from train_merges — the pin
-    test is the independent check). Returns None (→ the driver downgrades
-    to a rows-only check, logged loudly) if the fixture is unreadable."""
-    if sf_dir is None:
-        sf_dir = DRIVER_CHECK_SF_DIR
+def oracle_bpe_merges_sql(sf_dir: str) -> str | None:
+    """Build the oracle for the fixture at ``sf_dir``: DuckDB counts its
+    words, the same pinned merge loop runs on those counts, and the result
+    is emitted as a VALUES literal. The merge loop itself is guarded by
+    the hand-computed pin in tests/test_bpe.py (a train_merges bug would
+    slip past a VALUES oracle built from train_merges — the pin test is
+    the independent check). Returns None (→ the driver downgrades to a
+    rows-only check, logged loudly) if the fixture is unreadable."""
     try:
         import duckdb
 
@@ -264,7 +260,7 @@ def query_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_bpe_encode_sql(sf_dir: str | None = None) -> str | None:
+def oracle_bpe_encode_sql(sf_dir: str) -> str | None:
     """Same builder strategy as :func:`oracle_bpe_merges_sql`: DuckDB
     counts the words, the pinned Python loop learns the merges and
     encodes every distinct fixture word exactly, and the word→n_sym
@@ -273,8 +269,6 @@ def oracle_bpe_encode_sql(sf_dir: str | None = None) -> str | None:
     dictionary. (The dictionary covers ALL distinct fixture words —
     uncapped — mirroring the engine's dict + identical-function
     fallback, which is exact for every word.)"""
-    if sf_dir is None:
-        sf_dir = DRIVER_CHECK_SF_DIR
     try:
         import duckdb
 
@@ -325,3 +319,9 @@ FROM words JOIN dict USING (w) GROUP BY doc_id
             sf_dir,
         )
         return None
+
+
+QUERIES = {
+    "text_bpe_encode": (query_bpe_encode, oracle_bpe_encode_sql),
+    "text_bpe_merges": (query_bpe_merges, oracle_bpe_merges_sql),
+}

@@ -102,3 +102,8 @@ FROM orders
 JOIN customer ON c_custkey = o_custkey
 GROUP BY c_mktsegment
 """
+
+
+QUERIES = {
+    "layout_bucketed_join": (query_bucketed_join_revenue, ORACLE_BUCKETED_JOIN),
+}

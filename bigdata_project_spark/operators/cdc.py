@@ -112,3 +112,8 @@ SELECT l_orderkey, op,
 FROM tagged
 WHERE op IS NOT NULL
 """
+
+
+QUERIES = {
+    "cdc_snapshot_diff": (query_cdc_snapshot_diff, ORACLE_CDC_SNAPSHOT_DIFF),
+}

@@ -65,3 +65,8 @@ SELECT doc_id, chunk_idx,
        array_to_string(ct, ' ') AS chunk_text
 FROM chunked
 """
+
+
+QUERIES = {
+    "pipeline_chunk_docs": (query_pipeline_chunk_docs, ORACLE_PIPELINE_CHUNK_DOCS),
+}

@@ -376,3 +376,11 @@ SELECT doc_id, n_chars, n_uniq_chars,
        )} AS entropy_bits
 FROM per_doc
 """
+
+
+QUERIES = {
+    "pipeline_quality_funnel": (query_pipeline_quality_funnel, ORACLE_PIPELINE_QUALITY_FUNNEL),
+    "text_bigram_perplexity": (query_text_bigram_perplexity, ORACLE_TEXT_BIGRAM_PERPLEXITY),
+    "text_oov_rate": (query_text_oov_rate, ORACLE_TEXT_OOV_RATE),
+    "text_char_entropy": (query_text_char_entropy, ORACLE_TEXT_CHAR_ENTROPY),
+}

@@ -277,3 +277,9 @@ WHERE b.rn = 1
 
 
 ORACLE_DEDUP_CANONICAL = _build_oracle_dedup_canonical()
+
+
+QUERIES = {
+    "dedup_cluster_cc": (query_dedup_cluster_cc, ORACLE_DEDUP_CLUSTER_CC),
+    "pipeline_dedup_canonical": (query_dedup_canonical, ORACLE_DEDUP_CANONICAL),
+}

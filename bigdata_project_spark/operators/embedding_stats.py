@@ -126,3 +126,9 @@ SELECT pos, amax, COUNT(*) AS n_vals,
 FROM q
 GROUP BY pos, amax
 """
+
+
+QUERIES = {
+    "emb_label_centroids": (query_emb_label_centroids, ORACLE_EMB_LABEL_CENTROIDS),
+    "emb_int8_quantize": (query_emb_int8_quantize, ORACLE_EMB_INT8_QUANTIZE),
+}

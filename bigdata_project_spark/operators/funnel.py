@@ -277,3 +277,11 @@ SELECT strftime(DATE '1970-01-01' + to_days(CAST(dau.d AS INTEGER)), '%Y-%m-%d')
        {round_portable_sql("dau * 1.0 / wau", 6)} AS stickiness
 FROM dau JOIN wau ON dau.d = wau.d
 """
+
+
+QUERIES = {
+    "agg_retention_cohort": (query_retention_cohort, ORACLE_RETENTION_COHORT),
+    "events_dau_wau": (query_events_dau_wau, ORACLE_EVENTS_DAU_WAU),
+    "events_funnel": (query_events_funnel, ORACLE_EVENTS_FUNNEL),
+    "events_transitions": (query_events_transitions, ORACLE_EVENTS_TRANSITIONS),
+}

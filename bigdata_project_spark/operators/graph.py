@@ -481,3 +481,11 @@ SELECT id AS user_id, CAST(dist AS INTEGER) AS dist
 FROM reach_{BFS_MAX_HOPS}
 ORDER BY user_id
 """
+
+
+QUERIES = {
+    "graph_bfs_distance": (query_graph_bfs_distance, ORACLE_GRAPH_BFS_DISTANCE),
+    "graph_pagerank": (query_graph_pagerank, ORACLE_GRAPH_PAGERANK),
+    "graph_triangles": (query_graph_triangles, ORACLE_GRAPH_TRIANGLES),
+    "emb_gram_blas": (query_emb_gram_blas, ORACLE_EMB_GRAM_BLAS),
+}

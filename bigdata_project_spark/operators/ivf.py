@@ -380,3 +380,9 @@ SELECT l.nprobe,
        COALESCE(c.n_hits, 0) / {float(RECALL_K)} AS recall
 FROM levels l LEFT JOIN counts c USING (nprobe)
 """
+
+
+QUERIES = {
+    "sim_ann_recall_at_k": (query_ann_recall_at_k, ORACLE_ANN_RECALL_AT_K),
+    "sim_ivf_kmeans_topk": (query_ivf_kmeans_topk, ORACLE_IVF_KMEANS_TOPK),
+}

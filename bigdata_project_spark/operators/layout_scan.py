@@ -161,3 +161,10 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
+
+
+QUERIES = {
+    "source_orc_roundtrip": (query_source_orc_roundtrip, ORACLE_SOURCE_ORC_ROUNDTRIP),
+    "source_text_logs": (query_source_text_logs, ORACLE_SOURCE_TEXT_LOGS),
+    "layout_partition_pruning": (query_layout_partition_pruning, ORACLE_LAYOUT_PARTITION_PRUNING),
+}

@@ -93,7 +93,7 @@ def merge_keyed(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     # entire state on every merge, while this form leaves the state
     # unshuffled under a broadcast anti-join (batch keys broadcastable)
     # and at worst SMJ-shuffles it without the full-width sort. The
-    # replicated-input probe (tools/merge_scale_probe_r17.py: 10x state,
+    # replicated-input probe (tools/merge_scale_probe_r17.json: 10x state,
     # 1% batch) confirms two-step ≤ one-pass at the scale shape.
     deduped = distinct_on(new, keys, residual or [F.lit(1)])
     untouched = old.join(deduped.select(*keys), on=keys, how="left_anti")

@@ -89,3 +89,8 @@ FROM (
 )
 ORDER BY position
 """
+
+
+QUERIES = {
+    "pipeline_global_shuffle": (query_global_shuffle, ORACLE_GLOBAL_SHUFFLE),
+}

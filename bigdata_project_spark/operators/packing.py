@@ -515,3 +515,13 @@ SELECT source, n_docs,
            AS expected_docs
 FROM scored, rs
 """
+
+
+QUERIES = {
+    "pipeline_domain_reweight": (query_domain_reweight, ORACLE_DOMAIN_REWEIGHT),
+    "pipeline_pack_sequences": (query_pack_sequences, ORACLE_PACK_SEQUENCES),
+    "pipeline_domain_mixture": (query_domain_mixture, ORACLE_DOMAIN_MIXTURE),
+    "pipeline_pack_masked": (query_pack_sequences_masked, ORACLE_PACK_SEQUENCES_MASKED),
+    "pipeline_shard_manifest": (query_shard_manifest, ORACLE_SHARD_MANIFEST),
+    "pipeline_mixture_temperature": (query_mixture_temperature, ORACLE_MIXTURE_TEMPERATURE),
+}

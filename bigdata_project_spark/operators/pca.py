@@ -94,18 +94,16 @@ def query_emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_emb_pca_sql(sf_dir: str | None = None) -> str:
+def oracle_emb_pca_sql(sf_dir: str) -> str:
     """DuckDB twin: recompute the weights from DuckDB's own Gram matrix
     (hash-identical to Spark's) and embed them as a VALUES literal."""
     import duckdb
 
     from bigdata_project_spark.operators.graph import ORACLE_EMB_GRAM_MATRIX
-    from bigdata_project_spark.registry import DRIVER_CHECK_SF_DIR
 
-    d = sf_dir or DRIVER_CHECK_SF_DIR
     con = duckdb.connect()
     con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d}/embeddings.parquet')"
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
     )
     gram_rows = con.execute(ORACLE_EMB_GRAM_MATRIX).fetchall()
     con.close()
@@ -126,3 +124,8 @@ SELECT vec_id,
 FROM long JOIN w USING (pos)
 GROUP BY vec_id
 """
+
+
+QUERIES = {
+    "emb_pca_project": (query_emb_pca_project, oracle_emb_pca_sql),
+}

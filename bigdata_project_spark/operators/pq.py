@@ -296,3 +296,9 @@ LIMIT {TOP_K}
 """
 
 ORACLE_IVFPQ_TOPK = _build_oracle_ivfpq()
+
+
+QUERIES = {
+    "sim_ivfpq_topk": (query_ivfpq_topk, ORACLE_IVFPQ_TOPK),
+    "sim_pq_adc_topk": (query_pq_adc_topk, ORACLE_PQ_ADC_TOPK),
+}

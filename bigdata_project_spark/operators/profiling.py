@@ -257,3 +257,14 @@ SELECT bucket, COUNT(*) AS n_rows,
 FROM b
 GROUP BY bucket
 """
+
+
+QUERIES = {
+    "feature_binning_equidepth": (
+        query_feature_binning_equidepth,
+        ORACLE_FEATURE_BINNING_EQUIDEPTH,
+    ),
+    "feature_binning": (query_feature_binning, ORACLE_FEATURE_BINNING),
+    "profile_columns": (query_profile_columns, ORACLE_PROFILE_COLUMNS),
+    "scd2_event_type": (query_scd2_event_type, ORACLE_SCD2_EVENT_TYPE),
+}

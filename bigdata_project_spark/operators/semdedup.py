@@ -212,3 +212,8 @@ SELECT s.vec_id, s.cell, d.dup_of, d.dup_of IS NULL AS is_kept
 FROM assign s LEFT JOIN dup d ON s.vec_id = d.vec_b
 ORDER BY s.vec_id
 """
+
+
+QUERIES = {
+    "dedup_semantic": (query_dedup_semantic, ORACLE_DEDUP_SEMANTIC),
+}

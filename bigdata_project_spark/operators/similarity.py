@@ -524,3 +524,12 @@ ranked AS (
 SELECT q_id, vec_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
 FROM ranked WHERE rnk <= {KNN_K}
 """
+
+
+QUERIES = {
+    "dedup_embedding_cosine": (query_dedup_embedding, ORACLE_DEDUP_EMBEDDING),
+    "sim_ann_lsh_buckets": (query_ann_lsh_buckets, ORACLE_ANN_LSH),
+    "sim_cosine_topk": (query_cosine_topk, ORACLE_COSINE_TOPK),
+    "sim_neardup_pairs": (query_neardup_pairs, ORACLE_NEARDUP_PAIRS),
+    "sim_knn_join": (query_sim_knn_join, ORACLE_SIM_KNN_JOIN),
+}

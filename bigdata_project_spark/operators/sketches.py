@@ -326,3 +326,9 @@ FROM est JOIN exact ON est.event_type = exact.event_type
 ORACLE_STREAM_HLL_USERS = _ORACLE_HLL_TYPE_T.format(
     h32=WORD_HASH32_SQL.format(w="CAST(user_id AS VARCHAR)")
 )
+
+
+QUERIES = {
+    "sketch_cms_topk": (query_cms_heavy_hitters, ORACLE_CMS_HEAVY_HITTERS),
+    "sketch_hll_rollup": (query_sketch_hll_rollup, ORACLE_SKETCH_HLL_ROLLUP),
+}

@@ -151,3 +151,9 @@ FROM events
 JOIN customer ON c_custkey = user_id
 GROUP BY c_mktsegment
 """
+
+
+QUERIES = {
+    "skew_salted_agg": (query_skew_salted_agg, ORACLE_SKEW_SALTED_AGG),
+    "skew_salted_join": (query_skew_salted_join, ORACLE_SKEW_SALTED_JOIN),
+}

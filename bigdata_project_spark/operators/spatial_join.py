@@ -99,3 +99,8 @@ WHERE 2.0 * py >= 0
   AND -py - 3.0 * (px - ax - 2.0) >= 0
   AND 3.0 * (px - ax) - py >= 0
 """
+
+
+QUERIES = {
+    "spatial_point_in_zone": (query_point_in_zone, ORACLE_POINT_IN_ZONE),
+}

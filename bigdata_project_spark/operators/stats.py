@@ -223,3 +223,9 @@ SELECT l_returnflag,
        {round_portable_sql(f'(CAST(sy AS DOUBLE) - ({_SLOPE}) * CAST(sx AS DOUBLE)) / {_N} / {_SCALE}', 6)} AS intercept
 FROM m
 """
+
+
+QUERIES = {
+    "ml_group_ols": (query_ml_group_ols, ORACLE_ML_GROUP_OLS),
+    "feature_corr_matrix": (query_feature_corr_matrix, ORACLE_FEATURE_CORR_MATRIX),
+}

@@ -572,3 +572,17 @@ SELECT term, df, CAST(cf AS BIGINT) AS cf,
 FROM ranked
 WHERE rn = 1 AND df >= {IDX_MIN_DF}
 """
+
+
+QUERIES = {
+    "text_hashing_features": (query_hashing_features, ORACLE_HASHING_FEATURES),
+    "text_ngram_novelty": (query_text_ngram_novelty, ORACLE_TEXT_NGRAM_NOVELTY),
+    "text_quality_linear": (query_text_quality_linear, ORACLE_TEXT_QUALITY_LINEAR),
+    "text_fingerprint": (query_fingerprint, ORACLE_FINGERPRINT),
+    "text_lang_id": (query_lang_id, ORACLE_LANG_ID),
+    "text_inverted_index": (query_text_inverted_index, ORACLE_TEXT_INVERTED_INDEX),
+    "text_quality_score": (query_quality_score, ORACLE_QUALITY_SCORE),
+    "text_tfidf": (query_tfidf, ORACLE_TFIDF),
+    "text_token_stats": (query_token_stats, ORACLE_TOKEN_STATS),
+    "text_vocab_topk": (query_vocab_topk, ORACLE_VOCAB_TOPK),
+}

@@ -2092,3 +2092,19 @@ FROM staged s LEFT JOIN best b ON b.doc_id = s.doc_id
 
 
 ORACLE_DEDUP_INCREMENTAL_LSH = incremental_screen_sql("documents", _INCR_BATCH_SQL)
+
+
+QUERIES = {
+    "text_dup_spans": (query_text_dup_spans, ORACLE_TEXT_DUP_SPANS),
+    "text_dup_spans_lcp": (query_text_dup_spans_lcp, ORACLE_TEXT_DUP_SPANS_LCP),
+    "dedup_exact": (query_dedup_exact, ORACLE_DEDUP_EXACT),
+    "dedup_simhash": (query_dedup_simhash, ORACLE_DEDUP_SIMHASH),
+    "dedup_minhash_recall": (query_dedup_minhash_recall, ORACLE_DEDUP_MINHASH_RECALL),
+    "dedup_fuzzy_lev": (query_dedup_fuzzy_lev, ORACLE_DEDUP_FUZZY_LEV),
+    "dedup_minhash_lsh": (query_dedup_minhash_lsh, ORACLE_DEDUP_MINHASH_LSH),
+    "dedup_ngram_jaccard": (query_dedup_ngram_jaccard, ORACLE_DEDUP_NGRAM_JACCARD),
+    "dedup_simhash_pairs": (query_dedup_simhash_pairs, ORACLE_DEDUP_SIMHASH_PAIRS),
+    "dedup_incremental_lsh": (query_dedup_incremental_lsh, ORACLE_DEDUP_INCREMENTAL_LSH),
+    "dedup_paragraph": (query_dedup_paragraph, ORACLE_DEDUP_PARAGRAPH),
+    "dedup_span_removal": (query_dedup_span_removal, ORACLE_DEDUP_SPAN_REMOVAL),
+}

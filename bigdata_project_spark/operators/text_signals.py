@@ -721,3 +721,15 @@ def source_overlap_bitmap(spark: SparkSession, docs: DataFrame) -> DataFrame:
             ).alias("jaccard"),
         )
     )
+
+
+QUERIES = {
+    "text_url_domains": (query_text_url_domains, ORACLE_TEXT_URL_DOMAINS),
+    "text_source_overlap": (query_text_source_overlap, ORACLE_TEXT_SOURCE_OVERLAP),
+    "pipeline_sample_stratified": (query_sample_stratified, ORACLE_SAMPLE_STRATIFIED),
+    "text_bigram_lm": (query_text_bigram_lm, ORACLE_TEXT_BIGRAM_LM),
+    "text_decontaminate": (query_text_decontaminate, ORACLE_TEXT_DECONTAMINATE),
+    "text_pii_redact": (query_text_pii_redact, ORACLE_TEXT_PII_REDACT),
+    "text_repetition": (query_text_repetition, ORACLE_TEXT_REPETITION),
+    "dedup_url_canonical": (query_dedup_url_canonical, ORACLE_DEDUP_URL_CANONICAL),
+}

@@ -320,3 +320,11 @@ FROM hl
 JOIN ranked o ON o.event_type = hl.event_type AND o.h = hl.h AND o.rn_open = 1
 JOIN ranked c ON c.event_type = hl.event_type AND c.h = hl.h AND c.rn_close = 1
 """
+
+
+QUERIES = {
+    "ts_ewma_hourly": (query_ts_ewma_hourly, ORACLE_TS_EWMA_HOURLY),
+    "ts_gapfill_ffill": (query_ts_gapfill_ffill, ORACLE_TS_GAPFILL_FFILL),
+    "events_anomaly_zscore": (query_events_anomaly_zscore, ORACLE_EVENTS_ANOMALY_ZSCORE),
+    "ts_ohlc_hourly": (query_ts_ohlc_hourly, ORACLE_TS_OHLC_HOURLY),
+}

@@ -419,3 +419,8 @@ SELECT bucket, COUNT(*) AS n_rows,
 FROM b
 GROUP BY bucket
 """
+
+
+QUERIES = {
+    "layout_zorder_extents": (query_zorder_extents, ORACLE_ZORDER_EXTENTS),
+}

@@ -829,3 +829,26 @@ FROM melted
 GROUP BY l_returnflag, measure
 ORDER BY l_returnflag, measure
 """
+
+
+QUERIES = {
+    "agg_approx_quantiles": (query_approx_quantiles, ORACLE_APPROX_QUANTILES),
+    "agg_unpivot_measures": (query_unpivot_measures, ORACLE_UNPIVOT_MEASURES),
+    "events_json_props": (query_json_props, ORACLE_JSON_PROPS),
+    "events_variant_props": (query_variant_props, ORACLE_VARIANT_PROPS),
+    "join_semi_anti": (query_semi_anti_join, ORACLE_SEMI_ANTI_JOIN),
+    "win_lead_lag": (query_lead_lag_delta, ORACLE_LEAD_LAG),
+    "win_rank_family": (query_rank_family, ORACLE_RANK_FAMILY),
+    "win_running_total": (query_running_total, ORACLE_RUNNING_TOTAL),
+    "win_topk_per_group": (query_topk_per_group, ORACLE_TOPK_PER_GROUP),
+    "agg_pricing_summary": (query_pricing_summary, ORACLE_PRICING_SUMMARY),
+    "agg_top_customers": (query_top_customers, ORACLE_TOP_CUSTOMERS),
+    "agg_pivot_status": (query_pivot_status, ORACLE_PIVOT_STATUS),
+    "agg_rollup_summary": (query_rollup_summary, ORACLE_ROLLUP_SUMMARY),
+    "agg_cube_summary": (query_cube_summary, ORACLE_CUBE_SUMMARY),
+    "agg_grouping_sets": (query_grouping_sets, ORACLE_GROUPING_SETS),
+    "agg_distinct_counts": (query_distinct_counts, ORACLE_DISTINCT_COUNTS),
+    "agg_approx_distinct": (query_approx_distinct, ORACLE_APPROX_DISTINCT),
+    "set_ops": (query_set_ops, ORACLE_SET_OPS),
+    "cogroup_activity": (query_cogroup_activity, ORACLE_COGROUP_ACTIVITY),
+}

@@ -356,3 +356,11 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
+
+
+QUERIES = {
+    "join_asof": (query_asof_click_before_purchase, ORACLE_ASOF),
+    "join_asof_forward": (query_asof_next_purchase, ORACLE_ASOF_FORWARD),
+    "join_range_bands": (query_range_join_value_bands, ORACLE_RANGE_JOIN),
+    "agg_percentiles": (query_percentiles_by_type, ORACLE_PERCENTILES),
+}

@@ -57,3 +57,9 @@ SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM new
 UNION ALL
 SELECT o.* FROM customer o LEFT JOIN new n USING (c_custkey) WHERE n.c_custkey IS NULL
 """
+
+
+QUERIES = {
+    "bronze_merge_keyed": (query_merge_keyed, ORACLE_MERGE_KEYED),
+    "bronze_merge_all_columns": (query_merge_all_columns, ORACLE_MERGE_ALL),
+}

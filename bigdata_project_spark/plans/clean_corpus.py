@@ -137,3 +137,9 @@ SELECT lang, source,
 FROM good
 GROUP BY lang, source
 """
+
+
+QUERIES = {
+    "pipeline_train_val_split": (query_train_val_split, ORACLE_TRAIN_VAL_SPLIT),
+    "pipeline_clean_corpus": (query_clean_corpus, ORACLE_CLEAN_CORPUS),
+}

@@ -263,3 +263,13 @@ FROM daily
 WINDOW w AS (PARTITION BY user_id ORDER BY day_no
              RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
 """
+
+
+QUERIES = {
+    "win_range_7d": (query_win_range_7d, ORACLE_WIN_RANGE_7D),
+    "events_sessionize": (query_sessionize, ORACLE_SESSIONIZE),
+    "events_sliding_10m_5m": (query_sliding_10m_5m, ORACLE_SLIDING_10M_5M),
+    "events_time_rollup": (query_time_rollup, ORACLE_TIME_ROLLUP),
+    "events_tumbling_1h": (query_tumbling_1h, ORACLE_TUMBLING_1H),
+    "join_interval_clicks": (query_interval_join_clicks, ORACLE_INTERVAL_JOIN_CLICKS),
+}

@@ -338,3 +338,13 @@ GROUP BY p.zone_level, CAST(FLOOR(z.ri / 1000.0) AS BIGINT)
 
 
 ORACLE_GOLD_INCOME_MOBILITY = _oracle_gold_income_mobility()
+
+
+QUERIES = {
+    "gold_overnights_seasonality": (
+        query_gold_overnights_seasonality,
+        ORACLE_GOLD_OVERNIGHTS_SEASONALITY,
+    ),
+    "gold_od_daily": (query_gold_od_daily, ORACLE_GOLD_OD_DAILY),
+    "gold_income_mobility": (query_gold_income_mobility, ORACLE_GOLD_INCOME_MOBILITY),
+}

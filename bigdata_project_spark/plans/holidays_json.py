@@ -53,3 +53,8 @@ SELECT event_id, date, name[1].text AS holiday_name, prop_k
 FROM shaped
 WHERE nationwide
 """
+
+
+QUERIES = {
+    "bronze_holidays_json": (query, ORACLE),
+}

@@ -142,3 +142,8 @@ SELECT o_orderkey, o_custkey, o_orderstatus,
             AS INTEGER) AS batch_id
 FROM orders
 """
+
+
+QUERIES = {
+    "bronze_incremental_batches": (query_bronze_incremental_batches, ORACLE_BRONZE_INCREMENTAL),
+}

@@ -177,3 +177,11 @@ SELECT o.id AS origin_id,
 FROM z o JOIN z d
   ON o.zone_level = d.zone_level AND o.id <> d.id
 """
+
+
+QUERIES = {
+    "silver_distances": (query_distances, ORACLE_DISTANCES),
+    "silver_zones": (query_zones, ORACLE_ZONES),
+    "silver_zones_wkt": (query_zones_wkt, ORACLE_ZONES_WKT),
+    "silver_zones_geom": (query_zones_geom, ORACLE_ZONES_WKT),
+}

@@ -404,3 +404,10 @@ LEFT JOIN cross_w ON muni.m_codigo % 100 = cross_w.municipio_ine
 WHERE upper(one.tipo) LIKE '%CNAE%'
   AND (distrito_mitma IS NOT NULL OR municipio_mitma IS NOT NULL OR gau_mitma IS NOT NULL)
 """
+
+
+QUERIES = {
+    "silver_ine_empresas": (query_ine_empresas, ORACLE_INE_EMPRESAS),
+    "silver_ine_poblacion": (query_ine_poblacion, ORACLE_INE_POBLACION),
+    "silver_ine_renta": (query_ine_renta, ORACLE_INE_RENTA),
+}

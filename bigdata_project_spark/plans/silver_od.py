@@ -131,3 +131,8 @@ FROM enriched
 WHERE datetime IS NOT NULL AND origin_id IS NOT NULL
   AND destination_id IS NOT NULL AND n_trips IS NOT NULL
 """
+
+
+QUERIES = {
+    "silver_od": (query, ORACLE),
+}

@@ -153,3 +153,9 @@ WHERE strptime(fecha, '%Y%m%d') IS NOT NULL
   AND zona_pernoctacion IS NOT NULL
   AND CAST(personas_str AS DOUBLE) IS NOT NULL
 """
+
+
+QUERIES = {
+    "silver_overnights": (query_overnights, ORACLE_OVERNIGHTS),
+    "silver_people_day": (query, ORACLE),
+}

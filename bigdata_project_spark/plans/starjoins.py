@@ -585,3 +585,16 @@ SELECT {round_portable_sql("CAST(promo_dec AS DOUBLE)", 2)} AS promo_revenue,
        n_items
 FROM agg
 """
+
+
+QUERIES = {
+    "agg_large_orders": (query_large_orders, ORACLE_LARGE_ORDERS),
+    "agg_market_share": (query_market_share, ORACLE_MARKET_SHARE),
+    "agg_order_priority": (query_order_priority, ORACLE_ORDER_PRIORITY),
+    "agg_promo_revenue": (query_promo_revenue, ORACLE_PROMO_REVENUE),
+    "agg_region_revenue": (query_region_revenue, ORACLE_REGION_REVENUE),
+    "agg_returned_items": (query_returned_items, ORACLE_RETURNED_ITEMS),
+    "agg_shipping_priority": (query_shipping_priority, ORACLE_SHIPPING_PRIORITY),
+    "agg_volume_shipping": (query_volume_shipping, ORACLE_VOLUME_SHIPPING),
+    "agg_bracket_revenue": (query_bracket_revenue, ORACLE_BRACKET_REVENUE),
+}

@@ -834,3 +834,18 @@ FROM (
       AND l_quantity < {Q6_MAX_QTY}
 )
 """
+
+
+QUERIES = {
+    "agg_best_supplier": (query_best_supplier, ORACLE_BEST_SUPPLIER),
+    "agg_customer_distribution": (query_customer_distribution, ORACLE_CUSTOMER_DISTRIBUTION),
+    "agg_dominant_suppliers": (query_dominant_suppliers, ORACLE_DOMINANT_SUPPLIERS),
+    "agg_dormant_customers": (query_dormant_customers, ORACLE_DORMANT_CUSTOMERS),
+    "agg_forecast_revenue": (query_forecast_revenue, ORACLE_FORECAST_REVENUE),
+    "agg_late_by_class": (query_late_by_class, ORACLE_LATE_BY_CLASS),
+    "agg_nation_profit": (query_nation_profit, ORACLE_NATION_PROFIT),
+    "agg_small_qty_revenue": (query_small_quantity_revenue, ORACLE_SMALL_QUANTITY_REVENUE),
+    "agg_supplier_part_counts": (query_supplier_part_counts, ORACLE_SUPPLIER_PART_COUNTS),
+    "agg_top_supplier": (query_top_supplier, ORACLE_TOP_SUPPLIER),
+    "agg_waiting_suppliers": (query_waiting_suppliers, ORACLE_WAITING_SUPPLIERS),
+}

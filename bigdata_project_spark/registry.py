@@ -1,8 +1,10 @@
 """Query registry: the single source of truth behind ``__spark_entry__``.
 
-Each plans/operators module contributes named queries (PySpark builders)
-and their DuckDB oracle SQL. The driver cross-checks every pair at sf=0.01
-(row count + schema + order-insensitive value hash), so:
+Each module in ``MODULES`` exports ``QUERIES = {name: (builder, oracle)}``:
+a PySpark builder and its DuckDB twin, either a SQL string or a function
+of the fixture directory (for oracles that embed fixture-derived
+literals). The driver cross-checks every pair at sf=0.01 (row count +
+schema + order-insensitive value hash), so:
 
 - every computed column is aliased identically on both sides;
 - doubles are rounded with identical per-row arithmetic (same op order →
@@ -10,946 +12,137 @@ and their DuckDB oracle SQL. The driver cross-checks every pair at sf=0.01
 - aggregate sums go through DECIMAL so Spark's partition-parallel
   summation and DuckDB's sequential one are both exact;
 - timestamps are emitted as formatted strings, session TZ pinned to UTC.
+
+The driver checks only the FIRST 50 registered queries, so ``queries()``
+returns them stalest-first (:func:`driver_order`) by the committed
+``CORRECTNESS_r*.json`` files next to the package.
+
+Registration budget: the bench gate is a ratio over ALL registered
+queries, and Spark pays a ~0.3-0.5 s per-query planning/commit floor that
+DuckDB does not, so every sub-second registration is a permanent gate
+tax. A new registration must do >= 1 s of real work at sf0.1 or replace
+an existing entry (the replaced query keeps its pytest coverage).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+import importlib
+import json
+import re
+from collections.abc import Callable, Iterable, Mapping
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-OracleBuilder = Callable[[str], "str | None"]
+Oracle = str | Callable[[str], "str | None"]
 
 # The driver cross-checks queries vs oracles at exactly this fixture;
-# fixture-pinned oracle builders target it by default.
+# fixture-built oracles target it unless a local check names another.
 DRIVER_CHECK_SF_DIR = "/root/testdata/sf0.01"
 
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLES: dict[str, str] = {}
-# oracles whose SQL embeds fixture-derived literals (e.g. the BPE merge
-# pin): a builder regenerates them for whatever sf_dir a local check runs
-# at; the driver-facing default string targets its sf0.01 contract.
-_ORACLE_BUILDERS: dict[str, OracleBuilder] = {}
+MODULES = (
+    "plans.analytics",
+    "plans.asof_range",
+    "plans.bronze_merge",
+    "plans.clean_corpus",
+    "plans.event_windows",
+    "plans.gold",
+    "plans.holidays_json",
+    "plans.incremental",
+    "plans.silver_distances",
+    "plans.silver_ine",
+    "plans.silver_od",
+    "plans.silver_people_day",
+    "plans.starjoins",
+    "plans.starjoins2",
+    "operators.bloom",
+    "operators.bpe",
+    "operators.bucketing",
+    "operators.cdc",
+    "operators.chunking",
+    "operators.corpus_quality",
+    "operators.dedup_cluster",
+    "operators.embedding_stats",
+    "operators.funnel",
+    "operators.graph",
+    "operators.ivf",
+    "operators.layout_scan",
+    "operators.ordering",
+    "operators.packing",
+    "operators.pca",
+    "operators.pq",
+    "operators.profiling",
+    "operators.semdedup",
+    "operators.similarity",
+    "operators.sketches",
+    "operators.skew",
+    "operators.spatial_join",
+    "operators.stats",
+    "operators.text_analysis",
+    "operators.text_dedup",
+    "operators.text_signals",
+    "operators.timeseries",
+    "operators.zorder",
+    "streaming.stateful",
+    "streaming.windows",
+    "multimodal.binary_ops",
+)
 
 
-# The driver-checked window for THIS round: these 50 names are moved,
-# in this order, to registration slots 1-50 by _apply_window() at the
-# end of _load(). See _load.__doc__ for the rotation rationale; the
-# assert in _apply_window guarantees a typo here fails every test
-# session rather than silently shrinking the window.
-_R16_WINDOW: list[str] = [
-    # (1) the 19 remaining r12-checked rows, at their 4-round hard
-    # ceiling this round, CORRECTNESS_r12.json order
-    "agg_market_share",
-    "agg_order_priority",
-    "agg_promo_revenue",
-    "agg_region_revenue",
-    "agg_returned_items",
-    "agg_shipping_priority",
-    "agg_volume_shipping",
-    "bronze_holidays_json",
-    "bronze_merge_keyed",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_simhash",
-    "emb_label_centroids",
-    "events_anomaly_zscore",
-    "feature_binning",
-    "gold_od_daily",
-    "join_asof",
-    "join_asof_forward",
-    "multimodal_binary_meta",
-    # (2) rule-3 pulls: the r16 zorder rework (operators/zorder.py —
-    # non-nullable __pid kills the inferred-isnotnull pushdown blowup;
-    # zorder additionally drops its persist lifecycle, swaps the
-    # Morton expression for the value-identical bit spread, and folds
-    # the bounds .first() into the plan) changes the physical plans of
-    # BOTH distributed_ntile consumers, so both re-expose here;
-    # pipeline_shard_manifest and stream_hll_users are displaced to
-    # the front of the r17 queue (reaching, not exceeding, their
-    # ceiling there).
-    "layout_zorder_extents",
-    "feature_binning_equidepth",
-    # (3) 29 stalest r13-checked rows, CORRECTNESS_r13.json order
-    "multimodal_dedup_binary",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "pipeline_domain_mixture",
-    "pipeline_sample_stratified",
-    "pipeline_train_val_split",
-    "profile_columns",
-    "scd2_event_type",
-    "silver_distances",
-    "silver_ine_renta",
-    "silver_overnights",
-    "silver_people_day",
-    "silver_zones",
-    "silver_zones_wkt",
-    "sim_ann_lsh_buckets",
-    "sim_cosine_topk",
-    "sim_neardup_pairs",
-    "spatial_point_in_zone",
-    "text_bigram_lm",
-    "text_bpe_encode",
-    "text_bpe_merges",
-    "text_decontaminate",
-    "text_fingerprint",
-    "text_lang_id",
-    "dedup_incremental_lsh",
-    "dedup_minhash_recall",
-    "pipeline_pack_masked",
-    "sim_knn_join",
-    "sketch_hll_rollup",
-]
+def merge_tables(tables: Iterable[tuple[str, Mapping[str, tuple]]]) -> dict[str, tuple]:
+    """Concatenate ``(module, QUERIES)`` tables; a name twice is an error."""
+    merged: dict[str, tuple] = {}
+    for module, table in tables:
+        if dup := merged.keys() & table.keys():
+            raise ValueError(f"{module} registers already-registered queries {sorted(dup)}")
+        merged.update(table)
+    return merged
 
 
-def _apply_window(window: list[str]) -> None:
-    """Move ``window`` to registration slots 1-50 (driver-checked),
-    preserving relative order of everything else. Replaces physical
-    reordering of register() blocks: one reviewed list per round, and
-    an unknown/duplicate name is a hard error at import time."""
-    missing = [n for n in window if n not in _QUERIES]
-    if missing or len(set(window)) != len(window):
-        raise AssertionError(
-            f"window names missing={missing} or duplicated; refusing to rotate"
-        )
-    head = set(window)
-    ordered = [*window, *(n for n in _QUERIES if n not in head)]
-    reordered = {n: _QUERIES[n] for n in ordered}
-    _QUERIES.clear()
-    _QUERIES.update(reordered)
+def driver_order(names: Iterable[str], rounds: Mapping[int, Mapping[str, dict]]) -> list[str]:
+    """Stable sort, stalest-first, by the last round in which each query
+    had a fully green driver row (rows, schema and hash all match).
+    Never-checked queries come first; ties keep ``names`` order."""
+    last = {
+        name: r
+        for r, rows in sorted(rounds.items())
+        for name, row in rows.items()
+        if row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+    }
+    return sorted(names, key=lambda name: last.get(name, 0))
 
 
-def register(
-    name: str,
-    fn: QueryFn,
-    oracle: str | None = None,
-    oracle_builder: OracleBuilder | None = None,
-) -> None:
-    _QUERIES[name] = fn
-    if oracle is not None:
-        _ORACLES[name] = oracle
-    if oracle_builder is not None:
-        _ORACLE_BUILDERS[name] = oracle_builder
+def committed_rounds() -> dict[int, dict]:
+    """The driver's ``CORRECTNESS_r{N}.json`` rows by round ``N``, read
+    from the directory that holds the package."""
+    rounds = {}
+    for path in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"):
+        if m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name):
+            rounds[int(m[1])] = json.loads(path.read_text())
+    return rounds
 
 
-def _load() -> None:
-    """Registration order is part of the driver contract: the driver's
-    correctness harness checks the FIRST 50 registered queries.
-
-    ROTATION POLICY (adopted round 6, per the r5 verdict): the window is
-    filled STALE-FIRST every round — (1) queries that have never had a
-    driver row, (2) queries whose last green row is oldest (hard
-    ceiling: no row older than 4 rounds), (3) queries whose behavior
-    this round's commits touched, (4) stalest rest. Net-new queries get
-    only the slots left after (1)-(3); anything beyond that budget waits
-    a round rather than evicting an unexposed query. With 160+ names
-    and a 50-slot window the full cycle is ~3 rounds; this ordering
-    guarantees no query's last driver row ever trails by more than
-    that, and no query ships two rounds without a row.
-
-    REGISTRATION BUDGET RULE (adopted round 10, per the r9 verdict):
-    the bench gate is a ratio over ALL registered queries and Spark
-    pays a ~0.3-0.5 s per-query planning/commit floor that DuckDB does
-    not, so every sub-second registration is a permanent gate tax. A
-    NEW registration must either do >= 1 s of real work at sf0.1 or
-    REPLACE an existing entry (the replaced query keeps pytest parity
-    coverage — e.g. emb_gram_matrix, demoted round 10, its equivalence
-    vs emb_gram_blas owned by tests/test_graph_funnel.py).
-
-    Round 16 window (``_R16_WINDOW`` above — an explicit reviewed LIST
-    applied by ``_apply_window`` after all registrations, the practice
-    adopted r13; the literal register order below is frozen at its r12
-    state and no longer meaningful). Exactly as pre-staged by the r15
-    queue and ordered top-next in the r15 verdict (CORRECTNESS_r15.json:
-    all 50 r15 slots green, so the queue advances unchanged):
-    (1) the 19 remaining r12-checked rows, at their 4-round hard
-    ceiling this round, CORRECTNESS_r12.json file order
-    (agg_market_share … multimodal_binary_meta) — slots 1-19.
-    Derivation: 50 r12 rows; 31 went in-window at r15 and none were
-    rechecked at r13/r14, so these 19 remain, set-checked against the
-    committed CORRECTNESS files;
-    (2) TWO rule-(3) pulls — slots 20-21: the r16 zorder rework
-    (operators/zorder.py: distributed_ntile declares __pid non-null,
-    which kills the inferred-isnotnull pushdown blowup behind the
-    r12b 11.6 s cliff; layout_zorder_extents additionally drops its
-    persist lifecycle, swaps the 64-term Morton arithmetic for the
-    value-identical 4-step bit spread — equivalence pinned by
-    tests/test_zorder.py — and folds the bounds .first() into the
-    plan as a broadcast cross join) changes the physical plans of
-    both distributed_ntile consumers, layout_zorder_extents and
-    feature_binning_equidepth, so both re-expose this round even
-    though their values are proven unchanged (oracle-checked at
-    sf0.01 plus the full-registry sweep). The other r16 code changes
-    (sources/staging.py scheme-anchoring + dropped-URL warning, the
-    two r15 ADVICE items) are driver-side listing-parser code,
-    pytest-owned, not a registered query;
-    (3) 29 of the 50 r13-checked rows that have no later row,
-    stalest-first in CORRECTNESS_r13.json file order
-    (multimodal_dedup_binary … sketch_hll_rollup) — slots 22-50.
-    19+2+29 = 50. pipeline_shard_manifest and stream_hll_users, the
-    two staged rows the pulls displaced, move to the FRONT of the r17
-    queue: checked r13, ceiling r17 — displaced, not stranded. No
-    net-new: the reference surface is complete and the LLM-pipeline
-    surface saturated; net-new must displace, and nothing earns
-    displacement this round.
-
-    Round 17 queue (pre-staged directly after slot 50): (1) the 21
-    remaining r13-checked rows — pipeline_shard_manifest and
-    stream_hll_users (displaced above) first, then
-    join_bloom_prefilter … agg_forecast_revenue in
-    CORRECTNESS_r13.json order — all at the 4-round ceiling at r17,
-    so all 21 go first; (2) 29 of the 50 r14-checked rows,
-    stalest-first in CORRECTNESS_r14.json order (the rest go to r18,
-    reaching, not exceeding, the ceiling). Any r16/r17 commit that
-    changes a checked query's behavior pulls it forward per rule (3).
-
-    Round 15 window, for the audit trail: the 19 remaining
-    r11-ceiling rows (agg_approx_distinct … layout_partition_pruning),
-    zero rule-3 pulls, and 31 stalest r12 rows
-    (gold_overnights_seasonality … agg_large_orders); all 50 green in
-    CORRECTNESS_r15.json, list preserved in git history at tag-commit
-    "round 15: verdict/advice/correctness/bench".
-
-    Round 14 window, for the audit trail: the 23 remaining r10-ceiling
-    rows (agg_late_by_class … join_interval_clicks), zero rule-3
-    pulls, and 27 stalest r11 rows (gold_income_mobility …
-    agg_distinct_counts); all 50 green in CORRECTNESS_r14.json, list
-    preserved in git history at tag-commit "round 14:
-    verdict/advice/correctness/bench".
-
-    Round 13 window, for the audit trail: the 24 r9-ceiling rows
-    (multimodal_dedup_binary … text_lang_id), ONE rule-3 pull
-    (dedup_incremental_lsh — the r13 localCheckpoint changed the
-    screen's physical evaluation), and 25 stalest r10 rows
-    (dedup_minhash_recall … agg_forecast_revenue); all 50 green in
-    CORRECTNESS_r13.json, list preserved in git history at tag-commit
-    "round 13: verdict/advice/correctness/bench".
-
-    Rule-3 scope note (late r12): the hex32_to_int conv swap +
-    simhash shiftright bit extract (functions/text.py,
-    operators/text_dedup.py) change the physical EXPRESSION inside
-    ~15 hash-consuming checked queries but are proven
-    value-identical — conv ≡ Horner pinned by
-    tests/test_text_dedup_blocking.py::test_hex32_conv_matches_horner
-    plus a full 169-query oracle sweep at the driver's own sf0.01.
-    In-tree evidence (r12 advice item 4): the driver's own
-    CORRECTNESS_r12.json is committed at the r12 close (50/50 green,
-    incl. 4 hash-consuming rows), and the full-registry sweep is
-    re-run and committed each round since as
-    tools/oracle_sweep_sf0.01_r13.txt. Behavior is unchanged, so rule
-    (3)'s
-    behavior trigger does not fire and the staged window above stays
-    EXACTLY as the r11 queue wrote it (the r11 verdict's top item; the
-    ceiling math for the 21 r8 rows depends on it). Four affected
-    families still get fresh r12 driver rows through queries already
-    in-window (dedup_simhash slot 43, sketch_cms_topk 7,
-    text_hashing_features 15, text_source_overlap 30); the rest
-    (minhash family, bloom, clean_corpus, hll) re-expose on their
-    standing r13 schedule. Contrast with the three r12 pulls above,
-    which changed aggregation lanes / cache lifecycles — physical
-    BEHAVIOR a driver row should re-witness.
-
-    DEMOTIONS (registration budget rule): emb_gram_matrix (r10) and
-    text_source_overlap_bitmap (r11) both keep pytest-owned
-    equivalence vs their production twins (tests/test_graph_funnel.py,
-    tests/test_text_signals.py). 169 registrations."""
-    if _QUERIES:
-        return
-
-    from bigdata_project_spark.multimodal import binary_ops
-    from bigdata_project_spark.operators import (
-        bloom,
-        bpe,
-        bucketing,
-        cdc,
-        chunking,
-        corpus_quality,
-        dedup_cluster,
-        embedding_stats,
-        funnel,
-        graph,
-        graph as _gr0,
-        ivf,
-        layout_scan,
-        ordering,
-        packing,
-        pca,
-        pq,
-        profiling,
-        semdedup,
-        similarity,
-        sketches,
-        skew,
-        spatial_join,
-        stats,
-        text_analysis,
-        text_dedup,
-        text_signals,
-        timeseries,
-        zorder,
-    )
-    from bigdata_project_spark.plans import (
-        analytics,
-        analytics as _an0,
-        analytics as _an1,
-        asof_range,
-        asof_range as _ar,
-        bronze_merge,
-        clean_corpus,
-        event_windows,
-        event_windows as _ew,
-        gold,
-        holidays_json,
-        incremental,
-        silver_distances,
-        silver_ine,
-        silver_od,
-        silver_people_day,
-        starjoins,
-        starjoins2,
-    )
-    from bigdata_project_spark.streaming import (
-        stateful as stream_stateful,
-        windows as _sw,
-        windows as _sw0,
-        windows as stream_windows,
-    )
-
-    # ---- r12 window slot 1 (rule 1): the r11 net-new, the only ----
-    # ---- registered query with no driver row ever ---------------------
-    register(
-        "gold_overnights_seasonality",
-        gold.query_gold_overnights_seasonality,
-        gold.ORACLE_GOLD_OVERNIGHTS_SEASONALITY,
-    )
-    # ---- r12 window slots 2-22: the 21 r8-checked rows at their ----
-    # ---- 4-round hard ceiling (pre-staged by the r11 queue) -----------
-    register(
-        "ml_group_ols",
-        stats.query_ml_group_ols,
-        stats.ORACLE_ML_GROUP_OLS,
-    )
-    register(
-        "pipeline_chunk_docs",
-        chunking.query_pipeline_chunk_docs,
-        chunking.ORACLE_PIPELINE_CHUNK_DOCS,
-    )
-    register(
-        "pipeline_domain_reweight",
-        packing.query_domain_reweight,
-        packing.ORACLE_DOMAIN_REWEIGHT,
-    )
-    register(
-        "pipeline_pack_sequences",
-        packing.query_pack_sequences,
-        packing.ORACLE_PACK_SEQUENCES,
-    )
-    register(
-        "pipeline_quality_funnel",
-        corpus_quality.query_pipeline_quality_funnel,
-        corpus_quality.ORACLE_PIPELINE_QUALITY_FUNNEL,
-    )
-    register(
-        "sketch_cms_topk",
-        sketches.query_cms_heavy_hitters,
-        sketches.ORACLE_CMS_HEAVY_HITTERS,
-    )
-    register(
-        "source_orc_roundtrip",
-        layout_scan.query_source_orc_roundtrip,
-        layout_scan.ORACLE_SOURCE_ORC_ROUNDTRIP,
-    )
-    register(
-        "source_text_logs",
-        layout_scan.query_source_text_logs,
-        layout_scan.ORACLE_SOURCE_TEXT_LOGS,
-    )
-    register(
-        "stream_interval_join",
-        _sw.query_stream_interval_join,
-        _ew.ORACLE_INTERVAL_JOIN_CLICKS,
-    )
-    register(
-        "stream_sessionize",
-        _sw.query_stream_sessionize,
-        _sw.ORACLE_STREAM_SESSIONIZE,
-    )
-    register(
-        "stream_tumbling",
-        _sw.query_stream_tumbling,
-        _ew.ORACLE_TUMBLING_1H,
-    )
-    register(
-        "text_bigram_perplexity",
-        corpus_quality.query_text_bigram_perplexity,
-        corpus_quality.ORACLE_TEXT_BIGRAM_PERPLEXITY,
-    )
-    register(
-        "text_dup_spans",
-        text_dedup.query_text_dup_spans,
-        text_dedup.ORACLE_TEXT_DUP_SPANS,
-    )
-    register(
-        "text_hashing_features",
-        text_analysis.query_hashing_features,
-        text_analysis.ORACLE_HASHING_FEATURES,
-    )
-    register(
-        "text_ngram_novelty",
-        text_analysis.query_text_ngram_novelty,
-        text_analysis.ORACLE_TEXT_NGRAM_NOVELTY,
-    )
-    register(
-        "text_oov_rate",
-        corpus_quality.query_text_oov_rate,
-        corpus_quality.ORACLE_TEXT_OOV_RATE,
-    )
-    register(
-        "text_quality_linear",
-        text_analysis.query_text_quality_linear,
-        text_analysis.ORACLE_TEXT_QUALITY_LINEAR,
-    )
-    register(
-        "text_url_domains",
-        text_signals.query_text_url_domains,
-        text_signals.ORACLE_TEXT_URL_DOMAINS,
-    )
-    register(
-        "ts_ewma_hourly",
-        timeseries.query_ts_ewma_hourly,
-        timeseries.ORACLE_TS_EWMA_HOURLY,
-    )
-    register(
-        "ts_gapfill_ffill",
-        timeseries.query_ts_gapfill_ffill,
-        timeseries.ORACLE_TS_GAPFILL_FFILL,
-    )
-    register(
-        "win_range_7d",
-        _ew.query_win_range_7d,
-        _ew.ORACLE_WIN_RANGE_7D,
-    )
-    # ---- r12 window slots 23-25 (rule 3): round-12 commits change ----
-    # ---- these plans (bigint corr lane; distributed_ntile drops its ----
-    # ---- net-negative persist lifecycle) -------------------------------
-    register(
-        "feature_corr_matrix",
-        stats.query_feature_corr_matrix,
-        stats.ORACLE_FEATURE_CORR_MATRIX,
-    )
-    register(
-        "layout_zorder_extents",
-        zorder.query_zorder_extents,
-        zorder.ORACLE_ZORDER_EXTENTS,
-    )
-    register(
-        "feature_binning_equidepth",
-        profiling.query_feature_binning_equidepth,
-        profiling.ORACLE_FEATURE_BINNING_EQUIDEPTH,
-    )
-    # ---- r12 window slots 26-50: 25 r9-checked rows, stalest- ------
-    # ---- first in prior file order --------------------------------------
-    register(
-        "silver_ine_empresas", silver_ine.query_ine_empresas, silver_ine.ORACLE_INE_EMPRESAS
-    )
-    register(
-        "silver_ine_poblacion",
-        silver_ine.query_ine_poblacion,
-        silver_ine.ORACLE_INE_POBLACION,
-    )
-    register(
-        "agg_approx_quantiles",
-        _an0.query_approx_quantiles,
-        _an0.ORACLE_APPROX_QUANTILES,
-    )
-    register(
-        "text_dup_spans_lcp",
-        text_dedup.query_text_dup_spans_lcp,
-        text_dedup.ORACLE_TEXT_DUP_SPANS_LCP,
-    )
-    register(
-        "text_source_overlap",
-        text_signals.query_text_source_overlap,
-        text_signals.ORACLE_TEXT_SOURCE_OVERLAP,
-    )
-    register(
-        "agg_large_orders",
-        starjoins.query_large_orders,
-        starjoins.ORACLE_LARGE_ORDERS,
-    )
-    register(
-        "agg_market_share",
-        starjoins.query_market_share,
-        starjoins.ORACLE_MARKET_SHARE,
-    )
-    register(
-        "agg_order_priority",
-        starjoins.query_order_priority,
-        starjoins.ORACLE_ORDER_PRIORITY,
-    )
-    register(
-        "agg_promo_revenue",
-        starjoins.query_promo_revenue,
-        starjoins.ORACLE_PROMO_REVENUE,
-    )
-    register(
-        "agg_region_revenue",
-        starjoins.query_region_revenue,
-        starjoins.ORACLE_REGION_REVENUE,
-    )
-    register(
-        "agg_returned_items",
-        starjoins.query_returned_items,
-        starjoins.ORACLE_RETURNED_ITEMS,
-    )
-    register(
-        "agg_shipping_priority",
-        starjoins.query_shipping_priority,
-        starjoins.ORACLE_SHIPPING_PRIORITY,
-    )
-    register(
-        "agg_volume_shipping",
-        starjoins.query_volume_shipping,
-        starjoins.ORACLE_VOLUME_SHIPPING,
-    )
-    register("bronze_holidays_json", holidays_json.query, holidays_json.ORACLE)
-    register(
-        "bronze_merge_keyed",
-        bronze_merge.query_merge_keyed,
-        bronze_merge.ORACLE_MERGE_KEYED,
-    )
-    register("dedup_embedding_cosine", similarity.query_dedup_embedding, similarity.ORACLE_DEDUP_EMBEDDING)
-    register("dedup_exact", text_dedup.query_dedup_exact, text_dedup.ORACLE_DEDUP_EXACT)
-    register("dedup_simhash", text_dedup.query_dedup_simhash, text_dedup.ORACLE_DEDUP_SIMHASH)
-    register(
-        "emb_label_centroids",
-        embedding_stats.query_emb_label_centroids,
-        embedding_stats.ORACLE_EMB_LABEL_CENTROIDS,
-    )
-    register(
-        "events_anomaly_zscore",
-        timeseries.query_events_anomaly_zscore,
-        timeseries.ORACLE_EVENTS_ANOMALY_ZSCORE,
-    )
-    register(
-        "feature_binning",
-        profiling.query_feature_binning,
-        profiling.ORACLE_FEATURE_BINNING,
-    )
-    register("gold_od_daily", gold.query_gold_od_daily, gold.ORACLE_GOLD_OD_DAILY)
-    register(
-        "join_asof",
-        _ar.query_asof_click_before_purchase,
-        _ar.ORACLE_ASOF,
-    )
-    register(
-        "join_asof_forward",
-        _ar.query_asof_next_purchase,
-        _ar.ORACLE_ASOF_FORWARD,
-    )
-    register("multimodal_binary_meta", binary_ops.query_binary_meta, binary_ops.ORACLE_BINARY_META)
-    # ---- r13 queue head: the remaining 24 r9-checked rows (they ----
-    # ---- reach the 4-round ceiling at r13; the first three were ------
-    # ---- displaced from the r12 window by the rule-3 pulls) ------------
-    register(
-        "multimodal_dedup_binary",
-        binary_ops.query_multimodal_dedup_binary,
-        binary_ops.ORACLE_MULTIMODAL_DEDUP_BINARY,
-    )
-    register("multimodal_features", binary_ops.query_features, binary_ops.ORACLE_FEATURES)
-    register("multimodal_frame_sample", binary_ops.query_frame_sample, binary_ops.ORACLE_FRAME_SAMPLE)
-    register(
-        "pipeline_domain_mixture",
-        packing.query_domain_mixture,
-        packing.ORACLE_DOMAIN_MIXTURE,
-    )
-    register(
-        "pipeline_sample_stratified",
-        text_signals.query_sample_stratified,
-        text_signals.ORACLE_SAMPLE_STRATIFIED,
-    )
-    register("pipeline_train_val_split", clean_corpus.query_train_val_split, clean_corpus.ORACLE_TRAIN_VAL_SPLIT)
-    register(
-        "profile_columns",
-        profiling.query_profile_columns,
-        profiling.ORACLE_PROFILE_COLUMNS,
-    )
-    register(
-        "scd2_event_type",
-        profiling.query_scd2_event_type,
-        profiling.ORACLE_SCD2_EVENT_TYPE,
-    )
-    register(
-        "silver_distances",
-        silver_distances.query_distances,
-        silver_distances.ORACLE_DISTANCES,
-    )
-    register("silver_ine_renta", silver_ine.query_ine_renta, silver_ine.ORACLE_INE_RENTA)
-    register(
-        "silver_overnights",
-        silver_people_day.query_overnights,
-        silver_people_day.ORACLE_OVERNIGHTS,
-    )
-    register("silver_people_day", silver_people_day.query, silver_people_day.ORACLE)
-    register("silver_zones", silver_distances.query_zones, silver_distances.ORACLE_ZONES)
-    register(
-        "silver_zones_wkt",
-        silver_distances.query_zones_wkt,
-        silver_distances.ORACLE_ZONES_WKT,
-    )
-    register("sim_ann_lsh_buckets", similarity.query_ann_lsh_buckets, similarity.ORACLE_ANN_LSH)
-    register("sim_cosine_topk", similarity.query_cosine_topk, similarity.ORACLE_COSINE_TOPK)
-    register("sim_neardup_pairs", similarity.query_neardup_pairs, similarity.ORACLE_NEARDUP_PAIRS)
-    register(
-        "spatial_point_in_zone",
-        spatial_join.query_point_in_zone,
-        spatial_join.ORACLE_POINT_IN_ZONE,
-    )
-    register("text_bigram_lm", text_signals.query_text_bigram_lm, text_signals.ORACLE_TEXT_BIGRAM_LM)
-    register(
-        "text_bpe_encode",
-        bpe.query_bpe_encode,
-        bpe.oracle_bpe_encode_sql(),
-        oracle_builder=bpe.oracle_bpe_encode_sql,
-    )
-    register(
-        "text_bpe_merges",
-        bpe.query_bpe_merges,
-        bpe.oracle_bpe_merges_sql(),
-        oracle_builder=bpe.oracle_bpe_merges_sql,
-    )
-    register(
-        "text_decontaminate",
-        text_signals.query_text_decontaminate,
-        text_signals.ORACLE_TEXT_DECONTAMINATE,
-    )
-    register("text_fingerprint", text_analysis.query_fingerprint, text_analysis.ORACLE_FINGERPRINT)
-    register("text_lang_id", text_analysis.query_lang_id, text_analysis.ORACLE_LANG_ID)
-    # ---- r13 queue tail: 48 r10-checked rows (29 stalest fill r13 --
-    # ---- after the 21 r9-ceiling rows; the remaining 19 go r14) ---------
-    register(
-        "dedup_minhash_recall",
-        text_dedup.query_dedup_minhash_recall,
-        text_dedup.ORACLE_DEDUP_MINHASH_RECALL,
-    )
-    register(
-        "pipeline_pack_masked",
-        packing.query_pack_sequences_masked,
-        packing.ORACLE_PACK_SEQUENCES_MASKED,
-    )
-    register(
-        "sim_knn_join",
-        similarity.query_sim_knn_join,
-        similarity.ORACLE_SIM_KNN_JOIN,
-    )
-    register(
-        "sketch_hll_rollup",
-        sketches.query_sketch_hll_rollup,
-        sketches.ORACLE_SKETCH_HLL_ROLLUP,
-    )
-    register(
-        "pipeline_shard_manifest",
-        packing.query_shard_manifest,
-        packing.ORACLE_SHARD_MANIFEST,
-    )
-    register(
-        "stream_hll_users",
-        stream_stateful.query_stream_hll_users,
-        sketches.ORACLE_STREAM_HLL_USERS,
-    )
-    register(
-        "join_bloom_prefilter",
-        bloom.query_join_bloom_prefilter,
-        bloom.ORACLE_JOIN_BLOOM_PREFILTER,
-    )
-    register(
-        "pipeline_mixture_temperature",
-        packing.query_mixture_temperature,
-        packing.ORACLE_MIXTURE_TEMPERATURE,
-    )
-    register(
-        "text_inverted_index",
-        text_analysis.query_text_inverted_index,
-        text_analysis.ORACLE_TEXT_INVERTED_INDEX,
-    )
-    register(
-        "stream_static_enrich",
-        stream_windows.query_stream_static_enrich,
-        stream_windows.ORACLE_STREAM_STATIC_ENRICH,
-    )
-    register(
-        "ts_ohlc_hourly",
-        timeseries.query_ts_ohlc_hourly,
-        timeseries.ORACLE_TS_OHLC_HOURLY,
-    )
-    register("text_pii_redact", text_signals.query_text_pii_redact, text_signals.ORACLE_TEXT_PII_REDACT)
-    register("text_quality_score", text_analysis.query_quality_score, text_analysis.ORACLE_QUALITY_SCORE)
-    register("text_repetition", text_signals.query_text_repetition, text_signals.ORACLE_TEXT_REPETITION)
-    register("text_tfidf", text_analysis.query_tfidf, text_analysis.ORACLE_TFIDF)
-    register("text_token_stats", text_analysis.query_token_stats, text_analysis.ORACLE_TOKEN_STATS)
-    register("text_vocab_topk", text_analysis.query_vocab_topk, text_analysis.ORACLE_VOCAB_TOPK)
-    register(
-        "sim_ann_recall_at_k",
-        ivf.query_ann_recall_at_k,
-        ivf.ORACLE_ANN_RECALL_AT_K,
-    )
-    register("dedup_fuzzy_lev", text_dedup.query_dedup_fuzzy_lev, text_dedup.ORACLE_DEDUP_FUZZY_LEV)
-    register(
-        "agg_best_supplier",
-        starjoins2.query_best_supplier,
-        starjoins2.ORACLE_BEST_SUPPLIER,
-    )
-    register(
-        "agg_bracket_revenue",
-        starjoins.query_bracket_revenue,
-        starjoins.ORACLE_BRACKET_REVENUE,
-    )
-    register(
-        "agg_customer_distribution",
-        starjoins2.query_customer_distribution,
-        starjoins2.ORACLE_CUSTOMER_DISTRIBUTION,
-    )
-    register(
-        "agg_dominant_suppliers",
-        starjoins2.query_dominant_suppliers,
-        starjoins2.ORACLE_DOMINANT_SUPPLIERS,
-    )
-    register(
-        "agg_dormant_customers",
-        starjoins2.query_dormant_customers,
-        starjoins2.ORACLE_DORMANT_CUSTOMERS,
-    )
-    register(
-        "agg_forecast_revenue",
-        starjoins2.query_forecast_revenue,
-        starjoins2.ORACLE_FORECAST_REVENUE,
-    )
-    register(
-        "agg_late_by_class",
-        starjoins2.query_late_by_class,
-        starjoins2.ORACLE_LATE_BY_CLASS,
-    )
-    register(
-        "agg_nation_profit",
-        starjoins2.query_nation_profit,
-        starjoins2.ORACLE_NATION_PROFIT,
-    )
-    register(
-        "agg_retention_cohort",
-        funnel.query_retention_cohort,
-        funnel.ORACLE_RETENTION_COHORT,
-    )
-    register(
-        "agg_small_qty_revenue",
-        starjoins2.query_small_quantity_revenue,
-        starjoins2.ORACLE_SMALL_QUANTITY_REVENUE,
-    )
-    register(
-        "agg_supplier_part_counts",
-        starjoins2.query_supplier_part_counts,
-        starjoins2.ORACLE_SUPPLIER_PART_COUNTS,
-    )
-    register(
-        "agg_top_supplier",
-        starjoins2.query_top_supplier,
-        starjoins2.ORACLE_TOP_SUPPLIER,
-    )
-    register(
-        "agg_unpivot_measures",
-        _an1.query_unpivot_measures,
-        _an1.ORACLE_UNPIVOT_MEASURES,
-    )
-    register(
-        "agg_waiting_suppliers",
-        starjoins2.query_waiting_suppliers,
-        starjoins2.ORACLE_WAITING_SUPPLIERS,
-    )
-    register(
-        "bronze_merge_all_columns",
-        bronze_merge.query_merge_all_columns,
-        bronze_merge.ORACLE_MERGE_ALL,
-    )
-    register(
-        "dedup_cluster_cc",
-        dedup_cluster.query_dedup_cluster_cc,
-        dedup_cluster.ORACLE_DEDUP_CLUSTER_CC,
-    )
-    register("dedup_minhash_lsh", text_dedup.query_dedup_minhash_lsh, text_dedup.ORACLE_DEDUP_MINHASH_LSH)
-    register("dedup_ngram_jaccard", text_dedup.query_dedup_ngram_jaccard, text_dedup.ORACLE_DEDUP_NGRAM_JACCARD)
-    register(
-        "dedup_semantic",
-        semdedup.query_dedup_semantic,
-        semdedup.ORACLE_DEDUP_SEMANTIC,
-    )
-    register("dedup_simhash_pairs", text_dedup.query_dedup_simhash_pairs, text_dedup.ORACLE_DEDUP_SIMHASH_PAIRS)
-    register("events_json_props", analytics.query_json_props, analytics.ORACLE_JSON_PROPS)
-    register("events_sessionize", event_windows.query_sessionize, event_windows.ORACLE_SESSIONIZE)
-    register("events_sliding_10m_5m", event_windows.query_sliding_10m_5m, event_windows.ORACLE_SLIDING_10M_5M)
-    register("events_time_rollup", event_windows.query_time_rollup, event_windows.ORACLE_TIME_ROLLUP)
-    register("events_tumbling_1h", event_windows.query_tumbling_1h, event_windows.ORACLE_TUMBLING_1H)
-    register("events_variant_props", analytics.query_variant_props, analytics.ORACLE_VARIANT_PROPS)
-    register(
-        "graph_bfs_distance",
-        _gr0.query_graph_bfs_distance,
-        _gr0.ORACLE_GRAPH_BFS_DISTANCE,
-    )
-    register("graph_pagerank", graph.query_graph_pagerank, graph.ORACLE_GRAPH_PAGERANK)
-    register(
-        "join_interval_clicks",
-        event_windows.query_interval_join_clicks,
-        event_windows.ORACLE_INTERVAL_JOIN_CLICKS,
-    )
-    # ---- r11-checked rows (freshest; due r14) ------------------------
-    register(
-        "gold_income_mobility",
-        gold.query_gold_income_mobility,
-        gold.ORACLE_GOLD_INCOME_MOBILITY,
-    )
-    register("join_range_bands", asof_range.query_range_join_value_bands, asof_range.ORACLE_RANGE_JOIN)
-    register("join_semi_anti", analytics.query_semi_anti_join, analytics.ORACLE_SEMI_ANTI_JOIN)
-    register(
-        "layout_bucketed_join",
-        bucketing.query_bucketed_join_revenue,
-        bucketing.ORACLE_BUCKETED_JOIN,
-    )
-    register("pipeline_clean_corpus", clean_corpus.query_clean_corpus, clean_corpus.ORACLE_CLEAN_CORPUS)
-    register(
-        "pipeline_dedup_canonical",
-        dedup_cluster.query_dedup_canonical,
-        dedup_cluster.ORACLE_DEDUP_CANONICAL,
-    )
-    register(
-        "pipeline_global_shuffle",
-        ordering.query_global_shuffle,
-        ordering.ORACLE_GLOBAL_SHUFFLE,
-    )
-    register("silver_od", silver_od.query, silver_od.ORACLE)
-    register("sim_ivf_kmeans_topk", ivf.query_ivf_kmeans_topk, ivf.ORACLE_IVF_KMEANS_TOPK)
-    register("sim_ivfpq_topk", pq.query_ivfpq_topk, pq.ORACLE_IVFPQ_TOPK)
-    register("sim_pq_adc_topk", pq.query_pq_adc_topk, pq.ORACLE_PQ_ADC_TOPK)
-    register("skew_salted_agg", skew.query_skew_salted_agg, skew.ORACLE_SKEW_SALTED_AGG)
-    register("skew_salted_join", skew.query_skew_salted_join, skew.ORACLE_SKEW_SALTED_JOIN)
-    register(
-        "stream_dedup",
-        _sw0.query_stream_dedup,
-        _sw0.ORACLE_STREAM_DEDUP,
-    )
-    register(
-        "stream_upsert_sink",
-        stream_windows.query_stream_upsert_sink,
-        stream_windows.ORACLE_STREAM_UPSERT,
-    )
-    register(
-        "text_char_entropy",
-        corpus_quality.query_text_char_entropy,
-        corpus_quality.ORACLE_TEXT_CHAR_ENTROPY,
-    )
-    register("win_lead_lag", analytics.query_lead_lag_delta, analytics.ORACLE_LEAD_LAG)
-    register("win_rank_family", analytics.query_rank_family, analytics.ORACLE_RANK_FAMILY)
-    register("win_running_total", analytics.query_running_total, analytics.ORACLE_RUNNING_TOTAL)
-    register("win_topk_per_group", analytics.query_topk_per_group, analytics.ORACLE_TOPK_PER_GROUP)
-    register(
-        "dedup_incremental_lsh",
-        text_dedup.query_dedup_incremental_lsh,
-        text_dedup.ORACLE_DEDUP_INCREMENTAL_LSH,
-    )
-    register("agg_pricing_summary", analytics.query_pricing_summary, analytics.ORACLE_PRICING_SUMMARY)
-    register("agg_top_customers", analytics.query_top_customers, analytics.ORACLE_TOP_CUSTOMERS)
-    register("agg_pivot_status", analytics.query_pivot_status, analytics.ORACLE_PIVOT_STATUS)
-    register("agg_rollup_summary", analytics.query_rollup_summary, analytics.ORACLE_ROLLUP_SUMMARY)
-    register("agg_cube_summary", analytics.query_cube_summary, analytics.ORACLE_CUBE_SUMMARY)
-    register("agg_grouping_sets", analytics.query_grouping_sets, analytics.ORACLE_GROUPING_SETS)
-    register("agg_distinct_counts", analytics.query_distinct_counts, analytics.ORACLE_DISTINCT_COUNTS)
-    register("agg_approx_distinct", analytics.query_approx_distinct, analytics.ORACLE_APPROX_DISTINCT)
-    register("agg_percentiles", asof_range.query_percentiles_by_type, asof_range.ORACLE_PERCENTILES)
-    register("set_ops", analytics.query_set_ops, analytics.ORACLE_SET_OPS)
-    register("cogroup_activity", analytics.query_cogroup_activity, analytics.ORACLE_COGROUP_ACTIVITY)
-    register(
-        "graph_triangles",
-        graph.query_graph_triangles,
-        graph.ORACLE_GRAPH_TRIANGLES,
-    )
-    register(
-        "stream_transitions",
-        stream_stateful.query_stream_transitions,
-        funnel.ORACLE_EVENTS_TRANSITIONS,
-    )
-    register(
-        "bronze_incremental_batches",
-        incremental.query_bronze_incremental_batches,
-        incremental.ORACLE_BRONZE_INCREMENTAL,
-    )
-    register(
-        "silver_zones_geom",
-        silver_distances.query_zones_geom,
-        silver_distances.ORACLE_ZONES_WKT,
-    )
-    register(
-        "cdc_snapshot_diff",
-        cdc.query_cdc_snapshot_diff,
-        cdc.ORACLE_CDC_SNAPSHOT_DIFF,
-    )
-    register(
-        "dedup_paragraph",
-        text_dedup.query_dedup_paragraph,
-        text_dedup.ORACLE_DEDUP_PARAGRAPH,
-    )
-    register(
-        "dedup_span_removal",
-        text_dedup.query_dedup_span_removal,
-        text_dedup.ORACLE_DEDUP_SPAN_REMOVAL,
-    )
-    register(
-        "dedup_url_canonical",
-        text_signals.query_dedup_url_canonical,
-        text_signals.ORACLE_DEDUP_URL_CANONICAL,
-    )
-    register("emb_gram_blas", graph.query_emb_gram_blas, graph.ORACLE_EMB_GRAM_BLAS)
-    register(
-        "emb_int8_quantize",
-        embedding_stats.query_emb_int8_quantize,
-        embedding_stats.ORACLE_EMB_INT8_QUANTIZE,
-    )
-    register(
-        "emb_pca_project",
-        pca.query_emb_pca_project,
-        pca.oracle_emb_pca_sql(),
-        oracle_builder=pca.oracle_emb_pca_sql,
-    )
-    register(
-        "events_dau_wau", funnel.query_events_dau_wau, funnel.ORACLE_EVENTS_DAU_WAU
-    )
-    register("events_funnel", funnel.query_events_funnel, funnel.ORACLE_EVENTS_FUNNEL)
-    register(
-        "events_transitions",
-        funnel.query_events_transitions,
-        funnel.ORACLE_EVENTS_TRANSITIONS,
-    )
-    register(
-        "layout_partition_pruning",
-        layout_scan.query_layout_partition_pruning,
-        layout_scan.ORACLE_LAYOUT_PARTITION_PRUNING,
-    )
-
-    _apply_window(_R16_WINDOW)
+@functools.cache
+def _table() -> dict[str, tuple[QueryFn, Oracle]]:
+    table = merge_tables(
+        (m, importlib.import_module(f"{__package__}.{m}").QUERIES) for m in MODULES
+    )
+    return {name: table[name] for name in driver_order(table, committed_rounds())}
 
 
 def queries() -> dict[str, QueryFn]:
-    _load()
-    return dict(_QUERIES)
+    return {name: fn for name, (fn, _) in _table().items()}
 
 
 def oracles(sf_dir: str | None = None) -> dict[str, str]:
-    """Oracle SQL per query. With ``sf_dir``, fixture-pinned oracles are
-    regenerated for that directory; without it (the driver's call path)
-    the returned strings target the driver's sf0.01 contract."""
-    _load()
-    out = dict(_ORACLES)
-    if sf_dir is not None:
-        for name, build in _ORACLE_BUILDERS.items():
-            rebuilt = build(sf_dir)
-            if rebuilt is not None:
-                out[name] = rebuilt
+    """Oracle SQL per query. Fixture-built oracles are built for ``sf_dir``
+    (default: the driver's sf0.01 fixture); one that returns None for it
+    is left out, so that query gets a rows-only check."""
+    out = {}
+    for name, (_, oracle) in _table().items():
+        sql = oracle(sf_dir or DRIVER_CHECK_SF_DIR) if callable(oracle) else oracle
+        if sql is not None:
+            out[name] = sql
     return out

@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from bigdata_project_spark.operators.funnel import ORACLE_EVENTS_TRANSITIONS
+from bigdata_project_spark.operators.sketches import HLL_M, ORACLE_STREAM_HLL_USERS, hll_finalize
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -268,7 +271,6 @@ def query_stream_hll_users(spark, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from bigdata_project_spark.operators.sketches import HLL_M, hll_finalize
     from bigdata_project_spark.sources.readers import load_table
     from bigdata_project_spark.streaming.windows import (
         drain_to_memory,
@@ -292,3 +294,9 @@ def query_stream_hll_users(spark, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("n_users_exact"))
     )
     return hll_finalize(regs, exact, "event_type")
+
+
+QUERIES = {
+    "stream_hll_users": (query_stream_hll_users, ORACLE_STREAM_HLL_USERS),
+    "stream_transitions": (query_stream_transitions, ORACLE_EVENTS_TRANSITIONS),
+}

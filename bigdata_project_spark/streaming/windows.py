@@ -17,6 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdata_project_spark.plans.event_windows import (
+    ORACLE_INTERVAL_JOIN_CLICKS,
+    ORACLE_TUMBLING_1H,
+)
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -535,3 +540,13 @@ SELECT c.c_nationkey,
 FROM events e JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY c.c_nationkey
 """
+
+
+QUERIES = {
+    "stream_interval_join": (query_stream_interval_join, ORACLE_INTERVAL_JOIN_CLICKS),
+    "stream_sessionize": (query_stream_sessionize, ORACLE_STREAM_SESSIONIZE),
+    "stream_tumbling": (query_stream_tumbling, ORACLE_TUMBLING_1H),
+    "stream_static_enrich": (query_stream_static_enrich, ORACLE_STREAM_STATIC_ENRICH),
+    "stream_dedup": (query_stream_dedup, ORACLE_STREAM_DEDUP),
+    "stream_upsert_sink": (query_stream_upsert_sink, ORACLE_STREAM_UPSERT),
+}

@@ -22,6 +22,15 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def oracles(sf_dir) -> dict[str, str]:
+    """Oracle SQL for the test fixture, built once per session (the
+    fixture-built BPE and PCA oracles each run a DuckDB pass)."""
+    from bigdata_project_spark import registry
+
+    return registry.oracles(sf_dir)
+
+
+@pytest.fixture(scope="session")
 def duck(sf_dir):
     from bigdata_project_spark.oracle_check import duckdb_connection
 

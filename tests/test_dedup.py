@@ -556,7 +556,7 @@ SALT_ROUTED = (
 )
 
 
-def test_forced_salt_matches_oracles(spark, duck, sf_dir, monkeypatch):
+def test_forced_salt_matches_oracles(spark, duck, sf_dir, oracles, monkeypatch):
     """With the threshold forced down to 4, the fixture's buckets really
     salt-split, and every salt-routed query must still match its DuckDB
     oracle."""
@@ -565,7 +565,7 @@ def test_forced_salt_matches_oracles(spark, duck, sf_dir, monkeypatch):
     from bigdata_project_spark.oracle_check import compare_one
 
     monkeypatch.setenv(_LSH_SALT_ENV, "4")
-    queries, oracles = registry.queries(), registry.oracles(sf_dir)
+    queries = registry.queries()
     for name in SALT_ROUTED:
         problems = compare_one(
             spark, duck, name, queries[name], oracles[name], sf_dir

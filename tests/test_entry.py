@@ -5,6 +5,8 @@ from __future__ import annotations
 import importlib.util
 import os
 
+import pytest
+
 spec = importlib.util.spec_from_file_location(
     "__spark_entry__", os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py")
 )
@@ -24,44 +26,49 @@ def test_queries_and_oracles_align(spark):
     assert set(os_) <= set(qs), "oracle without a query"
 
 
-def test_r16_window_occupies_first_50_slots():
-    """The driver checks the FIRST 50 registered queries; the rotation
-    contract (registry._load.__doc__) says slots 1-50 are exactly
-    _R16_WINDOW in order, with no other registration lost."""
-    from bigdata_project_spark import registry
+def test_driver_order_stalest_first():
+    """Never-checked queries first, then by last fully green round; a
+    failing row does not refresh a query's round; ties keep table order."""
+    from bigdata_project_spark.registry import driver_order
 
-    names = list(registry.queries())
-    assert names[:50] == registry._R16_WINDOW
-    assert len(names) == len(set(names)) == 169
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    rounds = {
+        1: {"a": green, "b": green, "c": green, "d": green},
+        2: {"b": green, "c": {**green, "hash_match": False}, "e": green},
+        3: {"a": green, "d": {"rows_match": None, "err": "no_oracle"}},
+    }
+    names = ["a", "b", "c", "d", "e", "f", "g"]
+    assert driver_order(names, rounds) == ["f", "g", "c", "d", "b", "e", "a"]
+    assert driver_order(names, {}) == names
 
 
-def test_rotation_ceiling_math():
-    """Codify the rotation policy's 4-round hard ceiling against the
-    committed driver artifacts: given the CORRECTNESS files through
-    round 12 (pinned — NOT a glob, so a driver-written r13 file can't
-    flip this test mid-round), every registered query must either have
-    a green driver row at most 3 rounds old or sit inside the current
-    window (where the next driver run gives it one). Each round's
-    rotation updates the pinned range and window name together — a
-    future window that strands a ceiling-bound query fails here
-    instead of silently shipping a coverage regression."""
+def test_first_50_slots_hold_the_stalest_committed_rows():
+    """The driver checks the FIRST 50 registered queries: against the
+    committed CORRECTNESS files, none of them may have a fresher green
+    row than any query outside the window."""
+    import glob
     import json
+    import re
 
     from bigdata_project_spark import registry
 
     root = os.path.join(os.path.dirname(__file__), "..")
-    last: dict[str, int] = {}
-    for r in range(1, 16):  # pinned: artifacts that existed at r16 rotation
-        fname = f"CORRECTNESS_r{r:02d}.json" if r < 10 else f"CORRECTNESS_r{r}.json"
-        for q in json.load(open(os.path.join(root, fname))):
-            last[q] = r
-    latest = 15
-    window = set(registry._R16_WINDOW)
-    stranded = [
-        q
-        for q in registry.queries()
-        if last.get(q, 0) < latest - 2 and q not in window
-    ]
-    assert not stranded, (
-        f"queries past the 4-round ceiling and not in the window: {stranded}"
-    )
+    last_green: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        r = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path)[1])
+        for name, row in json.load(open(path)).items():
+            if all(row.get(k) is True for k in ("rows_match", "schema_match", "hash_match")):
+                last_green[name] = max(last_green.get(name, 0), r)
+    names = list(registry.queries())
+    assert len(names) == len(set(names)) == 169
+    window = max(last_green.get(n, 0) for n in names[:50])
+    rest = min(last_green.get(n, 0) for n in names[50:])
+    assert window <= rest, [n for n in names[50:] if last_green.get(n, 0) < window]
+
+
+def test_duplicate_query_name_across_tables_raises():
+    from bigdata_project_spark.registry import merge_tables
+
+    entry = (None, "SELECT 1")
+    with pytest.raises(ValueError, match="dup_q"):
+        merge_tables([("plans.a", {"x": entry, "dup_q": entry}), ("operators.b", {"dup_q": entry})])

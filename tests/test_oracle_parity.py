@@ -15,10 +15,10 @@ from bigdata_project_spark.oracle_check import compare_one
 
 
 @pytest.mark.parametrize("name", sorted(registry.queries()))
-def test_query_matches_oracle(spark, duck, sf_dir, name):
+def test_query_matches_oracle(spark, duck, sf_dir, oracles, name):
     fn = registry.queries()[name]
-    # sf_dir-aware: fixture-pinned oracles regenerate for the test fixture
-    sql = registry.oracles(sf_dir).get(name)
+    # sf_dir-aware: fixture-built oracles are built for the test fixture
+    sql = oracles.get(name)
     if sql is None:
         # rows-only contract: must at least run and return a stable schema
         df = fn(spark, sf_dir)
