@@ -1,23 +1,16 @@
 """IVF ANN search: coarse quantizer cells + probe-only-nearest-cells.
 
-Two variants share the distributed machinery:
+The centroids are the first K_CELLS vectors (the deterministic k-means
+init). Assignment, probe selection, and final ranking all compare
+1e-6-rounded cosines with a lowest-cell-id tiebreak, so the whole
+pipeline has an exact DuckDB SQL twin (ORACLE_IVF_KMEANS_TOPK) despite
+the BLAS execution path; recall vs brute force is asserted in
+tests/test_similarity.py and swept over nprobe by ``sim_ann_recall_at_k``.
 
-- **Seeded (registered, oracle-checked)** — centroids are the first
-  K_CELLS vectors (the deterministic k-means init). Assignment, probe
-  selection, and final ranking all compare 1e-6-rounded cosines with a
-  lowest-cell-id tiebreak, so the whole pipeline has an exact DuckDB SQL
-  twin (ORACLE_IVF_KMEANS_TOPK) despite the BLAS execution path.
-- **Learned (tests-only)** — Lloyd's k-means refines the same seeds
-  (``train_kmeans``); recall vs brute force is asserted in
-  tests/test_similarity.py. The learned loop has no SQL twin (iterative
-  float means), which is why the driver-registered entry is the seeded
-  variant.
-
-Scale shape (identical for both): assignment is one Arrow-batched
-``mapInPandas`` pass BLAS-scoring each partition against the broadcast
-k×d centroid matrix (k·d ≈ KBs even for k=65536, d=1024 — always
-broadcastable); the k-means update is one hash aggregate with only k
-centroid rows reaching the driver; search scores ~nprobe/k of the corpus.
+Scale shape: assignment is one Arrow-batched ``mapInPandas`` pass
+BLAS-scoring each partition against the broadcast k×d centroid matrix
+(k·d ≈ KBs even for k=65536, d=1024 — always broadcastable); search
+scores ~nprobe/k of the corpus.
 """
 
 from __future__ import annotations
@@ -32,7 +25,6 @@ from bigdata_project_spark.operators.similarity import _cos_sql
 from bigdata_project_spark.sources.readers import load_table
 
 K_CELLS = 8
-N_ITERS = 3
 N_PROBE = 2
 TOP_K = 10  # neighbours returned by _probe_and_rank (and RECALL_K's base)
 
@@ -77,34 +69,6 @@ def _seed_centroids(emb: DataFrame, k: int = K_CELLS) -> tuple[np.ndarray, np.nd
         np.stack(seeds["embedding"].to_numpy()).astype(np.float64),
         seeds["vec_id"].to_numpy(),
     )
-
-
-def train_kmeans(emb: DataFrame, k: int = K_CELLS, iters: int = N_ITERS) -> np.ndarray:
-    """Lloyd's iterations; deterministic init from the first k vec_ids.
-
-    One Spark job per iteration: assignment fuses into the same stage as
-    the per-cell vector mean (``applyInPandas`` after the one shuffle on
-    ``cell``). The caller passes a cached (vec_id, embedding) projection —
-    iteration re-reads hit memory, not parquet."""
-    centroids, _ = _seed_centroids(emb, k)
-    idx = np.arange(k, dtype=np.int64)
-
-    def cell_mean(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        return pd.DataFrame(
-            {"cell": pdf["cell"].iloc[:1], "centroid": [m.mean(axis=0).tolist()]}
-        )
-
-    for _ in range(iters):
-        means = (
-            _assign_cells(emb, centroids, idx)
-            .groupBy("cell")
-            .applyInPandas(cell_mean, schema="cell long, centroid array<double>")
-            .toPandas()
-        )
-        for _, row in means.iterrows():
-            centroids[int(row["cell"])] = np.asarray(row["centroid"], dtype=np.float64)
-    return centroids
 
 
 def _probe_and_rank(
@@ -161,16 +125,6 @@ def query_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, cell_ids = _seed_centroids(emb)
     assigned = _assign_cells(emb, centroids, cell_ids)
     return _probe_and_rank(spark, emb, assigned, centroids, cell_ids)
-
-
-def query_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned-quantizer variant (tests-only): same search, centroids
-    refined by N_ITERS Lloyd iterations."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    centroids = train_kmeans(emb)
-    idx = np.arange(K_CELLS, dtype=np.int64)
-    assigned = _assign_cells(emb, centroids, idx)
-    return _probe_and_rank(spark, emb, assigned, centroids, idx)
 
 
 RECALL_PROBES = (1, 2, 4, K_CELLS)

@@ -11,7 +11,7 @@ The reference deduplicates bronze loads with DuckDB MERGE in two flavors:
 Without a transactional table format these are emulated as pure DataFrame
 expressions; with one on the classpath the same call sites can switch to a
 real ``MERGE INTO``. Availability was PROBED round 10
-(tools/delta_probe.py → tools/delta_probe_result.json): neither the
+(tools/delta_probe_result.json): neither the
 delta-spark/pyiceberg python packages nor the ``delta``/``iceberg``
 datasources exist in this image (DATA_SOURCE_NOT_FOUND from both the
 DataFrameReader and catalog-SQL paths), so the emulation is the only

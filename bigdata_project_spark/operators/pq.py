@@ -16,9 +16,7 @@ Spark-first decomposition:
   lookups — one hash aggregate; top-k is TakeOrderedAndProject;
 - **codebook** (k-sized): seeded from the sub-slices of the first K
   vectors (the deterministic k-means init, matching operators/ivf.py) so
-  the whole pipeline has an exact DuckDB twin; a learned variant would
-  refine them with per-subspace Lloyd iterations exactly like
-  ivf.train_kmeans.
+  the whole pipeline has an exact DuckDB twin.
 
 Cross-engine float parity: sub-distances are L2² left-folds in index
 order (bit-identical doubles), immediately converted to integer

@@ -48,16 +48,6 @@ def zvalue(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     return z
 
 
-def _zvalue_sql(x: str, y: str, bits: int = Z_BITS) -> str:
-    terms = []
-    for j in range(bits):
-        terms.append(
-            f"(CAST(floor({x} / {2**j}) AS BIGINT) % 2) * {2 ** (2 * j)}"
-            f" + (CAST(floor({y} / {2**j}) AS BIGINT) % 2) * {2 ** (2 * j + 1)}"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
 # (shift, mask) steps of the classic "Interleave bits by Binary Magic
 # Numbers" spread (public bit-twiddling identity; Morton 1966): each
 # step doubles the gap between the low 16 bits — 4 steps and ~12 integer

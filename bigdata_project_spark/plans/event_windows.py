@@ -3,8 +3,9 @@
 The reference is batch-only (SURVEY.md §2.10), but a complete engine needs
 event-time semantics. These are the *batch* forms — identical logic runs
 under Structured Streaming in ``bigdata_project_spark.streaming`` (same
-``F.window``/``session_window`` calls + watermarks), tested with a memory
-sink in tests/test_streaming.py.
+``F.window``/``session_window`` calls + watermarks; the hourly aggregate
+is literally shared), drained through a memory sink by the ``stream_*``
+queries.
 
 Oracle design: tumbling = date_trunc grid; sliding (width w, slide s) =
 each event belongs to exactly w/s grid windows, reconstructed in SQL by
@@ -116,21 +117,29 @@ GROUP BY ROLLUP(day, hour)
 """
 
 
-def query_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", _FMT).alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+def hourly_type_totals(events: DataFrame) -> DataFrame:
+    """Event count and decimal-exact value sum per (1-hour tumbling
+    window ``w``, event_type) — the one aggregate behind both
+    ``events_tumbling_1h`` and the drained ``stream_tumbling`` (which
+    passes a watermarked stream)."""
+    return events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
     )
+
+
+def hourly_rows(totals: DataFrame) -> DataFrame:
+    """:func:`hourly_type_totals` in ``ORACLE_TUMBLING_1H``'s columns."""
+    return totals.select(
+        F.date_format("w.start", _FMT).alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_value",
+    )
+
+
+def query_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return hourly_rows(hourly_type_totals(load_table(spark, sf_dir, "events")))
 
 
 ORACLE_TUMBLING_1H = """

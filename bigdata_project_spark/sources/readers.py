@@ -18,7 +18,7 @@ Scale notes
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,30 +49,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             # The nanosAsLong conf surfaces TIMESTAMP(NANOS) as raw int64.
-            # Detect the unit ONCE per table from the parquet logical type
-            # (footer read, no data scan) — a per-row magnitude heuristic
-            # would misclassify pre-1973 nanos epochs as micros and mix
-            # units within one table. Integer division throughout: ns
-            # epochs (~1.7e18) overflow double precision.
-            unit = _parquet_ts_unit(path, "ts")
-            if unit is None:
-                # plain-int64 column (no logical type): one table-level
-                # max() probe — ns > 1e17 for any modern date, µs < 1e17
-                # until year ~5138. Table-level, so units can't mix.
-                mx = df.agg(F.max("ts")).first()[0]
-                unit = "ns" if mx is not None and mx > 100_000_000_000_000_000 else "us"
-            divisor = {"ns": 1000, "us": 1, "ms": -1000, "s": -1_000_000}[unit]
-            if divisor == 1:
-                us = F.col("ts")
-            elif divisor > 0:
-                us = F.expr(f"ts div {divisor}")
-            else:
-                us = F.expr(f"ts * {-divisor}")
             df = df.withColumn(
-                "ts", F.timestamp_micros(us).cast("timestamp_ntz")
+                "ts", F.timestamp_micros(ts_micros(spark, path)).cast("timestamp_ntz")
             )
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def ts_micros(spark: SparkSession, path: str) -> Column:
+    """Microsecond epoch of the int64 ``ts`` column of the parquet table at
+    ``path`` — the one unit rule for the batch reader and the event stream.
+
+    The unit is detected ONCE per table from the parquet logical type
+    (footer read, no data scan) — a per-row magnitude heuristic would
+    misclassify pre-1973 nanos epochs as micros and mix units within one
+    table. A plain-int64 column (no logical type) gets one table-level
+    max() probe: ns > 1e17 for any modern date, µs < 1e17 until year
+    ~5138. Integer arithmetic throughout: ns epochs (~1.7e18) overflow
+    double precision. Expects ``spark.sql.legacy.parquet.nanosAsLong``."""
+    unit = _parquet_ts_unit(path, "ts")
+    if unit is None:
+        mx = spark.read.parquet(path).agg(F.max("ts")).first()[0]
+        unit = "ns" if mx is not None and mx > 100_000_000_000_000_000 else "us"
+    if unit == "us":
+        return F.col("ts")
+    return F.expr({"ns": "ts div 1000", "ms": "ts * 1000", "s": "ts * 1000000"}[unit])
 
 
 def _parquet_ts_unit(path: str, col: str) -> str | None:

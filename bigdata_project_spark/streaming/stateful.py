@@ -1,13 +1,16 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``.
+"""Custom stateful streaming operators via ``applyInPandasWithState``.
 
-Demonstrates the arbitrary-state API the engine offers for operators that
-windowed aggregation can't express: here, a per-user running counter +
-first-seen dedup that emits only events beyond a per-user threshold.
+The arbitrary-state API covers operators that windowed aggregation can't
+express: a per-user Markov transition emitter (the LAG window a batch
+engine uses is inexpressible in a stream) and a per-type HyperLogLog
+that emits register increments. Both are drained with
+:func:`streaming.windows.drain` and aggregated batch-side into their
+batch twins' exact oracle values.
 
-Scale notes: state is partitioned by the grouping key across executors;
-per-key state is a few counters (bounded), and the timeout conf reaps idle
-keys. This is the pattern slot for reference-less operators like
-incremental sessionization or online MinHash sketches.
+Scale notes: state is partitioned by the grouping key across executors
+and per-key state is small and bounded (one string; m registers). This
+is the pattern slot for reference-less operators like incremental
+sessionization or online sketches.
 """
 
 from __future__ import annotations
@@ -16,63 +19,16 @@ from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from bigdata_project_spark.functions.scalars import round_portable
 from bigdata_project_spark.operators.funnel import ORACLE_EVENTS_TRANSITIONS
 from bigdata_project_spark.operators.sketches import HLL_M, ORACLE_STREAM_HLL_USERS, hll_finalize
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("seen_so_far", T.LongType()),
-    ]
-)
-
-STATE_SCHEMA = T.StructType([T.StructField("count", T.LongType())])
-
-
-def _emit_after_threshold(threshold: int):
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (count,) = state.get if state.exists else (0,)
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if parts:
-            pdf = pd.concat(parts) if len(parts) > 1 else parts[0]
-            pdf = pdf.sort_values("event_id")
-            # vectorized running counter: position within the sorted
-            # batch, offset by the carried per-user count
-            seen = count + np.arange(1, len(pdf) + 1, dtype=np.int64)
-            count += len(pdf)
-            mask = seen > threshold
-            if mask.any():
-                yield pd.DataFrame(
-                    {
-                        "user_id": np.int64(key[0]),
-                        "event_id": pdf["event_id"].to_numpy()[mask],
-                        "seen_so_far": seen[mask],
-                    }
-                )
-        state.update((count,))
-
-    return fn
-
-
-def events_after_threshold(events: DataFrame, threshold: int = 3) -> DataFrame:
-    """Emit each user's events only after their first ``threshold`` events."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _emit_after_threshold(threshold),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
+from bigdata_project_spark.sources.readers import load_table
+from bigdata_project_spark.streaming.windows import drain, read_event_stream
 
 # ------------------------------------------------- Markov transitions --
 
@@ -142,28 +98,10 @@ def query_stream_transitions(spark, sf_dir: str) -> DataFrame:
     ``ORACLE_EVENTS_TRANSITIONS`` with the LAG-window form. A streaming
     operator with a full value-hash oracle, not just a rows-only check:
     the stream must converge to the batch answer exactly."""
-    import uuid
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from bigdata_project_spark.functions.scalars import round_portable
-    from bigdata_project_spark.streaming.windows import read_event_stream
-
-    qname = f"trans_stream_{uuid.uuid4().hex[:8]}"
-    from bigdata_project_spark.streaming.windows import stream_shuffle_partitions
-
     # 16, not the join queries' 8: the Python stateful worker benefits
     # from extra partition parallelism (measured flat 8↔16, 4× worse at
     # the session's 32 — state-store commits dominate there)
-    from bigdata_project_spark.streaming.windows import drain_to_memory
-
-    with stream_shuffle_partitions(spark, 16):
-        drain_to_memory(
-            transitions_stateful(read_event_stream(spark, sf_dir)), qname, "append"
-        )
-    rec = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
+    rec = drain(transitions_stateful(read_event_stream(spark, sf_dir)), "append", 16)
     trans = rec.groupBy("src_event", "dst_event").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -267,26 +205,9 @@ def query_stream_hll_users(spark, sf_dir: str) -> DataFrame:
     arithmetic (operators/sketches.py hll_finalize) and get a FULL
     value-hash oracle: the stream must converge to the batch answer
     bit-for-bit, transcendental included."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from bigdata_project_spark.sources.readers import load_table
-    from bigdata_project_spark.streaming.windows import (
-        drain_to_memory,
-        read_event_stream,
-        stream_shuffle_partitions,
+    inc = drain(
+        hll_increments_stateful(read_event_stream(spark, sf_dir), HLL_M), "append", 16
     )
-
-    qname = f"hll_stream_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(spark, 16):
-        drain_to_memory(
-            hll_increments_stateful(read_event_stream(spark, sf_dir), HLL_M),
-            qname,
-            "append",
-        )
-    inc = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
     regs = inc.groupBy("event_type", "register").agg(F.max("rho").alias("rho"))
     exact = (
         load_table(spark, sf_dir, "events")

@@ -5,6 +5,10 @@ The batch forms live in plans/event_windows.py and share the same
 (``readStream``) and adds watermarks, which is exactly Spark's
 batch/streaming unification contract.
 
+Every drained query is one small operator over :func:`read_event_stream`
+handed to :func:`drain`, the single start → processAllAvailable → stop
+step; what follows the drain is plain batch work on its rows.
+
 The reference has no streaming (SURVEY.md §2.10); this is the additive
 scale path: at 100 TB/day the bronze ingest becomes a file-arrival stream
 with these exact queries, watermark-bounded state, and checkpointed
@@ -13,6 +17,8 @@ exactly-once sinks.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -20,7 +26,10 @@ from pyspark.sql import types as T
 from bigdata_project_spark.plans.event_windows import (
     ORACLE_INTERVAL_JOIN_CLICKS,
     ORACLE_TUMBLING_1H,
+    hourly_rows,
+    hourly_type_totals,
 )
+from bigdata_project_spark.sources.readers import load_table, ts_micros
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -32,9 +41,6 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-from contextlib import contextmanager
 
 
 def ephemeral_checkpoint_dir(prefix: str = "stream_ckpt_") -> str:
@@ -75,84 +81,59 @@ def stream_shuffle_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def drain(stream_df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
+    """Run ``stream_df`` to completion into a memory sink and return its
+    rows as a lineage-free batch frame.
+
+    Only start → processAllAvailable → stop run at ``partitions`` shuffle
+    partitions (see :func:`stream_shuffle_partitions`); the caller's
+    batch work on the returned rows runs at the session's setting. The
+    ephemeral checkpoint is removed even when a micro-batch raises, and
+    the sink's temp view is dropped once its rows are materialized.
+    Every drained query goes through here, so this is the one place to
+    read per-batch ``recentProgress``."""
+    import shutil
+    import uuid
+
+    spark = stream_df.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    ckpt = ephemeral_checkpoint_dir()
+    try:
+        with stream_shuffle_partitions(spark, partitions):
+            q = (
+                stream_df.writeStream.outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .format("memory")
+                .queryName(name)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    rows = spark.table(name).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(name)
+    return rows
+
+
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (one file = one micro-batch
-    in tests; a directory of arriving files in production)."""
+    in tests; a directory of arriving files in production). ``ts`` takes
+    the batch reader's unit rule (:func:`sources.readers.ts_micros`), so a
+    drained stream and ``load_table`` agree on every event time; getting
+    the unit wrong compresses event time 1000× and silently floods
+    interval joins."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    # The long-typed scan yields epoch integers whose unit depends on how
-    # the fixture was generated (TIMESTAMP(NANOS) → ns via nanosAsLong;
-    # TIMESTAMP(MICROS) → µs directly). Prefer the parquet footer's
-    # logical type — one metadata read per table, same as the batch
-    # reader — and keep the magnitude heuristic (ns > 1e17 for any
-    # modern date, µs < 1e17 until year ~5138) only as the fallback for
-    # footers without a timestamp type. Getting this wrong compresses
-    # event time 1000× and silently floods interval joins — caught by
-    # the stream-vs-batch equality tests.
-    from bigdata_project_spark.sources.readers import _parquet_ts_unit
-
-    unit = _parquet_ts_unit(f"{sf_dir}/events.parquet", "ts")
-    if unit == "ns":
-        us = F.expr("ts div 1000")
-    elif unit == "us":
-        us = F.col("ts")
-    else:
-        us = F.when(
-            F.col("ts") > F.lit(100_000_000_000_000_000), F.expr("ts div 1000")
-        ).otherwise(F.col("ts"))
     # watermarks require TIMESTAMP (not NTZ); session TZ is pinned UTC
+    us = ts_micros(spark, f"{sf_dir}/events.parquet")
     return raw.withColumn("ts", F.timestamp_micros(us))
-
-
-def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window aggregate; append-mode safe."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
-    )
-
-
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Native session windows (``session_window``) — the streaming twin of
-    the batch gaps-and-islands sessionizer (plans/event_windows.py)."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
-def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exactly-once dedup on event_id — the streaming twin of
-    the reference's idempotent MERGE re-ingest (bronze/utils.py:348-366):
-    replayed rows inside the watermark horizon are dropped, and state is
-    bounded by the watermark instead of growing with the stream.
-    ``dropDuplicatesWithinWatermark`` keys state on (event_id) only for
-    the watermark window — the 100 TB-safe form of streaming dedup."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def enrich_stream_static(events: DataFrame, dim: DataFrame) -> DataFrame:
-    """Stream-static broadcast join: per-micro-batch hash join against the
-    (re-read) static dimension — the streaming form of the silver dim
-    enrichments (J2). No state, no shuffle of the stream side."""
-    return events.join(F.broadcast(dim), events.user_id == dim.c_custkey, "left").select(
-        "event_id", "ts", "user_id", "event_type", "value", dim.c_mktsegment.alias("segment")
-    )
 
 
 def join_clicks_purchases(events: DataFrame, horizon: str = "30 minutes") -> DataFrame:
@@ -190,19 +171,6 @@ def join_clicks_purchases(events: DataFrame, horizon: str = "30 minutes") -> Dat
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")),
         "inner",
     ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
-
-
-def use_rocksdb_state_store(spark: SparkSession) -> None:
-    """Swap the in-memory (HDFS-backed) state store for RocksDB — the
-    production setting for large streaming state (dedup sets, join
-    buffers, session windows): state lives on executor-local disk with
-    changelog checkpointing instead of in JVM heap, so state size is
-    bounded by disk, not memory. Bundled with Spark since 3.2 — a pure
-    config flip, no extra jars."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
 
 
 def upsert_sink(stream_df: DataFrame, table: str, keys: list[str], checkpoint: str):
@@ -292,14 +260,7 @@ def query_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner interval join emits matches as both sides arrive, so draining
     the stream converges to the batch join exactly — the full value-hash
     oracle holds, not just a rows-only check."""
-    import uuid
-
-    qname = f"ssj_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(spark):
-        joined = join_clicks_purchases(read_event_stream(spark, sf_dir))
-        drain_to_memory(joined, qname, "append")
-    rec = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
+    rec = drain(join_clicks_purchases(read_event_stream(spark, sf_dir)), "append")
     fmt = "yyyy-MM-dd HH:mm:ss"
     return rec.select(
         "user_id",
@@ -311,40 +272,19 @@ def query_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def query_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible CORRECTNESS query for :func:`tumbling_counts`: the
-    canonical watermarked tumbling-window aggregate, drained in complete
-    mode so the final table covers every window (append would hold back
-    the trailing watermark hour) and shares the batch twin's oracle
-    (``plans.event_windows.ORACLE_TUMBLING_1H``) value-exactly."""
-    import uuid
-
-    qname = f"tumb_{uuid.uuid4().hex[:8]}"
-    ev = read_event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-    with stream_shuffle_partitions(spark):
-        drain_to_memory(agg, qname, "complete")
-    rec = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
-    return rec.select(
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type",
-        "n_events",
-        "total_value",
-    )
+    """Driver-visible CORRECTNESS query for the watermarked form of
+    ``plans.event_windows.hourly_type_totals``: drained in complete mode
+    so the final table covers every window (append would hold back the
+    trailing watermark hour), then formatted exactly like its batch twin
+    ``events_tumbling_1h`` — so it shares ``ORACLE_TUMBLING_1H``
+    value-exactly."""
+    ev = read_event_stream(spark, sf_dir).withWatermark("ts", "1 hour")
+    return hourly_rows(drain(hourly_type_totals(ev), "complete"))
 
 
 def query_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible CORRECTNESS query for :func:`session_windows`:
-    drain the watermarked native-session-window stream and emit one row
+    """Driver-visible CORRECTNESS query for native session windows
+    (``session_window``): drain the watermarked stream and emit one row
     per closed session with its value rollup. The oracle is the batch
     gaps-and-islands sessionizer (plans/event_windows.py) minus its
     session_seq ordinal — merge semantics agree except for gaps of
@@ -352,9 +292,6 @@ def query_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch flag starts new on `> gap`), which cannot occur on the
     micro-timestamped fixture; an exact tie would surface here as a
     driver-row failure, not silently."""
-    import uuid
-
-    qname = f"sess_{uuid.uuid4().hex[:8]}"
     ev = read_event_stream(spark, sf_dir)
     sess = (
         ev.withWatermark("ts", "1 hour")
@@ -372,10 +309,7 @@ def query_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final watermark horizon (the last hour of the fixture) — complete
     # emits the full merged session state each trigger, so the drained
     # table is the whole answer
-    with stream_shuffle_partitions(spark):
-        drain_to_memory(sess, qname, "complete")
-    rec = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
+    rec = drain(sess, "complete")
     fmt = "yyyy-MM-dd HH:mm:ss"
     return rec.select(
         "user_id",
@@ -410,32 +344,6 @@ GROUP BY user_id, session_seq
 """
 
 
-def run_to_memory(stream_df: DataFrame, name: str) -> None:
-    """Drain all available input synchronously into a memory sink table."""
-    drain_to_memory(stream_df, name, "complete" if stream_df.isStreaming else "append")
-
-
-def drain_to_memory(stream_df: DataFrame, name: str, mode: str) -> None:
-    """Start → processAllAvailable → stop into a memory-sink table, with
-    an ephemeral tmpfs checkpoint (see :func:`ephemeral_checkpoint_dir`)
-    that is removed once the drain completes."""
-    import shutil
-
-    ckpt = ephemeral_checkpoint_dir()
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def query_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible CORRECTNESS query for watermarked streaming dedup:
     every event arrives TWICE (map-side duplication of the stream) and
@@ -454,9 +362,6 @@ def query_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one streaming query is deliberately avoided — multi-stateful
     chaining restrictions are version-sensitive, and the contract under
     test is the dedup, not the chain)."""
-    import uuid
-
-    qname = f"dedup_{uuid.uuid4().hex[:8]}"
     ev = read_event_stream(spark, sf_dir)
     doubled = ev.withColumn(
         "__copy", F.explode(F.array(F.lit(1), F.lit(2)))
@@ -464,12 +369,9 @@ def query_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    with stream_shuffle_partitions(spark):
-        drain_to_memory(deduped, qname, "append")
-    rec = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
     return (
-        rec.groupBy("event_type")
+        drain(deduped, "append")
+        .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.count_distinct("event_id").alias("n_unique"),
@@ -503,11 +405,6 @@ def query_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is re-planned per micro-batch; no watermark, no state store) —
     which is why this is the right shape for dimension enrichment at any
     scale, and why the drained result must equal the batch join exactly."""
-    import uuid
-
-    from bigdata_project_spark.sources.readers import load_table
-
-    qname = f"enrich_{uuid.uuid4().hex[:8]}"
     customers = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_nationkey")
     )
@@ -523,11 +420,7 @@ def query_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         # it measured ~2x the whole query (r9c 3.97 s -> see commit A/B)
         .select("user_id", "c_nationkey")
     )
-    with stream_shuffle_partitions(spark):
-        drain_to_memory(enriched, qname, "append")
-    rec = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
-    return rec.groupBy("c_nationkey").agg(
+    return drain(enriched, "append").groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
     )

@@ -33,7 +33,7 @@ def test_topk_matches_numpy(spark, sf_dir):
 
 
 def test_ivf_kmeans_recall_vs_brute_force(spark, sf_dir):
-    """Probing 2/8 learned cells must recover most of the true top-10."""
+    """Probing 2/8 seeded cells must recover most of the true top-10."""
     from bigdata_project_spark.operators.ivf import query_ivf_kmeans_topk
     from bigdata_project_spark.operators.similarity import query_cosine_topk
 

@@ -2,69 +2,86 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from bigdata_project_spark.plans.event_windows import query_tumbling_1h
-from bigdata_project_spark.streaming.stateful import events_after_threshold
-from bigdata_project_spark.streaming.windows import (
-    dedup_within_watermark,
-    enrich_stream_static,
-    read_event_stream,
-    run_to_memory,
-    session_windows,
-    tumbling_counts,
-)
+from bigdata_project_spark.streaming.windows import drain, read_event_stream
 
 
-def test_stream_tumbling_matches_batch(spark, sf_dir):
-    stream = tumbling_counts(read_event_stream(spark, sf_dir))
-    run_to_memory(stream, "stream_tumbling")
-    got = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM stream_tumbling").collect()
-    }
-    want = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in query_tumbling_1h(spark, sf_dir)
-        .withColumn("window_start", F.to_timestamp("window_start"))
-        .collect()
-    }
-    assert got == want
+def test_drain_restores_partitions_and_cleans_up(spark, sf_dir, monkeypatch):
+    """``drain`` scopes the shuffle-partition setting to the stream and
+    leaves nothing behind: the conf is restored and the ephemeral
+    checkpoint removed whether the stream succeeds or a micro-batch
+    raises, and a successful drain drops its memory-sink view."""
+    from bigdata_project_spark.streaming import windows
+
+    real_dir, made = windows.ephemeral_checkpoint_dir, []
+
+    def tracked_dir(*args):
+        made.append(real_dir(*args))
+        return made[-1]
+
+    monkeypatch.setattr(windows, "ephemeral_checkpoint_dir", tracked_dir)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def drain_views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("drain_")}
+
+    views_before = drain_views()
+    rows = drain(read_event_stream(spark, sf_dir).select("event_id"), "append", 16)
+    assert rows.count() == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert drain_views() == views_before
+
+    failing = read_event_stream(spark, sf_dir).select(
+        F.raise_error(F.lit("boom")).cast("int").alias("x")
+    )
+    with pytest.raises(StreamingQueryException, match="boom"):
+        drain(failing, "append", 16)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert len(made) == 2
+    assert not any(os.path.exists(d) for d in made)
 
 
-def test_stream_session_windows_run(spark, sf_dir):
-    stream = session_windows(read_event_stream(spark, sf_dir))
-    run_to_memory(stream, "stream_sessions")
-    rows = spark.sql("SELECT * FROM stream_sessions").collect()
-    assert rows
-    assert all(r["n_events"] >= 1 for r in rows)
+def test_plain_int64_nanos_read_alike_by_batch_and_stream(spark, tmp_path):
+    """A plain-int64 nanosecond ``ts`` (no parquet timestamp type) gets one
+    table-level unit in both readers: the 1972 epoch is below 1e17 ns, so
+    a per-row magnitude rule would read it as microseconds (year 4188)."""
+    import datetime as dt
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-def test_stream_dedup_within_watermark(spark, sf_dir):
-    stream = dedup_within_watermark(read_event_stream(spark, sf_dir))
-    q = stream.writeStream.outputMode("append").format("memory").queryName("dedup_wm").start()
-    q.processAllAvailable()
-    q.stop()
     from bigdata_project_spark.sources.readers import load_table
 
-    n_distinct = load_table(spark, sf_dir, "events").select("event_id").distinct().count()
-    out = spark.sql("SELECT event_id FROM dedup_wm")
-    assert out.count() == n_distinct
-    assert out.distinct().count() == n_distinct
-
-
-def test_stream_static_join_enriches(spark, sf_dir):
-    from bigdata_project_spark.sources.readers import load_table
-
-    dim = load_table(spark, sf_dir, "customer")
-    stream = enrich_stream_static(read_event_stream(spark, sf_dir), dim)
-    q = stream.writeStream.outputMode("append").format("memory").queryName("enriched").start()
-    q.processAllAvailable()
-    q.stop()
-    pdf = spark.sql("SELECT * FROM enriched").toPandas()
-    ev_n = load_table(spark, sf_dir, "events").count()
-    assert len(pdf) == ev_n  # left join preserves the stream
-    assert pdf["segment"].notna().any()
+    want = [(1, "1972-03-21 08:30:00"), (2, "2023-11-14 22:13:20")]
+    epoch = dt.datetime(1970, 1, 1)
+    ns = [
+        int((dt.datetime.strptime(t, "%Y-%m-%d %H:%M:%S") - epoch).total_seconds()) * 10**9
+        for _, t in want
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.int64()),
+                "user_id": pa.array([7, 8], pa.int64()),
+                "event_type": ["click", "view"],
+                "value": [1.0, 2.0],
+                "props": ["{}", "{}"],
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    fmt = "yyyy-MM-dd HH:mm:ss"
+    batch = load_table(spark, str(tmp_path), "events")
+    stream = drain(read_event_stream(spark, str(tmp_path)), "append")
+    for df in (batch, stream):
+        got = df.select("event_id", F.date_format("ts", fmt)).collect()
+        assert sorted(tuple(r) for r in got) == want
 
 
 def test_stream_upsert_sink_exactly_once(spark, sf_dir, tmp_path):
@@ -108,67 +125,16 @@ def test_query_stream_upsert_sink_matches_events(spark, sf_dir):
     )
 
 
-def test_stateful_threshold_operator(spark, sf_dir):
-    stream = events_after_threshold(read_event_stream(spark, sf_dir), threshold=3)
-    q = stream.writeStream.outputMode("append").format("memory").queryName("after3").start()
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT * FROM after3").toPandas()
-    from bigdata_project_spark.sources.readers import load_table
-
-    ev = load_table(spark, sf_dir, "events").groupBy("user_id").count().toPandas()
-    expected_rows = int((ev["count"] - 3).clip(lower=0).sum())
-    assert len(out) == expected_rows
-    assert (out["seen_so_far"] > 3).all()
-
-
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     from bigdata_project_spark.sources.readers import load_table
     from bigdata_project_spark.streaming.windows import join_clicks_purchases
 
-    stream = join_clicks_purchases(read_event_stream(spark, sf_dir))
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_join")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM ss_join").collect()
-    }
+    rows = drain(join_clicks_purchases(read_event_stream(spark, sf_dir)), "append")
+    got = {(r["purchase_id"], r["click_id"]) for r in rows.collect()}
     batch = join_clicks_purchases(load_table(spark, sf_dir, "events"))
     want = {(r["purchase_id"], r["click_id"]) for r in batch.collect()}
     assert got == want
     assert want  # fixture must actually produce matches
-
-
-def test_rocksdb_state_store_provider_runs(spark, sf_dir):
-    from bigdata_project_spark.streaming.windows import use_rocksdb_state_store
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state_store(spark)
-    try:
-        stream = dedup_within_watermark(read_event_stream(spark, sf_dir))
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dedup_rocks")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        from bigdata_project_spark.sources.readers import load_table
-
-        n = load_table(spark, sf_dir, "events").select("event_id").distinct().count()
-        assert spark.sql("SELECT * FROM dedup_rocks").count() == n
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_stateful_transitions_match_batch(spark, sf_dir):
@@ -177,20 +143,10 @@ def test_stateful_transitions_match_batch(spark, sf_dir):
     from bigdata_project_spark.operators.funnel import query_events_transitions
     from bigdata_project_spark.streaming.stateful import transitions_stateful
 
-    stream = transitions_stateful(read_event_stream(spark, sf_dir))
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("trans_stream")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    rows = drain(transitions_stateful(read_event_stream(spark, sf_dir)), "append")
     got = {
-        (r["src_event"], r["dst_event"]): r["n"]
-        for r in spark.sql(
-            "SELECT src_event, dst_event, COUNT(*) AS n FROM trans_stream GROUP BY 1, 2"
-        ).collect()
+        (r["src_event"], r["dst_event"]): r["count"]
+        for r in rows.groupBy("src_event", "dst_event").count().collect()
     }
     want = {
         (r["src_event"], r["dst_event"]): r["n"]
