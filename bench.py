@@ -19,7 +19,11 @@ family, agg_cube/rollup, …) are bounded by that constant, not by plan
 shape — it is a per-query constant, not a scale term, and disappears
 into the work at 100 TB. We do NOT cache fixture DataFrames across
 queries to mask it: the DuckDB baseline pays its cold scan per query,
-so masking ours would make the ratio non-comparable.
+so masking ours would make the ratio non-comparable. ``load_table``
+declaring each table's schema from its parquet footer is not caching:
+every load still reads its footer (about 1 ms, no data scan), just as
+DuckDB's ``read_parquet`` reads the footer metadata on every query. It
+only drops Spark's one-task schema-inference job from each load.
 
 Env:
     SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)

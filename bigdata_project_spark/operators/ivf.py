@@ -61,42 +61,46 @@ def _assign_cells(
     )
 
 
-def _seed_centroids(emb: DataFrame, k: int = K_CELLS) -> tuple[np.ndarray, np.ndarray]:
+def _seed_vectors(emb: DataFrame, k: int) -> np.ndarray:
+    """The first ``k`` vectors (vec_id 0..k-1) as a (k, d) float64 matrix,
+    row i = vec_id i, so row 0 is the query vector. One driver pull,
+    bounded by ``k`` and sorted on the driver: a Spark ``orderBy`` here
+    would add a sampling job and a sort job for k rows."""
     seeds = (
-        emb.filter(F.col("vec_id") < k).orderBy("vec_id").select("vec_id", "embedding").toPandas()
+        emb.filter(F.col("vec_id") < k)
+        .select("vec_id", "embedding")
+        .toPandas()
+        .sort_values("vec_id")
     )
-    return (
-        np.stack(seeds["embedding"].to_numpy()).astype(np.float64),
-        seeds["vec_id"].to_numpy(),
-    )
+    if seeds["vec_id"].tolist() != list(range(k)):
+        raise ValueError(
+            f"seed pull expected {k} vectors with vec_id 0..{k - 1}, "
+            f"got {len(seeds)}: vec_id {seeds['vec_id'].tolist()}"
+        )
+    return np.stack(seeds["embedding"].to_numpy()).astype(np.float64)
+
+
+def _seed_centroids(emb: DataFrame, k: int = K_CELLS) -> tuple[np.ndarray, np.ndarray]:
+    """The k seed centroids and their ascending cell ids (= vec_id)."""
+    return _seed_vectors(emb, k), np.arange(k, dtype=np.int64)
+
+
+def _probe_order(centroids: np.ndarray, cell_ids: np.ndarray, qn: np.ndarray) -> list[int]:
+    """Cell ids nearest the normalized query ``qn`` first: rounded cosine
+    desc, lowest cell id on ties — the probe rule every IVF query shares."""
+    C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    cos_q = _round6(C @ qn)
+    order = sorted(range(len(cell_ids)), key=lambda i: (-cos_q[i], cell_ids[i]))
+    return [int(cell_ids[i]) for i in order]
 
 
 def _probe_and_rank(
-    spark: SparkSession,
-    emb: DataFrame,
-    assigned: DataFrame,
-    centroids: np.ndarray,
-    cell_ids: np.ndarray,
-    n_probe: int = N_PROBE,
-    qv: "np.ndarray | None" = None,
-    k: int = TOP_K,
+    assigned: DataFrame, centroids: np.ndarray, cell_ids: np.ndarray, qv: np.ndarray
 ) -> DataFrame:
-    """Probe the ``n_probe`` cells nearest the query (vec_id=0) and
-    exact-rank inside them: top-``k`` by (rounded cosine desc, vec_id
-    asc). ``k`` is threaded from the caller (the recall harness passes
-    RECALL_K) so numerator and denominator can never silently diverge.
-
-    ``qv`` (the already-normalized query vector) lets sweep callers pay
-    the 1-row driver collect once instead of once per probe level."""
-    if qv is None:
-        q = emb.filter(F.col("vec_id") == 0).toPandas()["embedding"][0]
-        qv = np.asarray(q, dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-    C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    cos_q = _round6(C @ qv)
-    order = sorted(range(len(cell_ids)), key=lambda i: (-cos_q[i], cell_ids[i]))
-    probe = [int(cell_ids[i]) for i in order[:n_probe]]
-
+    """Probe the N_PROBE cells nearest the normalized query ``qv``
+    (vec_id=0) and exact-rank inside them: top-TOP_K by (rounded cosine
+    desc, vec_id asc)."""
+    probe = _probe_order(centroids, cell_ids, qv)[:N_PROBE]
     cands = assigned.filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
 
     def score(it):
@@ -114,7 +118,7 @@ def _probe_and_rank(
             )
 
     scored = cands.mapInPandas(score, schema="vec_id long, cell long, cos_sim double")
-    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc()).limit(k)
+    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc()).limit(TOP_K)
 
 
 def query_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,7 +128,8 @@ def query_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids, cell_ids = _seed_centroids(emb)
     assigned = _assign_cells(emb, centroids, cell_ids)
-    return _probe_and_rank(spark, emb, assigned, centroids, cell_ids)
+    qn = centroids[0] / np.linalg.norm(centroids[0])  # row 0 is vec_id 0
+    return _probe_and_rank(assigned, centroids, cell_ids, qn)
 
 
 RECALL_PROBES = (1, 2, 4, K_CELLS)
@@ -143,7 +148,7 @@ def query_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: assignment AND query scoring run ONCE — a single mapInPandas
     pass emits (vec_id, cell_rank, cos_sim), where cell_rank is the
     cell's position in the probe order (nearest-to-query first, the
-    same (-cos, cell_id) sort _probe_and_rank uses), and the frame is
+    same (-cos, cell_id) sort of _probe_order), and the frame is
     lineage-truncated so every probe level is just a filter
     ``cell_rank <= nprobe`` + top-k over it — level p's candidate set
     is exactly "the p nearest cells", so this is plan-for-plan
@@ -158,13 +163,10 @@ def query_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     still verifies the kernel against a second implementation."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids, cell_ids = _seed_centroids(emb)
-    # _seed_centroids collects vec_id 0..K-1 ascending, so row 0 IS the
-    # query vector — no second 1-row driver job for it
-    qnorm = centroids[0] / np.linalg.norm(centroids[0])
-    C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    cos_q = _round6(C @ qnorm)
-    order = sorted(range(len(cell_ids)), key=lambda i: (-cos_q[i], cell_ids[i]))
-    rank_of_cell = {int(cell_ids[i]): r + 1 for r, i in enumerate(order)}
+    qnorm = centroids[0] / np.linalg.norm(centroids[0])  # row 0 is vec_id 0
+    rank_of_cell = {
+        c: r + 1 for r, c in enumerate(_probe_order(centroids, cell_ids, qnorm))
+    }
     assigned = _assign_cells(emb, centroids, cell_ids)
 
     def score(it):

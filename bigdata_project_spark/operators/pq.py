@@ -34,6 +34,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_project_spark.operators.ivf import (
+    K_CELLS,
+    N_PROBE,
+    _assign_cells,
+    _probe_order,
+    _seed_centroids,
+    _seed_vectors,
+)
 from bigdata_project_spark.sources.readers import load_table
 
 PQ_M = 8  # subspaces
@@ -54,19 +62,10 @@ def _codebook_and_query(
     emb: DataFrame,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(K, M, SUB) codebook from the first PQ_K vectors' sub-slices and the
-    (M, SUB) query sub-slices (vec_id=0) — k-row driver transfers, same as
-    ivf._seed_centroids."""
-    seeds = (
-        emb.filter(F.col("vec_id") < PQ_K)
-        .orderBy("vec_id")
-        .select("embedding")
-        .toPandas()
-    )
-    cb = np.stack(seeds["embedding"].to_numpy()).astype(np.float64)
-    cb = cb.reshape(PQ_K, PQ_M, PQ_SUB)
-    q = emb.filter(F.col("vec_id") == 0).select("embedding").toPandas()
-    qv = np.asarray(q["embedding"][0], dtype=np.float64).reshape(PQ_M, PQ_SUB)
-    return cb, qv
+    (M, SUB) query sub-slices — one k-row driver pull
+    (ivf._seed_vectors), whose row 0 is the query vector vec_id=0."""
+    seeds = _seed_vectors(emb, PQ_K)
+    return seeds.reshape(PQ_K, PQ_M, PQ_SUB), seeds[0].reshape(PQ_M, PQ_SUB)
 
 
 def encode_pq(emb: DataFrame, codebook: np.ndarray) -> DataFrame:
@@ -137,24 +136,12 @@ def query_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast ADC join + one hash aggregate + heap), so the composition
     adds no new shuffle — the candidate filter simply shrinks every
     downstream stage."""
-    from bigdata_project_spark.operators.ivf import (
-        N_PROBE,
-        _round6,
-        _assign_cells,
-        _seed_centroids,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids, cell_ids = _seed_centroids(emb)
     assigned = _assign_cells(emb, centroids, cell_ids)
 
-    q = emb.filter(F.col("vec_id") == 0).toPandas()["embedding"][0]
-    qfull = np.asarray(q, dtype=np.float64)
-    qn = qfull / np.linalg.norm(qfull)
-    C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    cos_q = _round6(C @ qn)
-    order = sorted(range(len(cell_ids)), key=lambda i: (-cos_q[i], cell_ids[i]))
-    probe = [int(cell_ids[i]) for i in order[:N_PROBE]]
+    qn = centroids[0] / np.linalg.norm(centroids[0])  # row 0 is vec_id 0
+    probe = _probe_order(centroids, cell_ids, qn)[:N_PROBE]
 
     cands = assigned.filter(
         F.col("cell").isin(probe) & (F.col("vec_id") != 0)
@@ -197,7 +184,6 @@ def _build_oracle_ivfpq() -> str:
     the pq oracle's codes/qt CTEs, with encoding restricted to probed
     candidates exactly like the Spark plan."""
     from bigdata_project_spark.functions.scalars import round_portable_sql
-    from bigdata_project_spark.operators.ivf import K_CELLS, N_PROBE
     from bigdata_project_spark.operators.similarity import _cos_sql
 
     return f"""

@@ -18,9 +18,15 @@ Scale notes
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 TESTDATA_TABLES = (
     "region",
@@ -37,23 +43,29 @@ TESTDATA_TABLES = (
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table (TESTDATA.md) as a DataFrame.
+    """Read one synthetic table (TESTDATA.md) as a DataFrame, with the
+    schema declared from its parquet footer.
 
-    ``events.parquet`` carries nanosecond timestamps, which Spark only
-    reads via the nanos-as-long legacy conf; normalize ``ts`` back to a
-    microsecond TIMESTAMP_NTZ so downstream plans see one timestamp type.
+    ``spark.read.parquet(path)`` infers the schema with a one-task Spark
+    job on every call; here one pyarrow footer read (about 1 ms, no data
+    scan) yields the same ``StructType`` (:func:`_footer_schema`), so
+    building a plan over a fixture table starts no job. Every load still
+    reads its footer: nothing is cached between loads.
+
+    The committed ``events.parquet`` carries ``timestamp[us]`` at every
+    scale factor and needs nothing more. An external events file with
+    ``TIMESTAMP(NANOS)``, or with a plain int64 ``ts``, surfaces ``ts`` as
+    bigint (nanos via the nanos-as-long legacy conf); it is normalized to
+    a microsecond TIMESTAMP_NTZ so downstream plans see one timestamp type.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        path = f"{sf_dir}/{name}.parquet"
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            # The nanosAsLong conf surfaces TIMESTAMP(NANOS) as raw int64.
-            df = df.withColumn(
-                "ts", F.timestamp_micros(ts_micros(spark, path)).cast("timestamp_ntz")
-            )
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    footer = _footer(path)
+    df = _read_declared(spark, path, footer)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
+            "ts", F.timestamp_micros(_ts_micros(spark, path, footer)).cast("timestamp_ntz")
+        )
+    return df
 
 
 def ts_micros(spark: SparkSession, path: str) -> Column:
@@ -64,40 +76,100 @@ def ts_micros(spark: SparkSession, path: str) -> Column:
     (footer read, no data scan) — a per-row magnitude heuristic would
     misclassify pre-1973 nanos epochs as micros and mix units within one
     table. A plain-int64 column (no logical type) gets one table-level
-    max() probe: ns > 1e17 for any modern date, µs < 1e17 until year
+    max() probe, read through the footer-declared schema so it starts no
+    inference job: ns > 1e17 for any modern date, µs < 1e17 until year
     ~5138. Integer arithmetic throughout: ns epochs (~1.7e18) overflow
     double precision. Expects ``spark.sql.legacy.parquet.nanosAsLong``."""
-    unit = _parquet_ts_unit(path, "ts")
+    return _ts_micros(spark, path, _footer(path))
+
+
+def _ts_micros(spark: SparkSession, path: str, footer: pa.Schema | None) -> Column:
+    unit = _parquet_ts_unit(footer, "ts")
     if unit is None:
-        mx = spark.read.parquet(path).agg(F.max("ts")).first()[0]
+        mx = _read_declared(spark, path, footer).agg(F.max("ts")).first()[0]
         unit = "ns" if mx is not None and mx > 100_000_000_000_000_000 else "us"
     if unit == "us":
         return F.col("ts")
     return F.expr({"ns": "ts div 1000", "ms": "ts * 1000", "s": "ts * 1000000"}[unit])
 
 
-def _parquet_ts_unit(path: str, col: str) -> str | None:
-    """Timestamp unit ('ns'/'us'/...) of ``col`` from the parquet footer.
+def _read_declared(spark: SparkSession, path: str, footer: pa.Schema | None) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema declared from ``footer``,
+    so reading starts no inference job. Without a readable footer Spark
+    infers the schema itself (and raises its own not-found error)."""
+    schema = _footer_schema(footer)
+    if schema is None:
+        return spark.read.parquet(path)
+    if any(_is_nanos(f.type) for f in footer):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.schema(schema).parquet(path)
 
-    Reads schema metadata only — at 100 TB this is one footer fetch per
-    file listed, the same cost class as Spark's own schema resolution.
-    Returns None when the column isn't a timestamp (already-normalized
-    fixtures) or the footer can't be read."""
-    import os
 
-    import pyarrow.parquet as pq
+def _footer(path: str) -> pa.Schema | None:
+    """Arrow schema of the parquet table at ``path`` — the one footer read
+    behind the declared schema and the ts unit.
 
+    Reads schema metadata only; at 100 TB this is one footer fetch per
+    load, the same cost class as Spark's own schema resolution. A
+    directory (Spark-written output) reads its first data file by name,
+    skipping the ``_``/``.`` files Spark skips (``_SUCCESS``, ``.crc``);
+    like Spark with ``mergeSchema`` off, it assumes the parts agree.
+    Returns None when no footer can be read."""
     p = path
     if os.path.isdir(p):
-        parts = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
+        parts = sorted(f for f in os.listdir(p) if not f.startswith(("_", ".")))
         if not parts:
             return None
         p = os.path.join(p, parts[0])
     try:
-        field = pq.read_schema(p).field(col)
-    except (OSError, KeyError):
+        with pq.ParquetFile(p) as pf:
+            schema, columns = pf.schema_arrow, list(pf.schema)
+    except OSError:
         return None
-    return getattr(field.type, "unit", None)
+    for c in columns:
+        # legacy INT96 timestamps surface as arrow ns; Spark reads TIMESTAMP
+        if c.physical_type == "INT96" and c.path in schema.names:
+            i = schema.get_field_index(c.path)
+            schema = schema.set(i, schema.field(i).with_type(pa.timestamp("us", tz="UTC")))
+    return schema
+
+
+def _parquet_ts_unit(footer: pa.Schema | None, col: str) -> str | None:
+    """Timestamp unit ('ns'/'us'/...) of ``col`` in a :func:`_footer`;
+    None when the column isn't a timestamp or there is no footer."""
+    if footer is None or col not in footer.names:
+        return None
+    return getattr(footer.field(col).type, "unit", None)
+
+
+def _is_nanos(t: pa.DataType) -> bool:
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
+def _footer_schema(footer: pa.Schema | None) -> T.StructType | None:
+    """The schema ``spark.read.parquet`` would infer, from the footer alone.
+
+    Each arrow type maps with ``from_arrow_type`` (timestamps without a
+    zone as TIMESTAMP_NTZ, as Spark infers them), except
+    ``TIMESTAMP(NANOS)``, which Spark reads as bigint under
+    ``spark.sql.legacy.parquet.nanosAsLong``. Nullability needs no care:
+    Spark makes every field of a file-source schema nullable, declared or
+    inferred. None when there is no footer or a type has no arrow mapping
+    (unsigned integers)."""
+    if footer is None:
+        return None
+    try:
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name,
+                    T.LongType() if _is_nanos(f.type) else from_arrow_type(f.type, prefer_timestamp_ntz=True),
+                )
+                for f in footer
+            ]
+        )
+    except PySparkTypeError:
+        return None
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
@@ -191,7 +263,6 @@ def stage_urls(urls: list[str], dest_dir: str, max_workers: int = 8) -> list[str
     the path is testable offline. Returns staged paths in input order
     (the reference sorts its URL list driver-side as well, §2.6 O3).
     """
-    import os
     import urllib.parse
     import urllib.request
     from concurrent.futures import ThreadPoolExecutor

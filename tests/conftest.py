@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -14,6 +15,25 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("tests")
     yield spark
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn, *args) -> (jobs, result)``: the Spark jobs ``fn``
+    started, counted through a fresh status-tracker job group."""
+    sc = spark.sparkContext
+
+    def count(fn, *args):
+        group = f"count_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            out = fn(*args)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -114,3 +114,56 @@ def test_knn_join_agrees_with_brute_anchor(spark, sf_dir):
     q0 = out[out["q_id"] == 0].sort_values("rnk")
     assert list(q0["vec_id"]) == list(anchor["vec_id"])
     assert (abs(q0["cos_sim"].to_numpy() - anchor["cos_sim"].to_numpy()) == 0).all()
+
+
+def test_seed_pulls_start_one_job_each(spark, sf_dir, count_jobs):
+    """The PQ codebook + query and the IVF seed centroids each come from
+    one k-row driver pull: no Spark sort, no second vec_id=0 pull."""
+    import numpy as np
+
+    from bigdata_project_spark.operators.ivf import K_CELLS, _seed_centroids
+    from bigdata_project_spark.operators.pq import PQ_K, _codebook_and_query
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    jobs, (codebook, qv) = count_jobs(_codebook_and_query, emb)
+    assert jobs == 1
+    jobs, (centroids, cell_ids) = count_jobs(_seed_centroids, emb)
+    assert jobs == 1
+
+    want = {
+        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in emb.filter(f"vec_id < {max(PQ_K, K_CELLS)}").collect()
+    }
+    assert cell_ids.tolist() == list(range(K_CELLS))
+    for i in range(K_CELLS):
+        assert np.array_equal(centroids[i], want[i])
+    for i in range(PQ_K):
+        assert np.array_equal(codebook[i].reshape(-1), want[i])
+    assert np.array_equal(qv.reshape(-1), want[0])
+
+
+def test_seed_pull_rejects_missing_vec_id(spark, tmp_path):
+    """An embeddings table without vec_id 0 cannot seed the quantizers:
+    the pull raises and names the count it expected."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from bigdata_project_spark.operators.ivf import K_CELLS, _seed_centroids
+    from bigdata_project_spark.operators.pq import PQ_K, _codebook_and_query
+
+    ids = list(range(1, 20))
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array([[float(i)] * 64 for i in ids], pa.list_(pa.float32())),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    emb = load_table(spark, str(tmp_path), "embeddings")
+    with pytest.raises(ValueError, match=f"expected {K_CELLS} vectors"):
+        _seed_centroids(emb)
+    with pytest.raises(ValueError, match=f"expected {PQ_K} vectors"):
+        _codebook_and_query(emb)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
 
 import pytest
 
@@ -447,14 +448,15 @@ def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_parquet_ts_unit_footer_detection(sf_dir):
-    from bigdata_project_spark.sources.readers import _parquet_ts_unit
+    from bigdata_project_spark.sources.readers import _footer, _parquet_ts_unit
 
+    footer = _footer(f"{sf_dir}/events.parquet")
     # the events fixture carries a real timestamp logical type
-    assert _parquet_ts_unit(f"{sf_dir}/events.parquet", "ts") in ("ns", "us", "ms")
+    assert _parquet_ts_unit(footer, "ts") in ("ns", "us", "ms")
     # a non-timestamp column has no unit
-    assert _parquet_ts_unit(f"{sf_dir}/events.parquet", "user_id") is None
+    assert _parquet_ts_unit(footer, "user_id") is None
     # unreadable path degrades to None, not an exception
-    assert _parquet_ts_unit("/nonexistent/x.parquet", "ts") is None
+    assert _parquet_ts_unit(_footer("/nonexistent/x.parquet"), "ts") is None
 
 
 def test_drop_schema_cascade(spark):
@@ -504,3 +506,105 @@ def test_load_events_pre_1973_nanos(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "events")
     got = sorted(r["ts"] for r in df.select("ts").collect())
     assert got == ts  # misread-as-micros would land in year 1970 + epsilon
+
+
+def _declared_schema(spark, path):
+    """The schema of a read declared from the parquet footer at ``path``."""
+    from bigdata_project_spark.sources.readers import _footer, _footer_schema
+
+    return spark.read.schema(_footer_schema(_footer(path))).parquet(path).schema
+
+
+@pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])
+def test_footer_schema_equals_spark_inference(spark, sf_dir, sf):
+    """The footer-declared schema is the one ``spark.read.parquet`` infers,
+    for every fixture table at every scale factor."""
+    from bigdata_project_spark.sources.readers import TESTDATA_TABLES
+
+    d = os.path.join(os.path.dirname(sf_dir), f"sf{sf}")
+    if not os.path.isdir(d):
+        pytest.skip(f"no sf{sf} fixture next to {sf_dir}")
+    for name in TESTDATA_TABLES:
+        p = f"{d}/{name}.parquet"
+        assert _declared_schema(spark, p) == spark.read.parquet(p).schema, name
+
+
+def test_footer_schema_spark_written_directory(spark, tmp_path, count_jobs):
+    """A multi-part directory Spark wrote: the footer comes from a data
+    part, never ``_SUCCESS`` or a ``.crc`` file, and Spark's INT96
+    timestamps are declared TIMESTAMP, not bigint."""
+    from bigdata_project_spark.sources.readers import load_table
+
+    path = tmp_path / "t.parquet"
+    spark.range(40).selectExpr(
+        "id",
+        "cast(id as string) AS s",
+        "timestamp_micros(id * 1000000) AS ts",
+        "timestamp_ntz'2020-01-01 00:00:00' AS tsn",
+        "array(id, id + 1) AS a",
+        "named_struct('x', id, 'y', cast(id as double)) AS st",
+    ).repartition(3).write.parquet(str(path))
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert sum(n.startswith("part-") and n.endswith(".parquet") for n in names) > 1
+
+    want = spark.read.parquet(str(path)).schema
+    assert _declared_schema(spark, str(path)) == want
+    jobs, df = count_jobs(load_table, spark, str(tmp_path), "t")
+    assert jobs == 0
+    assert df.schema == want and df.count() == 40
+
+
+def test_footer_schema_nanos_as_long(spark, tmp_path, count_jobs):
+    """A ``timestamp[ns]`` column is declared bigint, as Spark reads
+    TIMESTAMP(NANOS) under ``spark.sql.legacy.parquet.nanosAsLong``."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from bigdata_project_spark.sources.readers import _footer, _footer_schema, load_table
+
+    p = str(tmp_path / "t.parquet")
+    ts = [datetime.datetime(2021, 5, 6, 7, 8, 9, 123456)]
+    pq.write_table(pa.table({"k": [1], "ts": pa.array(ts, pa.timestamp("ns"))}), p)
+    assert _footer_schema(_footer(p))["ts"].dataType == T.LongType()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert _declared_schema(spark, p) == spark.read.parquet(p).schema
+    jobs, df = count_jobs(load_table, spark, str(tmp_path), "t")
+    assert jobs == 0
+    micros = (ts[0] - datetime.datetime(1970, 1, 1)) // datetime.timedelta(microseconds=1)
+    assert df.first()["ts"] == micros * 1000
+
+
+def test_load_table_starts_no_job(spark, sf_dir, count_jobs):
+    """Declaring the footer schema leaves no inference job on the read
+    path: building a plan over any fixture table runs nothing."""
+    from bigdata_project_spark.sources.readers import TESTDATA_TABLES, load_table
+
+    for name in TESTDATA_TABLES:
+        assert count_jobs(load_table, spark, sf_dir, name)[0] == 0, name
+
+
+def test_plain_int64_ts_probe_reads_declared(spark, tmp_path, count_jobs):
+    """A plain-int64 ``ts`` has no footer unit, so its unit costs one
+    max() probe, read through the declared schema: the probe starts the
+    jobs of that aggregate alone, with no inference job on top."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from bigdata_project_spark.sources.readers import load_table, ts_micros
+
+    p = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array([10**18, 2 * 10**18], pa.int64())}), p
+    )
+    probe = count_jobs(
+        lambda: spark.read.schema("event_id long, ts long").parquet(p).agg(F.max("ts")).first()
+    )[0]
+    assert count_jobs(ts_micros, spark, p)[0] == probe
+    jobs, df = count_jobs(load_table, spark, str(tmp_path), "events")
+    assert jobs == probe
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
