@@ -23,9 +23,13 @@ def tokens(text: Column) -> Column:
 
 def content_hash(text: Column) -> Column:
     """md5 of whitespace-normalized utf-8 text — the exact-dedup key.
-    DuckDB twin: ``md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))``."""
+    DuckDB twin: :data:`CONTENT_HASH_SQL`."""
     norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
     return F.md5(F.encode(norm, "UTF-8"))
+
+
+#: DuckDB twin of :func:`content_hash`; ``{t}`` is the text expression
+CONTENT_HASH_SQL = r"md5(regexp_replace(trim(lower({t})), '\s+', ' ', 'g'))"
 
 
 def hex16_to_int(hex4: Column) -> Column:

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
-from bigdata_project_spark.functions.text import tokens
+from bigdata_project_spark.functions.text import CONTENT_HASH_SQL, content_hash, tokens
 from bigdata_project_spark.operators.text_dedup import shingle_rows_raw
 from bigdata_project_spark.sources.readers import load_table
 
@@ -217,16 +217,8 @@ def query_pipeline_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame
         f1.cast("long").alias("f1"),
         f2.cast("long").alias("f2"),
         f3.cast("long").alias("f3"),
-        # md5 of whitespace-normalized text — same key as dedup_exact
-        F.when(
-            f3,
-            F.md5(
-                F.encode(
-                    F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "),
-                    "UTF-8",
-                )
-            ),
-        ).alias("h"),
+        # same key as dedup_exact
+        F.when(f3, content_hash(F.col("text"))).alias("h"),
     )
     m = flagged.agg(
         F.count(F.lit(1)).alias("n0"),
@@ -269,9 +261,7 @@ WITH flagged AS (
     SELECT CAST({_FUNNEL_F1} AS BIGINT) AS f1,
            CAST({_FUNNEL_F2} AS BIGINT) AS f2,
            CAST({_FUNNEL_F3} AS BIGINT) AS f3,
-           CASE WHEN {_FUNNEL_F3}
-                THEN md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))
-           END AS h
+           CASE WHEN {_FUNNEL_F3} THEN {CONTENT_HASH_SQL.format(t="text")} END AS h
     FROM documents
 ),
 m AS (

@@ -24,8 +24,6 @@ oracle-checked (ntile over a unique total order is deterministic).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -173,19 +171,12 @@ def write_zordered(
     )
 
 
-# perf-only cache bookkeeping for persist_projection=True — see the
-# lifecycle note inside distributed_ntile; guarded for concurrent builders
-_CACHE_LOCK = threading.Lock()
-_PREV_CACHES: list[DataFrame] = []
-
-
 def distributed_ntile(
     df: DataFrame,
     n_buckets: int,
     order_cols: list[str],
     n_parts: int = 32,
     lead_range: tuple[int, int] | None = None,
-    persist_projection: bool = False,
 ) -> DataFrame:
     """``ntile(n_buckets) OVER (ORDER BY order_cols)`` without the global
     single-task window.
@@ -210,10 +201,10 @@ def distributed_ntile(
     counts, exclusive-cumsum offsets, the global row total, and the
     ntile quotient/remainder are all columns of the broadcast side —
     no driver collect sits between a counts pass and a rank pass, so
-    there is no cross-job consistency window at all. Re-evaluating the
-    source subtree inside the single plan is deterministic (pure
-    row-functions over a file listing pinned at plan time), so cache
-    eviction can only ever cost recomputation, never correctness.
+    there is no cross-job consistency window at all. The counts and
+    rank subtrees each re-evaluate the source projection; that is
+    deterministic (pure row-functions over a file listing pinned at
+    plan time) and, with the non-null ``__pid`` below, cheap.
 
     Bucket assignment replays SQL ntile's exact semantics (first
     ``n mod N`` buckets one row larger), so results — and the oracle —
@@ -221,61 +212,12 @@ def distributed_ntile(
     be unique overall (true here: it ends in the lineitem primary key);
     ties on the *leading* column are fine because equal leading values
     always land in the same range (uniform-width ranges only skew
-    parallelism under data skew, never correctness).
-
-    ``persist_projection`` — the cache lifecycle is now a per-caller
-    knob, measured both ways in round 12 (both IN THE BENCH CONTEXT,
-    the 169-query session that decides — standalone probe sessions
-    mislead here, see below):
-
-    - **False (default)**: no persist. The counts subtree and the rank
-      subtree re-evaluate the projection — for a CHEAP projection that
-      beats one columnar-cache write + read-back + the eager
-      materialization job the cached variant needs to stop AQE's
-      concurrent build/probe stages from racing a cold cache.
-      feature_binning_equidepth (3 plain columns): 2.36 → 1.87 s in
-      the r12b bench column.
-    - **True**: evict-then-persist-then-eager-count. Historically this
-      guarded layout_zorder_extents' 64-term Morton projection, whose
-      no-persist form measured **11.6 s in the r12b bench session** —
-      attributed then to a JIT method-size cliff. Round 16 found the
-      real mechanism (see the __pid coalesce below): the nullable join
-      key made the optimizer push an inferred isnotnull(__pid) filter
-      below the projection chain with every alias inlined at every use
-      site — an exponentially expanded predicate evaluated per row.
-      The cache boundary "fixed" it only by blocking that pushdown.
-      With the key declared non-null the pushdown never happens, no
-      in-repo caller needs True anymore, and the zorder consumer runs
-      ONE action instead of three. The knob stays for projections that
-      are genuinely expensive to re-evaluate twice (counts + rank
-      subtrees). Eviction order still matters when used: CacheManager
-      keys by logical plan, and consecutive calls build IDENTICAL
-      plans — persist-then-evict would no-op the persist and then
-      remove the previous entry, leaving nothing (2.5 → 13 s in r5).
-
-    Correctness never depends on the cache — the whole computation is
-    ONE lazy plan over deterministic row-functions (see above), so the
-    knob is purely physical."""
-    if persist_projection:
-        from pyspark import StorageLevel
-
-        with _CACHE_LOCK:
-            while _PREV_CACHES:
-                _PREV_CACHES.pop().unpersist(blocking=False)
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            _PREV_CACHES.append(df)
+    parallelism under data skew, never correctness)."""
     lead = order_cols[0]
     if lead_range is not None:
         lo, hi = lead_range
         span = max(hi - lo + 1, 1)
         pid: Column = F.expr(f"CAST((({lead} - {lo}) * {n_parts}) div {span} AS INT)")
-        if persist_projection:
-            # eager warm-up: AQE submits the broadcast-build and
-            # probe-map stages concurrently; on a cold cache they race
-            # and each re-evaluates the projection — one cheap count
-            # materializes it for both. The quantile branch needs no
-            # extra job (approxQuantile materializes the cache).
-            df.count()
     else:
         probs = [i / n_parts for i in range(1, n_parts)]
         cuts = sorted(set(df.stat.approxQuantile(lead, probs, 0.001)))

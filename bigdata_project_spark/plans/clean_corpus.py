@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
-from bigdata_project_spark.functions.text import content_hash
+from bigdata_project_spark.functions.text import CONTENT_HASH_SQL, content_hash
 from bigdata_project_spark.operators.text_analysis import ORACLE_QUALITY_SCORE, quality_frame
 from bigdata_project_spark.operators.text_dedup import _CORPUS_SQL, _corpus_with_dups
 
@@ -113,8 +113,7 @@ WITH corpus AS ({_CORPUS_SQL}),
 survivors AS (
     SELECT MIN(doc_id) AS doc_id
     FROM (
-        SELECT doc_id,
-               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS content_hash
+        SELECT doc_id, {CONTENT_HASH_SQL.format(t="text")} AS content_hash
         FROM corpus
     )
     GROUP BY content_hash

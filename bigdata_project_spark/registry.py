@@ -64,6 +64,7 @@ MODULES = (
     "operators.chunking",
     "operators.corpus_quality",
     "operators.dedup_cluster",
+    "operators.dup_spans",
     "operators.embedding_stats",
     "operators.funnel",
     "operators.graph",
@@ -75,6 +76,7 @@ MODULES = (
     "operators.pq",
     "operators.profiling",
     "operators.semdedup",
+    "operators.sig_store",
     "operators.similarity",
     "operators.sketches",
     "operators.skew",

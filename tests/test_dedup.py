@@ -110,7 +110,7 @@ def test_dedup_cluster_planted_triangles(spark, sf_dir):
 
 
 def test_dup_spans_planted_duplicates_fully_covered(spark, sf_dir):
-    from bigdata_project_spark.operators.text_dedup import query_text_dup_spans
+    from bigdata_project_spark.operators.dup_spans import query_text_dup_spans
 
     out = query_text_dup_spans(spark, sf_dir)
     planted = out.filter(F.col("doc_id") >= 1_000_000).collect()
@@ -125,7 +125,7 @@ def test_dup_spans_planted_duplicates_fully_covered(spark, sf_dir):
 
 
 def test_span_removal_deletes_copies_keeps_originals(spark, sf_dir):
-    from bigdata_project_spark.operators.text_dedup import query_dedup_span_removal
+    from bigdata_project_spark.operators.dup_spans import query_dedup_span_removal
 
     out = query_dedup_span_removal(spark, sf_dir)
     planted = out.filter(F.col("doc_id") >= 1_000_000).collect()
@@ -162,7 +162,7 @@ def test_lcp_profile_consistent_with_window_spans(spark, sf_dir):
     max_lcp == 8  <=>  n_dup_windows > 0, and n_dup_pos (lcp >= SA_T)
     dominates n_dup_windows because every dup-window position has
     lcp == 8 >= SA_T."""
-    from bigdata_project_spark.operators.text_dedup import (
+    from bigdata_project_spark.operators.dup_spans import (
         SA_CAP,
         SPAN_W,
         query_text_dup_spans,
@@ -190,11 +190,7 @@ def test_lcp_profile_matches_bruteforce_on_planted_corpus(spark):
     exact-threshold (5), mid (6/7), capped (8+) shared runs, a shared
     run ending exactly at a doc's last SA_T tokens (the descending-
     sequence guard case), within-doc repetition, and a dup-free doc."""
-    from bigdata_project_spark.operators.text_dedup import (
-        SA_CAP,
-        SA_T,
-        lcp_profile,
-    )
+    from bigdata_project_spark.operators.dup_spans import SA_CAP, SA_T, lcp_profile
 
     docs = {
         # 10-token run shared with doc 2 -> capped lcp = 8 at offsets 0/1
@@ -287,7 +283,7 @@ def test_incremental_dedup_verdicts(spark, sf_dir):
     as exact_dup with its original as the match; near-dup variants are
     flagged only at verified Jaccard >= 0.9 (with a real existing match);
     kept docs carry no match columns."""
-    from bigdata_project_spark.operators.text_dedup import (
+    from bigdata_project_spark.operators.sig_store import (
         _INCR_EXACT_HI,
         _INCR_EXACT_LO,
         query_dedup_incremental_lsh,
@@ -311,34 +307,23 @@ def test_incremental_dedup_verdicts(spark, sf_dir):
     assert kept["matched_doc"].isna().all() and kept["jaccard"].isna().all()
 
 
-def test_incremental_store_backs_the_batch_screen(spark, sf_dir, monkeypatch):
+def test_incremental_store_backs_the_batch_screen(spark, sf_dir):
     """The r10 signature-store contract: after the first call, the
     corpus' hashes/bands live in catalog tables, the per-batch plan
     READS those stores (no full-corpus signature recompute in the
     screen), and repeat calls reuse the same store without rewriting."""
-    from bigdata_project_spark.operators import text_dedup as td
+    from bigdata_project_spark.operators import sig_store
 
-    df = td.query_dedup_incremental_lsh(spark, sf_dir)
-    df.limit(1).collect()  # the pinned production path still executes
-    hash_t, band_t = td._incremental_sig_store(spark, sf_dir)
+    df = sig_store.query_dedup_incremental_lsh(spark, sf_dir)
+    df.limit(1).collect()
+    hash_t, band_t = sig_store._incremental_sig_store(spark, sf_dir)
     assert spark.catalog.tableExists(hash_t)
     assert spark.catalog.tableExists(band_t)
-    # The screen's single remaining checkpoint — the new_hashed
-    # DETERMINISM checkpoint (eager, text_dedup.py; the r16 fan-out pins
-    # were reverted) — truncates lineage to LogicalRDD, so the store
-    # scans in the checkpointed sub-plan are invisible from the final
-    # frame. Re-derive the plan with checkpointing stubbed to identity
-    # (on the concrete runtime DataFrame class, not the abstract base),
-    # purely for inspection: same code path, full lineage.
-    monkeypatch.setattr(
-        type(df), "localCheckpoint", lambda self, eager=True: self
-    )
-    plan_df = td.query_dedup_incremental_lsh(spark, sf_dir)
-    plan = plan_df._jdf.queryExecution().optimizedPlan().toString()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
     # the batch screen scans the stored tables, not re-derived signatures
     assert "incr_hash_store__" in plan and "incr_band_store__" in plan
     # memo: a second invocation maps to the SAME tables (no rewrite churn)
-    assert td._incremental_sig_store(spark, sf_dir) == (hash_t, band_t)
+    assert sig_store._incremental_sig_store(spark, sf_dir) == (hash_t, band_t)
 
 
 def test_prefix_filter_equals_all_pairs_on_random_corpora(spark):
@@ -394,8 +379,15 @@ def test_skew_bounded_self_pairs_hot_bucket(spark, monkeypatch):
     from pyspark.sql import functions as F
 
     from bigdata_project_spark.operators.text_dedup import (
+        _LSH_SALT_ENV,
         skew_bounded_self_pairs,
     )
+
+    def bounded(melt, t, **kw):
+        """skew_bounded_self_pairs built under salt threshold ``t``."""
+        with monkeypatch.context() as mp:
+            mp.setenv(_LSH_SALT_ENV, str(t))
+            return skew_bounded_self_pairs(melt, ["sig"], **kw)
 
     # one 300-row hot bucket + seven cold buckets of 7-8 rows
     rows = [(i, "HOT") for i in range(300)] + [
@@ -406,12 +398,12 @@ def test_skew_bounded_self_pairs_hot_bucket(spark, monkeypatch):
     def pair_set(df):
         return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
 
-    naive = skew_bounded_self_pairs(melt, ["sig"], threshold=0)
+    naive = bounded(melt, 0)
     want = pair_set(naive)
     # closed form: C(300,2) hot + C(8,2) + 6*C(7,2) cold
     assert len(want) == 300 * 299 // 2 + 28 + 6 * 21
 
-    salted = skew_bounded_self_pairs(melt, ["sig"], threshold=64)
+    salted = bounded(melt, 64)
     assert pair_set(salted) == want  # (a) semantics identical
 
     # (b) the bound engages: hot bucket splits into ceil(300/64)=5 salt
@@ -439,8 +431,6 @@ def test_skew_bounded_self_pairs_hot_bucket(spark, monkeypatch):
     # turns it on (production default on any cluster master) — output
     # equal either way, and no bucket here reaches the 1024 production
     # threshold, so the salt never fires (ns=1 everywhere).
-    from bigdata_project_spark.operators.text_dedup import _LSH_SALT_ENV
-
     monkeypatch.delenv(_LSH_SALT_ENV, raising=False)
     assert pair_set(skew_bounded_self_pairs(melt, ["sig"])) == want
     with monkeypatch.context() as mp:
@@ -454,12 +444,8 @@ def test_skew_bounded_self_pairs_hot_bucket(spark, monkeypatch):
     cond = (F.col("a.c") * 9 <= F.col("b.c") * 10) & (
         F.col("b.c") * 9 <= F.col("a.c") * 10
     )
-    got = pair_set(
-        skew_bounded_self_pairs(melt2, ["sig"], extra_cond=cond, threshold=64)
-    )
-    want2 = pair_set(
-        skew_bounded_self_pairs(melt2, ["sig"], extra_cond=cond, threshold=0)
-    )
+    got = pair_set(bounded(melt2, 64, extra_cond=cond))
+    want2 = pair_set(bounded(melt2, 0, extra_cond=cond))
     assert got == want2 and len(want2) < len(want)
 
     # carry_b plumbing (r17: the simhash pair verify carries both sides'
@@ -468,27 +454,20 @@ def test_skew_bounded_self_pairs_hot_bucket(spark, monkeypatch):
     def triple_set(df):
         return {(r["doc_a"], r["doc_b"], r["c"], r["c_b"]) for r in df.collect()}
 
-    got_b = triple_set(
-        skew_bounded_self_pairs(
-            melt2, ["sig"], carry=("c",), carry_b=("c",), threshold=64
-        )
-    )
-    want_b = triple_set(
-        skew_bounded_self_pairs(
-            melt2, ["sig"], carry=("c",), carry_b=("c",), threshold=0
-        )
-    )
+    got_b = triple_set(bounded(melt2, 64, carry=("c",), carry_b=("c",)))
+    want_b = triple_set(bounded(melt2, 0, carry=("c",), carry_b=("c",)))
     assert got_b == want_b
     by_pair = {(a, b): (ca, cb) for a, b, ca, cb in want_b}
     assert by_pair[(0, 1)] == (10, 11)  # doc 0 carries c=10, doc 1 c=11
 
 
-def test_skew_bounded_self_pairs_rejects_reserved_columns(spark):
+def test_skew_bounded_self_pairs_rejects_reserved_columns(spark, monkeypatch):
     """A melt already carrying one of the salted join's working columns
     must fail loudly instead of having it silently overwritten."""
     import pytest
 
     from bigdata_project_spark.operators.text_dedup import (
+        _LSH_SALT_ENV,
         skew_bounded_self_pairs,
     )
 
@@ -497,10 +476,10 @@ def test_skew_bounded_self_pairs_rejects_reserved_columns(spark):
     )
     for col in ("__bn", "__ns_hot", "__ns", "__salt"):
         melt = base.withColumn(col, F.lit(7))
-        with pytest.raises(ValueError, match=col):
-            skew_bounded_self_pairs(melt, ["sig"], threshold=64)
-        with pytest.raises(ValueError, match=col):
-            skew_bounded_self_pairs(melt, ["sig"], threshold=0)
+        for t in ("64", "0"):
+            monkeypatch.setenv(_LSH_SALT_ENV, t)
+            with pytest.raises(ValueError, match=col):
+                skew_bounded_self_pairs(melt, ["sig"])
 
 
 def _fake_frame(master):

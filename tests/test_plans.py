@@ -483,25 +483,15 @@ def test_bloom_prefilter_broadcasts_sketch(spark, sf_dir):
     assert "shiftright" in plan  # the bit-test membership expression
 
 
-def test_incremental_store_never_broadcast(spark, sf_dir, monkeypatch):
+def test_incremental_store_never_broadcast(spark, sf_dir):
     """The 100 TB contract of the incremental screen: the STORED corpus
     signature tables (billions of rows at scale) must never sit under a
     BroadcastExchange — both stages broadcast the tiny batch side into
-    a scan of the store (text_dedup.screen_batch_against_store)."""
-    from bigdata_project_spark.operators import text_dedup as td
+    a scan of the store (sig_store.screen_batch_against_store)."""
+    from bigdata_project_spark.operators import sig_store
 
-    hash_t, band_t = td._incremental_sig_store(spark, sf_dir)
-    # The screen's single remaining checkpoint — the new_hashed
-    # DETERMINISM checkpoint (eager, text_dedup.py) — hides the batch
-    # subtree behind LogicalRDD in the final plan (the r16 fan-out pins
-    # were reverted; only that one checkpoint is left). Inspect the same
-    # join construction with checkpointing stubbed to identity (concrete
-    # runtime class) — full lineage, same code path.
-    probe = td.query_dedup_incremental_lsh(spark, sf_dir)
-    monkeypatch.setattr(
-        type(probe), "localCheckpoint", lambda self, eager=True: self
-    )
-    df = td.query_dedup_incremental_lsh(spark, sf_dir)
+    hash_t, band_t = sig_store._incremental_sig_store(spark, sf_dir)
+    df = sig_store.query_dedup_incremental_lsh(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert hash_t in plan and band_t in plan  # both stores scanned
 
