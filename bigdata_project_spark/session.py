@@ -26,7 +26,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "bigdata_project_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
@@ -36,25 +35,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        # SPARK_GRAFT_SHUFFLE_PARTITIONS decouples reducer count from
-        # core count for A/B floor experiments (BASELINE.md §4d): at
-        # local benchmark scale most shuffles carry far less data than
-        # cores, and each extra reducer task costs scheduling floor.
-        env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env_parts:
-            try:
-                shuffle_partitions = int(env_parts)
-            except ValueError:
-                raise ValueError(
-                    f"SPARK_GRAFT_SHUFFLE_PARTITIONS={env_parts!r} is not an integer"
-                ) from None
-            if shuffle_partitions < 1:
-                raise ValueError(
-                    f"SPARK_GRAFT_SHUFFLE_PARTITIONS={env_parts!r} must be >= 1"
-                )
-        else:
-            shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+    shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
     builder = (
         SparkSession.builder.appName(app_name)

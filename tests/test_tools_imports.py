@@ -1,6 +1,7 @@
 """Guard the scripts in tools/ against rot: every name they import from
-the package must still exist, and none may reach into the registry's
-private names (those change without notice)."""
+the package, or from perfbench's ``run``, ``layers`` and ``stats``
+modules, must still exist, and none may reach into the registry's private
+names (those change without notice)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,24 @@ import pathlib
 import pytest
 
 PKG = "bigdata_project_spark"
-TOOLS = sorted((pathlib.Path(__file__).parent.parent / "tools").glob("*.py"))
+REPO = pathlib.Path(__file__).parent.parent
+TOOLS = sorted((REPO / "tools").glob("*.py"))
+BENCH_MODULES = ("run", "layers", "stats")
+
+
+def _bench_names(module: str) -> set[str]:
+    """Top-level names of ``perfbench/<module>.py``, read without importing
+    it: perfbench puts its own directory on ``sys.path``."""
+    names = set()
+    for node in ast.parse((REPO / "perfbench" / f"{module}.py").read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name))
+    return names
 
 
 def _resolves(module: str, name: str) -> bool:
@@ -29,8 +47,12 @@ def test_tool_imports_resolve_and_skip_registry_privates(tool):
     tree = ast.parse(tool.read_text())
     missing, private = [], []
     registry_names = set()
+    bench_aliases = {}
     for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == PKG:
+        if isinstance(node, ast.ImportFrom) and node.module in BENCH_MODULES:
+            have = _bench_names(node.module)
+            missing += [f"{node.module}.{a.name}" for a in node.names if a.name not in have]
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == PKG:
             for alias in node.names:
                 if not _resolves(node.module, alias.name):
                     missing.append(f"{node.module}.{alias.name}")
@@ -40,16 +62,25 @@ def test_tool_imports_resolve_and_skip_registry_privates(tool):
                     private.append(alias.name)
         elif isinstance(node, ast.Import):
             for alias in node.names:
-                if alias.name.split(".")[0] == PKG:
+                if alias.name in BENCH_MODULES:
+                    bench_aliases[alias.asname or alias.name] = alias.name
+                elif alias.name.split(".")[0] == PKG:
                     importlib.import_module(alias.name)
                     if alias.name == f"{PKG}.registry" and alias.asname:
                         registry_names.add(alias.asname)
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in bench_aliases
+            and node.attr not in _bench_names(bench_aliases[node.value.id])
+        ):
+            missing.append(f"{bench_aliases[node.value.id]}.{node.attr}")
+        if (
+            isinstance(node, ast.Attribute)
             and node.attr.startswith("_")
             and ast.unparse(node.value) in registry_names | {f"{PKG}.registry"}
         ):
             private.append(node.attr)
-    assert not missing, f"{tool.name} imports names the package no longer has: {missing}"
+    assert not missing, f"{tool.name} imports names the package or perfbench no longer has: {missing}"
     assert not private, f"{tool.name} touches private registry names: {private}"
