@@ -91,18 +91,6 @@ def hex32_to_int(hex8: Column) -> Column:
     return F.conv(F.substring(hex8, 1, 8), 16, 10).cast("bigint")
 
 
-def hex32_to_int_horner(hex8: Column) -> Column:
-    """The pre-r12 Horner fold, kept as the regression reference for
-    the conv fast path (and as the exact Spark-side mirror of
-    ``HEX32_TO_INT_SQL``)."""
-    digits = "0123456789abcdef"
-    acc: Column | None = None
-    for i in range(8):
-        v = (F.instr(F.lit(digits), F.substring(hex8, i + 1, 1)) - 1).cast("bigint")
-        acc = v if acc is None else acc * 16 + v
-    return acc
-
-
 def _hex32_sql(h: str) -> str:
     expr = None
     for i in range(8):

@@ -174,41 +174,6 @@ FROM (
 """
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("thumb", T.BinaryType()),
-        T.StructField("thumb_bytes", T.IntegerType()),
-    ]
-)
-
-
-def resize_fake(df: DataFrame, target_bytes: int = 32) -> DataFrame:
-    """Fake image resize with REAL plumbing: Arrow-batched mapInPandas
-    emitting a fixed-budget binary 'thumbnail' per payload (production:
-    PIL resize + re-encode; see decode_image_stub). Strided byte sampling
-    is the deterministic stand-in for downsampling."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def shrink(b: bytes) -> bytes:
-            if len(b) <= target_bytes:
-                return bytes(b)
-            stride = len(b) // target_bytes
-            return bytes(b[::stride][:target_bytes])
-
-        for pdf in it:
-            thumbs = pdf["payload"].map(shrink)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "thumb": thumbs,
-                    "thumb_bytes": thumbs.str.len().astype("int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=RESIZE_SCHEMA)
-
-
 def frame_sample_fake(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     """Fake video frame sampler: emits one row per sampled 'frame' offset —
     the explode-shaped output a real frame sampler produces, with

@@ -1,23 +1,16 @@
 """Linear-algebra + graph operators: Gram matrix, PageRank.
 
-- **Gram matrix** (``emb_gram_matrix``): G = Σ v·vᵀ over the embedding
+- **Gram matrix** (``emb_gram_blas``): G = Σ v·vᵀ over the embedding
   column — the input to PCA whitening / spectral dedup of a corpus'
-  embedding space. Spark-first shape: ``posexplode`` to long form, one
-  self equi-join on vec_id (shuffle volume = rows×dim, NOT rows×dim²:
-  the i ≤ j pair blowup happens after the exchange), one hash aggregate
-  on (i, j) — output is d(d+1)/2 rows regardless of corpus size. Float
-  parity follows the centroid contract (embedding_stats.py): inputs
-  portable-rounded to 6 dp, products summed as DECIMAL(27,12).
-
-- **Gram matrix, production path** (``emb_gram_blas``): the same result
-  from per-Arrow-batch XᵀX partials (``mapInPandas``) + one d²-row
-  aggregate — integer-scaled so it stays bit-identical to the
-  relational form and shares its oracle (see the function docstring).
-  Only the BLAS form is registered (what you run at 100 TB); the
-  relational form was demoted from the bench/driver registry in
-  round 10 — it donated ~2.6 s/round of pure gate ratio for a
-  pedagogical anchor — and its bit-equivalence to the BLAS form is
-  owned by tests/test_graph_funnel.py instead.
+  embedding space — from per-Arrow-batch XᵀX partials (``mapInPandas``)
+  + one d²-row aggregate; output is d(d+1)/2 rows regardless of corpus
+  size. Float parity follows the centroid contract (embedding_stats.py):
+  inputs portable-rounded to 6 dp, products summed as DECIMAL(27,12),
+  integer-scaled so the result is bit-identical to the relational long
+  form (``posexplode`` + self equi-join on vec_id + one hash aggregate
+  on (i, j)). That long form is the DuckDB oracle
+  (``ORACLE_EMB_GRAM_MATRIX``); its Spark twin lives in
+  tests/test_graph_funnel.py, which owns the bit-equivalence.
 
 - **PageRank** (``graph_pagerank``): two unrolled power iterations over
   a co-activity graph derived from `events` (edge u→v when v's event
@@ -42,28 +35,6 @@ from bigdata_project_spark.sources.readers import load_table
 _DEC_GRAM = "decimal(27,12)"
 _DEC_PR = "decimal(38,18)"
 DAMPING = 0.85
-
-
-def query_emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    long = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos0", "val")
-    ).select(
-        "vec_id",
-        (F.col("pos0") + 1).alias("pos"),
-        round_portable(F.col("val").cast("double"), 6).alias("v6"),
-    )
-    a, b = long.alias("a"), long.alias("b")
-    pairs = a.join(b, "vec_id").filter(F.col("a.pos") <= F.col("b.pos"))
-    return (
-        pairs.select(
-            F.col("a.pos").alias("i"),
-            F.col("b.pos").alias("j"),
-            (F.col("a.v6") * F.col("b.v6")).cast(_DEC_GRAM).alias("prod"),
-        )
-        .groupBy("i", "j")
-        .agg(round_portable(F.sum("prod").cast("double"), 6).alias("gram"))
-    )
 
 
 ORACLE_EMB_GRAM_MATRIX = f"""
@@ -92,7 +63,7 @@ def query_emb_gram_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational self-join — at 100 TB that is the difference between
     shuffling kilobytes per task and shuffling the corpus.
 
-    Exactness (bit-identical to ``emb_gram_matrix`` and its DuckDB
+    Exactness (bit-identical to the relational long form and its DuckDB
     oracle, no float tolerance needed): each value is scaled to the
     integer ``floor(v·1e6 + 0.5)`` — the ``round_portable(·, 6)`` twin —
     so a partial MᵀM in int64 is exactly ``1e12 · Σ v6ᵢ·v6ⱼ``, the same

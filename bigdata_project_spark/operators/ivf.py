@@ -34,25 +34,34 @@ def _round6(a: np.ndarray) -> np.ndarray:
     return np.floor(a * 1e6 + 0.5) / 1e6
 
 
+def _unit_rows(pdf: pd.DataFrame) -> np.ndarray:
+    """A batch's embeddings as unit-norm float64 rows."""
+    m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def _cell_of(centroids: np.ndarray, cell_ids: np.ndarray):
+    """unit rows -> nearest cell id by ROUNDED cosine, BLAS per batch;
+    ties go to the lowest cell id (argmax returns the first max, and
+    ``cell_ids`` is ascending)."""
+    C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    ids = np.asarray(cell_ids, dtype=np.int64)
+    return lambda m: ids[_round6(m @ C.T).argmax(axis=1)]
+
+
 def _assign_cells(
     emb: DataFrame, centroids: np.ndarray, cell_ids: np.ndarray
 ) -> DataFrame:
-    """Distributed assignment: nearest centroid by ROUNDED cosine, BLAS per
-    batch; ties go to the lowest cell id (argmax returns the first max,
-    and ``cell_ids`` is ascending)."""
-    C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    ids = np.asarray(cell_ids, dtype=np.int64)
+    """Distributed assignment: (vec_id, embedding, cell) per vector."""
+    cell_of = _cell_of(centroids, cell_ids)
 
     def batches(it):
         for pdf in it:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            cos = _round6(m @ C.T)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
                     "embedding": pdf["embedding"],
-                    "cell": ids[cos.argmax(axis=1)],
+                    "cell": cell_of(_unit_rows(pdf)),
                 }
             )
 
@@ -95,29 +104,33 @@ def _probe_order(centroids: np.ndarray, cell_ids: np.ndarray, qn: np.ndarray) ->
 
 
 def _probe_and_rank(
-    assigned: DataFrame, centroids: np.ndarray, cell_ids: np.ndarray, qv: np.ndarray
+    emb: DataFrame, centroids: np.ndarray, cell_ids: np.ndarray, qv: np.ndarray
 ) -> DataFrame:
     """Probe the N_PROBE cells nearest the normalized query ``qv``
     (vec_id=0) and exact-rank inside them: top-TOP_K by (rounded cosine
-    desc, vec_id asc)."""
+    desc, vec_id asc). One Arrow pass assigns each vector's cell, keeps
+    the candidates (cell in the probe set, vec_id != 0) and scores them,
+    so only candidate rows leave Python; the heap follows."""
+    cell_of = _cell_of(centroids, cell_ids)
     probe = _probe_order(centroids, cell_ids, qv)[:N_PROBE]
-    cands = assigned.filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
 
     def score(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": pdf["cell"],
-                    "cos_sim": _round6(m @ qv),
-                }
-            )
+            m = _unit_rows(pdf)
+            cell = cell_of(m)
+            keep = np.isin(cell, probe) & (pdf["vec_id"].to_numpy() != 0)
+            if keep.any():
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"].to_numpy()[keep],
+                        "cell": cell[keep],
+                        "cos_sim": _round6(m[keep] @ qv),
+                    }
+                )
 
-    scored = cands.mapInPandas(score, schema="vec_id long, cell long, cos_sim double")
+    scored = emb.mapInPandas(score, schema="vec_id long, cell long, cos_sim double")
     return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc()).limit(TOP_K)
 
 
@@ -127,9 +140,8 @@ def query_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic seed quantizer so every step is oracle-checkable."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids, cell_ids = _seed_centroids(emb)
-    assigned = _assign_cells(emb, centroids, cell_ids)
     qn = centroids[0] / np.linalg.norm(centroids[0])  # row 0 is vec_id 0
-    return _probe_and_rank(assigned, centroids, cell_ids, qn)
+    return _probe_and_rank(emb, centroids, cell_ids, qn)
 
 
 RECALL_PROBES = (1, 2, 4, K_CELLS)
@@ -173,8 +185,7 @@ def query_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
+            m = _unit_rows(pdf)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],

@@ -1,5 +1,5 @@
 """PCA projection of the embedding column — the whitening/visualization
-step after `emb_gram_matrix`.
+step after `emb_gram_blas`.
 
 Split exactly like IVF's k-means (operators/ivf.py) and BPE's merge loop
 (operators/bpe.py): the *corpus-sized* work (the Gram matrix, the
@@ -11,7 +11,7 @@ plan as a broadcast literal table, so the projection itself is one
 posexplode + broadcast join + decimal-exact aggregate per vector.
 
 Engine parity: both engines build the weights from the SAME input — the
-portable-rounded Gram matrix that `emb_gram_matrix` already hash-matches
+portable-rounded Gram matrix that `emb_gram_blas` already hash-matches
 across Spark and DuckDB — via the same numpy call on the same machine,
 with eigenvector signs canonicalized (largest-|component| positive) and
 weights portable-rounded before use. The oracle embeds the weights as a

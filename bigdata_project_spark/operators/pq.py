@@ -9,22 +9,25 @@ lookups instead of D multiplies. The billion-vector memory story: codes
 are M bytes (here M=8) vs 4·D bytes of floats.
 
 Spark-first decomposition:
-- **encode** (corpus-sized): one Arrow ``mapInPandas`` pass, per-subspace
-  argmin against the broadcast M×K×(D/M) codebook — map-only, no shuffle;
-- **ADC scoring** (corpus-sized): the M×K query table is a tiny broadcast
-  join keyed (m, code); per-vector distance is a SUM over the M joined
-  lookups — one hash aggregate; top-k is TakeOrderedAndProject;
+- **ADC scoring** (corpus-sized): one Arrow ``mapInPandas`` pass per
+  batch encodes each vector (per-subspace argmin against the broadcast
+  M×K×(D/M) codebook) and sums its M lookups in the M×K query table, so
+  only (vec_id, micro_total) leaves Python — map-only, no join, no
+  aggregate, no shuffle; top-k is TakeOrderedAndProject;
 - **codebook** (k-sized): seeded from the sub-slices of the first K
   vectors (the deterministic k-means init, matching operators/ivf.py) so
-  the whole pipeline has an exact DuckDB twin.
+  the whole pipeline has an exact DuckDB twin. The oracle keeps the
+  long-form (vec_id, m, code) join plus SUM, so the engines prove the
+  row-local fold equal to the relational one.
 
-Cross-engine float parity: sub-distances are L2² left-folds in index
-order (bit-identical doubles), immediately converted to integer
-micro-units (floor(x·1e6 + 0.5) as BIGINT). Argmin compares micro ints
-(ties → lowest code); the ADC total is a SUM of BIGINTs — order-free, so
-Spark's partition-parallel aggregation cannot diverge from DuckDB's
-sequential one. The only double op after that is one division by 1e6,
-identical on both engines.
+Cross-engine float parity: sub-distances are L2² left-folds over the
+SUB axis in index order — the fold of DuckDB's ``list_reduce``, not
+numpy's pairwise ``sum`` — so the doubles are bit-identical, and are
+immediately converted to integer micro-units (floor(x·1e6 + 0.5) as
+BIGINT). Argmin compares micro ints (ties → lowest code); the ADC total
+is a sum of BIGINTs — exact and order-free, so the per-vector numpy sum
+cannot diverge from DuckDB's SUM. The only double op after that is one
+division by 1e6, identical on both engines.
 """
 
 from __future__ import annotations
@@ -39,7 +42,6 @@ from bigdata_project_spark.operators.ivf import (
     N_PROBE,
     _assign_cells,
     _probe_order,
-    _seed_centroids,
     _seed_vectors,
 )
 from bigdata_project_spark.sources.readers import load_table
@@ -50,29 +52,38 @@ PQ_K = 8  # codewords per subspace
 TOP_K = 10
 
 
-def _micro_l2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """L2² between trailing-dim-8 arrays in integer micro-units. The
-    trailing-axis sum is sequential for <128 elements (numpy's pairwise
-    blocking), matching the SQL left fold exactly."""
+def _l2_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """L2² over the trailing SUB axis as a left fold in index order —
+    ``((s0 + s1) + s2) + …``, the fold of the oracle's ``list_reduce``.
+    ``np.sum`` would pair the terms instead and can differ in the last
+    bit."""
     d = a - b
-    return np.floor((d * d).sum(axis=-1) * 1e6 + 0.5).astype(np.int64)
+    sq = d * d
+    acc = sq[..., 0]
+    for i in range(1, sq.shape[-1]):
+        acc = acc + sq[..., i]
+    return acc
 
 
-def _codebook_and_query(
-    emb: DataFrame,
-) -> tuple[np.ndarray, np.ndarray]:
-    """(K, M, SUB) codebook from the first PQ_K vectors' sub-slices and the
-    (M, SUB) query sub-slices — one k-row driver pull
-    (ivf._seed_vectors), whose row 0 is the query vector vec_id=0."""
-    seeds = _seed_vectors(emb, PQ_K)
-    return seeds.reshape(PQ_K, PQ_M, PQ_SUB), seeds[0].reshape(PQ_M, PQ_SUB)
+def _micro_l2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """L2² between trailing-dim-SUB arrays in integer micro-units."""
+    return np.floor(_l2_fold(a, b) * 1e6 + 0.5).astype(np.int64)
 
 
-def encode_pq(emb: DataFrame, codebook: np.ndarray) -> DataFrame:
-    """(vec_id, m, code) long-form PQ codes: per-subspace micro-int argmin
-    against the broadcast codebook; ties go to the lowest code (argmin
-    returns the first minimum and codes are ascending)."""
-    cb = codebook  # (K, M, SUB)
+def _codebook_and_query(seeds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(K, M, SUB) codebook from the first PQ_K seed vectors' sub-slices
+    and the (M, SUB) query sub-slices of seed row 0 (vec_id=0)."""
+    return seeds[:PQ_K].reshape(PQ_K, PQ_M, PQ_SUB), seeds[0].reshape(PQ_M, PQ_SUB)
+
+
+def adc_scores(emb: DataFrame, codebook: np.ndarray, qv: np.ndarray) -> DataFrame:
+    """(vec_id, micro_total) in one Arrow pass: per batch, the
+    per-subspace micro-int argmin against the broadcast codebook (ties go
+    to the lowest code: argmin returns the first minimum and codes are
+    ascending), then the sum of the M lookups in the (K, M) query table.
+    An int64 sum is exact, so it equals the oracle's SUM bit for bit."""
+    table = _micro_l2(qv[None, :, :], codebook)  # (K, M) query-to-codeword micros
+    subspaces = np.arange(PQ_M)
 
     def batches(it):
         for pdf in it:
@@ -81,86 +92,58 @@ def encode_pq(emb: DataFrame, codebook: np.ndarray) -> DataFrame:
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             x = x.reshape(len(pdf), PQ_M, PQ_SUB)
             # (n, K, M) micro distances: vector sub-slice vs codeword sub-slice
-            d = _micro_l2(x[:, None, :, :], cb[None, :, :, :])
-            codes = d.argmin(axis=1)  # (n, M)
-            n = len(pdf)
+            codes = _micro_l2(x[:, None, :, :], codebook[None, :, :, :]).argmin(axis=1)
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), PQ_M),
-                    "m": np.tile(np.arange(PQ_M, dtype=np.int64), n),
-                    "code": codes.reshape(-1),
+                    "vec_id": pdf["vec_id"],
+                    "micro_total": table[codes, subspaces].sum(axis=1, dtype=np.int64),
                 }
             )
 
-    return emb.mapInPandas(batches, schema="vec_id long, m long, code long")
+    return emb.mapInPandas(batches, schema="vec_id long, micro_total long")
 
 
-def adc_table(spark: SparkSession, codebook: np.ndarray, qv: np.ndarray) -> DataFrame:
-    """(m, code, micro) query-to-codeword table — M×K rows, broadcastable
-    at any corpus size (it does not depend on the corpus at all)."""
-    rows = [
-        (int(m), int(k), int(_micro_l2(qv[m], codebook[k, m])))
-        for m in range(PQ_M)
-        for k in range(PQ_K)
-    ]
-    return spark.createDataFrame(rows, "m long, code long, micro long")
-
-
-def query_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 neighbours of vec_id=0 by PQ/ADC approximate L2 distance:
-    encode once, then one broadcast join + one hash aggregate + a heap.
-    adc_dist is the single exact double division of the BIGINT total."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codebook, qv = _codebook_and_query(emb)
-    codes = encode_pq(emb.filter(F.col("vec_id") != 0), codebook)
-    table = adc_table(spark, codebook, qv)
+def _adc_topk(scores: DataFrame) -> DataFrame:
+    """Top-TOP_K by (adc_dist asc, vec_id asc) — a heap; adc_dist is the
+    single exact double division of the BIGINT total."""
     return (
-        codes.join(F.broadcast(table), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("micro").alias("micro_total"))
-        .select(
+        scores.select(
             "vec_id",
             (F.col("micro_total").cast("double") / F.lit(1e6)).alias("adc_dist"),
         )
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
         .limit(TOP_K)
     )
+
+
+def query_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-10 neighbours of vec_id=0 by PQ/ADC approximate L2 distance:
+    one encode-and-score Arrow pass, then a heap."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    codebook, qv = _codebook_and_query(_seed_vectors(emb, PQ_K))
+    return _adc_topk(adc_scores(emb.filter(F.col("vec_id") != 0), codebook, qv))
 
 
 def query_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ composed — the FAISS IVFPQ architecture at Spark scale:
     coarse seeded-cell assignment prunes the corpus to ~nprobe/k, then
     PQ/ADC scores only the surviving candidates in the compressed
-    domain. Every stage is the proven plan of its standalone query
-    (ivf: broadcast-centroid mapInPandas assign; pq: map-only encode +
-    broadcast ADC join + one hash aggregate + heap), so the composition
-    adds no new shuffle — the candidate filter simply shrinks every
-    downstream stage."""
+    domain. Both stages are map-only Arrow passes (ivf's broadcast-
+    centroid assign, then adc_scores), so the only exchange is the
+    heap's single-partition merge. One seed pull serves both quantizers
+    (row 0 is vec_id 0, the query)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    centroids, cell_ids = _seed_centroids(emb)
+    seeds = _seed_vectors(emb, max(K_CELLS, PQ_K))
+    centroids, cell_ids = seeds[:K_CELLS], np.arange(K_CELLS, dtype=np.int64)
     assigned = _assign_cells(emb, centroids, cell_ids)
 
-    qn = centroids[0] / np.linalg.norm(centroids[0])  # row 0 is vec_id 0
+    qn = centroids[0] / np.linalg.norm(centroids[0])
     probe = _probe_order(centroids, cell_ids, qn)[:N_PROBE]
 
     cands = assigned.filter(
         F.col("cell").isin(probe) & (F.col("vec_id") != 0)
     ).select("vec_id", "embedding")
-
-    codebook, qv = _codebook_and_query(emb)
-    codes = encode_pq(cands, codebook)
-    table = adc_table(spark, codebook, qv)
-    return (
-        codes.join(F.broadcast(table), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("micro").alias("micro_total"))
-        .select(
-            "vec_id",
-            (F.col("micro_total").cast("double") / F.lit(1e6)).alias("adc_dist"),
-        )
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-    )
+    return _adc_topk(adc_scores(cands, *_codebook_and_query(seeds)))
 
 
 def _l2_micro_sql(a: str, b: str) -> str:

@@ -617,36 +617,21 @@ JOIN totals tb ON tb.source = s.source_b
 """
 
 
-def query_text_source_overlap_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
+def source_overlap_bitmap(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """The thousands-of-sources escape hatch the pairwise audit's
-    docstring promises: identical output to
-    :func:`query_text_source_overlap`, but the per-gram work is a
+    docstring promises, over any (source, text) frame: identical output
+    to :func:`query_text_source_overlap`, but the per-gram work is a
     SOURCE BITMAP aggregation instead of a gram-keyed self-join.
 
-    Why this scales where the pairwise join stops: the self-join emits
-    one row per (gram, source-pair) — fan-out quadratic in per-gram
-    source count, and every row carries the 32-char gram key through
-    the shuffle. Here each gram folds to ceil(S/64) longs via bit_or
-    (one hash aggregate, combiner-friendly), then grams COLLAPSE BY
-    IDENTICAL BITMAP — the pair explode runs once per distinct
-    source-combination that actually occurs, not once per gram. On a
-    real corpus the distinct-bitmap count is tiny relative to the gram
-    vocabulary (every gram unique to one source folds into S singleton
-    bitmaps), so the quadratic step touches a frame that no longer
-    scales with corpus size at all.
-
-    The source dimension (names -> bit index, lexicographic so idx
-    order == the pairwise query's string order) is collected once at
-    plan time — a k-bounded driver collect of a true dimension table,
-    same policy class as ivf._seed_centroids.
-    """
-    return source_overlap_bitmap(spark, load_table(spark, sf_dir, "documents"))
-
-
-def source_overlap_bitmap(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """The bitmap kernel over any (source, text) frame — split out so the
-    >64-source multi-word path is testable on a synthetic corpus (the
-    fixture has 20 sources, exercising only word 0)."""
+    The self-join emits one row per (gram, source-pair) — fan-out
+    quadratic in per-gram source count. Here each gram folds to
+    ceil(S/64) longs via bit_or (one hash aggregate), then grams
+    COLLAPSE BY IDENTICAL BITMAP, so the pair explode runs once per
+    distinct source-combination, not once per gram. The source
+    dimension (names -> bit index, lexicographic so idx order == the
+    pairwise query's string order) is collected once at plan time.
+    Unregistered; tests/test_text_signals.py checks it against the
+    pairwise query on the fixture and on a >64-source planted corpus."""
     sources = sorted(
         r["source"] for r in docs.select("source").distinct().collect()
     )

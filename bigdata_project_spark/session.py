@@ -58,20 +58,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def enable_runtime_bloom_filters(spark: SparkSession) -> None:
-    """Semi-join pushdown for big shuffle joins: when one join side
-    carries a selective filter, Spark builds a bloom filter over its join
-    keys and pushes it into the other side's scan — rows that can't match
-    never reach the shuffle. This is the single biggest lever for
-    "big fact ⋈ filtered table" joins too large to broadcast at 100 TB.
-
-    On by default upstream, but gated behind size thresholds tuned for
-    clusters; the scan-size gate is dropped here so the rewrite also
-    fires at test scale (the creation-side cap still bounds filter build
-    cost). Verified by plan shape in tests/test_plans.py."""
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-    )

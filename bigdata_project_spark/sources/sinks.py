@@ -57,21 +57,6 @@ def drop_table(spark: SparkSession, table: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def drop_schema_cascade(spark: SparkSession, schema: str) -> None:
-    """S10 schema-level reset: ``DROP SCHEMA ... CASCADE``
-    (reference raw.ipynb cell 5 rebuilds the lake this way).
-
-    Spark can't drop its default database, so that case degrades to
-    dropping every table it contains — same observable end state."""
-    if not spark.catalog.databaseExists(schema):
-        return
-    if schema.lower() == "default":
-        for t in spark.catalog.listTables(schema):
-            spark.sql(f"DROP TABLE IF EXISTS {schema}.{t.name}")
-        return
-    spark.sql(f"DROP SCHEMA IF EXISTS {schema} CASCADE")
-
-
 def drop_table_and_orphan_location(spark: SparkSession, table: str) -> None:
     """DROP plus removal of a leftover managed location: a run that
     crashed between DROP and write leaves the warehouse directory behind

@@ -13,9 +13,35 @@ from bigdata_project_spark.operators.graph import (
     DAMPING,
     coactivity_edges,
     pagerank,
-    query_emb_gram_matrix,
 )
+from bigdata_project_spark.functions.scalars import round_portable
 from bigdata_project_spark.sources.readers import load_table
+
+
+def _gram_long_form(spark, sf_dir):
+    """The relational Gram matrix — the Spark twin of
+    ``ORACLE_EMB_GRAM_MATRIX``: posexplode to long form, one self
+    equi-join on vec_id, one hash aggregate on (i, j), with 6-dp inputs
+    and DECIMAL(27,12) products summed exactly."""
+    long = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.posexplode("embedding").alias("pos0", "val")
+    ).select(
+        "vec_id",
+        (F.col("pos0") + 1).alias("pos"),
+        round_portable(F.col("val").cast("double"), 6).alias("v6"),
+    )
+    a, b = long.alias("a"), long.alias("b")
+    return (
+        a.join(b, "vec_id")
+        .filter(F.col("a.pos") <= F.col("b.pos"))
+        .select(
+            F.col("a.pos").alias("i"),
+            F.col("b.pos").alias("j"),
+            (F.col("a.v6") * F.col("b.v6")).cast("decimal(27,12)").alias("prod"),
+        )
+        .groupBy("i", "j")
+        .agg(round_portable(F.sum("prod").cast("double"), 6).alias("gram"))
+    )
 
 
 def test_funnel_counts_monotone(spark, sf_dir):
@@ -48,7 +74,7 @@ def test_gram_matches_numpy(spark, sf_dir):
     X = np.array([r["embedding"] for r in emb.collect()], dtype=np.float64)
     X6 = np.floor(X * 1e6 + 0.5) / 1e6  # round_portable
     G = X6.T @ X6
-    got = {(r["i"], r["j"]): r["gram"] for r in query_emb_gram_matrix(spark, sf_dir).collect()}
+    got = {(r["i"], r["j"]): r["gram"] for r in _gram_long_form(spark, sf_dir).collect()}
     d = X.shape[1]
     assert len(got) == d * (d + 1) // 2
     for (i, j), v in got.items():
@@ -82,12 +108,9 @@ def test_pagerank_matches_numpy(spark, sf_dir):
 def test_gram_blas_exactly_matches_relational(spark, sf_dir):
     """The mapInPandas XᵀX path must be bit-identical to the relational
     decimal form — integer-scaled partials, no float tolerance."""
-    from bigdata_project_spark.operators.graph import (
-        query_emb_gram_blas,
-        query_emb_gram_matrix,
-    )
+    from bigdata_project_spark.operators.graph import query_emb_gram_blas
 
-    a = {(r["i"], r["j"]): r["gram"] for r in query_emb_gram_matrix(spark, sf_dir).collect()}
+    a = {(r["i"], r["j"]): r["gram"] for r in _gram_long_form(spark, sf_dir).collect()}
     b = {(r["i"], r["j"]): r["gram"] for r in query_emb_gram_blas(spark, sf_dir).collect()}
     assert a == b
 

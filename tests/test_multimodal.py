@@ -8,7 +8,6 @@ from bigdata_project_spark.multimodal.binary_ops import (
     decode_image_stub,
     extract_features_fake,
     frame_sample_fake,
-    resize_fake,
     with_binary_payload,
 )
 from bigdata_project_spark.sources.readers import load_table
@@ -37,14 +36,6 @@ def test_feature_extraction_mapinpandas(spark, sf_dir):
     assert len(pdf) == docs_n
     assert (pdf["mean_byte"] > 0).all()
     assert ((pdf["width"] >= 0) & (pdf["width"] < 640)).all()
-
-
-def test_resize_bounded_thumbnails(spark, sf_dir):
-    thumbs = resize_fake(_payloads(spark, sf_dir), target_bytes=32)
-    pdf = thumbs.toPandas()
-    assert dict(thumbs.dtypes)["thumb"] == "binary"
-    assert (pdf["thumb_bytes"] <= 32).all()
-    assert (pdf["thumb_bytes"] == pdf["thumb"].map(len)).all()
 
 
 def test_frame_sampler_explodes(spark, sf_dir):

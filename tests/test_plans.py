@@ -141,14 +141,18 @@ def test_predicate_pushdown_reaches_scan(spark, sf_dir):
 
 def test_runtime_bloom_filter_injects(spark, sf_dir):
     """With runtime bloom filters enabled, a selective-dimension shuffle
-    join pushes a bloom semi-join filter into the fact-side scan."""
-    from bigdata_project_spark.session import enable_runtime_bloom_filters
+    join pushes a bloom semi-join filter into the fact-side scan. The
+    scan-size gate (tuned for clusters) is dropped so the rewrite also
+    fires at test scale."""
     from bigdata_project_spark.sources.readers import load_table
 
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        enable_runtime_bloom_filters(spark)
+        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        spark.conf.set(
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
+        )
         li = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -165,12 +169,22 @@ def test_runtime_bloom_filter_injects(spark, sf_dir):
         )
 
 
-def test_pq_scoring_is_broadcast_join_plus_heap(spark, sf_dir):
-    """PQ/ADC: the M×K query table joins by broadcast (never shuffles the
-    codes) and the final top-k is a heap, not a global sort."""
-    plan = _plan(spark, sf_dir, "sim_pq_adc_topk")
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan
+def test_pq_scoring_is_one_arrow_pass_plus_heap(spark, sf_dir, count_jobs):
+    """PQ/ADC encodes and scores inside one map-only Arrow pass: no
+    exchange of either kind (ShuffleExchangeExec prints as "Exchange"),
+    no aggregate, and the final top-k is a heap, not a global sort. The
+    seeded IVF search is one MapInPandas (assign, probe filter and score
+    together), and the PQ noop write starts a single job."""
+    for name in ("sim_pq_adc_topk", "sim_ivfpq_topk"):
+        plan = _plan(spark, sf_dir, name)
+        assert "Exchange" not in plan, (name, plan[:2000])
+        assert "HashAggregate" not in plan, (name, plan[:2000])
+        assert "TakeOrderedAndProject" in plan, name
+    assert _plan(spark, sf_dir, "sim_ivf_kmeans_topk").count("MapInPandas") == 1
+
+    df = registry.queries()["sim_pq_adc_topk"](spark, sf_dir)
+    jobs, _ = count_jobs(lambda: df.write.format("noop").mode("overwrite").save())
+    assert jobs == 1
 
 
 def test_exact_quantile_windows_stay_bounded(spark, sf_dir):

@@ -118,17 +118,26 @@ def test_knn_join_agrees_with_brute_anchor(spark, sf_dir):
 
 def test_seed_pulls_start_one_job_each(spark, sf_dir, count_jobs):
     """The PQ codebook + query and the IVF seed centroids each come from
-    one k-row driver pull: no Spark sort, no second vec_id=0 pull."""
+    one k-row driver pull: no Spark sort, no second vec_id=0 pull. The
+    IVFPQ builder slices one pull for both quantizers."""
     import numpy as np
 
-    from bigdata_project_spark.operators.ivf import K_CELLS, _seed_centroids
-    from bigdata_project_spark.operators.pq import PQ_K, _codebook_and_query
+    from bigdata_project_spark.operators.ivf import K_CELLS, _seed_centroids, _seed_vectors
+    from bigdata_project_spark.operators.pq import (
+        PQ_K,
+        _codebook_and_query,
+        query_ivfpq_topk,
+        query_pq_adc_topk,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    jobs, (codebook, qv) = count_jobs(_codebook_and_query, emb)
+    jobs, seeds = count_jobs(_seed_vectors, emb, PQ_K)
     assert jobs == 1
+    codebook, qv = _codebook_and_query(seeds)
     jobs, (centroids, cell_ids) = count_jobs(_seed_centroids, emb)
     assert jobs == 1
+    for builder in (query_pq_adc_topk, query_ivfpq_topk):
+        assert count_jobs(builder, spark, sf_dir)[0] == 1, builder.__name__
 
     want = {
         r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
@@ -150,7 +159,7 @@ def test_seed_pull_rejects_missing_vec_id(spark, tmp_path):
     import pytest
 
     from bigdata_project_spark.operators.ivf import K_CELLS, _seed_centroids
-    from bigdata_project_spark.operators.pq import PQ_K, _codebook_and_query
+    from bigdata_project_spark.operators.pq import PQ_K, query_pq_adc_topk
 
     ids = list(range(1, 20))
     pq.write_table(
@@ -166,4 +175,81 @@ def test_seed_pull_rejects_missing_vec_id(spark, tmp_path):
     with pytest.raises(ValueError, match=f"expected {K_CELLS} vectors"):
         _seed_centroids(emb)
     with pytest.raises(ValueError, match=f"expected {PQ_K} vectors"):
-        _codebook_and_query(emb)
+        query_pq_adc_topk(spark, str(tmp_path))
+
+
+def test_l2_fold_is_the_sql_left_fold():
+    """PQ sub-distances must be the oracle's ``list_reduce`` left fold bit
+    for bit; numpy's pairwise ``sum`` differs in the last bit on some of
+    the same inputs, so the check can tell the two apart."""
+    import functools
+
+    import numpy as np
+
+    from bigdata_project_spark.operators.pq import PQ_SUB, _l2_fold
+
+    rng = np.random.default_rng(11)
+    a = rng.standard_normal((2000, PQ_SUB)).astype(np.float32).astype(np.float64)
+    b = rng.standard_normal((2000, PQ_SUB)).astype(np.float32).astype(np.float64)
+    want = np.array(
+        [
+            functools.reduce(
+                lambda x, y: x + y, [(p - q) * (p - q) for p, q in zip(ra.tolist(), rb.tolist())]
+            )
+            for ra, rb in zip(a, b)
+        ]
+    )
+    got = _l2_fold(a, b)
+    assert np.array_equal(got.view(np.int64), want.view(np.int64))
+    d = a - b
+    assert (np.sum(d * d, axis=-1) != want).any()
+
+
+def test_adc_scores_match_long_form_reference(spark):
+    """adc_scores' one-pass fold equals the long form the oracle runs:
+    per (vector, subspace) the lowest-micro code (lowest code on ties),
+    then the per-vector sum of table lookups. Vector 1 carries a planted
+    subspace-0 tie between codes 2 and 5 whose table entries differ, so
+    picking the higher code would change its total."""
+    import functools
+    import math
+
+    import numpy as np
+
+    from bigdata_project_spark.operators.pq import PQ_K, PQ_M, PQ_SUB, adc_scores
+
+    rng = np.random.default_rng(3)
+    # eighths in [-1, 1] are exact in float32, so the frame loses nothing
+    emb = rng.integers(-8, 9, size=(6, PQ_M * PQ_SUB)) / 8.0
+    codebook = rng.integers(-8, 9, size=(PQ_K, PQ_M, PQ_SUB)) / 8.0
+    qv = rng.integers(-8, 9, size=(PQ_M, PQ_SUB)) / 8.0
+    emb[1, :PQ_SUB] = 0.0
+    codebook[2, 0] = 0.125
+    codebook[5, 0] = -0.125
+    qv[0] = 0.125
+
+    def micro(u, v):
+        fold = functools.reduce(lambda x, y: x + y, [(p - q) * (p - q) for p, q in zip(u, v)])
+        return math.floor(fold * 1e6 + 0.5)
+
+    want = {}
+    for vid, row in enumerate(emb.tolist()):
+        total = 0
+        for m in range(PQ_M):
+            sub = row[m * PQ_SUB : (m + 1) * PQ_SUB]
+            dist = [micro(sub, codebook[k, m].tolist()) for k in range(PQ_K)]
+            code = min(range(PQ_K), key=lambda k: (dist[k], k))
+            if (vid, m) == (1, 0):
+                assert dist[2] == dist[5] == min(dist) and code == 2
+            total += micro(qv[m].tolist(), codebook[code, m].tolist())
+        want[vid] = total
+    assert micro(qv[0].tolist(), codebook[2, 0].tolist()) != micro(
+        qv[0].tolist(), codebook[5, 0].tolist()
+    )
+
+    df = spark.createDataFrame(
+        [(vid, row) for vid, row in enumerate(emb.tolist())],
+        "vec_id long, embedding array<float>",
+    )
+    got = {r["vec_id"]: r["micro_total"] for r in adc_scores(df, codebook, qv).collect()}
+    assert got == want

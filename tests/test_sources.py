@@ -459,22 +459,6 @@ def test_parquet_ts_unit_footer_detection(sf_dir):
     assert _parquet_ts_unit(_footer("/nonexistent/x.parquet"), "ts") is None
 
 
-def test_drop_schema_cascade(spark):
-    from bigdata_project_spark.sources.sinks import drop_schema_cascade
-
-    spark.sql("CREATE SCHEMA IF NOT EXISTS tmp_reset")
-    spark.createDataFrame([(1,)], "a long").write.mode("overwrite").format(
-        "parquet"
-    ).saveAsTable("tmp_reset.t1")
-    spark.createDataFrame([(2,)], "a long").write.mode("overwrite").format(
-        "parquet"
-    ).saveAsTable("tmp_reset.t2")
-    drop_schema_cascade(spark, "tmp_reset")
-    assert not spark.catalog.databaseExists("tmp_reset")
-    # idempotent on a missing schema
-    drop_schema_cascade(spark, "tmp_reset")
-
-
 def test_load_events_pre_1973_nanos(spark, tmp_path):
     """A typed TIMESTAMP(NANOS) column whose every value predates 1973
     (ns epoch ~1e16 < the 1e17 magnitude cutoff) must still be read as

@@ -224,6 +224,19 @@ def test_incremental_store_compaction(spark, sf_dir):
             drop_table_and_orphan_location(spark, tbl)
 
 
+def _hex32_horner(hex8):
+    """The Horner fold the conv fast path replaced: the Spark-side
+    mirror of the oracle's ``HEX32_TO_INT_SQL``."""
+    from pyspark.sql import functions as F
+
+    digits = "0123456789abcdef"
+    acc = None
+    for i in range(8):
+        v = (F.instr(F.lit(digits), F.substring(hex8, i + 1, 1)) - 1).cast("bigint")
+        acc = v if acc is None else acc * 16 + v
+    return acc
+
+
 def test_hex32_conv_matches_horner(spark, sf_dir):
     """The r12 conv fast path of hex32_to_int must be value-identical
     to the Horner fold it replaced (which stays live as the DuckDB
@@ -234,11 +247,7 @@ def test_hex32_conv_matches_horner(spark, sf_dir):
     change), and the null edge."""
     from pyspark.sql import functions as F
 
-    from bigdata_project_spark.functions.text import (
-        hex32_to_int,
-        hex32_to_int_horner,
-        tokens,
-    )
+    from bigdata_project_spark.functions.text import hex32_to_int, tokens
     from bigdata_project_spark.sources.readers import load_table
 
     words = (
@@ -252,7 +261,7 @@ def test_hex32_conv_matches_horner(spark, sf_dir):
     cmp = slices
     for i in range(4):
         cmp = cmp.withColumn(f"c{i}", hex32_to_int(F.col(f"s{i}"))).withColumn(
-            f"h{i}", hex32_to_int_horner(F.col(f"s{i}"))
+            f"h{i}", _hex32_horner(F.col(f"s{i}"))
         )
     bad = cmp.filter(
         " OR ".join(f"(c{i} IS DISTINCT FROM h{i})" for i in range(4))
@@ -261,7 +270,7 @@ def test_hex32_conv_matches_horner(spark, sf_dir):
     # the first-8 contract on a LONGER-than-8 input (full 32-char md5)
     bad_full = (
         words.withColumn("c", hex32_to_int(F.col("md5")))
-        .withColumn("h", hex32_to_int_horner(F.col("md5")))
+        .withColumn("h", _hex32_horner(F.col("md5")))
         .filter("c IS DISTINCT FROM h")
         .count()
     )
@@ -271,7 +280,7 @@ def test_hex32_conv_matches_horner(spark, sf_dir):
         spark.range(1)
         .select(
             hex32_to_int(F.lit(None).cast("string")).alias("c"),
-            hex32_to_int_horner(F.lit(None).cast("string")).alias("h"),
+            _hex32_horner(F.lit(None).cast("string")).alias("h"),
         )
         .collect()[0]
     )
@@ -285,7 +294,7 @@ def test_hex32_conv_matches_horner(spark, sf_dir):
         spark.range(1)
         .select(
             hex32_to_int(F.lit("ff")).alias("c"),
-            hex32_to_int_horner(F.lit("ff")).alias("h"),
+            _hex32_horner(F.lit("ff")).alias("h"),
         )
         .collect()[0]
     )

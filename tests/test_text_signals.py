@@ -64,8 +64,9 @@ def test_source_overlap_bitmap_equals_pairwise(spark, sf_dir):
     join on the real fixture (20 sources, single-word bitmaps)."""
     from bigdata_project_spark.operators.text_signals import (
         query_text_source_overlap,
-        query_text_source_overlap_bitmap,
+        source_overlap_bitmap,
     )
+    from bigdata_project_spark.sources.readers import load_table
 
     cols = ["source_a", "source_b"]
     a = (
@@ -75,7 +76,7 @@ def test_source_overlap_bitmap_equals_pairwise(spark, sf_dir):
         .reset_index(drop=True)
     )
     b = (
-        query_text_source_overlap_bitmap(spark, sf_dir)
+        source_overlap_bitmap(spark, load_table(spark, sf_dir, "documents"))
         .toPandas()
         .sort_values(cols)
         .reset_index(drop=True)
