@@ -54,8 +54,6 @@ Scale notes (the whole point of these designs):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,6 +67,7 @@ from bigdata_project_spark.functions.text import (
     tokens,
     word_hash32,
 )
+from bigdata_project_spark.session import env_int
 from bigdata_project_spark.sources.readers import load_table
 
 # ---------------------------------------------------------------- exact --
@@ -232,14 +231,8 @@ _LSH_SALT_DEFAULT = 1024
 
 
 def _salt_threshold(df: DataFrame) -> int:
-    env = os.environ.get(_LSH_SALT_ENV)
-    if env is not None:
-        try:
-            t = int(env)
-        except ValueError:
-            raise ValueError(f"{_LSH_SALT_ENV}={env!r} is not an integer") from None
-        if t < 0:
-            raise ValueError(f"{_LSH_SALT_ENV}={env!r} must be >= 0")
+    t = env_int(_LSH_SALT_ENV, 0)
+    if t is not None:
         return t
     master = df.sparkSession.conf.get("spark.master", "") or ""
     local = master == "local" or master.startswith("local[")

@@ -23,6 +23,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def env_int(name: str, minimum: int) -> int | None:
+    """Environment variable ``name`` as an int ``>= minimum``, or None when
+    it is unset; any other value raises ``ValueError`` naming it."""
+    env = os.environ.get(name)
+    if env is None:
+        return None
+    try:
+        n = int(env)
+    except ValueError:
+        raise ValueError(f"{name}={env!r} is not an integer") from None
+    if n < minimum:
+        raise ValueError(f"{name}={env!r} must be >= {minimum}")
+    return n
+
+
 def get_spark(
     app_name: str = "bigdata_project_spark",
     master: str | None = None,
@@ -30,12 +45,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores)
+    and sets ``spark.sql.shuffle.partitions``, which batch queries and
+    drained streams share.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cpus = env_int("SPARK_GRAFT_CPUS", 1)
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
-    shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+    shuffle_partitions = cpus or os.cpu_count() or 8
 
     builder = (
         SparkSession.builder.appName(app_name)

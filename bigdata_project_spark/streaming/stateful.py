@@ -98,10 +98,7 @@ def query_stream_transitions(spark, sf_dir: str) -> DataFrame:
     ``ORACLE_EVENTS_TRANSITIONS`` with the LAG-window form. A streaming
     operator with a full value-hash oracle, not just a rows-only check:
     the stream must converge to the batch answer exactly."""
-    # 16, not the join queries' 8: the Python stateful worker benefits
-    # from extra partition parallelism (measured flat 8↔16, 4× worse at
-    # the session's 32 — state-store commits dominate there)
-    rec = drain(transitions_stateful(read_event_stream(spark, sf_dir)), "append", 16)
+    rec = drain(transitions_stateful(read_event_stream(spark, sf_dir)), "append")
     trans = rec.groupBy("src_event", "dst_event").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -206,7 +203,7 @@ def query_stream_hll_users(spark, sf_dir: str) -> DataFrame:
     value-hash oracle: the stream must converge to the batch answer
     bit-for-bit, transcendental included."""
     inc = drain(
-        hll_increments_stateful(read_event_stream(spark, sf_dir), HLL_M), "append", 16
+        hll_increments_stateful(read_event_stream(spark, sf_dir), HLL_M), "append"
     )
     regs = inc.groupBy("event_type", "register").agg(F.max("rho").alias("rho"))
     exact = (

@@ -17,8 +17,6 @@ exactly-once sinks.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -60,36 +58,35 @@ def ephemeral_checkpoint_dir(prefix: str = "stream_ckpt_") -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-@contextmanager
-def stream_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Scope a smaller ``spark.sql.shuffle.partitions`` around a drained
-    streaming query. Stateful streaming cost is dominated by state-store
-    instances — one per shuffle partition per stateful operator per
-    micro-batch (checkpoint + commit each) — so partitions must be sized
-    to stream volume, not to the batch session's core count: the fixture
-    stream is a few MB, where 32 partitions spend 5× longer committing
-    state than joining (measured 11.9 s → 2.2 s at 8). At 100 TB/day the
-    same knob goes UP (state sharding), set once at stream start —
-    partitions are pinned by the checkpoint from the first run either
-    way, which is why this is a deliberate per-stream setting and not
-    the session default."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def drain(stream_df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
+def drain(stream_df: DataFrame, mode: str) -> DataFrame:
     """Run ``stream_df`` to completion into a memory sink and return its
     rows as a lineage-free batch frame.
 
-    Only start → processAllAvailable → stop run at ``partitions`` shuffle
-    partitions (see :func:`stream_shuffle_partitions`); the caller's
-    batch work on the returned rows runs at the session's setting. The
-    ephemeral checkpoint is removed even when a micro-batch raises, and
-    the sink's temp view is dropped once its rows are materialized.
+    The stream runs at the session's ``spark.sql.shuffle.partitions``,
+    which ``session.get_spark`` sizes to the core count, like every batch
+    query. Stateful cost lands in state-store commits, one per shuffle
+    partition per stateful operator per micro-batch, so the count matters.
+    Measured on 4 cores at sf0.01 (medians of 3-5 interleaved runs, every
+    setting oracle-checked):
+
+    - 1/2/4 partitions are a plateau: ``stream_transitions`` 2.85/2.42/
+      2.12 s, ``stream_interval_join`` 2.40/2.57/3.10 s;
+    - 4 against the former per-stream 8 (16 for the two
+      ``applyInPandasWithState`` streams) is faster or flat for all
+      eight streams, e.g. ``stream_transitions`` 4.47 → 2.10 s and
+      ``stream_interval_join`` 6.06 → 4.16 s;
+    - 32 reads 2.0-3.7× slower than 4: ``stream_interval_join``
+      15.37 s, ``stream_transitions`` 6.87 s, ``stream_hll_users``
+      6.09 s.
+
+    On a large host the session's count grows with the cores; the old
+    note that 32 partitions cost 4-5× what 8 did on a 32-core host is
+    unverified here. An A/B passes ``--conf
+    spark.sql.shuffle.partitions=N`` to ``tools/ab.py``. Every drain gets
+    a fresh checkpoint, so no earlier run pins the count.
+
+    The ephemeral checkpoint is removed even when a micro-batch raises,
+    and the sink's temp view is dropped once its rows are materialized.
     Every drained query goes through here, so this is the one place to
     read per-batch ``recentProgress``."""
     import shutil
@@ -99,18 +96,17 @@ def drain(stream_df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
     name = f"drain_{uuid.uuid4().hex[:8]}"
     ckpt = ephemeral_checkpoint_dir()
     try:
-        with stream_shuffle_partitions(spark, partitions):
-            q = (
-                stream_df.writeStream.outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        q = (
+            stream_df.writeStream.outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     rows = spark.table(name).localCheckpoint(eager=True)
@@ -235,10 +231,9 @@ def query_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "event_type", "value")
         )
         drop_table_and_orphan_location(spark, table)
-        with stream_shuffle_partitions(spark):
-            q = upsert_sink(stream, table, ["event_id"], ckpt)
-            q.processAllAvailable()
-            q.stop()
+        q = upsert_sink(stream, table, ["event_id"], ckpt)
+        q.processAllAvailable()
+        q.stop()
         # materialize before dropping the backing table
         return spark.table(table).localCheckpoint(eager=True)
     finally:

@@ -11,11 +11,10 @@ from pyspark.sql import functions as F
 from bigdata_project_spark.streaming.windows import drain, read_event_stream
 
 
-def test_drain_restores_partitions_and_cleans_up(spark, sf_dir, monkeypatch):
-    """``drain`` scopes the shuffle-partition setting to the stream and
-    leaves nothing behind: the conf is restored and the ephemeral
-    checkpoint removed whether the stream succeeds or a micro-batch
-    raises, and a successful drain drops its memory-sink view."""
+def test_drain_cleans_up(spark, sf_dir, monkeypatch):
+    """``drain`` leaves nothing behind: the ephemeral checkpoint is
+    removed whether the stream succeeds or a micro-batch raises, and a
+    successful drain drops its memory-sink view."""
     from bigdata_project_spark.streaming import windows
 
     real_dir, made = windows.ephemeral_checkpoint_dir, []
@@ -25,25 +24,59 @@ def test_drain_restores_partitions_and_cleans_up(spark, sf_dir, monkeypatch):
         return made[-1]
 
     monkeypatch.setattr(windows, "ephemeral_checkpoint_dir", tracked_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
 
     def drain_views():
         return {t.name for t in spark.catalog.listTables() if t.name.startswith("drain_")}
 
     views_before = drain_views()
-    rows = drain(read_event_stream(spark, sf_dir).select("event_id"), "append", 16)
+    rows = drain(read_event_stream(spark, sf_dir).select("event_id"), "append")
     assert rows.count() == spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     assert drain_views() == views_before
 
     failing = read_event_stream(spark, sf_dir).select(
         F.raise_error(F.lit("boom")).cast("int").alias("x")
     )
     with pytest.raises(StreamingQueryException, match="boom"):
-        drain(failing, "append", 16)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        drain(failing, "append")
     assert len(made) == 2
     assert not any(os.path.exists(d) for d in made)
+
+
+def test_stateful_drain_runs_at_session_shuffle_partitions(spark, sf_dir, monkeypatch):
+    """A drained stateful stream keeps one state store per session
+    shuffle partition: no per-stream partition count overrides the
+    session's ``spark.sql.shuffle.partitions``."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from bigdata_project_spark.plans.event_windows import hourly_type_totals
+
+    real_start, started = DataStreamWriter.start, []
+
+    def tracked_start(self, *args, **kwargs):
+        started.append(real_start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", tracked_start)
+    ev = read_event_stream(spark, sf_dir).withWatermark("ts", "1 hour")
+    drain(hourly_type_totals(ev), "complete")
+    (query,) = started
+    ops = [op for p in query.recentProgress for op in p.stateOperators]
+    assert ops
+    want = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert {op.numShufflePartitions for op in ops} == {want}
+
+
+@pytest.mark.parametrize("value", ["abc", "0", "-2"])
+def test_bad_cpus_env_names_the_variable(value, monkeypatch):
+    """``SPARK_GRAFT_CPUS`` sets the session's cores and shuffle
+    partitions; a non-integer or non-positive value raises, naming the
+    variable, before any session is built."""
+    from bigdata_project_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    monkeypatch.setattr(session, "SparkSession", None)  # building would raise
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.get_spark("bad_cpus")
 
 
 def test_plain_int64_nanos_read_alike_by_batch_and_stream(spark, tmp_path):

@@ -1,13 +1,15 @@
 """Guard the scripts in tools/ against rot: every name they import from
 the package, or from perfbench's ``run``, ``layers`` and ``stats``
 modules, must still exist, and none may reach into the registry's private
-names (those change without notice)."""
+names (those change without notice). Every ``tools/<file>`` that code,
+tests or scripts cite must exist."""
 
 from __future__ import annotations
 
 import ast
 import importlib
 import pathlib
+import re
 
 import pytest
 
@@ -15,6 +17,9 @@ PKG = "bigdata_project_spark"
 REPO = pathlib.Path(__file__).parent.parent
 TOOLS = sorted((REPO / "tools").glob("*.py"))
 BENCH_MODULES = ("run", "layers", "stats")
+# A cited path; ``*`` is a glob, a ``{...}`` template is a writer's output
+# name, not a citation.
+TOOLS_PATH = re.compile(r"tools/[\w.*-]+(?![\w{])")
 
 
 def _bench_names(module: str) -> set[str]:
@@ -84,3 +89,15 @@ def test_tool_imports_resolve_and_skip_registry_privates(tool):
             private.append(node.attr)
     assert not missing, f"{tool.name} imports names the package or perfbench no longer has: {missing}"
     assert not private, f"{tool.name} touches private registry names: {private}"
+
+
+def test_cited_tools_files_exist():
+    sources = [*(REPO / PKG).rglob("*.py"), *(REPO / "tests").rglob("*.py"), *TOOLS]
+    cited = {
+        (src.relative_to(REPO), path.rstrip("."))
+        for src in sources
+        for path in TOOLS_PATH.findall(src.read_text())
+    }
+    assert cited
+    missing = sorted(f"{src}: {path}" for src, path in cited if not list(REPO.glob(path)))
+    assert not missing, f"cited tools/ files that do not exist: {missing}"

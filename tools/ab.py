@@ -14,8 +14,11 @@ added to the shared SWEEP_ARGs. Each child appends to
 
 After the last pair it prints one JSON line per query: each side's median
 of its per-run medians, the pairs each side won (lower time wins, a tie
-counts for neither) and A's inter-quartile range over its median
-(``stats.relative_spread``), which a difference must exceed to count.
+counts for neither), A's inter-quartile range over its median
+(``stats.relative_spread``), and ``resolved``. A difference is resolved
+only with at least 10 pairs, one side winning at least 9 in 10 of them,
+and ``|a_s - b_s| / a_s`` above ``a_iqr_frac``; a 3-0 split of three
+pairs is not.
 
 Two core counts over three queries:
 
@@ -40,6 +43,8 @@ sys.path.insert(0, os.path.join(REPO, "perfbench"))
 from stats import median, relative_spread  # noqa: E402
 
 ENV_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*=")
+MIN_PAIRS = 10
+MIN_WIN_FRAC = 0.9
 
 
 def parse_side(spec: str) -> tuple[str, dict[str, str], list[str]]:
@@ -59,6 +64,24 @@ def read_medians(path: str) -> dict[str, float]:
     with open(path) as f:
         lines = [json.loads(line) for line in f]
     return {r["query"]: r["median_s"] for r in lines if "median_s" in r}
+
+
+def verdict(a: list[float], b: list[float], pairs: list[tuple[float, float]]) -> dict:
+    """One query's summary over A's and B's run medians and the (a, b)
+    pairs that both sides finished."""
+    a_s = median(a) if a else None
+    b_s = median(b) if b else None
+    a_wins = sum(x < y for x, y in pairs)
+    b_wins = sum(y < x for x, y in pairs)
+    a_iqr_frac = relative_spread(a) if len(a) > 1 else None
+    resolved = (
+        len(pairs) >= MIN_PAIRS
+        and max(a_wins, b_wins) >= MIN_WIN_FRAC * len(pairs)
+        and a_iqr_frac is not None
+        and abs(a_s - b_s) / a_s > a_iqr_frac
+    )
+    return {"a_s": a_s, "b_s": b_s, "a_wins": a_wins, "b_wins": b_wins,
+            "a_iqr_frac": a_iqr_frac, "resolved": resolved}
 
 
 def main() -> None:
@@ -89,14 +112,7 @@ def main() -> None:
         a = [r[q] for r in runs["a"] if q in r]
         b = [r[q] for r in runs["b"] if q in r]
         pairs = [(ra[q], rb[q]) for ra, rb in zip(runs["a"], runs["b"]) if q in ra and q in rb]
-        print(json.dumps({
-            "query": q,
-            "a_s": median(a) if a else None,
-            "b_s": median(b) if b else None,
-            "a_wins": sum(x < y for x, y in pairs),
-            "b_wins": sum(y < x for x, y in pairs),
-            "a_iqr_frac": relative_spread(a) if len(a) > 1 else None,
-        }), flush=True)
+        print(json.dumps({"query": q, **verdict(a, b, pairs)}), flush=True)
 
 
 if __name__ == "__main__":
