@@ -14,6 +14,12 @@ equivalent is a single SparkSession with:
   default. On a real cluster this should be ~2-3× total cores or left to
   AQE's coalescing with a high initial value.
 - Arrow on — every toPandas()/pandas-UDF boundary is batch-columnar.
+- ``spark.python.daemon.module`` is ``worker_daemon``, pyspark's daemon
+  with one change: a task's ``importlib.invalidate_caches()`` no longer
+  re-reads the central directories of pyspark.zip, the py4j zip and the
+  spark-core jar, which cost 115-320 ms per Python task on 4 cores.
+  Workers already import this package for every registered UDF, so it is
+  a fixed value, not a setting.
 """
 
 from __future__ import annotations
@@ -63,6 +69,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "bigdata_project_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         # Stage progress bars write \r-lines to stdout; the bench driver

@@ -232,8 +232,10 @@ def query_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drop_table_and_orphan_location(spark, table)
         q = upsert_sink(stream, table, ["event_id"], ckpt)
-        q.processAllAvailable()
-        q.stop()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
         # materialize before dropping the backing table
         return spark.table(table).localCheckpoint(eager=True)
     finally:

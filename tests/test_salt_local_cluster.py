@@ -4,7 +4,9 @@
 in-session suite (``local[N]``) never runs that path by default. This
 test starts a separate driver on ``local-cluster[2,1,1024]`` (two
 executor JVMs), where the salt must engage on its own, and checks every
-salt-routed query against its DuckDB oracle.
+salt-routed query against its DuckDB oracle. The same driver also runs
+one Python-boundary query, so the executors' Python worker daemons must
+import ``bigdata_project_spark.worker_daemon``.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import sys
 
 from test_dedup import SALT_ROUTED
 
+PYTHON_BOUNDARY = "sim_pq_adc_topk"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _SCRIPT = """
@@ -45,6 +48,7 @@ for name in names:
     salted.clear()
     problems = compare_one(spark, con, name, queries[name], oracles[name], sf_dir)
     out[name] = {"salted": bool(salted) and all(salted), "problems": problems}
+out["daemon"] = spark.sparkContext.getConf().get("spark.python.daemon.module")
 print("RESULT " + json.dumps(out))
 spark.stop()
 """
@@ -59,7 +63,7 @@ def test_salt_engages_and_matches_oracles_on_local_cluster(sf_dir, tmp_path):
     # a small driver heap: the executors bring their own 1 GB each
     env.setdefault("SPARK_DRIVER_MEMORY", "1g")
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT, sf_dir, *SALT_ROUTED],
+        [sys.executable, "-c", _SCRIPT, sf_dir, *SALT_ROUTED, PYTHON_BOUNDARY],
         cwd=tmp_path,
         env=env,
         capture_output=True,
@@ -72,3 +76,5 @@ def test_salt_engages_and_matches_oracles_on_local_cluster(sf_dir, tmp_path):
     for name in SALT_ROUTED:
         assert out[name]["salted"], f"{name}: salt did not engage"
         assert not out[name]["problems"], f"{name}: {out[name]['problems']}"
+    assert out["daemon"] == "bigdata_project_spark.worker_daemon"
+    assert not out[PYTHON_BOUNDARY]["problems"], out[PYTHON_BOUNDARY]["problems"]

@@ -158,6 +158,24 @@ def test_query_stream_upsert_sink_matches_events(spark, sf_dir):
     )
 
 
+def test_query_stream_upsert_sink_stops_its_query_when_a_batch_raises(
+    spark, sf_dir, monkeypatch
+):
+    """A micro-batch whose merge raises must not leave the upsert query
+    running after its source and checkpoint directories are deleted."""
+    from bigdata_project_spark.operators import merge
+    from bigdata_project_spark.streaming.windows import query_stream_upsert_sink
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("merge boom")
+
+    monkeypatch.setattr(merge, "merge_keyed", failing_merge)
+    with pytest.raises(StreamingQueryException, match="merge boom"):
+        query_stream_upsert_sink(spark, sf_dir)
+    assert spark.streams.active == []
+    assert not spark.catalog.tableExists("stream_upsert_sink_tbl")
+
+
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     from bigdata_project_spark.sources.readers import load_table
     from bigdata_project_spark.streaming.windows import join_clicks_purchases

@@ -12,9 +12,11 @@ follow set the child's environment, and the rest are sweep arguments
 added to the shared SWEEP_ARGs. Each child appends to
 ``DIR/<pair>-<side>.jsonl``; DIR must not exist yet.
 
-After the last pair it prints one JSON line per query: each side's median
-of its per-run medians, the pairs each side won (lower time wins, a tie
-counts for neither), A's inter-quartile range over its median
+After every finished pair it rewrites ``DIR/verdict.jsonl`` atomically,
+so a stopped A/B keeps the summary of the pairs it finished, and after the
+last pair it prints the same lines: one JSON line per query with each
+side's median of its per-run medians, the pairs each side won (lower time
+wins, a tie counts for neither), A's inter-quartile range over its median
 (``stats.relative_spread``), and ``resolved``. A difference is resolved
 only with at least 10 pairs, one side winning at least 9 in 10 of them,
 and ``|a_s - b_s| / a_s`` above ``a_iqr_frac``; a 3-0 split of three
@@ -84,6 +86,17 @@ def verdict(a: list[float], b: list[float], pairs: list[tuple[float, float]]) ->
             "a_iqr_frac": a_iqr_frac, "resolved": resolved}
 
 
+def verdict_lines(runs: dict[str, list[dict[str, float]]]) -> list[str]:
+    """One JSON verdict line per query over each side's finished runs."""
+    lines = []
+    for q in dict.fromkeys(q for r in runs["a"] + runs["b"] for q in r):
+        a = [r[q] for r in runs["a"] if q in r]
+        b = [r[q] for r in runs["b"] if q in r]
+        pairs = [(ra[q], rb[q]) for ra, rb in zip(runs["a"], runs["b"]) if q in ra and q in rb]
+        lines.append(json.dumps({"query": q, **verdict(a, b, pairs)}))
+    return lines
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0], allow_abbrev=False)
     ap.add_argument("--a", required=True, metavar="SIDE")
@@ -107,12 +120,15 @@ def main() -> None:
                 env={**os.environ, **env}, cwd=root, check=True,
             )
             runs[s].append(read_medians(path))
+        lines = verdict_lines(runs)
+        tmp = os.path.join(args.out, "verdict.jsonl.tmp")
+        with open(tmp, "w") as f:
+            f.writelines(line + "\n" for line in lines)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(args.out, "verdict.jsonl"))
 
-    for q in dict.fromkeys(q for r in runs["a"] + runs["b"] for q in r):
-        a = [r[q] for r in runs["a"] if q in r]
-        b = [r[q] for r in runs["b"] if q in r]
-        pairs = [(ra[q], rb[q]) for ra, rb in zip(runs["a"], runs["b"]) if q in ra and q in rb]
-        print(json.dumps({"query": q, **verdict(a, b, pairs)}), flush=True)
+    print("\n".join(lines), flush=True)
 
 
 if __name__ == "__main__":
