@@ -25,8 +25,10 @@ membership test is THREE BROADCAST HASH JOINS on the word index + a
 filter — the same broadcast-the-sketch shape Spark's native runtime
 bloom plans. (A per-row array-literal lookup was MEASURED 10× slower
 at sf0.1: Catalyst rebuilds a 1042-element CreateArray per row rather
-than constant-folding it.) Counts fold in ONE pass over the fact scan:
-pass/true flags first, a single aggregate after.
+than constant-folding it.) Counts fold from ONE fact scan: per-key row
+counts, pass/true flags per key, a single row-weighted aggregate after.
+No hash table is ever built from lineitem; only the sketch and the ~1%
+key set are broadcast.
 
 Output (one row): dim key count, fact row count, bloom-pass count, true
 match count, false positives, and the false-positive rate over true
@@ -111,11 +113,15 @@ def query_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash DISTINCT fact keys, not fact rows: lineitem repeats each
     # orderkey ~4x, so the md5+hex-parse work (the query's hot expression)
     # runs on ~150k keys instead of ~600k rows at sf0.1 (MEASURED
-    # 3.7 -> ~2 s); the per-key verdict flags then join back — a small
-    # table AQE broadcasts. At 100 TB this is the standard
-    # hash-once-per-key shape for any expensive per-key predicate.
+    # 3.7 -> ~2 s). Each key carries its row count, so the counts below
+    # weight the per-key verdicts and lineitem is scanned once, with no
+    # join back to the fact rows. The NULL key is a group of its own:
+    # it never passes or matches, but its rows count in n_fact. At
+    # 100 TB this is the standard hash-once-per-key shape for any
+    # expensive per-key predicate.
     fact_keys = _with_positions(
-        lineitem.select("l_orderkey").distinct(), "l_orderkey"
+        lineitem.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_rows")),
+        "l_orderkey",
     )
     for i in range(BLOOM_K):
         side = bloom.select(
@@ -134,18 +140,18 @@ def query_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         member = t if member is None else (member & t)
     verdicts = fact_keys.select(
-        "l_orderkey", member.alias("pass")
+        "l_orderkey", "n_rows", member.alias("pass")
     ).join(
         F.broadcast(keys.withColumn("is_true", F.lit(1))),
         F.col("l_orderkey") == F.col("k"),
         "left",
-    ).select("l_orderkey", "pass", "is_true")
-    tagged = lineitem.select("l_orderkey").join(verdicts, "l_orderkey")
-    # ONE aggregate pass over the tagged fact rows
-    counts = tagged.agg(
-        F.count(F.lit(1)).alias("n_fact"),
-        F.sum(F.col("pass").cast("long")).alias("n_pass"),
-        F.coalesce(F.sum("is_true"), F.lit(0)).cast("bigint").alias("n_true"),
+    )
+    # ONE aggregate pass over the per-key verdicts, weighted by n_rows
+    n_rows = F.col("n_rows")
+    counts = verdicts.agg(
+        F.sum(n_rows).alias("n_fact"),
+        F.sum(F.col("pass").cast("long") * n_rows).alias("n_pass"),
+        F.coalesce(F.sum(F.col("is_true") * n_rows), F.lit(0)).alias("n_true"),
     )
     n_keys = keys.agg(F.count(F.lit(1)).alias("n_keys"))
     fp = F.col("n_pass") - F.col("n_true")

@@ -15,6 +15,12 @@ sort-merge joins. tests/test_plans.py asserts the fact-side joins
 survive ``autoBroadcastJoinThreshold=-1`` without a BroadcastExchange
 or a CartesianProduct.
 
+Build-side rule: AQE may only broadcast a side the join type lets it
+build, and a semi-join builds only its right side. So a fact table on
+the right of an EXISTS is written as an inner join (fact as the probe
+side) plus a distinct on the left side's key — Q4 below — never as a
+``left_semi`` that hashes the whole fact table.
+
 Revenue sums reduce through DECIMAL so the partition-parallel sum is
 exact, and top-k orders on the exact DECIMAL aggregate (not the
 rounded double) with a key tiebreak, so selection is deterministic and
@@ -219,22 +225,28 @@ Q4_LATE_DAYS = 60
 
 def query_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 shape: per-priority count of orders (in a quarter) that have at
-    least one LATE lineitem — an EXISTS semi-join whose condition
-    correlates both sides (l_shipdate > o_orderdate + 60 days), the
-    step past J4's uncorrelated IN-subquery. Plans as a LeftSemi hash
-    join on the orderkey with the date comparison as residual: one scan
-    of each side, no duplication of matching orders no matter how many
-    late lineitems they have."""
+    least one LATE lineitem — an EXISTS whose condition correlates both
+    sides (l_shipdate > o_orderdate + 60 days), the step past J4's
+    uncorrelated IN-subquery.
+
+    Written as lineitem INNER JOIN the quarter's orders on the key with
+    the date comparison as residual, then a distinct on
+    (o_orderkey, o_orderpriority), so the hash table is built from the
+    ~4% of orders the date predicate keeps and lineitem only streams
+    past as the probe side (a ``left_semi`` would build lineitem, its
+    right side). The distinct counts an order once however many late
+    lineitems it has; that relies on ``o_orderkey`` being the key of
+    ``orders``, as in TPC-H and in every fixture (the replicated one
+    shifts keys per replica)."""
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= Q4_DATE_LO) & (F.col("o_orderdate") < Q4_DATE_HI)
     )
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = orders.join(
-        li,
+    late = li.join(
+        orders,
         (F.col("l_orderkey") == F.col("o_orderkey"))
         & (F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), Q4_LATE_DAYS)),
-        "left_semi",
-    )
+    ).select("o_orderkey", "o_orderpriority").distinct()
     return late.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders")
     )

@@ -27,3 +27,35 @@ def test_query_matches_oracle(spark, duck, sf_dir, oracles, name):
         return
     problems = compare_one(spark, duck, name, fn, sql, sf_dir)
     assert not problems, f"{name}: " + "; ".join(problems)
+
+
+def test_null_fact_key_matches_oracle(spark, sf_dir, tmp_path):
+    """A lineitem row with a NULL ``l_orderkey`` joins no order, yet it is
+    a fact row: ``join_bloom_prefilter``'s n_fact counts it (the oracle's
+    ``COUNT(*) FROM lineitem``), and ``agg_order_priority`` ignores it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigdata_project_spark.operators import bloom
+    from bigdata_project_spark.oracle_check import duckdb_connection
+    from bigdata_project_spark.plans import starjoins
+    from bigdata_project_spark.sources.readers import TESTDATA_TABLES
+
+    for t in TESTDATA_TABLES:
+        if t != "lineitem":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    li = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    planted = li.slice(0, 1).set_column(0, "l_orderkey", pa.array([None], pa.int64()))
+    pq.write_table(pa.concat_tables([li, planted]), tmp_path / "lineitem.parquet")
+
+    queries = {**bloom.QUERIES, **starjoins.QUERIES}
+    con = duckdb_connection(str(tmp_path))
+    try:
+        for name in ("join_bloom_prefilter", "agg_order_priority"):
+            fn, sql = queries[name]
+            problems = compare_one(spark, con, name, fn, sql, str(tmp_path))
+            assert not problems, f"{name}: " + "; ".join(problems)
+    finally:
+        con.close()

@@ -20,6 +20,35 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _is_broadcast(node: str) -> bool:
+    return "BroadcastExchange" in node or "BroadcastQueryStage" in node
+
+
+def _scans(plan: str, *tables: str):
+    """Walk the plan tree: ``(line, ancestors)`` for every line naming one
+    of ``tables``, with the ancestor node lines listed root first."""
+    stack: list[tuple[int, str]] = []
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(": +-"))
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        if any(t in line for t in tables):
+            yield line, [name for _, name in stack]
+        stack.append((indent, line))
+
+
+def _assert_lineitem_never_broadcast(plan: str, name: str) -> int:
+    """No lineitem scan may sit under a broadcast: the hash table is built
+    from the bounded side and lineitem streams past as the probe side.
+    Returns the number of lineitem scans."""
+    scans = list(_scans(plan, "lineitem.parquet"))
+    for line, ancestors in scans:
+        assert not any(map(_is_broadcast, ancestors)), (
+            f"{name}: lineitem scan under a broadcast:\n{line}"
+        )
+    return len(scans)
+
+
 # deliberate tiny-side cross joins: 1-row broadcast query vector
 # (sim_cosine_topk) and crosses of 1-row aggregate results
 # (agg_approx_distinct / agg_approx_quantiles — Expand-free sketch-vs-
@@ -495,6 +524,17 @@ def test_bloom_prefilter_broadcasts_sketch(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan  # sketch broadcast, never shuffled
     assert "shiftright" in plan  # the bit-test membership expression
+    # per-key row counts carry the fact cardinality: one lineitem scan,
+    # and no join back that would hash the fact rows
+    assert _assert_lineitem_never_broadcast(plan, "join_bloom_prefilter") == 1
+
+
+def test_order_priority_builds_from_orders(spark, sf_dir):
+    """Q4's EXISTS is an inner join plus a key distinct, so the hash
+    table holds the quarter's orders, never lineitem (a ``left_semi``
+    can only build its right side, the whole fact table)."""
+    plan = _plan(spark, sf_dir, "agg_order_priority")
+    assert _assert_lineitem_never_broadcast(plan, "agg_order_priority") == 1
 
 
 def test_incremental_store_never_broadcast(spark, sf_dir):
@@ -509,27 +549,17 @@ def test_incremental_store_never_broadcast(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert hash_t in plan and band_t in plan  # both stores scanned
 
-    # walk the plan tree: a store FileScan may only sit under a
-    # BroadcastExchange if a JOIN bounds the exchanged rows between the
-    # two (the stage-1 shape: store ⋈ broadcast(batch hashes) → the
-    # bounded HIT set is what gets broadcast, never the raw store)
-    stack: list[tuple[int, str]] = []
-    for line in plan.splitlines():
-        indent = len(line) - len(line.lstrip(": +-"))
-        while stack and stack[-1][0] >= indent:
-            stack.pop()
-        if hash_t in line or band_t in line:
-            bcast_idx = [
-                i
-                for i, (_, name) in enumerate(stack)
-                if "BroadcastExchange" in name or "BroadcastQueryStage" in name
-            ]
-            if bcast_idx:
-                between = stack[bcast_idx[-1] + 1 :]
-                assert any("Join" in name for _, name in between), (
-                    f"raw store scan broadcast with no bounding join:\n{line}"
-                )
-        stack.append((indent, line))
+    # a store FileScan may only sit under a BroadcastExchange if a JOIN
+    # bounds the exchanged rows between the two (the stage-1 shape:
+    # store ⋈ broadcast(batch hashes) → the bounded HIT set is what gets
+    # broadcast, never the raw store)
+    for line, ancestors in _scans(plan, hash_t, band_t):
+        bcast_idx = [i for i, name in enumerate(ancestors) if _is_broadcast(name)]
+        if bcast_idx:
+            between = ancestors[bcast_idx[-1] + 1 :]
+            assert any("Join" in name for name in between), (
+                f"raw store scan broadcast with no bounding join:\n{line}"
+            )
     # and the joins are broadcast-shaped (batch side broadcast)
     assert plan.count("BroadcastHashJoin") >= 2
 
