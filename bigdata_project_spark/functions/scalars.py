@@ -70,6 +70,8 @@ def round_portable(c: Column, n: int) -> Column:
     breaks value-hash comparison. ``floor(x * 10^n + 0.5) / 10^n`` is pure
     IEEE double arithmetic — identical operation order gives bit-identical
     results in any engine. Pair with :func:`round_portable_sql` in oracles.
+    Two definitions stay: Spark SQL parses the string's ``/ 1000000.0`` as
+    a DECIMAL division (the result types as DECIMAL(30,9)), not DOUBLE.
     """
     p = float(10**n)
     return F.floor(c * p + F.lit(0.5)) / p

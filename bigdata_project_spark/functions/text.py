@@ -60,7 +60,8 @@ WORD_HASH16_SQL = HEX16_TO_INT_SQL.format(h="md5({w})")
 
 
 def hex32_to_int(hex8: Column) -> Column:
-    """First-8-hex-chars → 32-bit int.
+    """First-8-hex-chars → 32-bit int. Two definitions stay: DuckDB has
+    no ``conv``, and Spark runs the Horner fold as 16 string ops.
 
     Spark side: one ``conv(hex, 16, 10)`` — base conversion is a single
     codegen'd builtin vs the 16 string ops (8× instr + 8× substring) of

@@ -47,7 +47,6 @@ from bigdata_project_spark.sources.readers import load_table
 
 #: total bloom bits; 63 usable bits per 64-bit word (see module doc)
 BLOOM_BITS = 65536
-BLOOM_WORDS = (BLOOM_BITS + 62) // 63
 #: number of hash positions per key (8-hex-char chunks of one md5)
 BLOOM_K = 3
 
@@ -92,7 +91,7 @@ def query_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_orderkey").alias("k"))
         .distinct()
     )
-    # the sketch: one distributed bit_or aggregate over ≤ BLOOM_WORDS rows
+    # the sketch: one distributed bit_or aggregate over ≤ ceil(BLOOM_BITS / 63) rows
     melted = _with_positions(keys, "k").select(
         F.explode(F.array(*[F.col(f"p{i}") for i in range(BLOOM_K)])).alias("pos")
     ).select(

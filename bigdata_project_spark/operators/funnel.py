@@ -19,8 +19,6 @@ from pyspark.sql import functions as F
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
 from bigdata_project_spark.sources.readers import load_table
 
-FUNNEL_STAGES = ("view", "click", "purchase")
-
 
 def query_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strictly-ordered funnel view → click → purchase.

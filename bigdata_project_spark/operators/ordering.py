@@ -44,7 +44,6 @@ from bigdata_project_spark.sources.readers import load_table
 
 SHUFFLE_SEED = "r6seed"
 SHARD_SIZE = 64
-_N_RANGES = 256
 
 
 def query_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -53,6 +53,8 @@ def cosine(a: Column, b: Column) -> Column:
 
 # DuckDB twins of the folds above — identical op order via list_reduce
 # (no-init left fold; 0.0-init and no-init agree exactly for IEEE adds).
+# Two definitions stay: DuckDB's list comprehension and Spark's
+# zip_with/aggregate higher-order functions do not parse in the other.
 def _dot_sql(a: str, b: str) -> str:
     return (
         f"list_reduce([CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
@@ -250,30 +252,13 @@ def _plane_signs(plane: int, dim: int = _EMB_DIM) -> list[float]:
     return out
 
 
-def lsh_signatures(emb: DataFrame) -> DataFrame:
+def lsh_signatures_np(emb: DataFrame) -> DataFrame:
     """32-bit sign signature per vector: sig bit p = (v · plane_p) > 0.
 
     Hyperplane components are ±1 derived from md5 — reproducible on any
-    engine/cluster with no stored model."""
-    sig = None
-    for p in range(N_PLANES):
-        plane = F.array(*[F.lit(s) for s in _plane_signs(p)])
-        proj = F.aggregate(
-            F.zip_with(_as_double(F.col("embedding")), plane, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        # sign taken on the 1e-6-rounded projection so BLAS/fold/SQL
-        # evaluation orders can never flip a bit near zero
-        bit = F.when(round_portable(proj, 6) > 0, F.lit(2**p)).otherwise(F.lit(0))
-        sig = bit if sig is None else sig + bit
-    return emb.select("vec_id", "label", "embedding", sig.cast("bigint").alias("lsh_sig"))
-
-
-def lsh_signatures_np(emb: DataFrame) -> DataFrame:
-    """Arrow-batched signature computation: one 64×32 sign-matrix matmul
-    per batch instead of 32 interpreted folds per row. Same md5-derived
-    planes, same signatures."""
+    engine/cluster with no stored model. Arrow-batched: one 64×32
+    sign-matrix matmul per batch instead of 32 interpreted folds per
+    row."""
     import pandas as pd
 
     planes = [_plane_signs(p) for p in range(N_PLANES)]
@@ -286,7 +271,8 @@ def lsh_signatures_np(emb: DataFrame) -> DataFrame:
         pw = np.array(powers, dtype=np.int64)
         for pdf in it:
             m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            # round before sign — see lsh_signatures
+            # sign taken on the 1e-6-rounded projection so BLAS/fold/SQL
+            # evaluation orders can never flip a bit near zero
             bits = (np.floor((m @ P) * 1e6 + 0.5) / 1e6) > 0
             yield pd.DataFrame(
                 {

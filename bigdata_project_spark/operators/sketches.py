@@ -33,7 +33,6 @@ from bigdata_project_spark.functions.text import (
     WORD_HASH16_SQL,
     WORD_HASH32_SQL,
     tokens,
-    word_hash16,
 )
 from bigdata_project_spark.sources.readers import load_table
 
@@ -43,13 +42,9 @@ CMS_WIDTH = 256
 TOP_K = 15
 
 
-def _cell(tok, d: int):
-    """Row-d counter index for a token: md5-based 16-bit hash of the
-    seed-prefixed token, folded onto the sketch width."""
-    return F.pmod(word_hash16(F.concat(F.lit(f"{d}:"), tok)), F.lit(CMS_WIDTH))
-
-
 def _cell_sql(tok_expr: str, d: int) -> str:
+    """Row-d counter index for a token, in both engines: md5-based 16-bit
+    hash of the seed-prefixed token, folded onto the sketch width."""
     h = WORD_HASH16_SQL.format(w=f"'{d}:' || {tok_expr}")
     return f"({h}) % {CMS_WIDTH}"
 
@@ -70,7 +65,7 @@ def query_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tok",
         "n",
         F.posexplode(
-            F.array(*[_cell(F.col("tok"), d) for d in range(CMS_DEPTH)])
+            F.array(*[F.expr(_cell_sql("tok", d)) for d in range(CMS_DEPTH)])
         ).alias("d", "cell"),
     )
     sketch = cells.groupBy("d", "cell").agg(F.sum("n").alias("cnt"))

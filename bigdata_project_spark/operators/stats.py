@@ -32,17 +32,21 @@ unscale. Two lanes:
   ratio fields, so scale 100 is exact; scaled values ≤ ~1.05e7 keep
   every per-row PRODUCT ≤ ~1.1e14 — far inside int64, so the hot
   multiply stays in whole-stage-codegen bigint arithmetic — and only
-  the partition-parallel SUM crosses into DECIMAL(38,0) (Spark) /
-  DuckDB's automatic HUGEINT, where a bigint accumulator would
-  overflow (verified: ANSI ARITHMETIC_OVERFLOW at sf0.1).
+  the partition-parallel SUM crosses into DECIMAL(38,0), where a bigint
+  accumulator would overflow (verified: ANSI ARITHMETIC_OVERFLOW at
+  sf0.1).
 - **OLS** keeps the DECIMAL(19,0) lane at scale 1e6: one grouped
   aggregate over 3 groups is floor-bound already, and its intercept
   unscale wants the finer grid.
+
+The scaled inputs, the moment sums and the closed forms are one SQL
+string each, which the builders pass to ``F.expr``/``selectExpr`` and the
+oracles embed; only the final melt and ``round_portable`` keep two forms.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
@@ -52,60 +56,54 @@ from bigdata_project_spark.sources.readers import load_table
 CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
 _SCALE = 1_000_000.0
-_DEC_INT = "decimal(19,0)"  # scaled-integer lane; products ride the int128 lane as (38,0)
-
-
-def _scaled(c: str) -> Column:
-    """floor(v·1e6 + 0.5) as an exact integer-valued decimal."""
-    return F.floor(F.col(c) * _SCALE + F.lit(0.5)).cast(_DEC_INT)
 
 
 def _scaled_sql(expr: str) -> str:
+    """floor(v·1e6 + 0.5) as an exact integer-valued DECIMAL(19,0); both
+    engines parse it, and products ride the int128 lane as (38,0)."""
     return f"CAST(floor(({expr}) * {_SCALE} + 0.5) AS DECIMAL(19,0))"
 
 
 _CORR_SCALE = 100.0  # 2-dp inputs → exact; products fit int64 (see module doc)
-_DEC_SUM = "decimal(38,0)"  # accumulator lane: bigint sums would overflow
-
-
-def _corr_scaled(c: str) -> Column:
-    """floor(v·100 + 0.5) as an exact BIGINT (codegen-friendly lane)."""
-    return F.floor(F.col(c) * _CORR_SCALE + F.lit(0.5)).cast("bigint")
 
 
 def _corr_scaled_sql(expr: str) -> str:
+    """floor(v·100 + 0.5) as an exact BIGINT (codegen-friendly lane)."""
     return f"CAST(floor(({expr}) * {_CORR_SCALE} + 0.5) AS BIGINT)"
+
+
+# Per-row arithmetic in BIGINT (whole-stage codegen), accumulation in
+# DECIMAL(38,0): bigint sums would overflow. Both engines parse these.
+_CORR_SUMS = [
+    "COUNT(*) AS n",
+    *[f"SUM(CAST(v_{c} AS DECIMAL(38,0))) AS s_{c}" for c in CORR_COLS],
+    *[
+        f"SUM(CAST(v_{a} * v_{b} AS DECIMAL(38,0))) AS s_{a}_{b}"
+        for i, a in enumerate(CORR_COLS)
+        for b in CORR_COLS[i:]
+    ],
+]
+_CORR_PAIRS = [(a, b) for i, a in enumerate(CORR_COLS) for b in CORR_COLS[i + 1 :]]
+
+
+def _corr_sql(a: str, b: str) -> str:
+    """corr(a,b) = (n·Σab − Σa·Σb) / sqrt((n·Σa² − Σa²)(n·Σb² − Σb²)) over
+    the moment sums; the 1e4 scale on every product term cancels top and
+    bottom."""
+    n, sa, sb = "CAST(n AS DOUBLE)", f"CAST(s_{a} AS DOUBLE)", f"CAST(s_{b} AS DOUBLE)"
+    return (
+        f"({n} * CAST(s_{a}_{b} AS DOUBLE) - {sa} * {sb})"
+        f" / sqrt(({n} * CAST(s_{a}_{a} AS DOUBLE) - {sa} * {sa})"
+        f" * ({n} * CAST(s_{b}_{b} AS DOUBLE) - {sb} * {sb}))"
+    )
 
 
 def query_feature_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    scaled = li.select(*[_corr_scaled(c).alias(f"v_{c}") for c in CORR_COLS])
-
-    # per-row arithmetic in BIGINT (whole-stage codegen), accumulation
-    # in DECIMAL(38,0) — DuckDB's SUM(BIGINT) is HUGEINT, the same
-    # exact-integer accumulator shape
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for c in CORR_COLS:
-        aggs.append(F.sum(F.col(f"v_{c}").cast(_DEC_SUM)).alias(f"s_{c}"))
-    for i, a in enumerate(CORR_COLS):
-        for b in CORR_COLS[i:]:
-            aggs.append(
-                F.sum((F.col(f"v_{a}") * F.col(f"v_{b}")).cast(_DEC_SUM)).alias(
-                    f"s_{a}_{b}"
-                )
-            )
-    moments = scaled.agg(*aggs)
-
-    # corr(a,b) = (n·Σab − Σa·Σb) / sqrt((n·Σa² − Σa²)(n·Σb² − Σb²));
-    # the 1e12 scale on every product term cancels top and bottom.
-    def corr_expr(a: str, b: str) -> Column:
-        n = F.col("n").cast("double")
-        sa, sb = F.col(f"s_{a}").cast("double"), F.col(f"s_{b}").cast("double")
-        saa, sbb = F.col(f"s_{a}_{a}").cast("double"), F.col(f"s_{b}_{b}").cast("double")
-        sab = F.col(f"s_{a}_{b}").cast("double")
-        return (n * sab - sa * sb) / F.sqrt((n * saa - sa * sa) * (n * sbb - sb * sb))
-
-    pairs = [(a, b) for i, a in enumerate(CORR_COLS) for b in CORR_COLS[i + 1 :]]
+    scaled = li.selectExpr(*[f"{_corr_scaled_sql(c)} AS v_{c}" for c in CORR_COLS])
+    moments = scaled.agg(*map(F.expr, _CORR_SUMS))
+    # the melt keeps two forms: an explode of structs here, UNION ALL in
+    # the oracle
     return (
         moments.select(
             F.explode(
@@ -114,9 +112,9 @@ def query_feature_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.struct(
                             F.lit(a).alias("col_a"),
                             F.lit(b).alias("col_b"),
-                            round_portable(corr_expr(a, b), 6).alias("corr"),
+                            round_portable(F.expr(_corr_sql(a, b)), 6).alias("corr"),
                         )
-                        for a, b in pairs
+                        for a, b in _CORR_PAIRS
                     ]
                 )
             ).alias("r")
@@ -126,31 +124,15 @@ def query_feature_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_corr() -> str:
-    sums = ["COUNT(*) AS n"]
-    for c in CORR_COLS:
-        sums.append(f"SUM(v_{c}) AS s_{c}")
-    for i, a in enumerate(CORR_COLS):
-        for b in CORR_COLS[i:]:
-            sums.append(f"SUM(v_{a} * v_{b}) AS s_{a}_{b}")
     scaled = ", ".join(f"{_corr_scaled_sql(c)} AS v_{c}" for c in CORR_COLS)
-
-    def corr_sql(a: str, b: str) -> str:
-        n = "CAST(n AS DOUBLE)"
-        return (
-            f"({n} * CAST(s_{a}_{b} AS DOUBLE) - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
-            f" / sqrt(({n} * CAST(s_{a}_{a} AS DOUBLE) - CAST(s_{a} AS DOUBLE) * CAST(s_{a} AS DOUBLE))"
-            f" * ({n} * CAST(s_{b}_{b} AS DOUBLE) - CAST(s_{b} AS DOUBLE) * CAST(s_{b} AS DOUBLE)))"
-        )
-
     branches = " UNION ALL ".join(
         f"SELECT '{a}' AS col_a, '{b}' AS col_b, "
-        f"{round_portable_sql(corr_sql(a, b), 6)} AS corr FROM m"
-        for i, a in enumerate(CORR_COLS)
-        for b in CORR_COLS[i + 1 :]
+        f"{round_portable_sql(_corr_sql(a, b), 6)} AS corr FROM m"
+        for a, b in _CORR_PAIRS
     )
     return f"""
 WITH r AS (SELECT {scaled} FROM lineitem),
-m AS (SELECT {', '.join(sums)} FROM r)
+m AS (SELECT {', '.join(_CORR_SUMS)} FROM r)
 {branches}
 """
 
@@ -170,36 +152,29 @@ def query_ml_group_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     the closed form never touches row-level data again.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    scaled = li.select(
+    scaled = li.selectExpr(
         "l_returnflag",
-        _scaled("l_quantity").alias("x"),
-        _scaled("l_extendedprice").alias("y"),
+        f"{_scaled_sql('l_quantity')} AS x",
+        f"{_scaled_sql('l_extendedprice')} AS y",
     )
-    moments = scaled.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    n = F.col("n").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxx, sxy = F.col("sxx").cast("double"), F.col("sxy").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)  # scale cancels
-    intercept = (sy - slope * sx) / n / _SCALE  # one explicit unscale
+    moments = scaled.groupBy("l_returnflag").agg(*map(F.expr, _OLS_SUMS))
     return moments.select(
         "l_returnflag",
         F.col("n").alias("n_rows"),
-        round_portable(slope, 6).alias("slope"),
-        round_portable(intercept, 6).alias("intercept"),
+        round_portable(F.expr(_SLOPE), 6).alias("slope"),
+        round_portable(F.expr(_INTERCEPT), 6).alias("intercept"),
     )
 
 
+# Both engines parse these; the scale cancels in the slope, and the
+# intercept takes one explicit unscale.
+_OLS_SUMS = ["COUNT(*) AS n", "SUM(x) AS sx", "SUM(y) AS sy", "SUM(x * x) AS sxx", "SUM(x * y) AS sxy"]
 _N = "CAST(n AS DOUBLE)"
 _SLOPE = (
     f"({_N} * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
     f" / ({_N} * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
 )
+_INTERCEPT = f"(CAST(sy AS DOUBLE) - ({_SLOPE}) * CAST(sx AS DOUBLE)) / {_N} / {_SCALE}"
 
 ORACLE_ML_GROUP_OLS = f"""
 WITH r AS (
@@ -209,18 +184,13 @@ WITH r AS (
     FROM lineitem
 ),
 m AS (
-    SELECT l_returnflag,
-           COUNT(*) AS n,
-           SUM(x) AS sx,
-           SUM(y) AS sy,
-           SUM(x * x) AS sxx,
-           SUM(x * y) AS sxy
+    SELECT l_returnflag, {", ".join(_OLS_SUMS)}
     FROM r GROUP BY l_returnflag
 )
 SELECT l_returnflag,
        n AS n_rows,
        {round_portable_sql(_SLOPE, 6)} AS slope,
-       {round_portable_sql(f'(CAST(sy AS DOUBLE) - ({_SLOPE}) * CAST(sx AS DOUBLE)) / {_N} / {_SCALE}', 6)} AS intercept
+       {round_portable_sql(_INTERCEPT, 6)} AS intercept
 FROM m
 """
 

@@ -30,9 +30,12 @@ the LSH melt against a stored band table.
 
 Portability: hashes derive from md5 hex strings (identical in both
 engines); min-hashes are a universal-hash family (a·v+b mod P) over the
-md5-derived 32-bit shingle value; simhash bits come from md5 hex chars via
-instr arithmetic (functions/text.py). No engine-specific hash function is
-ever compared across engines.
+md5-derived 32-bit shingle value; simhash bits come from the md5-derived
+32-bit word hash (functions/text.py). No engine-specific hash function is
+ever compared across engines. Where a scalar or aggregate fragment parses
+the same in Spark SQL and DuckDB (the simhash bit sums and bands, the
+min-hash aggregates), it is one string that the builder passes to
+``F.expr`` and the oracle embeds.
 
 Scale notes (the whole point of these designs):
 - Shingling explodes ~L rows per doc — embarrassingly parallel, no shuffle.
@@ -489,17 +492,15 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 _MH_P = 1_000_000_007
 _MH_A = [769, 1543, 3079, 6151, 12289, 24593, 49157, 98317, 196613, 393241, 786433, 1572869]
 _MH_B = [7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43, 47]
+#: the k min-hash aggregates over the shingle value ``v``; both engines
+#: parse these strings
+_MH_MINS = [f"MIN((v * {a} + {b}) % {_MH_P}) AS mh{i}" for i, (a, b) in enumerate(zip(_MH_A, _MH_B))]
 
 
 def minhash_signatures(sh: DataFrame) -> DataFrame:
     """k universal-hash min-hashes per doc in ONE aggregate pass."""
     v = hex32_to_int(F.md5(F.encode(F.col("shingle"), "UTF-8")))
-    with_v = sh.withColumn("v", v)
-    aggs = [
-        F.min((F.col("v") * _MH_A[i] + _MH_B[i]) % _MH_P).alias(f"mh{i}")
-        for i in range(N_HASHES)
-    ]
-    return with_v.groupBy("doc_id").agg(*aggs)
+    return sh.withColumn("v", v).groupBy("doc_id").agg(*map(F.expr, _MH_MINS))
 
 
 def _lsh_bands(n_bands: int, rows_per_band: int) -> list[dict]:
@@ -579,12 +580,9 @@ def query_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sigs_sql(sh: str) -> str:
     """DuckDB twin of :func:`minhash_signatures` over the shingle
-    relation ``sh``."""
-    mins = ", ".join(
-        f"MIN((v * {_MH_A[i]} + {_MH_B[i]}) % {_MH_P}) AS mh{i}" for i in range(N_HASHES)
-    )
+    relation ``sh``: the same aggregates, with the Horner form of ``v``."""
     return f"""
-    SELECT doc_id, {mins}
+    SELECT doc_id, {", ".join(_MH_MINS)}
     FROM (SELECT doc_id, {HEX32_TO_INT_SQL.format(h="md5(shingle)")} AS v FROM {sh})
     GROUP BY doc_id
 """
@@ -848,41 +846,27 @@ def simhash_column(docs: DataFrame) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("w")
     ).withColumn("h", word_hash32(F.col("w")))
-    # bit extract via shiftright/AND — integer-lane, vs the floor(h/2^j)
-    # double-division form the oracle keeps (value-identical for the
-    # non-negative 32-bit h; the 32-term loop runs per WORD row, so the
-    # integer lane is the hot-path win — measured with the conv hash
-    # parse: 1.14 → 0.71 s on the sf0.1 aggregate)
-    bit_sums = words.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"b{j}")
-            for j in range(SIMHASH_BITS)
-        ]
-    )
-    sim = None
-    for j in range(SIMHASH_BITS):
-        term = F.when(F.col(f"b{j}") > 0, F.lit(2**j)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return bit_sums.select("doc_id", sim.cast("bigint").alias("simhash"))
+    bit_sums = words.groupBy("doc_id").agg(*map(F.expr, _SIMHASH_BIT_SUMS))
+    return bit_sums.selectExpr("doc_id", _SIMHASH_COMBINE)
 
 
-_simhash_bit_sums = ",\n           ".join(
-    f"SUM(CASE WHEN (CAST(floor(h / {2**j}) AS BIGINT) % 2) = 1 THEN 1 ELSE -1 END) AS b{j}"
+# Both engines parse these strings. Bit j of the non-negative 32-bit h is
+# the integer-lane shift and mask (h >> j) & 1; the 32-term loop runs per
+# WORD row, so the integer lane is the hot-path win (measured with the
+# conv hash parse: 1.14 → 0.71 s on the sf0.1 aggregate).
+_SIMHASH_BIT_SUMS = [
+    f"SUM(CASE WHEN ((h >> {j}) & 1) = 1 THEN 1 ELSE -1 END) AS b{j}"
     for j in range(SIMHASH_BITS)
-)
-_simhash_combine = " + ".join(
-    f"(CASE WHEN b{j} > 0 THEN {2**j} ELSE 0 END)" for j in range(SIMHASH_BITS)
+]
+_SIMHASH_COMBINE = "CAST({} AS BIGINT) AS simhash".format(
+    " + ".join(f"(CASE WHEN b{j} > 0 THEN {2**j} ELSE 0 END)" for j in range(SIMHASH_BITS))
 )
 
 _SIMHASH_SQL_T = f"""
-    SELECT doc_id, CAST({_simhash_combine} AS BIGINT) AS simhash
+    SELECT doc_id, {_SIMHASH_COMBINE}
     FROM (
         SELECT doc_id,
-           {_simhash_bit_sums}
+           {", ".join(_SIMHASH_BIT_SUMS)}
         FROM (
             SELECT doc_id, w, {WORD_HASH32_SQL.format(w="w")} AS h
             FROM (SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\\s+')) AS w
@@ -902,16 +886,11 @@ def query_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DEDUP_SIMHASH = _SIMHASH_SQL
 
 
-def _simhash_band(b: int):
-    """8-bit band ``b`` of the ``simhash`` column — integer-lane shift
-    and mask, bit-identical to the oracle's ``CAST(floor(simhash /
-    2^(8b)) AS BIGINT) % 256`` for the non-negative 32-bit simhash, and
-    non-nullable, so the band join needs no null filter."""
-    return F.shiftright(F.col("simhash"), 8 * b).bitwiseAND(F.lit(255))
-
-
 def _simhash_band_sql(b: int) -> str:
-    return f"CAST(floor(simhash / {2 ** (8 * b)}) AS BIGINT) % 256"
+    """8-bit band ``b`` of the ``simhash`` column, in both engines: the
+    integer-lane shift and mask, non-nullable, so the band join needs no
+    null filter."""
+    return f"(simhash >> {8 * b}) & 255"
 
 
 _BAND_PAIRS = [(i, j) for i in range(4) for j in range(i + 1, 4)]
@@ -947,7 +926,7 @@ def query_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     melted = blocking_melt(
         simhash_column(docs).localCheckpoint(eager=False),
         ["doc_id", "simhash"],
-        [{"band": b, "nib": _simhash_band(b)} for b in range(4)],
+        [{"band": b, "nib": F.expr(_simhash_band_sql(b))} for b in range(4)],
     )
     hamming_ab = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     pairs = skew_bounded_self_pairs(
@@ -1016,7 +995,12 @@ def query_dedup_fuzzy_lev(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_column(corpus),
         ["doc_id"],
         [
-            {"bi": i, "bj": j, "ni": _simhash_band(i), "nj": _simhash_band(j)}
+            {
+                "bi": i,
+                "bj": j,
+                "ni": F.expr(_simhash_band_sql(i)),
+                "nj": F.expr(_simhash_band_sql(j)),
+            }
             for i, j in _BAND_PAIRS
         ],
     )

@@ -32,7 +32,7 @@ queries a 100 TB event pipeline runs hourly:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
@@ -205,35 +205,30 @@ def query_ts_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense = _hourly_grid(spark, sf_dir).select(
         "event_type", "h", F.coalesce("n_events", F.lit(0)).alias("x")
     )
-    w = Window.partitionBy("event_type").orderBy("h")
-
-    num: Column = F.lit(0).cast("decimal(28,0)")
-    den: Column = F.lit(0).cast("decimal(28,0)")
-    for k, wk in enumerate(EWMA_WEIGHTS):
-        xk = F.lag("x", k).over(w)
-        num = num + F.coalesce(xk * F.lit(wk), F.lit(0)).cast("decimal(28,0)")
-        den = den + F.when(xk.isNotNull(), F.lit(wk)).otherwise(0).cast(
-            "decimal(28,0)"
-        )
     return dense.select(
         "event_type",
         F.date_format("h", _FMT).alias("hour"),
         F.col("x").cast("long").alias("n_events"),
-        round_portable(num.cast("double") / den.cast("double"), 6).alias("ewma"),
+        round_portable(F.expr(_EWMA), 6).alias("ewma"),
     )
 
 
-def _ewma_sql() -> str:
-    num = " + ".join(
-        f"COALESCE(lag(x, {k}) OVER w * CAST({wk} AS BIGINT), 0)"
-        for k, wk in enumerate(EWMA_WEIGHTS)
-    )
-    den = " + ".join(
-        f"CASE WHEN lag(x, {k}) OVER w IS NOT NULL"
-        f" THEN CAST({wk} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        for k, wk in enumerate(EWMA_WEIGHTS)
-    )
-    return f"""
+# Both engines parse these. Each lag carries its window inline (Spark's
+# F.expr takes no WINDOW clause); the 12 share one spec, so Spark plans one
+# Window. BIGINT is exact while an hourly count stays under ~2.8e9.
+_LAG = "lag(x, {k}) OVER (PARTITION BY event_type ORDER BY h)"
+_EWMA_NUM = " + ".join(
+    f"COALESCE({_LAG.format(k=k)} * CAST({wk} AS BIGINT), 0)"
+    for k, wk in enumerate(EWMA_WEIGHTS)
+)
+_EWMA_DEN = " + ".join(
+    f"CASE WHEN {_LAG.format(k=k)} IS NOT NULL"
+    f" THEN CAST({wk} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+    for k, wk in enumerate(EWMA_WEIGHTS)
+)
+_EWMA = f"CAST({_EWMA_NUM} AS DOUBLE) / CAST({_EWMA_DEN} AS DOUBLE)"
+
+ORACLE_TS_EWMA_HOURLY = f"""
 WITH {_GRID_SQL},
 x AS (
     SELECT event_type, h, COALESCE(n_events, 0) AS x FROM dense
@@ -241,13 +236,9 @@ x AS (
 SELECT event_type,
        strftime(h, '%Y-%m-%d %H:%M:%S') AS hour,
        CAST(x AS BIGINT) AS n_events,
-       {round_portable_sql(f"CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE)", 6)} AS ewma
+       {round_portable_sql(_EWMA, 6)} AS ewma
 FROM x
-WINDOW w AS (PARTITION BY event_type ORDER BY h)
 """
-
-
-ORACLE_TS_EWMA_HOURLY = _ewma_sql()
 
 
 # ----------------------------------------------------------------- OHLC --

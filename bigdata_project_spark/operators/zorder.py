@@ -115,32 +115,18 @@ def _zvalue_spread_sql_ctes(
     return ",\n".join(ctes)
 
 
-def scaled_cols(col: Column, lo: Column, hi: Column, bits: int = Z_BITS) -> Column:
-    """:func:`scaled` with the domain bounds as COLUMNS (a broadcast
-    1-row min/max aggregate) instead of driver-collected ints — the
-    whole scale+interleave+bucket computation then folds into ONE lazy
-    plan with no ``.first()`` action before it. Same exact-rounding
-    argument: (v-lo)*65535 ≤ ~2^53, double division exact-rounded
-    identically on both engines."""
-    span = F.greatest(hi - lo, F.lit(1))
-    return F.floor((col - lo) * ((2**bits) - 1) / span).cast("bigint")
-
-
-def scaled(col: Column, lo: int, hi: int, bits: int = Z_BITS) -> Column:
-    """Min/max-scale an integer column onto [0, 2^bits): raw-bit
-    interleave degenerates when one dim's domain is much narrower than
-    the other's (its high bits are constant zero and stop participating
-    in the ordering), so — like Delta's OPTIMIZE ZORDER, which
-    interleaves range-partition ids — we interleave *scaled* positions.
-    (v-lo)*65535 stays ≤ ~2^53, so the double division is exact-rounded
-    identically on both engines."""
-    span = max(hi - lo, 1)
-    return F.floor((col - F.lit(lo)) * ((2**bits) - 1) / F.lit(span)).cast("bigint")
-
-
 def _scaled_sql(col: str, lo: str, hi: str, bits: int = Z_BITS) -> str:
+    """Min/max-scale the integer ``col`` onto [0, 2^bits), in both
+    engines. Raw-bit interleave degenerates when one dim's domain is much
+    narrower than the other's (its high bits are constant zero and stop
+    participating in the ordering), so — like Delta's OPTIMIZE ZORDER,
+    which interleaves range-partition ids — we interleave *scaled*
+    positions. The bounds ``lo``/``hi`` are literals or columns (a
+    broadcast 1-row min/max aggregate keeps the whole scale+interleave+
+    bucket computation in ONE lazy plan). (v-lo)*65535 stays ≤ ~2^53,
+    so the DOUBLE division is exact-rounded identically on both engines."""
     return (
-        f"CAST(floor(({col} - {lo}) * {(2**bits) - 1} * 1.0"
+        f"CAST(floor(CAST(({col} - {lo}) * {(2**bits) - 1} AS DOUBLE)"
         f" / greatest({hi} - {lo}, 1)) AS BIGINT)"
     )
 
@@ -159,8 +145,8 @@ def write_zordered(
     (
         with_zvalue_spread(
             df,
-            scaled(F.col(xcol), lo_x, hi_x),
-            scaled(F.col(ycol), lo_y, hi_y),
+            F.expr(_scaled_sql(xcol, str(lo_x), str(hi_x))),
+            F.expr(_scaled_sql(ycol, str(lo_y), str(hi_y))),
             out="__z",
         )
         .repartitionByRange(n_files, "__z")
@@ -308,8 +294,8 @@ def query_zorder_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
     zed = with_zvalue_spread(
         li.select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
         .crossJoin(F.broadcast(bounds)),
-        scaled_cols(F.col("l_partkey"), F.col("__lo_x"), F.col("__hi_x")),
-        scaled_cols(F.col("l_suppkey"), F.col("__lo_y"), F.col("__hi_y")),
+        F.expr(_scaled_sql("l_partkey", "__lo_x", "__hi_x")),
+        F.expr(_scaled_sql("l_suppkey", "__lo_y", "__hi_y")),
     ).drop("__lo_x", "__hi_x", "__lo_y", "__hi_y")
     return (
         distributed_ntile(

@@ -29,7 +29,7 @@ engine-portable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
@@ -44,12 +44,7 @@ Q5_REGION = "ASIA"
 Q5_DATE_LO, Q5_DATE_HI = "1996-01-01", "1997-01-01"
 
 
-def _revenue() -> Column:
-    price = F.col("l_extendedprice").cast(_DEC)
-    disc = F.col("l_discount").cast(_DEC)
-    return price * (F.lit(1).cast(_DEC) - disc)
-
-
+#: l_extendedprice·(1 − l_discount) in DECIMAL(18,2); both engines parse it
 _REVENUE_SQL = (
     "CAST(l_extendedprice AS DECIMAL(18,2))"
     " * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
@@ -70,7 +65,7 @@ def query_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust, F.col("o_custkey") == F.col("c_custkey")
     )
     agg = joined.groupBy("l_orderkey", "o_orderdate").agg(
-        F.sum(_revenue()).alias("rev_dec"), F.count(F.lit(1)).alias("n_items")
+        F.expr(f"SUM({_REVENUE_SQL}) AS rev_dec"), F.count(F.lit(1)).alias("n_items")
     )
     return (
         agg.orderBy(F.col("rev_dec").desc(), F.col("l_orderkey").asc())
@@ -131,7 +126,7 @@ def query_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("s_nationkey") == F.col("c_nationkey")),
         )
     )
-    agg = joined.groupBy("n_name").agg(F.sum(_revenue()).alias("rev_dec"))
+    agg = joined.groupBy("n_name").agg(F.expr(f"SUM({_REVENUE_SQL}) AS rev_dec"))
     return agg.orderBy(F.col("rev_dec").desc(), F.col("n_name").asc()).select(
         "n_name",
         round_portable(F.col("rev_dec").cast("double"), 2).alias("revenue"),
@@ -181,7 +176,7 @@ def query_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
     )
     agg = joined.groupBy("c_custkey", "c_name", "n_name").agg(
-        F.sum(_revenue()).alias("rev_dec"), F.count(F.lit(1)).alias("n_items")
+        F.expr(f"SUM({_REVENUE_SQL}) AS rev_dec"), F.count(F.lit(1)).alias("n_items")
     )
     return (
         agg.orderBy(F.col("rev_dec").desc(), F.col("c_custkey").asc())
@@ -284,11 +279,11 @@ def query_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = li.join(part, F.col("l_partkey") == F.col("p_partkey"))
     agg = joined.agg(
         F.sum(
-            F.when(F.col("p_type") == "PROMO", _revenue()).otherwise(
+            F.when(F.col("p_type") == "PROMO", F.expr(_REVENUE_SQL)).otherwise(
                 F.lit(0).cast("decimal(18,2)")
             )
         ).alias("promo_dec"),
-        F.sum(_revenue()).alias("total_dec"),
+        F.expr(f"SUM({_REVENUE_SQL}) AS total_dec"),
         F.count(F.lit(1)).alias("n_items"),
     )
     return agg.select(
@@ -343,7 +338,7 @@ def query_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = joined.groupBy(
         "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-    ).agg(F.sum(_revenue()).alias("rev_dec"), F.count(F.lit(1)).alias("n_items"))
+    ).agg(F.expr(f"SUM({_REVENUE_SQL}) AS rev_dec"), F.count(F.lit(1)).alias("n_items"))
     return agg.select(
         "supp_nation",
         "cust_nation",
@@ -421,11 +416,11 @@ def query_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = joined.groupBy(F.year("o_orderdate").alias("o_year")).agg(
         F.sum(
-            F.when(F.col("supp_nation") == Q8_NATION, _revenue()).otherwise(
+            F.when(F.col("supp_nation") == Q8_NATION, F.expr(_REVENUE_SQL)).otherwise(
                 F.lit(0).cast("decimal(18,2)")
             )
         ).alias("nation_dec"),
-        F.sum(_revenue()).alias("total_dec"),
+        F.expr(f"SUM({_REVENUE_SQL}) AS total_dec"),
         F.count(F.lit(1)).alias("n_items"),
     )
     return agg.select(
@@ -551,7 +546,7 @@ def query_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         cond = c if cond is None else (cond | c)
     joined = li.join(part, F.col("l_partkey") == F.col("p_partkey")).filter(cond)
     agg = joined.agg(
-        F.sum(_revenue()).alias("rev_dec"), F.count(F.lit(1)).alias("n_items")
+        F.expr(f"SUM({_REVENUE_SQL}) AS rev_dec"), F.count(F.lit(1)).alias("n_items")
     )
     return agg.select(
         round_portable(F.col("rev_dec").cast("double"), 2).alias("revenue"),

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
-from bigdata_project_spark.plans.starjoins import _DEC, _REVENUE_SQL, _revenue
+from bigdata_project_spark.plans.starjoins import _DEC, _REVENUE_SQL
 from bigdata_project_spark.sources.readers import load_table
 
 # --------------------------------------------------------------------------
@@ -139,19 +139,12 @@ LIMIT 100
 # --------------------------------------------------------------------------
 
 Q9_NAME_FRAGMENT = "red"
-# unit cost proxy for the missing ps_supplycost: 60% of retail price
+# unit cost proxy for the missing ps_supplycost: 60% of retail price, in
+# DECIMAL; both engines parse it
 _COST_SQL = (
     "CAST(p_retailprice AS DECIMAL(9,2)) * CAST(0.60 AS DECIMAL(3,2))"
     " * CAST(l_quantity AS DECIMAL(9,2))"
 )
-
-
-def _cost():
-    return (
-        F.col("p_retailprice").cast("decimal(9,2)")
-        * F.lit("0.60").cast("decimal(3,2)")
-        * F.col("l_quantity").cast("decimal(9,2)")
-    )
 
 
 def query_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,7 +180,7 @@ def query_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy(
         "nation", F.year("o_orderdate").alias("o_year")
     ).agg(
-        F.sum(_revenue() - _cost()).alias("profit_dec"),
+        F.expr(f"SUM({_REVENUE_SQL} - {_COST_SQL}) AS profit_dec"),
         F.count(F.lit(1)).alias("n_items"),
     )
     return agg.select(
@@ -342,7 +335,7 @@ def query_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= Q15_DATE_LO) & (F.col("l_shipdate") < Q15_DATE_HI)
     )
-    rev = li.groupBy("l_suppkey").agg(F.sum(_revenue()).alias("rev_dec"))
+    rev = li.groupBy("l_suppkey").agg(F.expr(f"SUM({_REVENUE_SQL}) AS rev_dec"))
     mx = rev.agg(F.max("rev_dec").alias("max_rev"))
     top = rev.join(F.broadcast(mx), F.col("rev_dec") == F.col("max_rev"))
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")

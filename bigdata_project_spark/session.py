@@ -25,7 +25,13 @@ equivalent is a single SparkSession with:
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
+from types import SimpleNamespace
 
+from py4j.clientserver import ClientServerConnection
+from py4j.java_gateway import GatewayConnection
+from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql import SparkSession
 
 
@@ -42,6 +48,35 @@ def env_int(name: str, minimum: int) -> int | None:
     if n < minimum:
         raise ValueError(f"{name}={env!r} must be >= {minimum}")
     return n
+
+
+@contextmanager
+def py4j_calls():
+    """Count the py4j commands this process sends to the JVM inside the
+    block, in every thread, as ``.n`` of the yielded namespace. py4j's
+    garbage-collection (``m``) commands are left out: when they are sent
+    depends on Python's collector, so the count repeats exactly for a
+    deterministic block. Every Column function and DataFrame method is at
+    least one command."""
+    calls, lock = SimpleNamespace(n=0), threading.Lock()
+    saved = {cls: cls.send_command for cls in (ClientServerConnection, GatewayConnection)}
+
+    def counted(send):
+        def send_command(self, command):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                with lock:
+                    calls.n += 1
+            return send(self, command)
+
+        return send_command
+
+    for cls, send in saved.items():
+        cls.send_command = counted(send)
+    try:
+        yield calls
+    finally:
+        for cls, send in saved.items():
+            cls.send_command = send
 
 
 def get_spark(

@@ -24,7 +24,7 @@ def _env() -> dict[str, str]:
 
 def test_sweep_records_timings_and_spark_counters(sf_dir, tmp_path):
     out = tmp_path / "sweep.jsonl"
-    names = ["agg_order_priority", "stream_tumbling"]
+    names = ["agg_order_priority", "stream_tumbling", "agg_order_priority"]
     proc = subprocess.run(
         [sys.executable, SWEEP, *names, "--sf", sf_dir, "--runs", "2", "--out", str(out)],
         cwd=tmp_path, env=_env(), capture_output=True, text=True, timeout=900,
@@ -39,8 +39,12 @@ def test_sweep_records_timings_and_spark_counters(sf_dir, tmp_path):
         for key in ("exec.jobs", "exec.stages", "exec.s"):
             assert rec[key] > 0, f"{rec['query']}: {key} = {rec[key]}"
         assert rec["plan.nodes"], rec["query"]
+        calls = rec["build.py4j_calls"]
+        assert isinstance(calls, int) and calls > 0, f"{rec['query']}: build.py4j_calls = {calls}"
     assert lines[0]["plan.nodes"].get("FileSourceScanExec", 0) >= 1
     assert lines[1]["stream.batches"] >= 1
+    # the count is deterministic: two builds of one query make the same calls
+    assert lines[0]["build.py4j_calls"] == lines[2]["build.py4j_calls"]
 
 
 def test_killed_sweep_keeps_every_finished_line(sf_dir, tmp_path):

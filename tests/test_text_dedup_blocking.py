@@ -1,19 +1,21 @@
 """Blocking keys and the signature store behind the text-dedup queries.
 
-1. The simhash band keys that ``dedup_simhash_pairs`` and
-   ``dedup_fuzzy_lev`` block on equal the DuckDB oracles' formula
-   ``CAST(floor(simhash / 2^(8b)) AS BIGINT) % 256`` bit for bit, for
-   both the 1-band and the band-pair melt.
+1. The simhash band keys that ``dedup_simhash_pairs``, ``dedup_fuzzy_lev``
+   and their DuckDB oracles block on, ``(simhash >> 8b) & 255`` in Spark,
+   equal ``floor(simhash / 2^(8b)) % 256`` bit for bit, for both the
+   1-band and the band-pair melt.
 2. The incremental store lifecycle (build → screen → append → compact →
    screen) classifies batches exactly as a full recompute does.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from bigdata_project_spark.operators.text_dedup import (
     _BAND_PAIRS,
     _corpus_with_dups,
-    _simhash_band,
+    _simhash_band_sql,
     blocking_melt,
     simhash_column,
 )
@@ -24,13 +26,13 @@ def test_simhash_band_keys_match_oracle_formula(spark, sf_dir):
     by_doc = {r["doc_id"]: r["simhash"] for r in sims.collect()}
     assert by_doc and all(0 <= h < 2**32 for h in by_doc.values())
 
-    def band(h, b):  # the oracle's floor-division form
+    def band(h, b):  # the floor-division definition
         return (h // 2 ** (8 * b)) % 256
 
     single = blocking_melt(
         sims,
         ["doc_id"],
-        [{"band": b, "nib": _simhash_band(b)} for b in range(4)],
+        [{"band": b, "nib": F.expr(_simhash_band_sql(b))} for b in range(4)],
     ).collect()
     assert len(single) == 4 * len(by_doc)
     assert all(r["nib"] == band(by_doc[r["doc_id"]], r["band"]) for r in single)
@@ -39,7 +41,12 @@ def test_simhash_band_keys_match_oracle_formula(spark, sf_dir):
         sims,
         ["doc_id"],
         [
-            {"bi": i, "bj": j, "ni": _simhash_band(i), "nj": _simhash_band(j)}
+            {
+                "bi": i,
+                "bj": j,
+                "ni": F.expr(_simhash_band_sql(i)),
+                "nj": F.expr(_simhash_band_sql(j)),
+            }
             for i, j in _BAND_PAIRS
         ],
     ).collect()

@@ -12,7 +12,9 @@ One more pass runs under perfbench's ``layers.SparkCounters`` through
 counters as Spark reports them: build and execute jobs, Catalyst phases,
 stages and tasks, shuffle, spill, AQE rewrites, the Python boundary and
 stream progress. ``plan.nodes`` counts each operator class in the executed
-plan of the traced noop write.
+plan of the traced noop write. ``build.py4j_calls`` counts the py4j commands
+of one more build call with no action (``session.py4j_calls``); a stream's
+builder drains it, so a stream runs once more for this count.
 
 The first line is a header: cores, inputs, Spark conf, commit and the host
 calibration of ``run.noop_floor_ms`` and ``run.python_loop_ms``. Each line
@@ -42,6 +44,8 @@ sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 import layers  # noqa: E402
 import run  # noqa: E402
 import stats  # noqa: E402
+
+from bigdata_project_spark.session import py4j_calls  # noqa: E402
 
 # Key columns shifted per replica. Tables not named here are copied once.
 REPLICA_KEYS = {
@@ -101,6 +105,8 @@ def sweep_one(spark, name: str, fn, sf_dir: str, runs: int, counters: _Counters)
         per_op = run.traced_pass(spark, [name], queries, sf_dir, counters, layers.Tracer(), tally)
     if tally.failed:
         return {"query": name, "error": "; ".join(tally.problems[name])}
+    with py4j_calls() as calls:
+        fn(spark, sf_dir)
     rec = per_op[0]
     del rec["op"]
     nodes = Counter()
@@ -108,7 +114,7 @@ def sweep_one(spark, name: str, fn, sf_dir: str, runs: int, counters: _Counters)
         layers._walk(qe.executedPlan(), lambda cls, _node: nodes.update([cls]))
     samples = latencies[name]
     return {"query": name, "median_s": stats.median(samples), "samples_s": samples,
-            **rec, "plan.nodes": dict(sorted(nodes.items()))}
+            **rec, "build.py4j_calls": calls.n, "plan.nodes": dict(sorted(nodes.items()))}
 
 
 def append_line(out, rec: dict) -> None:
