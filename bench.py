@@ -78,13 +78,13 @@ def budgeted_payload(timings: dict[str, float], sf: float | None) -> dict:
 
 
 def main() -> None:
+    from bigdata_project_spark import registry
+    from bigdata_project_spark.session import env_int, get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = int(os.environ.get("BENCH_RUNS", "3"))
+    runs = env_int("BENCH_RUNS", 1) or 3
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
-
-    from bigdata_project_spark import registry
-    from bigdata_project_spark.session import get_spark
 
     spark = get_spark("bench")
 

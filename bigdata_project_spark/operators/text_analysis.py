@@ -309,6 +309,7 @@ def query_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential fold per row; identical in both engines."""
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
+    # A Spark lambda's variable has no SQL name, so this hash stays a Column.
     hashes = F.transform(toks, lambda w: word_hash16(w).cast("bigint"))
     fp = F.aggregate(
         hashes,
@@ -359,13 +360,14 @@ def query_hashing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exploded = docs.select("doc_id", F.explode(bigrams).alias("bg"))
     return (
-        exploded.select(
-            "doc_id", F.pmod(word_hash16(F.col("bg")), F.lit(HASH_DIM)).alias("dim")
-        )
+        exploded.select("doc_id", F.expr(_DIM_SQL).alias("dim"))
         .groupBy("doc_id", "dim")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
+
+#: a bigram's feature dimension, in both engines
+_DIM_SQL = f"CAST({WORD_HASH16_SQL.format(w='bg')} % {HASH_DIM} AS INT)"
 
 ORACLE_HASHING_FEATURES = f"""
 WITH toks AS (
@@ -378,7 +380,7 @@ bigrams AS (
     FROM toks
 )
 SELECT doc_id,
-       CAST({WORD_HASH16_SQL.format(w="bg")} % {HASH_DIM} AS INT) AS dim,
+       {_DIM_SQL} AS dim,
        COUNT(*) AS n
 FROM bigrams
 GROUP BY doc_id, dim
@@ -462,6 +464,7 @@ GROUP BY d.doc_id
 
 #: weight lattice size: w(dim) = (hash16('w:'||dim) % 2001 - 1000) milli-units
 _W_SPAN = 2001
+_W_MILLI_SQL = f"""(({WORD_HASH16_SQL.format(w="'w:' || CAST(dim AS STRING)")}) % {_W_SPAN} - 1000)"""
 
 
 def query_text_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,16 +481,9 @@ def query_text_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     the feature table; the weight is a per-row expression, not a join.
     """
     feats = query_hashing_features(spark, sf_dir)
-    w_milli = (
-        F.pmod(
-            word_hash16(F.concat(F.lit("w:"), F.col("dim").cast("string"))),
-            F.lit(_W_SPAN),
-        )
-        - 1000
-    )
     return (
         feats.groupBy("doc_id")
-        .agg(F.sum(F.col("n") * w_milli).alias("score_milli"))
+        .agg(F.expr(f"SUM(n * {_W_MILLI_SQL})").alias("score_milli"))
         .select(
             "doc_id",
             F.col("score_milli").cast("bigint").alias("score_milli"),
@@ -500,7 +496,7 @@ ORACLE_TEXT_QUALITY_LINEAR = f"""
 WITH feats AS ({ORACLE_HASHING_FEATURES}),
 scored AS (
     SELECT doc_id,
-           SUM(n * (({WORD_HASH16_SQL.format(w="'w:' || CAST(dim AS VARCHAR)")}) % {_W_SPAN} - 1000)) AS score_milli
+           SUM(n * {_W_MILLI_SQL}) AS score_milli
     FROM feats
     GROUP BY doc_id
 )

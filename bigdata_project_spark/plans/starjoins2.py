@@ -767,8 +767,9 @@ SELECT nation, COUNT(*) AS numcust,
        {round_portable_sql("CAST(SUM(bal_dec) AS DOUBLE)", 2)} AS totacctbal
 FROM cohort, stats
 WHERE bal_dec * cnt > sum_dec
-  AND c_custkey NOT IN (SELECT o_custkey FROM orders
-                        WHERE o_orderdate >= TIMESTAMP '{Q22_DORMANT_SINCE} 00:00:00')
+  AND NOT EXISTS (SELECT 1 FROM orders
+                  WHERE o_custkey = c_custkey
+                    AND o_orderdate >= TIMESTAMP '{Q22_DORMANT_SINCE} 00:00:00')
 GROUP BY nation
 ORDER BY nation
 """

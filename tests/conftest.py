@@ -1,9 +1,12 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import subprocess
 import uuid
 
 import pytest
+from pyspark import SparkContext
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -15,6 +18,16 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("tests")
     yield spark
+    # Wait for the JVM to exit, so it does not outlive the run: on a cold
+    # cache it writes the driver's CDS archive as it exits (10-20 s).
+    gateway = SparkContext._gateway
+    spark.stop()
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        gateway.shutdown()
+        proc.stdin.close()  # the gateway JVM exits when its stdin closes
+        with contextlib.suppress(subprocess.TimeoutExpired):
+            proc.wait(timeout=120)
 
 
 @pytest.fixture()

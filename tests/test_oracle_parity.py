@@ -59,3 +59,43 @@ def test_null_fact_key_matches_oracle(spark, sf_dir, tmp_path):
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         con.close()
+
+
+def test_null_recent_order_custkey_matches_oracle(spark, sf_dir, tmp_path):
+    """A recent order with a NULL ``o_custkey`` names no customer, so it
+    leaves every customer dormant: Q22's "no recent order" is NOT EXISTS,
+    as the engine's left-anti join reads it, not ``NOT IN``, which one
+    NULL empties."""
+    import os
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from bigdata_project_spark.oracle_check import duckdb_connection
+    from bigdata_project_spark.plans import starjoins2
+    from bigdata_project_spark.sources.readers import TESTDATA_TABLES
+
+    for t in TESTDATA_TABLES:
+        if t != "orders":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    orders = pq.read_table(f"{sf_dir}/orders.parquet")
+    planted = orders.slice(0, 1)
+    for col, value in (
+        ("o_orderkey", pc.max(orders["o_orderkey"]).as_py() + 1),
+        ("o_custkey", None),
+        ("o_orderdate", datetime.fromisoformat(starjoins2.Q22_DORMANT_SINCE)),
+    ):
+        i = planted.schema.get_field_index(col)
+        planted = planted.set_column(i, col, pa.array([value], planted.schema.field(col).type))
+    pq.write_table(pa.concat_tables([orders, planted]), tmp_path / "orders.parquet")
+
+    fn, sql = starjoins2.QUERIES["agg_dormant_customers"]
+    con = duckdb_connection(str(tmp_path))
+    try:
+        assert con.execute(f"SELECT COUNT(*) FROM ({sql})").fetchone()[0] > 0
+        problems = compare_one(spark, con, "agg_dormant_customers", fn, sql, str(tmp_path))
+        assert not problems, "; ".join(problems)
+    finally:
+        con.close()

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
 import pathlib
 import re
 
@@ -101,3 +102,15 @@ def test_cited_tools_files_exist():
     assert cited
     missing = sorted(f"{src}: {path}" for src, path in cited if not list(REPO.glob(path)))
     assert not missing, f"cited tools/ files that do not exist: {missing}"
+
+
+@pytest.mark.parametrize("script", ["bench.py", "tools/duckdb_bench.py"])
+def test_bench_runs_fails_loudly(script, monkeypatch):
+    """A malformed ``BENCH_RUNS`` raises before any timing and names the
+    variable."""
+    spec = importlib.util.spec_from_file_location("bench_script", REPO / script)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    monkeypatch.setenv("BENCH_RUNS", "abc")
+    with pytest.raises(ValueError, match="BENCH_RUNS"):
+        module.main()

@@ -21,13 +21,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = int(os.environ.get("BENCH_RUNS", "3"))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
-
     from bigdata_project_spark import registry
     from bigdata_project_spark.oracle_check import duckdb_connection
+    from bigdata_project_spark.session import env_int
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    runs = env_int("BENCH_RUNS", 1) or 3
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else None
 
     con = duckdb_connection(sf_dir)
     timings: dict[str, float] = {}
