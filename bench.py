@@ -79,7 +79,7 @@ def budgeted_payload(timings: dict[str, float], sf: float | None) -> dict:
 
 def main() -> None:
     from bigdata_project_spark import registry
-    from bigdata_project_spark.session import env_int, get_spark
+    from bigdata_project_spark.session import env_int, get_spark, stop_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = env_int("BENCH_RUNS", 1) or 3
@@ -99,6 +99,7 @@ def main() -> None:
             samples.append(time.perf_counter() - t0)
         samples.sort()
         timings[name] = round(samples[len(samples) // 2], 3)
+    stop_spark(spark)
 
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"

@@ -174,13 +174,12 @@ FROM (
 """
 
 
-def frame_sample_fake(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """Fake video frame sampler: emits one row per sampled 'frame' offset —
-    the explode-shaped output a real frame sampler produces, with
-    deterministic fake frame hashes."""
-    n_frames = F.greatest(
-        (F.octet_length("payload") / every_n_bytes).cast("int"), F.lit(1)
-    )
+def frame_sample_fake(df: DataFrame) -> DataFrame:
+    """Fake video frame sampler: emits one row per sampled 'frame' offset,
+    one frame per 64 payload bytes (at least one) — the explode-shaped
+    output a real frame sampler produces, with deterministic fake frame
+    hashes."""
+    n_frames = F.greatest((F.octet_length("payload") / 64).cast("int"), F.lit(1))
     return df.select(
         "doc_id",
         F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),

@@ -112,18 +112,23 @@ def encode_len(word: str, merges: "list[tuple[int, str, str, int]]") -> int:
     return len(syms)
 
 
-def query_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-N_MERGES BPE merge table learned from the documents corpus."""
-    docs = load_table(spark, sf_dir, "documents")
+def _learned_merges(docs: DataFrame):
+    """``(counted, merges)``: the VOCAB_CAP most frequent words of
+    ``docs`` with their counts, sorted by word (a deterministic input
+    order for the driver loop), and the merges trained on them."""
     # TakeOrderedAndProject bounds the driver transfer at VOCAB_CAP rows
     pruned = (
         count_words(docs)
         .orderBy(F.col("cnt").desc(), F.col("w").asc())
         .limit(VOCAB_CAP)
     )
-    counted = [(r["w"], r["cnt"]) for r in pruned.collect()]
-    counted.sort()  # deterministic input order for the driver loop
-    merges = train_merges(counted)
+    counted = sorted((r["w"], r["cnt"]) for r in pruned.collect())
+    return counted, train_merges(counted)
+
+
+def query_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-N_MERGES BPE merge table learned from the documents corpus."""
+    _, merges = _learned_merges(load_table(spark, sf_dir, "documents"))
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, pair_count bigint"
     )
@@ -140,6 +145,25 @@ GROUP BY w
 """
 
 
+def _duckdb_merges(sf_dir: str):
+    """``(con, merges)``: a DuckDB connection, and the merges trained on
+    its count of the VOCAB_CAP most frequent words of the fixture at
+    ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    counted = con.execute(
+        _WORD_COUNT_SQL.format(path=f"{sf_dir}/documents.parquet")
+        + f" ORDER BY cnt DESC, w LIMIT {VOCAB_CAP}"
+    ).fetchall()
+    return con, train_merges(sorted((w, int(c)) for w, c in counted))
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 def oracle_bpe_merges_sql(sf_dir: str) -> str | None:
     """Build the oracle for the fixture at ``sf_dir``: DuckDB counts its
     words, the same pinned merge loop runs on those counts, and the result
@@ -149,14 +173,7 @@ def oracle_bpe_merges_sql(sf_dir: str) -> str | None:
     the independent check). Returns None (→ the driver downgrades to a
     rows-only check, logged loudly) if the fixture is unreadable."""
     try:
-        import duckdb
-
-        con = duckdb.connect()
-        counted = con.execute(
-            _WORD_COUNT_SQL.format(path=f"{sf_dir}/documents.parquet")
-            + f" ORDER BY cnt DESC, w LIMIT {VOCAB_CAP}"
-        ).fetchall()
-        merges = train_merges([(w, int(c)) for w, c in counted])
+        _, merges = _duckdb_merges(sf_dir)
         if not merges:
             log.warning(
                 "bpe oracle builder: empty merge table for %s — "
@@ -164,12 +181,8 @@ def oracle_bpe_merges_sql(sf_dir: str) -> str | None:
                 sf_dir,
             )
             return None
-
-        def esc(s: str) -> str:
-            return s.replace("'", "''")
-
         rows = ",\n       ".join(
-            f"({rank}, '{esc(left)}', '{esc(right)}', {cnt})"
+            f"({rank}, {_sql_str(left)}, {_sql_str(right)}, {cnt})"
             for rank, left, right, cnt in merges
         )
         return (
@@ -220,14 +233,7 @@ def query_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ws.map(lambda w: encode_len(w, merges))
 
     docs = load_table(spark, sf_dir, "documents")
-    pruned = (
-        count_words(docs)
-        .orderBy(F.col("cnt").desc(), F.col("w").asc())
-        .limit(VOCAB_CAP)
-    )
-    counted = [(r["w"], r["cnt"]) for r in pruned.collect()]
-    counted.sort()
-    merges = train_merges(counted)
+    counted, merges = _learned_merges(docs)
 
     vocab_df = spark.createDataFrame(
         [(w, encode_len(w, merges)) for w, _ in counted],
@@ -270,14 +276,7 @@ def oracle_bpe_encode_sql(sf_dir: str) -> str | None:
     uncapped — mirroring the engine's dict + identical-function
     fallback, which is exact for every word.)"""
     try:
-        import duckdb
-
-        con = duckdb.connect()
-        counted = con.execute(
-            _WORD_COUNT_SQL.format(path=f"{sf_dir}/documents.parquet")
-            + f" ORDER BY cnt DESC, w LIMIT {VOCAB_CAP}"
-        ).fetchall()
-        merges = train_merges(sorted((w, int(c)) for w, c in counted))
+        con, merges = _duckdb_merges(sf_dir)
         all_words = [
             r[0]
             for r in con.execute(
@@ -291,12 +290,8 @@ def oracle_bpe_encode_sql(sf_dir: str) -> str | None:
                 sf_dir,
             )
             return None
-
-        def esc(s: str) -> str:
-            return s.replace("'", "''")
-
         rows = ",\n       ".join(
-            f"('{esc(w)}', {encode_len(w, merges)})" for w in sorted(all_words)
+            f"({_sql_str(w)}, {encode_len(w, merges)})" for w in sorted(all_words)
         )
         return f"""
 WITH words AS (

@@ -30,11 +30,12 @@ from pyspark.sql import functions as F
 from bigdata_project_spark.sources.readers import load_table
 
 
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 8
-) -> None:
-    """Materialize ``df`` bucketed+sorted by ``key`` — the one-time shuffle
-    that buys every later join its exchange back."""
+N_BUCKETS = 8
+
+
+def write_bucketed(df: DataFrame, table: str, key: str) -> None:
+    """Materialize ``df`` in N_BUCKETS buckets sorted by ``key`` — the
+    one-time shuffle that buys every later join its exchange back."""
     from bigdata_project_spark.sources.sinks import drop_table_and_orphan_location
 
     drop_table_and_orphan_location(df.sparkSession, table)
@@ -42,9 +43,9 @@ def write_bucketed(
     # file per bucket; the scan only exposes the written sort order (and
     # skips the SMJ's Sort) when buckets are single-file
     (
-        df.repartition(n_buckets, F.col(key))
+        df.repartition(N_BUCKETS, F.col(key))
         .write.format("parquet")
-        .bucketBy(n_buckets, key)
+        .bucketBy(N_BUCKETS, key)
         .sortBy(key)
         .mode("overwrite")
         .saveAsTable(table)

@@ -52,14 +52,10 @@ from bigdata_project_spark.sources.readers import load_table
 MAX_ITERATIONS = 25  # backstop only; the fixpoint check exits far earlier
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iterations: int = MAX_ITERATIONS,
-) -> DataFrame:
-    """(node, cluster_id) for every node appearing in ``pairs``, where
-    cluster_id = min node id of the node's connected component."""
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(node, cluster_id) for every node appearing in the ``(doc_a,
+    doc_b)`` edges of ``pairs``, where cluster_id = min node id of the
+    node's connected component."""
     # symmetrize by per-row explode, NOT by union of e with e.swapped —
     # a union would put the (expensive) pairs DAG in the plan twice and
     # execute it once per branch (MEASURED at sf0.1: 3.5 s → 2.1 s for
@@ -68,8 +64,8 @@ def connected_components(
         pairs.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                    F.struct(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
+                    F.struct(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")),
                 )
             ).alias("e")
         )
@@ -110,8 +106,8 @@ def connected_components(
     # Rarer deep-diameter graphs continue one checkpointed round at a
     # time, lineage truncated per round as before.
     it, batch = 0, 2
-    while it < max_iterations:
-        for _ in range(min(batch, max_iterations - it)):
+    while it < MAX_ITERATIONS:
+        for _ in range(min(batch, MAX_ITERATIONS - it)):
             labels = one_round(labels)
             it += 1
         labels = labels.localCheckpoint(eager=False)
@@ -168,8 +164,10 @@ def query_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_CLUSTER_CC = f"""
-WITH RECURSIVE corpus AS ({_CC_CORPUS_SQL}),
+# Connected components of the LSH-verified pairs of the cc corpus, by
+# recursive reachability: ``labels`` maps each node to its component's
+# smallest doc_id.
+_CC_LABELS_SQL = f"""RECURSIVE corpus AS ({_CC_CORPUS_SQL}),
 pairs AS ({lsh_verified_pairs_sql("corpus")}),
 edges AS (
     SELECT doc_a AS u, doc_b AS v FROM pairs
@@ -184,7 +182,10 @@ reach AS (
 ),
 labels AS (
     SELECT node, MIN(label) AS cluster_id FROM reach GROUP BY node
-),
+)"""
+
+ORACLE_DEDUP_CLUSTER_CC = f"""
+WITH {_CC_LABELS_SQL},
 sizes AS (
     SELECT cluster_id, COUNT(*) AS cluster_size FROM labels GROUP BY cluster_id
 )
@@ -236,22 +237,7 @@ def _build_oracle_dedup_canonical() -> str:
     from bigdata_project_spark.operators.text_analysis import quality_sql
 
     return f"""
-WITH RECURSIVE corpus AS ({_CC_CORPUS_SQL}),
-pairs AS ({lsh_verified_pairs_sql("corpus")}),
-edges AS (
-    SELECT doc_a AS u, doc_b AS v FROM pairs
-    UNION
-    SELECT doc_b AS u, doc_a AS v FROM pairs
-),
-reach AS (
-    SELECT DISTINCT u AS node, u AS label FROM edges
-    UNION
-    SELECT e.v AS node, r.label
-    FROM reach r JOIN edges e ON e.u = r.node
-),
-labels AS (
-    SELECT node, MIN(label) AS cluster_id FROM reach GROUP BY node
-),
+WITH {_CC_LABELS_SQL},
 q AS (SELECT doc_id, quality FROM ({quality_sql("corpus")})),
 members AS (
     SELECT l.node AS doc_id, l.cluster_id, q.quality

@@ -35,15 +35,19 @@ from bigdata_project_spark.sources.readers import load_table
 _DEC_GRAM = "decimal(27,12)"
 _DEC_PR = "decimal(38,18)"
 DAMPING = 0.85
+PAGERANK_ITERATIONS = 2  # the oracle unrolls the same count as c1, c2
 
 
-ORACLE_EMB_GRAM_MATRIX = f"""
-WITH long AS (
+# Each embedding component on its own row, rounded to 1e-6.
+LONG_EMBEDDINGS_SQL = f"""long AS (
     SELECT vec_id,
            generate_subscripts(embedding, 1) AS pos,
            {round_portable_sql("CAST(unnest(embedding) AS DOUBLE)", 6)} AS v6
     FROM embeddings
-)
+)"""
+
+ORACLE_EMB_GRAM_MATRIX = f"""
+WITH {LONG_EMBEDDINGS_SQL}
 SELECT a.pos AS i, b.pos AS j,
        {round_portable_sql("CAST(SUM(CAST(a.v6 * b.v6 AS DECIMAL(27,12))) AS DOUBLE)", 6)} AS gram
 FROM long a JOIN long b ON a.vec_id = b.vec_id AND a.pos <= b.pos
@@ -128,25 +132,31 @@ def coactivity_edges(ev: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(edges: DataFrame, n_iter: int = 2, damping: float = DAMPING) -> DataFrame:
-    """Unrolled power iteration: returns (id, pr) for every node."""
-    nodes = (
+def _nodes(edges: DataFrame) -> DataFrame:
+    """The distinct ids at either end of ``edges``, as ``id``."""
+    return (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
+
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """PAGERANK_ITERATIONS unrolled power iterations: returns (id, pr)
+    for every node."""
+    nodes = _nodes(edges)
     n = nodes.agg(F.count(F.lit(1)).cast("double").alias("nn"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     pr = nodes.crossJoin(F.broadcast(n)).select(
         "id", "nn", (F.lit(1.0) / F.col("nn")).alias("pr")
     )
-    for _ in range(n_iter):
+    for _ in range(PAGERANK_ITERATIONS):
         contrib = (
             edges.join(pr.select(F.col("id").alias("src"), "pr"), "src")
             .join(deg, "src")
             .select(
                 F.col("dst").alias("id"),
-                ((F.lit(damping) * F.col("pr")) / F.col("outdeg"))
+                ((F.lit(DAMPING) * F.col("pr")) / F.col("outdeg"))
                 .cast(_DEC_PR)
                 .alias("c"),
             )
@@ -160,7 +170,7 @@ def pagerank(edges: DataFrame, n_iter: int = 2, damping: float = DAMPING) -> Dat
                 "id",
                 "nn",
                 (
-                    F.lit(1.0 - damping) / F.col("nn")
+                    F.lit(1.0 - DAMPING) / F.col("nn")
                     + F.coalesce(F.col("s"), F.lit(0).cast(_DEC_PR)).cast("double")
                 ).alias("pr"),
             )
@@ -181,8 +191,9 @@ def query_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GRAPH_PAGERANK = f"""
-WITH seq AS (
+# coactivity_edges' DuckDB twin: ``edges`` links each user to the user
+# active just before them in the same event type.
+_EDGES_SQL = """seq AS (
     SELECT event_type, ts, event_id, user_id,
            LAG(user_id) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS prev_user
     FROM events
@@ -190,7 +201,10 @@ WITH seq AS (
 edges AS (
     SELECT DISTINCT prev_user AS src, user_id AS dst
     FROM seq WHERE prev_user IS NOT NULL AND prev_user <> user_id
-),
+)"""
+
+ORACLE_GRAPH_PAGERANK = f"""
+WITH {_EDGES_SQL},
 nodes AS (
     SELECT src AS id FROM edges UNION SELECT dst FROM edges
 ),
@@ -317,19 +331,11 @@ def orient_by_degree(und: DataFrame) -> DataFrame:
     )
 
 
-ORACLE_GRAPH_TRIANGLES = """
-WITH seq AS (
-    SELECT event_type, ts, event_id, user_id,
-           LAG(user_id) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS prev_user
-    FROM events
-),
-dedges AS (
-    SELECT DISTINCT prev_user AS src, user_id AS dst
-    FROM seq WHERE prev_user IS NOT NULL AND prev_user <> user_id
-),
+ORACLE_GRAPH_TRIANGLES = f"""
+WITH {_EDGES_SQL},
 und AS (
     SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-    FROM dedges WHERE src <> dst
+    FROM edges WHERE src <> dst
 ),
 tris AS (
     SELECT e1.a AS x, e1.b AS y, e2.b AS z
@@ -393,11 +399,7 @@ def query_graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    nodes = _nodes(edges)
     reached = (
         nodes.agg(F.min("id").alias("id"))
         .filter(F.col("id").isNotNull())  # empty graph → empty reach_0
@@ -431,15 +433,7 @@ reach_{k} AS (
 
 
 ORACLE_GRAPH_BFS_DISTANCE = f"""
-WITH seq AS (
-    SELECT event_type, ts, event_id, user_id,
-           LAG(user_id) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS prev_user
-    FROM events
-),
-edges AS (
-    SELECT DISTINCT prev_user AS src, user_id AS dst
-    FROM seq WHERE prev_user IS NOT NULL AND prev_user <> user_id
-),
+WITH {_EDGES_SQL},
 und_edges AS (
     SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
 ),

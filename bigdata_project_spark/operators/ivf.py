@@ -232,6 +232,41 @@ def query_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# DuckDB twin of the seeded cells: the K_CELLS seed vectors ``c`` and
+# each vector's ``assign``ed cell, the rounded-cosine argmax with the
+# lowest cell on ties. The IVF, IVF-PQ and semantic-dedup oracles open
+# with these CTEs.
+CELL_ASSIGN_SQL = f"""c AS (
+    SELECT vec_id AS cell, embedding AS cemb
+    FROM embeddings WHERE vec_id < {K_CELLS}
+),
+assign AS (
+    SELECT vec_id, cell, embedding FROM (
+        SELECT e.vec_id, c.cell, e.embedding,
+               row_number() OVER (
+                   PARTITION BY e.vec_id
+                   ORDER BY {round_portable_sql(_cos_sql("e.embedding", "c.cemb"), 6)} DESC,
+                            c.cell ASC
+               ) AS rn
+        FROM embeddings e CROSS JOIN c
+    ) WHERE rn = 1
+)"""
+
+
+def _probe_sql(n_probe: int) -> str:
+    """The ``n_probe`` cells of ``c`` nearest the query ``q``, as SQL."""
+    return f"""
+    SELECT cell FROM (
+        SELECT c.cell,
+               row_number() OVER (
+                   ORDER BY {round_portable_sql(_cos_sql("c.cemb", "q.qemb"), 6)} DESC,
+                            c.cell ASC
+               ) AS rn
+        FROM c CROSS JOIN q
+    ) WHERE rn <= {n_probe}
+    """
+
+
 def _ivf_topk_sql(n_probe: int) -> str:
     """The seeded-IVF top-10 as SQL, parameterized by nprobe (the body of
     ORACLE_IVF_KMEANS_TOPK without the final projection)."""
@@ -240,16 +275,7 @@ def _ivf_topk_sql(n_probe: int) -> str:
         SELECT a.vec_id,
                {round_portable_sql(_cos_sql("a.embedding", "q.qemb"), 6)} AS cos_sim
         FROM assign a
-        JOIN (
-            SELECT cell FROM (
-                SELECT c.cell,
-                       row_number() OVER (
-                           ORDER BY {round_portable_sql(_cos_sql("c.cemb", "q.qemb"), 6)} DESC,
-                                    c.cell ASC
-                       ) AS rn
-                FROM c CROSS JOIN q
-            ) WHERE rn <= {n_probe}
-        ) USING (cell)
+        JOIN ({_probe_sql(n_probe)}) USING (cell)
         CROSS JOIN q
         WHERE a.vec_id <> 0
     )
@@ -261,32 +287,9 @@ def _ivf_topk_sql(n_probe: int) -> str:
 # DuckDB twin of the seeded variant: same seeds, same rounded-cosine
 # argmax with lowest-cell tiebreak, same probe rule, same final ranking.
 ORACLE_IVF_KMEANS_TOPK = f"""
-WITH c AS (
-    SELECT vec_id AS cell, embedding AS cemb
-    FROM embeddings WHERE vec_id < {K_CELLS}
-),
+WITH {CELL_ASSIGN_SQL},
 q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
-assign AS (
-    SELECT vec_id, cell, embedding FROM (
-        SELECT e.vec_id, c.cell, e.embedding,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {round_portable_sql(_cos_sql("e.embedding", "c.cemb"), 6)} DESC,
-                            c.cell ASC
-               ) AS rn
-        FROM embeddings e CROSS JOIN c
-    ) WHERE rn = 1
-),
-probe AS (
-    SELECT cell FROM (
-        SELECT c.cell,
-               row_number() OVER (
-                   ORDER BY {round_portable_sql(_cos_sql("c.cemb", "q.qemb"), 6)} DESC,
-                            c.cell ASC
-               ) AS rn
-        FROM c CROSS JOIN q
-    ) WHERE rn <= {N_PROBE}
-)
+probe AS ({_probe_sql(N_PROBE)})
 SELECT vec_id, cell, cos_sim FROM (
     SELECT a.vec_id, a.cell,
            {round_portable_sql(_cos_sql("a.embedding", "q.qemb"), 6)} AS cos_sim
@@ -305,22 +308,8 @@ _RECALL_BLOCKS = "\nUNION ALL\n".join(
 )
 
 ORACLE_ANN_RECALL_AT_K = f"""
-WITH c AS (
-    SELECT vec_id AS cell, embedding AS cemb
-    FROM embeddings WHERE vec_id < {K_CELLS}
-),
+WITH {CELL_ASSIGN_SQL},
 q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
-assign AS (
-    SELECT vec_id, cell, embedding FROM (
-        SELECT e.vec_id, c.cell, e.embedding,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {round_portable_sql(_cos_sql("e.embedding", "c.cemb"), 6)} DESC,
-                            c.cell ASC
-               ) AS rn
-        FROM embeddings e CROSS JOIN c
-    ) WHERE rn = 1
-),
 exact AS (
     SELECT vec_id FROM (
         SELECT e.vec_id,

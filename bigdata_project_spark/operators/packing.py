@@ -52,7 +52,7 @@ SEQ_LEN = 512
 BUCKET_DOCS = 128
 
 
-def _pack_segments(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
+def _pack_segments(docs: DataFrame, seq_len: int) -> DataFrame:
     """The shared packing core: one row per (doc_id, seq_id) carrying the
     doc's global token offset ``off`` and length ``tok`` — everything
     both the count summary (:func:`pack_sequences`) and the trainer
@@ -110,33 +110,33 @@ def _pack_segments(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
     )
 
 
-def pack_sequences(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Assign every document a [start_bin, end_bin] span of training
     sequences via a distributed prefix sum over whitespace-token counts.
 
     Returns one row per (doc_id, seq_id) with the token count that doc
     contributes to that sequence.
     """
-    return _pack_segments(docs, seq_len).select(
+    return _pack_segments(docs, SEQ_LEN).select(
         "doc_id",
         "seq_id",
         (
-            F.least(F.col("off") + F.col("tok"), (F.col("seq_id") + 1) * seq_len)
-            - F.greatest(F.col("off"), F.col("seq_id") * seq_len)
+            F.least(F.col("off") + F.col("tok"), (F.col("seq_id") + 1) * SEQ_LEN)
+            - F.greatest(F.col("off"), F.col("seq_id") * SEQ_LEN)
         ).alias("seq_tokens"),
     )
 
 
-def pack_sequences_masked(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
+def pack_sequences_masked(docs: DataFrame) -> DataFrame:
     """The trainer-contract form of packing: one row per (seq_id, doc)
     SEGMENT with its position range inside the sequence and the
     boundary/loss-mask fields a dataloader materializes attention and
     loss masks from —
 
     - ``seg_start``/``seg_len``: the segment's [start, start+len) token
-      window within the ``seq_len``-token sequence (segments of one
+      window within the SEQ_LEN-token sequence (segments of one
       sequence tile it left-to-right; the last sequence may end short —
-      the pad tail is ``seq_len - sum(seg_len)``, derivable, not a row);
+      the pad tail is ``SEQ_LEN - sum(seg_len)``, derivable, not a row);
     - ``doc_start``: the document's first token lies in this sequence —
       the position that gets the BOS/boundary token and (convention)
       no loss; also where block-diagonal attention resets;
@@ -149,10 +149,10 @@ def pack_sequences_masked(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
     the contract fields are pure integer arithmetic over (off, tok,
     seq_id), so the plan's shuffle set is IDENTICAL to the summary
     variant's (plan-asserted in tests)."""
-    seg = _pack_segments(docs, seq_len)
-    seq_lo = F.col("seq_id") * seq_len
+    seg = _pack_segments(docs, SEQ_LEN)
+    seq_lo = F.col("seq_id") * SEQ_LEN
     seg_start_abs = F.greatest(F.col("off"), seq_lo)
-    seg_end_abs = F.least(F.col("off") + F.col("tok"), seq_lo + seq_len)
+    seg_end_abs = F.least(F.col("off") + F.col("tok"), seq_lo + SEQ_LEN)
     doc_start = F.col("off") >= seq_lo
     return seg.select(
         "seq_id",
@@ -160,7 +160,7 @@ def pack_sequences_masked(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
         (seg_start_abs - seq_lo).alias("seg_start"),
         (seg_end_abs - seg_start_abs).alias("seg_len"),
         doc_start.alias("doc_start"),
-        (F.col("off") + F.col("tok") <= seq_lo + seq_len).alias("doc_end"),
+        (F.col("off") + F.col("tok") <= seq_lo + SEQ_LEN).alias("doc_end"),
         (
             seg_end_abs - seg_start_abs - doc_start.cast("long")
         ).alias("loss_tokens"),
@@ -181,8 +181,9 @@ def query_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PACK_SEQUENCES = f"""
-WITH toks AS (
+# Each non-empty document's whitespace token count ``tok`` and its
+# offset ``off`` in the doc_id-ordered token stream, as oracle CTEs.
+_OFFS_SQL = """toks AS (
     SELECT * FROM (
         SELECT doc_id,
                CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS tok
@@ -194,7 +195,10 @@ offs AS (
            COALESCE(SUM(tok) OVER (ORDER BY doc_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
     FROM toks
-),
+)"""
+
+# ... and one ``exploded`` row per (document, SEQ_LEN bin it spans).
+_BINS_SQL = f"""{_OFFS_SQL},
 spans AS (
     SELECT doc_id, tok, CAST(off AS BIGINT) AS off,
            CAST(off // {SEQ_LEN} AS BIGINT) AS start_bin,
@@ -205,7 +209,11 @@ exploded AS (
     SELECT doc_id, off, tok,
            unnest(generate_series(start_bin, end_bin)) AS seq_id
     FROM spans
-),
+)"""
+
+
+ORACLE_PACK_SEQUENCES = f"""
+WITH {_BINS_SQL},
 scored AS (
     SELECT doc_id, seq_id,
            least(off + tok, (seq_id + 1) * {SEQ_LEN})
@@ -228,30 +236,7 @@ def query_pack_sequences_masked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_PACK_SEQUENCES_MASKED = f"""
-WITH toks AS (
-    SELECT * FROM (
-        SELECT doc_id,
-               CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS tok
-        FROM documents
-    ) WHERE tok > 0
-),
-offs AS (
-    SELECT doc_id, tok,
-           COALESCE(SUM(tok) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-    FROM toks
-),
-spans AS (
-    SELECT doc_id, tok, CAST(off AS BIGINT) AS off,
-           CAST(off // {SEQ_LEN} AS BIGINT) AS start_bin,
-           CAST((off + tok - 1) // {SEQ_LEN} AS BIGINT) AS end_bin
-    FROM offs
-),
-exploded AS (
-    SELECT doc_id, off, tok,
-           unnest(generate_series(start_bin, end_bin)) AS seq_id
-    FROM spans
-)
+WITH {_BINS_SQL}
 SELECT seq_id,
        doc_id,
        greatest(off, seq_id * {SEQ_LEN}) - seq_id * {SEQ_LEN} AS seg_start,
@@ -427,19 +412,7 @@ def query_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SHARD_MANIFEST = f"""
-WITH toks AS (
-    SELECT * FROM (
-        SELECT doc_id,
-               CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS tok
-        FROM documents
-    ) WHERE tok > 0
-),
-offs AS (
-    SELECT doc_id, tok,
-           COALESCE(SUM(tok) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-    FROM toks
-)
+WITH {_OFFS_SQL}
 SELECT CAST(off // {SHARD_TOKENS} AS BIGINT) AS shard_id,
        COUNT(*) AS n_docs,
        CAST(SUM(tok) AS BIGINT) AS n_tokens,

@@ -99,7 +99,7 @@ def oracle_emb_pca_sql(sf_dir: str) -> str:
     (hash-identical to Spark's) and embed them as a VALUES literal."""
     import duckdb
 
-    from bigdata_project_spark.operators.graph import ORACLE_EMB_GRAM_MATRIX
+    from bigdata_project_spark.operators.graph import LONG_EMBEDDINGS_SQL, ORACLE_EMB_GRAM_MATRIX
 
     con = duckdb.connect()
     con.execute(
@@ -111,12 +111,7 @@ def oracle_emb_pca_sql(sf_dir: str) -> str:
         f"({p}, {w1!r}, {w2!r})" for p, w1, w2 in _pca_weights(gram_rows)
     )
     return f"""
-WITH long AS (
-    SELECT vec_id,
-           generate_subscripts(embedding, 1) AS pos,
-           {round_portable_sql("CAST(unnest(embedding) AS DOUBLE)", 6)} AS v6
-    FROM embeddings
-),
+WITH {LONG_EMBEDDINGS_SQL},
 w(pos, w1, w2) AS (VALUES {values})
 SELECT vec_id,
        {round_portable_sql("CAST(SUM(CAST(v6 * w1 AS DECIMAL(27,12))) AS DOUBLE)", 6)} AS pc1,

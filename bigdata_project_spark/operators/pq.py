@@ -38,10 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.operators.ivf import (
+    CELL_ASSIGN_SQL,
     K_CELLS,
     N_PROBE,
     _assign_cells,
     _probe_order,
+    _probe_sql,
     _seed_vectors,
 )
 from bigdata_project_spark.sources.readers import load_table
@@ -162,46 +164,11 @@ def _sub(col: str, m: str) -> str:
     return f"{col}[{m} * {PQ_SUB} + 1 : {m} * {PQ_SUB} + {PQ_SUB}]"
 
 
-def _build_oracle_ivfpq() -> str:
-    """Composed DuckDB twin: the ivf oracle's assign/probe CTEs feeding
-    the pq oracle's codes/qt CTEs, with encoding restricted to probed
-    candidates exactly like the Spark plan."""
-    from bigdata_project_spark.functions.scalars import round_portable_sql
-    from bigdata_project_spark.operators.similarity import _cos_sql
-
-    return f"""
-WITH cc AS (
-    SELECT vec_id AS cell, embedding AS cemb
-    FROM embeddings WHERE vec_id < {K_CELLS}
-),
-q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
-assign AS (
-    SELECT vec_id, cell, embedding FROM (
-        SELECT e.vec_id, cc.cell, e.embedding,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {round_portable_sql(_cos_sql("e.embedding", "cc.cemb"), 6)} DESC,
-                            cc.cell ASC
-               ) AS rn
-        FROM embeddings e CROSS JOIN cc
-    ) WHERE rn = 1
-),
-probe AS (
-    SELECT cell FROM (
-        SELECT cc.cell,
-               row_number() OVER (
-                   ORDER BY {round_portable_sql(_cos_sql("cc.cemb", "q.qemb"), 6)} DESC,
-                            cc.cell ASC
-               ) AS rn
-        FROM cc CROSS JOIN q
-    ) WHERE rn <= {N_PROBE}
-),
-cand AS (
-    SELECT a.vec_id, a.embedding
-    FROM assign a JOIN probe USING (cell)
-    WHERE a.vec_id <> 0
-),
-ms AS (SELECT unnest(range({PQ_M})) AS m),
+# The ADC top-k over the CTE ``cand`` (vec_id, embedding): each
+# candidate's subvectors are PQ-encoded against the codebook (the first
+# PQ_K vectors, per subspace), and candidates rank by the summed
+# query-table distances.
+_ADC_TOPK_SQL = f"""ms AS (SELECT unnest(range({PQ_M})) AS m),
 cw AS (
     SELECT ms.m, e.vec_id AS code, {_sub("e.embedding", "ms.m")} AS cvec
     FROM embeddings e, ms
@@ -214,45 +181,13 @@ qt AS (
 ),
 codes AS (
     SELECT vec_id, m, code FROM (
-        SELECT c.vec_id, cw.m, cw.code,
-               row_number() OVER (
-                   PARTITION BY c.vec_id, cw.m
-                   ORDER BY {_l2_micro_sql(_sub("c.embedding", "cw.m"), "cw.cvec")} ASC,
-                            cw.code ASC
-               ) AS rn
-        FROM cand c CROSS JOIN cw
-    ) WHERE rn = 1
-)
-SELECT vec_id, CAST(SUM(micro) AS DOUBLE) / 1000000 AS adc_dist
-FROM codes JOIN qt USING (m, code)
-GROUP BY vec_id
-ORDER BY adc_dist ASC, vec_id ASC
-LIMIT {TOP_K}
-"""
-
-
-ORACLE_PQ_ADC_TOPK = f"""
-WITH ms AS (SELECT unnest(range({PQ_M})) AS m),
-cw AS (
-    SELECT ms.m, e.vec_id AS code, {_sub("e.embedding", "ms.m")} AS cvec
-    FROM embeddings e, ms
-    WHERE e.vec_id < {PQ_K}
-),
-qt AS (
-    SELECT cw.m, cw.code,
-           {_l2_micro_sql("cw.cvec", _sub("q.embedding", "cw.m"))} AS micro
-    FROM cw, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-),
-codes AS (
-    SELECT vec_id, m, code FROM (
         SELECT e.vec_id, cw.m, cw.code,
                row_number() OVER (
                    PARTITION BY e.vec_id, cw.m
                    ORDER BY {_l2_micro_sql(_sub("e.embedding", "cw.m"), "cw.cvec")} ASC,
                             cw.code ASC
                ) AS rn
-        FROM embeddings e CROSS JOIN cw
-        WHERE e.vec_id <> 0
+        FROM cand e CROSS JOIN cw
     ) WHERE rn = 1
 )
 SELECT vec_id, CAST(SUM(micro) AS DOUBLE) / 1000000 AS adc_dist
@@ -262,7 +197,23 @@ ORDER BY adc_dist ASC, vec_id ASC
 LIMIT {TOP_K}
 """
 
-ORACLE_IVFPQ_TOPK = _build_oracle_ivfpq()
+ORACLE_PQ_ADC_TOPK = f"""
+WITH cand AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id <> 0),
+{_ADC_TOPK_SQL}"""
+
+# Composed twin: the ivf oracle's cell and probe CTEs pick the
+# candidates, so encoding is restricted to probed candidates exactly
+# like the Spark plan.
+ORACLE_IVFPQ_TOPK = f"""
+WITH {CELL_ASSIGN_SQL},
+q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
+probe AS ({_probe_sql(N_PROBE)}),
+cand AS (
+    SELECT a.vec_id, a.embedding
+    FROM assign a JOIN probe USING (cell)
+    WHERE a.vec_id <> 0
+),
+{_ADC_TOPK_SQL}"""
 
 
 QUERIES = {

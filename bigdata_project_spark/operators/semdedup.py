@@ -44,7 +44,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable_sql
-from bigdata_project_spark.operators.ivf import K_CELLS, _assign_cells, _seed_centroids
+from bigdata_project_spark.operators.ivf import (
+    CELL_ASSIGN_SQL,
+    K_CELLS,
+    _assign_cells,
+    _seed_centroids,
+)
 from bigdata_project_spark.operators.similarity import _cos_sql
 from bigdata_project_spark.sources.readers import load_table
 
@@ -186,21 +191,7 @@ def query_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_SEMANTIC = f"""
-WITH c AS (
-    SELECT vec_id AS cell, embedding AS cemb
-    FROM embeddings WHERE vec_id < {K_CELLS}
-),
-assign AS (
-    SELECT vec_id, cell, embedding FROM (
-        SELECT e.vec_id, c.cell, e.embedding,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {round_portable_sql(_cos_sql("e.embedding", "c.cemb"), 6)} DESC,
-                            c.cell ASC
-               ) AS rn
-        FROM embeddings e CROSS JOIN c
-    ) WHERE rn = 1
-),
+WITH {CELL_ASSIGN_SQL},
 dup AS (
     SELECT b.vec_id AS vec_b, MIN(a.vec_id) AS dup_of
     FROM assign a JOIN assign b

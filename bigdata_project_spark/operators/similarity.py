@@ -93,6 +93,26 @@ LIMIT 10
 """
 
 
+def _cell_cosine_pairs(pdf, tau: float):
+    """The pairs of one cell's rows whose cosine, rounded to 1e-6, is at
+    least ``tau``: ``(rows sorted by vec_id, ia, ib, cos)`` with ``ia <
+    ib`` row positions. The Gram matrix is one BLAS matmul in float64."""
+    import numpy as np
+
+    pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+    m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", m, m))
+    # round to 1e-6 BEFORE thresholding: BLAS and the oracle's
+    # sequential fold differ by ~1 ulp, so a pair sitting exactly on
+    # the threshold must be judged on the rounded value both engines
+    # agree on
+    gram = np.floor((m @ m.T) / np.outer(norms, norms) * 1e6 + 0.5) / 1e6
+    ia, ib = np.triu_indices(len(pdf), k=1)
+    keep = gram[ia, ib] >= tau
+    ia, ib = ia[keep], ib[keep]
+    return pdf, ia, ib, gram[ia, ib]
+
+
 def query_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style same-cell pair search: cosine ≥ 0.35 within each label.
 
@@ -108,25 +128,7 @@ def query_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"), "vec_b": pd.Series(dtype="int64"),
-                 "label": pd.Series(dtype="int32"), "cos_sim": pd.Series(dtype="float64")}
-            )
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        # round to 1e-6 BEFORE thresholding: BLAS and the oracle's
-        # sequential fold differ by ~1 ulp, so a pair sitting exactly on
-        # the threshold must be judged on the rounded value both engines
-        # agree on
-        gram = np.floor((m @ m.T) / np.outer(norms, norms) * 1e6 + 0.5) / 1e6
-        ia, ib = np.triu_indices(len(pdf), k=1)
-        keep = gram[ia, ib] >= 0.35
-        ia, ib = ia[keep], ib[keep]
-        cos = gram[ia, ib] if len(ia) else np.array([], dtype=np.float64)
+        pdf, ia, ib, cos = _cell_cosine_pairs(pdf, 0.35)
         return pd.DataFrame(
             {
                 "vec_a": pdf["vec_id"].to_numpy()[ia],
@@ -175,22 +177,7 @@ def query_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"keep_doc": pd.Series(dtype="int64"), "dup_doc": pd.Series(dtype="int64"),
-                 "cos_sim": pd.Series(dtype="float64")}
-            )
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        # threshold on the 1e-6-rounded value (see query_neardup_pairs)
-        gram = np.floor((m @ m.T) / np.outer(norms, norms) * 1e6 + 0.5) / 1e6
-        ia, ib = np.triu_indices(len(pdf), k=1)
-        keep = gram[ia, ib] >= 0.99
-        ia, ib = ia[keep], ib[keep]
-        cos = gram[ia, ib] if len(ia) else np.array([], dtype=np.float64)
+        pdf, ia, ib, cos = _cell_cosine_pairs(pdf, 0.99)
         ids = pdf["vec_id"].to_numpy()
         return pd.DataFrame(
             {
@@ -237,7 +224,7 @@ N_PLANES = 32
 _EMB_DIM = 64
 
 
-def _plane_signs(plane: int, dim: int = _EMB_DIM) -> list[float]:
+def _plane_signs(plane: int) -> list[float]:
     """Deterministic ±1 hyperplane from md5(plane, dim-index).
 
     Materialized driver-side (hashlib gives the same md5 the engines do)
@@ -246,7 +233,7 @@ def _plane_signs(plane: int, dim: int = _EMB_DIM) -> list[float]:
     import hashlib
 
     out = []
-    for i in range(dim):
+    for i in range(_EMB_DIM):
         h = hashlib.md5(f"p{plane}d{i}".encode()).hexdigest()
         out.append(1.0 if int(h[:4], 16) % 2 == 1 else -1.0)
     return out

@@ -215,113 +215,67 @@ def hll_finalize(regs: DataFrame, exact: DataFrame, key: str) -> DataFrame:
     )
 
 
-_ORACLE_HLL_T = f"""
-WITH ev AS (
-    SELECT CAST(ts AS DATE) AS day,
-           CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS week,
-           user_id
-    FROM events
-),
-h AS (
-    SELECT week, {{h32}} AS h FROM ev
+def _hll_oracle_sql(key: str, source: str) -> str:
+    """The DuckDB HLL estimate per ``key`` over ``source``'s user_ids,
+    as CTEs and a final select."""
+    h32 = WORD_HASH32_SQL.format(w="CAST(user_id AS VARCHAR)")
+    return f"""h AS (
+    SELECT {key}, {h32} AS h FROM {source}
 ),
 rho AS (
-    SELECT week, h % {HLL_M} AS register,
+    SELECT {key}, h % {HLL_M} AS register,
            CASE WHEN h // {HLL_M} = 0 THEN 25
                 ELSE 25 - length(bin(h // {HLL_M}))
            END AS rho
     FROM h
 ),
--- the oracle sketches each week DIRECTLY (no daily stage): daily-merge
--- equivalence is max's associativity, which the parity check proves
-wk AS (SELECT week, register, MAX(rho) AS rho FROM rho GROUP BY 1, 2),
+reg AS (SELECT {key}, register, MAX(rho) AS rho FROM rho GROUP BY 1, 2),
 parts AS (
-    SELECT week, COUNT(*) AS m_present,
+    SELECT {key}, COUNT(*) AS m_present,
            SUM(1.0 / CAST((CAST(1 AS BIGINT) << rho) AS DOUBLE)) AS sum_present
-    FROM wk GROUP BY week
+    FROM reg GROUP BY {key}
 ),
 est AS (
-    SELECT week, v,
+    SELECT {key}, v,
            CASE WHEN raw_e <= CAST({HLL_SMALL_CUT!r} AS DOUBLE) AND v > 0
                 THEN CAST({HLL_M} AS DOUBLE)
                      * ln(CAST({HLL_M} AS DOUBLE) / CAST(v AS DOUBLE))
                 ELSE raw_e
            END AS e
     FROM (
-        SELECT week, {HLL_M} - m_present AS v,
+        SELECT {key}, {HLL_M} - m_present AS v,
                CAST({HLL_ALPHA_MM!r} AS DOUBLE)
                  / (sum_present + CAST({HLL_M} - m_present AS DOUBLE)) AS raw_e
         FROM parts
     )
 ),
 exact AS (
-    SELECT week, COUNT(DISTINCT user_id) AS n_users_exact FROM ev GROUP BY week
+    SELECT {key}, COUNT(DISTINCT user_id) AS n_users_exact
+    FROM {source} GROUP BY {key}
 )
-SELECT CAST(est.week AS VARCHAR) AS week,
+SELECT est.{key},
        {round_portable_sql("est.e", 6)} AS hll_estimate,
        exact.n_users_exact,
        CAST(est.v AS BIGINT) AS n_zero_registers,
        {round_portable_sql("(est.e - exact.n_users_exact) / exact.n_users_exact", 6)}
            AS rel_err
-FROM est JOIN exact ON est.week = exact.week
+FROM est JOIN exact ON est.{key} = exact.{key}
 """
 
-ORACLE_SKETCH_HLL_ROLLUP = _ORACLE_HLL_T.format(
-    h32=WORD_HASH32_SQL.format(w="CAST(user_id AS VARCHAR)")
-)
 
+# the oracle sketches each week DIRECTLY (no daily stage): daily-merge
+# equivalence is max's associativity, which the parity check proves
+ORACLE_SKETCH_HLL_ROLLUP = f"""
+WITH ev AS (
+    SELECT CAST(CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS VARCHAR) AS week, user_id
+    FROM events
+),
+{_hll_oracle_sql("week", "ev")}"""
 
 # DuckDB twin for the STREAMING per-event-type HLL (streaming/stateful.py
 # query_stream_hll_users): the batch sketch keyed by event_type — the
 # drained increment stream max-merges to exactly these registers
-_ORACLE_HLL_TYPE_T = f"""
-WITH h AS (
-    SELECT event_type, {{h32}} AS h FROM events
-),
-rho AS (
-    SELECT event_type, h % {HLL_M} AS register,
-           CASE WHEN h // {HLL_M} = 0 THEN 25
-                ELSE 25 - length(bin(h // {HLL_M}))
-           END AS rho
-    FROM h
-),
-reg AS (SELECT event_type, register, MAX(rho) AS rho FROM rho GROUP BY 1, 2),
-parts AS (
-    SELECT event_type, COUNT(*) AS m_present,
-           SUM(1.0 / CAST((CAST(1 AS BIGINT) << rho) AS DOUBLE)) AS sum_present
-    FROM reg GROUP BY event_type
-),
-est AS (
-    SELECT event_type, v,
-           CASE WHEN raw_e <= CAST({HLL_SMALL_CUT!r} AS DOUBLE) AND v > 0
-                THEN CAST({HLL_M} AS DOUBLE)
-                     * ln(CAST({HLL_M} AS DOUBLE) / CAST(v AS DOUBLE))
-                ELSE raw_e
-           END AS e
-    FROM (
-        SELECT event_type, {HLL_M} - m_present AS v,
-               CAST({HLL_ALPHA_MM!r} AS DOUBLE)
-                 / (sum_present + CAST({HLL_M} - m_present AS DOUBLE)) AS raw_e
-        FROM parts
-    )
-),
-exact AS (
-    SELECT event_type, COUNT(DISTINCT user_id) AS n_users_exact
-    FROM events GROUP BY event_type
-)
-SELECT est.event_type,
-       {round_portable_sql("est.e", 6)} AS hll_estimate,
-       exact.n_users_exact,
-       CAST(est.v AS BIGINT) AS n_zero_registers,
-       {round_portable_sql("(est.e - exact.n_users_exact) / exact.n_users_exact", 6)}
-           AS rel_err
-FROM est JOIN exact ON est.event_type = exact.event_type
-"""
-
-ORACLE_STREAM_HLL_USERS = _ORACLE_HLL_TYPE_T.format(
-    h32=WORD_HASH32_SQL.format(w="CAST(user_id AS VARCHAR)")
-)
-
+ORACLE_STREAM_HLL_USERS = f"WITH {_hll_oracle_sql('event_type', 'events')}"
 
 QUERIES = {
     "sketch_cms_topk": (query_cms_heavy_hitters, ORACLE_CMS_HEAVY_HITTERS),

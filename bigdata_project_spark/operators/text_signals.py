@@ -564,27 +564,29 @@ def query_text_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    return (
+    return _with_jaccard(
         shared.join(
             totals.select(F.col("source").alias("source_a"), F.col("n").alias("n_a")),
             "source_a",
-        )
-        .join(
+        ).join(
             totals.select(F.col("source").alias("source_b"), F.col("n").alias("n_b")),
             "source_b",
         )
-        .select(
-            "source_a",
-            "source_b",
-            "n_shared",
-            "n_a",
-            "n_b",
-            round_portable(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                6,
-            ).alias("jaccard"),
-        )
+    )
+
+
+def _with_jaccard(pairs: DataFrame) -> DataFrame:
+    """The source-pair overlap columns of ``pairs``, with the Jaccard of
+    the two sources' gram sets."""
+    return pairs.select(
+        "source_a",
+        "source_b",
+        "n_shared",
+        "n_a",
+        "n_b",
+        round_portable(
+            F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared")), 6
+        ).alias("jaccard"),
     )
 
 
@@ -688,23 +690,11 @@ def source_overlap_bitmap(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     names_a = idx_df.select(F.col("idx").alias("ia"), F.col("source").alias("source_a"))
     names_b = idx_df.select(F.col("idx").alias("ib"), F.col("source").alias("source_b"))
-    return (
+    return _with_jaccard(
         shared.join(totals.select(F.col("idx").alias("ia"), F.col("n").alias("n_a")), "ia")
         .join(totals.select(F.col("idx").alias("ib"), F.col("n").alias("n_b")), "ib")
         .join(F.broadcast(names_a), "ia")
         .join(F.broadcast(names_b), "ib")
-        .select(
-            "source_a",
-            "source_b",
-            "n_shared",
-            "n_a",
-            "n_b",
-            round_portable(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                6,
-            ).alias("jaccard"),
-        )
     )
 
 

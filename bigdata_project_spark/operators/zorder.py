@@ -33,12 +33,12 @@ Z_BITS = 16  # per dimension → 32-bit z-value; exact in BIGINT arithmetic
 N_BUCKETS = 32
 
 
-def zvalue(x: Column, y: Column, bits: int = Z_BITS) -> Column:
-    """Interleave the low ``bits`` bits of two non-negative ints:
+def zvalue(x: Column, y: Column) -> Column:
+    """Interleave the low Z_BITS bits of two non-negative ints:
     z = Σⱼ bitⱼ(x)·4ʲ + 2·bitⱼ(y)·4ʲ. floor-div/mod arithmetic (not
     engine bit-ops) so the DuckDB twin is textually identical."""
     z: Column | None = None
-    for j in range(bits):
+    for j in range(Z_BITS):
         bx = F.floor(x / (2**j)) % 2
         by = F.floor(y / (2**j)) % 2
         term = (bx * (2 ** (2 * j)) + by * (2 ** (2 * j + 1))).cast("bigint")
@@ -115,8 +115,8 @@ def _zvalue_spread_sql_ctes(
     return ",\n".join(ctes)
 
 
-def _scaled_sql(col: str, lo: str, hi: str, bits: int = Z_BITS) -> str:
-    """Min/max-scale the integer ``col`` onto [0, 2^bits), in both
+def _scaled_sql(col: str, lo: str, hi: str) -> str:
+    """Min/max-scale the integer ``col`` onto [0, 2^Z_BITS), in both
     engines. Raw-bit interleave degenerates when one dim's domain is much
     narrower than the other's (its high bits are constant zero and stop
     participating in the ordering), so — like Delta's OPTIMIZE ZORDER,
@@ -126,7 +126,7 @@ def _scaled_sql(col: str, lo: str, hi: str, bits: int = Z_BITS) -> str:
     bucket computation in ONE lazy plan). (v-lo)*65535 stays ≤ ~2^53,
     so the DOUBLE division is exact-rounded identically on both engines."""
     return (
-        f"CAST(floor(CAST(({col} - {lo}) * {(2**bits) - 1} AS DOUBLE)"
+        f"CAST(floor(CAST(({col} - {lo}) * {(2**Z_BITS) - 1} AS DOUBLE)"
         f" / greatest({hi} - {lo}, 1)) AS BIGINT)"
     )
 

@@ -122,7 +122,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     from bigdata_project_spark import registry
-    from bigdata_project_spark.session import get_spark
+    from bigdata_project_spark.session import get_spark, stop_spark
 
     spark = get_spark("oracle_check")
     con = duckdb_connection(sf_dir)
@@ -147,6 +147,7 @@ def main() -> int:
                 print(f"    {p}")
         else:
             print(f"{name:35s} ok")
+    stop_spark(spark)
     return 1 if failed else 0
 
 

@@ -23,7 +23,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, GroupedData, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
@@ -187,61 +187,47 @@ def _lattice_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def query_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (grouping-set aggregation)."""
-    return (
-        _lattice_cells(spark, sf_dir)
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("__n").alias("n_rows"),
-            F.sum("__q").cast("double").alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n_rows",
-            "sum_qty",
-        )
+def _lattice_totals(grouped: GroupedData) -> DataFrame:
+    """Sum a grouping lattice over :func:`_lattice_cells`, with ``ALL``
+    where a set leaves a column out."""
+    return grouped.agg(
+        F.sum("__n").alias("n_rows"),
+        F.sum("__q").cast("double").alias("sum_qty"),
+    ).select(
+        F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
+        F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
+        "n_rows",
+        "sum_qty",
     )
 
 
-ORACLE_ROLLUP_SUMMARY = """
+def _lattice_oracle(group_by: str) -> str:
+    """The grouping-lattice oracle for one ``GROUP BY`` clause."""
+    return f"""
 SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
        COALESCE(l_linestatus, 'ALL') AS linestatus,
        COUNT(*) AS n_rows,
        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
 FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
+GROUP BY {group_by}
 """
+
+
+def query_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLUP hierarchy totals (grouping-set aggregation)."""
+    return _lattice_totals(_lattice_cells(spark, sf_dir).rollup("l_returnflag", "l_linestatus"))
+
+
+ORACLE_ROLLUP_SUMMARY = _lattice_oracle("ROLLUP (l_returnflag, l_linestatus)")
 
 
 def query_cube_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all 2^n grouping combinations (rollup's lattice superset).
     Runs over the pre-aggregated cells — see :func:`_lattice_cells`."""
-    return (
-        _lattice_cells(spark, sf_dir)
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("__n").alias("n_rows"),
-            F.sum("__q").cast("double").alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n_rows",
-            "sum_qty",
-        )
-    )
+    return _lattice_totals(_lattice_cells(spark, sf_dir).cube("l_returnflag", "l_linestatus"))
 
 
-ORACLE_CUBE_SUMMARY = """
-SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-       COALESCE(l_linestatus, 'ALL') AS linestatus,
-       COUNT(*) AS n_rows,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
+ORACLE_CUBE_SUMMARY = _lattice_oracle("CUBE (l_returnflag, l_linestatus)")
 
 
 def query_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,38 +272,15 @@ def query_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here the two 1-D marginals plus the 2-D cells, NOT the grand
     total — exactly what CUBE can't express without a filter). Runs
     over the pre-aggregated cells — see :func:`_lattice_cells`."""
-    return (
-        _lattice_cells(spark, sf_dir)
-        .groupingSets(
-            [
-                ["l_returnflag", "l_linestatus"],
-                ["l_returnflag"],
-                ["l_linestatus"],
-            ],
-            "l_returnflag",
-            "l_linestatus",
-        )
-        .agg(
-            F.sum("__n").alias("n_rows"),
-            F.sum("__q").cast("double").alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n_rows",
-            "sum_qty",
-        )
+    sets = [["l_returnflag", "l_linestatus"], ["l_returnflag"], ["l_linestatus"]]
+    return _lattice_totals(
+        _lattice_cells(spark, sf_dir).groupingSets(sets, "l_returnflag", "l_linestatus")
     )
 
 
-ORACLE_GROUPING_SETS = """
-SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-       COALESCE(l_linestatus, 'ALL') AS linestatus,
-       COUNT(*) AS n_rows,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus))
-"""
+ORACLE_GROUPING_SETS = _lattice_oracle(
+    "GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus))"
+)
 
 
 def query_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

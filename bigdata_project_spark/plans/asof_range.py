@@ -31,31 +31,44 @@ from bigdata_project_spark.sources.readers import load_table
 # ------------------------------------------------------------ as-of join --
 
 
+# direction -> (the right side's tag, the window frame, the fill): the
+# right row sorts before a left row at equal ts going backward and after
+# it going forward, so either way a left row matches a right row at its ts.
+_ASOF_DIRECTIONS = {
+    "backward": (0, (W.unboundedPreceding, W.currentRow), F.last),
+    "forward": (1, (W.currentRow, W.unboundedFollowing), F.first),
+}
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
     ts: str,
     right_cols: list[str],
+    direction: str,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Left as-of join: attach the most recent ``right`` row with
-    ``right.ts <= left.ts`` per key. Union + last_value(ignorenulls) over
-    a (key)-partitioned (ts, side)-ordered window; ties at equal ts see
-    the right row (side 0 sorts first), matching ``ASOF ... ON l.ts >=
-    r.ts`` semantics.
+    """As-of join per key. ``direction="backward"`` attaches the most
+    recent ``right`` row with ``right.ts <= left.ts`` (``ASOF ... ON l.ts
+    >= r.ts``); ``"forward"`` attaches the earliest one with ``right.ts >=
+    left.ts``. Union + last/first_value(ignorenulls) over a
+    (key)-partitioned (ts, side)-ordered window; state per task is one row.
 
     ``tiebreak`` names a right-side column that uniquely orders right rows
     within (key, ts); among equal-ts right rows the LARGEST tiebreak value
-    wins. Without it, equal-ts right rows are picked partition-layout-
-    dependently (DuckDB ASOF is likewise arbitrary there) — pass a unique
-    id whenever ties are possible so results are reproducible."""
+    wins going backward and the SMALLEST going forward (the first one the
+    forward scan meets). Without it, equal-ts right rows are picked
+    partition-layout-dependently (DuckDB ASOF is likewise arbitrary there)
+    — pass a unique id whenever ties are possible so results are
+    reproducible."""
+    right_side, frame, fill = _ASOF_DIRECTIONS[direction]
     lcols = [c for c in left.columns if c not in (key, ts)]
     tb_r = F.col(tiebreak) if tiebreak else F.lit(0)
     tagged_r = right.select(
         key,
         ts,
-        F.lit(0).alias("__side"),
+        F.lit(right_side).alias("__side"),
         tb_r.alias("__tb"),
         *[F.col(c).alias(f"__r_{c}") for c in right_cols],
         *[F.lit(None).cast(dict(left.dtypes)[c]).alias(c) for c in lcols],
@@ -64,7 +77,7 @@ def asof_join(
     tagged_l = left.select(
         key,
         ts,
-        F.lit(1).alias("__side"),
+        F.lit(1 - right_side).alias("__side"),
         F.lit(None).cast(tb_type).alias("__tb"),
         *[F.lit(None).cast(dict(right.dtypes)[c]).alias(f"__r_{c}") for c in right_cols],
         *lcols,
@@ -72,7 +85,7 @@ def asof_join(
     w = (
         W.partitionBy(key)
         .orderBy(F.col(ts).asc(), F.col("__side").asc(), F.col("__tb").asc_nulls_last())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+        .rowsBetween(*frame)
     )
     # carry the right row's ts alongside its payload
     enriched = tagged_r.withColumn("__r_ts", F.col(ts)).unionByName(
@@ -83,17 +96,17 @@ def asof_join(
     # per-column ignorenulls fills would mix rows whenever the matched
     # row holds a NULL payload column (DuckDB ASOF keeps the row intact).
     row_struct = F.when(
-        F.col("__side") == 0,
+        F.col("__side") == right_side,
         F.struct(
             F.col("__r_ts").alias("__ts"),
             *[F.col(f"__r_{c}").alias(c) for c in right_cols],
         ),
     )
     filled = enriched.select(
-        "*", F.last(row_struct, ignorenulls=True).over(w).alias("__asof")
+        "*", fill(row_struct, ignorenulls=True).over(w).alias("__asof")
     )
     return (
-        filled.filter(F.col("__side") == 1)
+        filled.filter(F.col("__side") == 1 - right_side)
         .select(
             key,
             ts,
@@ -117,7 +130,7 @@ def query_asof_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFr
     # tiebreak=event_id: equal-(user_id, ts) clicks resolve to the max
     # event_id — the oracle encodes the same rule via arg_max
     out = asof_join(
-        purchases, clicks, key="user_id", ts="ts", right_cols=["value"], tiebreak="event_id"
+        purchases, clicks, "user_id", "ts", ["value"], "backward", tiebreak="event_id"
     )
     return out.select(
         "event_id",
@@ -150,70 +163,6 @@ SELECT p.event_id, p.user_id,
 FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
 """
 
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    right_cols: list[str],
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Forward as-of join: attach the EARLIEST ``right`` row with
-    ``right.ts >= left.ts`` per key — the mirror of :func:`asof_join`
-    (same union + one partitioned window, state per task is one row).
-    Among equal-ts right rows the SMALLEST tiebreak wins (the first one
-    the forward scan meets); left rows at the same ts still match
-    (right sorts after left at equal ts via the side flag)."""
-    lcols = [c for c in left.columns if c not in (key, ts)]
-    tb_r = F.col(tiebreak) if tiebreak else F.lit(0)
-    tagged_r = right.select(
-        key,
-        ts,
-        F.lit(1).alias("__side"),
-        tb_r.alias("__tb"),
-        *[F.col(c).alias(f"__r_{c}") for c in right_cols],
-        *[F.lit(None).cast(dict(left.dtypes)[c]).alias(c) for c in lcols],
-    )
-    tb_type = dict(right.dtypes)[tiebreak] if tiebreak else "int"
-    tagged_l = left.select(
-        key,
-        ts,
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(tb_type).alias("__tb"),
-        *[F.lit(None).cast(dict(right.dtypes)[c]).alias(f"__r_{c}") for c in right_cols],
-        *lcols,
-    )
-    w = (
-        W.partitionBy(key)
-        .orderBy(F.col(ts).asc(), F.col("__side").asc(), F.col("__tb").asc_nulls_last())
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    enriched = tagged_r.withColumn("__r_ts", F.col(ts)).unionByName(
-        tagged_l.withColumn("__r_ts", F.lit(None).cast(dict(right.dtypes)[ts]))
-    )
-    # Same single-struct fill as the backward form: all right fields
-    # must come from the SAME matched row (see asof_join).
-    row_struct = F.when(
-        F.col("__side") == 1,
-        F.struct(
-            F.col("__r_ts").alias("__ts"),
-            *[F.col(f"__r_{c}").alias(c) for c in right_cols],
-        ),
-    )
-    filled = enriched.select(
-        "*", F.first(row_struct, ignorenulls=True).over(w).alias("__asof")
-    )
-    return (
-        filled.filter(F.col("__side") == 0)
-        .select(
-            key,
-            ts,
-            *lcols,
-            *[F.col(f"__asof.{c}").alias(f"right_{c}") for c in right_cols],
-            F.col("__asof.__ts").alias("right_ts"),
-        )
-    )
-
 
 def query_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward twin of ``join_asof``: for every click, the user's next
@@ -225,8 +174,8 @@ def query_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value", "event_id"
     )
-    out = asof_join_forward(
-        clicks, purchases, key="user_id", ts="ts", right_cols=["value"], tiebreak="event_id"
+    out = asof_join(
+        clicks, purchases, "user_id", "ts", ["value"], "forward", tiebreak="event_id"
     )
     return out.select(
         "event_id",

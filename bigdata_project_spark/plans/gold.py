@@ -291,10 +291,7 @@ def _oracle_gold_overnights_seasonality() -> str:
 
     return f"""
 WITH silver AS ({silver_people_day.ORACLE_OVERNIGHTS}),
-holidays AS (
-    SELECT DISTINCT CAST(date_trunc('month', l_shipdate) AS DATE) AS holiday_date
-    FROM lineitem
-),
+{silver_od.HOLIDAYS_SQL},
 enriched AS (
     SELECT *, CAST(strptime(date, '%Y-%m-%d') AS DATE) AS d FROM silver
 )

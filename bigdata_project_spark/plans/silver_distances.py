@@ -57,10 +57,9 @@ def query_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zones(spark, sf_dir)
 
 
-def query_zones_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full G1-G4 zonification path: WKT text (as stored in bronze,
-    reference bronze/utils.py:679-681) → parse → ST_Multi promotion →
-    area-weighted centroid → ST_X/ST_Y.
+def _wkt_zones(spark: SparkSession, sf_dir: str, centroids) -> DataFrame:
+    """Nation rows as bronze WKT zones, with the centroids that
+    ``centroids(bronze)`` parses from their ``wkt`` column, rounded.
 
     Each nation key k generates a MULTIPOLYGON of two disjoint triangles
     with areas 3 and 6, so the area-weighted centroid ((9k+74)/9, 67/9)
@@ -74,20 +73,26 @@ def query_zones_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
         k, k + 2, k, k,
         k + 10, k + 16, k + 10, k + 10,
     )
-    from bigdata_project_spark.functions.geo import wkt_centroids
-
     bronze = nation.select(
         F.col("n_nationkey").cast("string").alias("id"),
         F.col("n_name").alias("name"),
         wkt.alias("wkt"),
     )
-    parsed = wkt_centroids(bronze, "wkt")
-    return parsed.select(
+    return centroids(bronze).select(
         "id",
         "name",
         round_portable(F.col("centroid_lon"), 6).alias("centroid_lon"),
         round_portable(F.col("centroid_lat"), 6).alias("centroid_lat"),
     )
+
+
+def query_zones_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full G1-G4 zonification path: WKT text (as stored in bronze,
+    reference bronze/utils.py:679-681) → parse → ST_Multi promotion →
+    area-weighted centroid → ST_X/ST_Y (see :func:`_wkt_zones`)."""
+    from bigdata_project_spark.functions.geo import wkt_centroids
+
+    return _wkt_zones(spark, sf_dir, wkt_centroids)
 
 
 def query_zones_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,25 +103,7 @@ def query_zones_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row proves is that the dispatch seam itself is correct."""
     from bigdata_project_spark.functions.geo import wkt_centroids_auto
 
-    nation = load_table(spark, sf_dir, "nation")
-    k = F.col("n_nationkey")
-    wkt = F.format_string(
-        "MULTIPOLYGON(((%d 0, %d 0, %d 3, %d 0)), ((%d 10, %d 10, %d 12, %d 10)))",
-        k, k + 2, k, k,
-        k + 10, k + 16, k + 10, k + 10,
-    )
-    bronze = nation.select(
-        F.col("n_nationkey").cast("string").alias("id"),
-        F.col("n_name").alias("name"),
-        wkt.alias("wkt"),
-    )
-    parsed = wkt_centroids_auto(spark, bronze, "wkt")
-    return parsed.select(
-        "id",
-        "name",
-        round_portable(F.col("centroid_lon"), 6).alias("centroid_lon"),
-        round_portable(F.col("centroid_lat"), 6).alias("centroid_lat"),
-    )
+    return _wkt_zones(spark, sf_dir, lambda bronze: wkt_centroids_auto(spark, bronze, "wkt"))
 
 
 ORACLE_ZONES_WKT = f"""

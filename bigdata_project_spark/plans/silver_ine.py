@@ -33,7 +33,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import (
@@ -113,6 +113,38 @@ def _bronze_ine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _crosswalk_join(spark: SparkSession, sf_dir: str, fact: DataFrame, name_col: str) -> DataFrame:
+    """J1: the ILIKE join of ``fact[name_col]`` against the upper-cased
+    name dim (case-insensitive eq); J2: the equi join to the crosswalk,
+    whose even-keyed rows carry NULL zones (P10)."""
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    muni = cust.select(
+        F.upper(F.col("c_name")).alias("m_nombre"),
+        F.col("c_custkey").alias("m_codigo"),
+    )
+    cross = supp.select(
+        F.col("s_suppkey").alias("municipio_ine"),
+        F.when(F.col("s_suppkey") % 2 == 1, F.concat(F.lit("D"), F.col("s_suppkey"))).alias("distrito_mitma"),
+        F.when(F.col("s_suppkey") % 3 == 1, F.concat(F.lit("M"), F.col("s_suppkey"))).alias("municipio_mitma"),
+        F.when(F.col("s_suppkey") % 5 == 1, F.concat(F.lit("G"), F.col("s_suppkey"))).alias("gau_mitma"),
+    )
+    return ilike_name_join(fact, name_col, muni, "m_nombre").join(
+        F.broadcast(cross),
+        F.col("m_codigo") % 100 == F.col("municipio_ine"),
+        "left",
+    )
+
+
+def _has_zone() -> Column:
+    """P10: the OR-of-NOT-NULL zone guard."""
+    return (
+        F.col("distrito_mitma").isNotNull()
+        | F.col("municipio_mitma").isNotNull()
+        | F.col("gau_mitma").isNotNull()
+    )
+
+
 _BRONZE_SQL = """
     SELECT CAST(c_custkey AS VARCHAR) AS COD,
            c_name || '. ' || c_mktsegment || '. CNAE total' AS Nombre,
@@ -128,11 +160,21 @@ _BRONZE_SQL = """
     ) d ON c_custkey = d.o_custkey
 """
 
+# J1's name dim and J2's crosswalk, as oracle CTEs
+_CROSSWALK_SQL = """muni AS (
+    SELECT upper(c_name) AS m_nombre, c_custkey AS m_codigo FROM customer
+),
+cross_w AS (
+    SELECT s_suppkey AS municipio_ine,
+           CASE WHEN s_suppkey % 2 = 1 THEN 'D' || CAST(s_suppkey AS VARCHAR) END AS distrito_mitma,
+           CASE WHEN s_suppkey % 3 = 1 THEN 'M' || CAST(s_suppkey AS VARCHAR) END AS municipio_mitma,
+           CASE WHEN s_suppkey % 5 = 1 THEN 'G' || CAST(s_suppkey AS VARCHAR) END AS gau_mitma
+    FROM supplier
+)"""
+
 
 def query_ine_empresas(spark: SparkSession, sf_dir: str) -> DataFrame:
     ef = _bronze_ine(spark, sf_dir)
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
 
     # J5 explode + F8/F9/F10 string surgery + F6 epoch date + P7 guard
     exploded = (
@@ -161,33 +203,11 @@ def query_ine_empresas(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_by=[F.col("fecha").desc(), F.col("valor").desc(), F.col("oid").desc()],
     ).drop("oid")
 
-    # J1: ILIKE join against the upper-cased name dim (case-insensitive eq)
-    muni = cust.select(
-        F.upper(F.col("c_name")).alias("m_nombre"),
-        F.col("c_custkey").alias("m_codigo"),
-    )
-    # J2: equi join to the crosswalk; even-keyed rows carry NULL zones (P10)
-    cross = supp.select(
-        F.col("s_suppkey").alias("municipio_ine"),
-        F.when(F.col("s_suppkey") % 2 == 1, F.concat(F.lit("D"), F.col("s_suppkey"))).alias("distrito_mitma"),
-        F.when(F.col("s_suppkey") % 3 == 1, F.concat(F.lit("M"), F.col("s_suppkey"))).alias("municipio_mitma"),
-        F.when(F.col("s_suppkey") % 5 == 1, F.concat(F.lit("G"), F.col("s_suppkey"))).alias("gau_mitma"),
-    )
-
     joined = (
-        ilike_name_join(one, "municipio", muni, "m_nombre")
-        .join(
-            F.broadcast(cross),
-            F.col("m_codigo") % 100 == F.col("municipio_ine"),
-            "left",
-        )
+        _crosswalk_join(spark, sf_dir, one, "municipio")
         # P5: ILIKE '%CNAE%' predicate + P10 OR-of-NOT-NULL zone guard
         .filter(F.upper(F.col("tipo")).contains("CNAE"))
-        .filter(
-            F.col("distrito_mitma").isNotNull()
-            | F.col("municipio_mitma").isNotNull()
-            | F.col("gau_mitma").isNotNull()
-        )
+        .filter(_has_zone())
     )
     return joined.select(
         "COD",
@@ -212,8 +232,6 @@ def query_ine_poblacion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY (nondeterministic pick); we add explicit tiebreakers mirrored
     in the oracle (SURVEY.md §7.4)."""
     ef = _bronze_ine(spark, sf_dir)
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
 
     flat = (
         ef.filter(F.col("Data").isNotNull() & (F.size("Data") > 0))
@@ -231,29 +249,7 @@ def query_ine_poblacion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("data_item.Id").alias("oid"),
         )
     )
-    muni = cust.select(
-        F.upper(F.col("c_name")).alias("m_nombre"),
-        F.col("c_custkey").alias("m_codigo"),
-    )
-    cross = supp.select(
-        F.col("s_suppkey").alias("municipio_ine"),
-        F.when(F.col("s_suppkey") % 2 == 1, F.concat(F.lit("D"), F.col("s_suppkey"))).alias("distrito_mitma"),
-        F.when(F.col("s_suppkey") % 3 == 1, F.concat(F.lit("M"), F.col("s_suppkey"))).alias("municipio_mitma"),
-        F.when(F.col("s_suppkey") % 5 == 1, F.concat(F.lit("G"), F.col("s_suppkey"))).alias("gau_mitma"),
-    )
-    joined = (
-        ilike_name_join(flat, "nombre", muni, "m_nombre")
-        .join(
-            F.broadcast(cross),
-            F.col("m_codigo") % 100 == F.col("municipio_ine"),
-            "left",
-        )
-        .filter(
-            F.col("distrito_mitma").isNotNull()
-            | F.col("municipio_mitma").isNotNull()
-            | F.col("gau_mitma").isNotNull()
-        )
-    )
+    joined = _crosswalk_join(spark, sf_dir, flat, "nombre").filter(_has_zone())
     # A2 after the joins, as the reference does — with deterministic order
     one = distinct_on(
         joined,
@@ -284,16 +280,7 @@ flat AS (
     FROM ef, UNNEST(ef.Data) AS t(data_item)
     WHERE Data IS NOT NULL AND len(Data) > 0
 ),
-muni AS (
-    SELECT upper(c_name) AS m_nombre, c_custkey AS m_codigo FROM customer
-),
-cross_w AS (
-    SELECT s_suppkey AS municipio_ine,
-           CASE WHEN s_suppkey % 2 = 1 THEN 'D' || CAST(s_suppkey AS VARCHAR) END AS distrito_mitma,
-           CASE WHEN s_suppkey % 3 = 1 THEN 'M' || CAST(s_suppkey AS VARCHAR) END AS municipio_mitma,
-           CASE WHEN s_suppkey % 5 = 1 THEN 'G' || CAST(s_suppkey AS VARCHAR) END AS gau_mitma
-    FROM supplier
-),
+{_CROSSWALK_SQL},
 joined AS (
     SELECT flat.*, muni.m_codigo, cross_w.distrito_mitma, cross_w.municipio_mitma, cross_w.gau_mitma
     FROM flat
@@ -387,16 +374,7 @@ one AS (
         FROM exploded
     ) WHERE rn = 1
 ),
-muni AS (
-    SELECT upper(c_name) AS m_nombre, c_custkey AS m_codigo FROM customer
-),
-cross_w AS (
-    SELECT s_suppkey AS municipio_ine,
-           CASE WHEN s_suppkey % 2 = 1 THEN 'D' || CAST(s_suppkey AS VARCHAR) END AS distrito_mitma,
-           CASE WHEN s_suppkey % 3 = 1 THEN 'M' || CAST(s_suppkey AS VARCHAR) END AS municipio_mitma,
-           CASE WHEN s_suppkey % 5 = 1 THEN 'G' || CAST(s_suppkey AS VARCHAR) END AS gau_mitma
-    FROM supplier
-)
+{_CROSSWALK_SQL}
 SELECT COD, municipio, segmento, fecha, valor, distrito_mitma, municipio_mitma, gau_mitma
 FROM one
 LEFT JOIN muni ON lower(one.municipio) LIKE lower(muni.m_nombre)

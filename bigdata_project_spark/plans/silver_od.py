@@ -98,7 +98,14 @@ def query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE = """
+# The fixture's holiday calendar (month starts of the ship dates), as an
+# oracle CTE.
+HOLIDAYS_SQL = """holidays AS (
+    SELECT DISTINCT CAST(date_trunc('month', l_shipdate) AS DATE) AS holiday_date
+    FROM lineitem
+)"""
+
+ORACLE = f"""
 WITH base AS (
     SELECT 'distrito'  AS zone_level, * EXCLUDE (l_returnflag) FROM lineitem WHERE l_returnflag = 'A'
     UNION ALL
@@ -106,10 +113,7 @@ WITH base AS (
     UNION ALL
     SELECT 'gau'       AS zone_level, * EXCLUDE (l_returnflag) FROM lineitem WHERE l_returnflag = 'R'
 ),
-holidays AS (
-    SELECT DISTINCT CAST(date_trunc('month', l_shipdate) AS DATE) AS holiday_date
-    FROM lineitem
-),
+{HOLIDAYS_SQL},
 enriched AS (
     SELECT
         zone_level,

@@ -26,6 +26,13 @@ from bigdata_project_spark.sources.readers import load_table
 _BRANCHES = {"distrito": "O", "municipio": "F", "gau": "P"}
 
 
+def _zone_union(bronze: DataFrame, flag: str, levels: dict[str, str]) -> DataFrame:
+    """U1: the per-zone bronze tables — the rows of ``bronze`` whose
+    ``flag`` is each level's value — unioned under ``zone_level``."""
+    branches = {level: bronze.filter(F.col(flag) == v).drop(flag) for level, v in levels.items()}
+    return union_conform(branches, discriminator="zone_level")
+
+
 def query(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
 
@@ -40,11 +47,7 @@ def query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("o_totalprice").cast("bigint").cast("string").alias("personas_str"),
     )
 
-    branches = {
-        level: bronze.filter(F.col("o_orderstatus") == st).drop("o_orderstatus")
-        for level, st in _BRANCHES.items()
-    }
-    base = union_conform(branches, discriminator="zone_level")
+    base = _zone_union(bronze, "o_orderstatus", _BRANCHES)
 
     conformed = base.select(
         "zone_level",
@@ -77,11 +80,7 @@ def query_overnights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").cast("string").alias("zona_residencia"),
         F.floor("l_quantity").cast("bigint").cast("string").alias("personas_str"),
     )
-    branches = {
-        level: bronze.filter(F.col("l_returnflag") == rf).drop("l_returnflag")
-        for level, rf in _OV_BRANCHES.items()
-    }
-    base = union_conform(branches, discriminator="zone_level")
+    base = _zone_union(bronze, "l_returnflag", _OV_BRANCHES)
 
     conformed = base.select(
         "zone_level",

@@ -49,6 +49,21 @@ _REVENUE_SQL = (
     "CAST(l_extendedprice AS DECIMAL(18,2))"
     " * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
 )
+# The Q3, Q7 and Q10 oracles' revenue aggregate over lineitem ⋈ orders ⋈
+# customer; each puts its group keys before it and its joins after.
+_LOC_AGG_SQL = f"""SUM({_REVENUE_SQL}) AS rev_dec,
+           COUNT(*) AS n_items
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey"""
+
+
+def _revenue_items(agg: DataFrame) -> DataFrame:
+    """``agg``'s DECIMAL ``rev_dec`` as a 2-place double ``revenue``, and
+    its ``n_items``."""
+    return agg.select(
+        round_portable(F.col("rev_dec").cast("double"), 2).alias("revenue"), "n_items"
+    )
 
 
 def query_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,11 +97,7 @@ def query_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SHIPPING_PRIORITY = f"""
 WITH agg AS (
     SELECT l_orderkey, o_orderdate,
-           SUM({_REVENUE_SQL}) AS rev_dec,
-           COUNT(*) AS n_items
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
+           {_LOC_AGG_SQL}
     WHERE c_mktsegment = '{Q3_SEGMENT}'
       AND o_orderdate < TIMESTAMP '{Q3_DATE} 00:00:00'
       AND l_shipdate > TIMESTAMP '{Q3_DATE} 00:00:00'
@@ -194,11 +205,7 @@ def query_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_RETURNED_ITEMS = f"""
 WITH agg AS (
     SELECT c_custkey, c_name, n_name,
-           SUM({_REVENUE_SQL}) AS rev_dec,
-           COUNT(*) AS n_items
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
+           {_LOC_AGG_SQL}
     JOIN nation ON c_nationkey = n_nationkey
     WHERE l_returnflag = 'R'
       AND o_orderdate >= TIMESTAMP '{Q10_DATE_LO} 00:00:00'
@@ -355,11 +362,7 @@ SELECT supp_nation, cust_nation, l_year,
 FROM (
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            CAST(year(l_shipdate) AS INTEGER) AS l_year,
-           SUM({_REVENUE_SQL}) AS rev_dec,
-           COUNT(*) AS n_items
-    FROM lineitem
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
+           {_LOC_AGG_SQL}
     JOIN supplier ON l_suppkey = s_suppkey
     JOIN nation n1 ON s_nationkey = n1.n_nationkey
     JOIN nation n2 ON c_nationkey = n2.n_nationkey
@@ -548,10 +551,7 @@ def query_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.agg(
         F.expr(f"SUM({_REVENUE_SQL}) AS rev_dec"), F.count(F.lit(1)).alias("n_items")
     )
-    return agg.select(
-        round_portable(F.col("rev_dec").cast("double"), 2).alias("revenue"),
-        "n_items",
-    )
+    return _revenue_items(agg)
 
 
 def _q19_bracket_sql() -> str:

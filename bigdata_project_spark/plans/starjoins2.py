@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.functions.scalars import round_portable, round_portable_sql
-from bigdata_project_spark.plans.starjoins import _DEC, _REVENUE_SQL
+from bigdata_project_spark.plans.starjoins import _DEC, _REVENUE_SQL, _revenue_items
 from bigdata_project_spark.sources.readers import load_table
 
 # --------------------------------------------------------------------------
@@ -808,10 +808,7 @@ def query_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("l_extendedprice").cast(_DEC) * disc).alias("rev_dec"),
         F.count(F.lit(1)).alias("n_items"),
     )
-    return agg.select(
-        round_portable(F.col("rev_dec").cast("double"), 2).alias("revenue"),
-        "n_items",
-    )
+    return _revenue_items(agg)
 
 
 ORACLE_FORECAST_REVENUE = f"""

@@ -47,13 +47,12 @@ def run_silver_pipeline(
     spark: SparkSession,
     sf_dir: str,
     prefix: str = "",
-    tables: dict[str, dict] | None = None,
 ) -> dict[str, int]:
     """Rebuild every silver table into the session catalog
     (CREATE OR REPLACE semantics); returns row counts per table."""
     counts: dict[str, int] = {}
     qs = registry.queries()
-    for name, opts in (tables or SILVER_TABLES).items():
+    for name, opts in SILVER_TABLES.items():
         df = qs[name](spark, sf_dir)
         table = f"{prefix}{name}"
         replace_table(df, table, partition_by=opts.get("partition_by"))

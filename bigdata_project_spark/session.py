@@ -30,8 +30,8 @@ equivalent is a single SparkSession with:
   ``SPARK_DIST_CLASSPATH``, so an upgrade gets a new archive rather than
   one the JVM rejects. The first session per key runs with
   ``-XX:ArchiveClassesAtExit`` and its JVM writes the archive
-  (130-180 MB) when it exits, which takes 10-16 s; later sessions map it
-  with ``-XX:SharedArchiveFile``. Only the JVM writes an archive, and
+  (130-180 MB) when it exits, which takes 10-16 s (``stop_spark`` waits
+  for it); later sessions map it with ``-XX:SharedArchiveFile``. Only the JVM writes an archive, and
   only at its final path: it writes the header last, so a header that is
   not yet the dynamic-archive magic is dumped again, whereas a file cut
   short under an intact header would crash the JVM that maps it. JVM
@@ -63,6 +63,7 @@ from types import SimpleNamespace
 from py4j.clientserver import ClientServerConnection
 from py4j.java_gateway import GatewayConnection
 from py4j.protocol import MEMORY_COMMAND_NAME
+from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -192,3 +193,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def stop_spark(spark: SparkSession) -> None:
+    """Stop ``spark`` and wait until its JVM has exited.
+
+    A JVM started with ``-XX:ArchiveClassesAtExit`` writes the CDS archive
+    as it exits (10-20 s); a process that returns without waiting leaves
+    it running, and the next process may start before the archive is
+    complete. Raises ``subprocess.TimeoutExpired`` if the JVM has not
+    exited after 240 s. The process may start a new session afterwards.
+    """
+    spark.stop()
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    if proc is None:  # no gateway, or one this process did not launch
+        return
+    gateway.shutdown()
+    proc.stdin.close()  # the gateway JVM exits when its stdin closes
+    SparkContext._gateway = SparkContext._jvm = None
+    proc.wait(timeout=240)

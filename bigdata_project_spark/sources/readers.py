@@ -176,7 +176,7 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
     return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
-def _all_string_schema(spark: SparkSession, path: str | list[str], sep: str, header: bool) -> T.StructType:
+def _all_string_schema(spark: SparkSession, path: str | list[str], sep: str) -> T.StructType:
     """Derive column names from the header of the first file, typed string.
 
     Mirrors the reference's schema-on-first-file-then-frozen behavior
@@ -189,15 +189,13 @@ def _all_string_schema(spark: SparkSession, path: str | list[str], sep: str, hea
     row = header_df.first()
     if row is None:
         raise ValueError(f"empty CSV at {first}")
-    names = list(row) if header else [f"column{i}" for i in range(len(row))]
-    return T.StructType([T.StructField(str(n), T.StringType(), True) for n in names])
+    return T.StructType([T.StructField(str(n), T.StringType(), True) for n in row])
 
 
 def read_csv_all_string(
     spark: SparkSession,
     path: str | list[str],
     sep: str = ",",
-    header: bool = True,
     with_filename: bool = True,
 ) -> DataFrame:
     """S1/S4: multi-file CSV scan, every column string, optional filename col.
@@ -207,44 +205,34 @@ def read_csv_all_string(
     docs/dag_bronze_mitma.py:134-139). Compressed ``.csv.gz`` is handled
     transparently by Spark's codec detection.
     """
-    schema = _all_string_schema(spark, path, sep, header)
-    df = (
-        spark.read.schema(schema)
-        .option("sep", sep)
-        .option("header", str(header).lower())
-        .csv(path)
-    )
+    schema = _all_string_schema(spark, path, sep)
+    df = spark.read.schema(schema).option("sep", sep).option("header", "true").csv(path)
     if with_filename:
         df = df.withColumn("filename", F.input_file_name())
     return df
 
 
-def read_json_array(spark: SparkSession, path: str | list[str], schema: T.StructType | None = None) -> DataFrame:
+def read_json_array(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """S2: JSON scan with nested struct/array inference.
 
     DuckDB ``read_json(url, format='array')`` (bronze/utils.py:392-399).
     Spark's json reader is line-oriented by default; ``multiLine`` handles a
-    top-level JSON array. Pass ``schema`` on re-loads to skip re-inference
-    (the reference freezes schemas after the first file too).
+    top-level JSON array.
     """
-    reader = spark.read.option("multiLine", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+    return spark.read.option("multiLine", "true").json(path)
 
 
-def with_audit_columns(df: DataFrame, source: str | None = None) -> DataFrame:
+def with_audit_columns(df: DataFrame) -> DataFrame:
     """Audit columns appended to every bronze row (bronze/utils.py:321-324):
-    ``loaded_at`` (current timestamp) and ``source_file``/``source_url``."""
+    ``loaded_at`` (current timestamp) and, unless the scan already carries
+    ``filename``, ``source_file``."""
     df = df.withColumn("loaded_at", F.current_timestamp())
-    if source is not None:
-        df = df.withColumn("source_file", F.lit(source))
-    elif "filename" not in df.columns:
+    if "filename" not in df.columns:
         df = df.withColumn("source_file", F.input_file_name())
     return df
 
 
-def stage_urls(urls: list[str], dest_dir: str, max_workers: int = 8) -> list[str]:
+def stage_urls(urls: list[str], dest_dir: str) -> list[str]:
     """E1/S1/S2 closing helper: URL list → local staged files → engine scan.
 
     The reference streams ``.csv.gz``/JSON straight from HTTPS into
@@ -258,7 +246,7 @@ def stage_urls(urls: list[str], dest_dir: str, max_workers: int = 8) -> list[str
 
     Driver-side by design: the transfer is per-file and network-bound;
     executors take over at the scan. Downloads run in a bounded thread
-    pool, mirroring the reference's 15-slot Airflow ingestion pool
+    pool of 8, mirroring the reference's 15-slot Airflow ingestion pool
     (airflow_settings.yaml:9-12). ``file://`` URLs work too (urllib), so
     the path is testable offline. Returns staged paths in input order
     (the reference sorts its URL list driver-side as well, §2.6 O3).
@@ -279,7 +267,7 @@ def stage_urls(urls: list[str], dest_dir: str, max_workers: int = 8) -> list[str
                 out.write(chunk)
         return dest
 
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    with ThreadPoolExecutor(max_workers=8) as pool:
         return list(pool.map(fetch, enumerate(urls)))
 
 

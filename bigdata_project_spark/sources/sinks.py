@@ -38,18 +38,11 @@ def replace_table(df: DataFrame, table: str, partition_by: list[str] | None = No
     writer.saveAsTable(table)
 
 
-def append_table(
-    df: DataFrame, table: str, partition_by: list[str] | None = None
-) -> None:
-    """S8: ``INSERT INTO t SELECT ...`` (docs/dag_bronze_mitma.py:108-140).
-
-    ``partition_by`` must restate the target's partitioning when the
-    table is partitioned — saveAsTable(append) validates it against the
-    catalog and refuses a mismatch."""
-    writer = df.write.mode("append").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(table)
+def append_table(df: DataFrame, table: str) -> None:
+    """S8: ``INSERT INTO t SELECT ...`` (docs/dag_bronze_mitma.py:108-140),
+    into an unpartitioned table: saveAsTable(append) validates the
+    partitioning against the catalog and refuses a mismatch."""
+    df.write.mode("append").format("parquet").saveAsTable(table)
 
 
 def drop_table(spark: SparkSession, table: str) -> None:

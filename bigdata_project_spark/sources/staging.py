@@ -193,7 +193,6 @@ def mitma_zoning_urls(
 
 def fetch_feed(
     url: str = "https://movilidad-opendata.mitma.es/RSS.xml",
-    user_agent: str = "bigdata-project-spark-staging",
     timeout: float = 30.0,
 ) -> str:
     """Fetch the RSS feed text (the reference sends a User-Agent to
@@ -205,6 +204,6 @@ def fetch_feed(
     (r13 advice item 1)."""
     import urllib.request
 
-    req = urllib.request.Request(url, headers={"User-Agent": user_agent})
+    req = urllib.request.Request(url, headers={"User-Agent": "bigdata-project-spark-staging"})
     with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
         return resp.read().decode("utf-8", "ignore")

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from bigdata_project_spark.plans.event_windows import (
     ORACLE_INTERVAL_JOIN_CLICKS,
+    ORACLE_SESSIONIZE,
     ORACLE_TUMBLING_1H,
     hourly_rows,
     hourly_type_totals,
@@ -132,9 +133,9 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.timestamp_micros(us))
 
 
-def join_clicks_purchases(events: DataFrame, horizon: str = "30 minutes") -> DataFrame:
+def join_clicks_purchases(events: DataFrame) -> DataFrame:
     """Watermarked stream-stream interval join: each purchase matched to
-    the same user's clicks within the preceding ``horizon``.
+    the same user's clicks within the preceding 30 minutes (the horizon).
 
     The time-bound condition + watermarks on BOTH sides is what makes
     this run with bounded state at scale: Spark keeps only clicks newer
@@ -164,7 +165,7 @@ def join_clicks_purchases(events: DataFrame, horizon: str = "30 minutes") -> Dat
         clicks,
         (F.col("click_user") == F.col("user_id"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")),
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 minutes")),
         "inner",
     ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
 
@@ -317,28 +318,7 @@ def query_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_SESSIONIZE = """
-WITH flagged AS (
-    SELECT user_id, ts, event_id, value,
-           CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                  OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 30 * 60 * 1000000
-                THEN 1 ELSE 0 END AS new_session
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-),
-with_id AS (
-    SELECT *, SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-    FROM flagged
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
-FROM with_id
-GROUP BY user_id, session_seq
-"""
+ORACLE_STREAM_SESSIONIZE = f"SELECT * EXCLUDE (session_seq) FROM ({ORACLE_SESSIONIZE})"
 
 
 def query_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

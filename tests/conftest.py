@@ -1,33 +1,21 @@
 from __future__ import annotations
 
-import contextlib
 import os
-import subprocess
 import uuid
 
 import pytest
-from pyspark import SparkContext
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from bigdata_project_spark.session import get_spark
+    from bigdata_project_spark.session import get_spark, stop_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("tests")
     yield spark
-    # Wait for the JVM to exit, so it does not outlive the run: on a cold
-    # cache it writes the driver's CDS archive as it exits (10-20 s).
-    gateway = SparkContext._gateway
-    spark.stop()
-    proc = getattr(gateway, "proc", None)
-    if proc is not None:
-        gateway.shutdown()
-        proc.stdin.close()  # the gateway JVM exits when its stdin closes
-        with contextlib.suppress(subprocess.TimeoutExpired):
-            proc.wait(timeout=120)
+    stop_spark(spark)  # the JVM may still be writing its CDS archive
 
 
 @pytest.fixture()

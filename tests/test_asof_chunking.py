@@ -12,7 +12,7 @@ def _ts(m):
 
 
 def test_asof_forward_picks_earliest_and_min_tiebreak(spark):
-    from bigdata_project_spark.plans.asof_range import asof_join_forward
+    from bigdata_project_spark.plans.asof_range import asof_join
 
     left = spark.createDataFrame(
         [(1, _ts(10), "a"), (1, _ts(30), "b"), (2, _ts(5), "c")],
@@ -29,8 +29,8 @@ def test_asof_forward_picks_earliest_and_min_tiebreak(spark):
         ],
         "user_id long, ts timestamp, value double, event_id long",
     )
-    out = asof_join_forward(
-        left, right, key="user_id", ts="ts", right_cols=["value"], tiebreak="event_id"
+    out = asof_join(
+        left, right, "user_id", "ts", ["value"], "forward", tiebreak="event_id"
     )
     got = {r["tag"]: (r["right_value"], r["right_ts"]) for r in out.collect()}
     assert got["a"] == (7.0, _ts(20))  # earliest ts, min event_id among ties
@@ -74,7 +74,7 @@ def test_asof_null_payload_fields_come_from_matched_row(spark):
     must NOT have that field back/forward-filled from a DIFFERENT right
     row — all right-side fields (ts + payloads) come from the single
     matched row, like DuckDB ASOF."""
-    from bigdata_project_spark.plans.asof_range import asof_join, asof_join_forward
+    from bigdata_project_spark.plans.asof_range import asof_join
 
     ts = lambda s: datetime.datetime.fromisoformat(s)  # noqa: E731
     right = spark.createDataFrame(
@@ -90,9 +90,7 @@ def test_asof_null_payload_fields_come_from_matched_row(spark):
         [(1, ts("2024-01-01 10:30:00"), 7)],
         "user_id int, ts timestamp, ev int",
     )
-    back = asof_join(
-        left, right, key="user_id", ts="ts", right_cols=["value", "tag"]
-    ).collect()
+    back = asof_join(left, right, "user_id", "ts", ["value", "tag"], "backward").collect()
     assert len(back) == 1
     r = back[0]
     # matched row is 10:20 (most recent <= 10:30): tag 'b', value NULL —
@@ -105,9 +103,7 @@ def test_asof_null_payload_fields_come_from_matched_row(spark):
         [(1, ts("2024-01-01 10:10:00"), 7)],
         "user_id int, ts timestamp, ev int",
     )
-    fwd = asof_join_forward(
-        fwd_left, right, key="user_id", ts="ts", right_cols=["value", "tag"]
-    ).collect()
+    fwd = asof_join(fwd_left, right, "user_id", "ts", ["value", "tag"], "forward").collect()
     assert len(fwd) == 1
     r = fwd[0]
     # matched row is 10:20 (earliest >= 10:10): value NULL, not 300.0

@@ -23,20 +23,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _SCRIPT = """
 import json
 
-from pyspark import SparkContext
-
-from bigdata_project_spark.session import get_spark
+from bigdata_project_spark.session import get_spark, stop_spark
 
 spark = get_spark("session_cds")
 bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
 print("RESULT " + json.dumps({
     "args": list(bean.getInputArguments()), "count": spark.range(10).count()
 }), flush=True)
-spark.stop()
-gateway = SparkContext._gateway
-gateway.shutdown()
-gateway.proc.stdin.close()  # the gateway JVM exits when its stdin closes
-gateway.proc.wait(timeout=240)
+stop_spark(spark)
 """
 
 
@@ -52,12 +46,19 @@ def cache(tmp_path, monkeypatch):
         p.unlink()
 
 
-def _run_driver(**env) -> list[str]:
-    """Start a driver in a child process; return its JVM input arguments."""
-    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g", **env}
+def _child_env() -> dict[str, str]:
+    """This process's environment, with a 1g driver heap and the checkout
+    importable."""
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
     env["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, env.get("PYTHONPATH")) if p)
+    return env
+
+
+def _run_driver() -> list[str]:
+    """Start a driver in a child process; return its JVM input arguments."""
     out = subprocess.run(
-        [sys.executable, "-c", _SCRIPT], env=env, capture_output=True, text=True, timeout=600
+        [sys.executable, "-c", _SCRIPT], env=_child_env(), capture_output=True, text=True,
+        timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     logged = [line for line in out.stdout.splitlines() if "[cds" in line or "[warning]" in line]
@@ -120,3 +121,22 @@ def test_non_template_conf_file_means_no_cds(cache, monkeypatch):
     assert "SPARK_CONF_DIR" not in os.environ
     args = _run_driver()
     assert not [a for a in args if "Archive" in a or a.startswith("-Xlog")]
+
+
+def test_oracle_check_returns_after_its_jvm_wrote_the_archive(cache, sf_dir):
+    """An entry point ends its session through ``stop_spark``, so a cold
+    run's archive is complete by the time the process returns. The output
+    goes to a file: ``capture_output`` would wait for the JVM, which
+    inherits the pipes."""
+    archive = session.cds_archive()
+    log = cache / "oracle_check.log"
+    with open(log, "w") as f:
+        code = subprocess.call(
+            [sys.executable, "-m", "bigdata_project_spark.oracle_check", sf_dir,
+             "agg_order_priority"],
+            env=_child_env(), stdout=f, stderr=subprocess.STDOUT, timeout=600,
+        )
+    text = log.read_text()
+    assert code == 0, text[-3000:]
+    assert "agg_order_priority" in text and " ok" in text
+    assert os.path.exists(archive) and _has_magic(archive)

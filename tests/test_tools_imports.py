@@ -104,13 +104,49 @@ def test_cited_tools_files_exist():
     assert not missing, f"cited tools/ files that do not exist: {missing}"
 
 
+def _load(script: str):
+    """The script at ``REPO/script``, imported as a module."""
+    spec = importlib.util.spec_from_file_location(pathlib.Path(script).stem, REPO / script)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
 @pytest.mark.parametrize("script", ["bench.py", "tools/duckdb_bench.py"])
 def test_bench_runs_fails_loudly(script, monkeypatch):
     """A malformed ``BENCH_RUNS`` raises before any timing and names the
     variable."""
-    spec = importlib.util.spec_from_file_location("bench_script", REPO / script)
-    module = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(module)
+    module = _load(script)
     monkeypatch.setenv("BENCH_RUNS", "abc")
     with pytest.raises(ValueError, match="BENCH_RUNS"):
         module.main()
+
+
+def test_code_lines_counts_sql_string_lines(tmp_path):
+    """A multi-line string is one code line plus its non-blank later lines
+    as string lines; docstrings and comments count as neither."""
+    src = tmp_path / "m.py"
+    src.write_text(
+        '"""Doc\n\nstring."""\n'
+        "# comment\n"
+        'Q = """\n'
+        "SELECT 1\n"
+        "\n"
+        "FROM t\n"
+        '"""\n'
+        "x = 1\n"
+    )
+    tokens, code, strings, physical = _load("tools/code_lines.py").count(src)
+    assert (code, strings, physical) == (2, 3, 10)
+
+
+def test_oracle_hash_ignores_row_and_column_order_not_dtype():
+    import duckdb
+
+    result_hash = _load("tools/oracle_hashes.py").result_hash
+    con = duckdb.connect()
+    rows = "(VALUES (1, 'x'), (2, 'y')) t(a, b)"
+    base = result_hash(con, f"SELECT * FROM {rows}")
+    assert result_hash(con, f"SELECT b, a FROM {rows} ORDER BY a DESC") == base
+    assert result_hash(con, f"SELECT CAST(a AS DOUBLE) AS a, b FROM {rows}") != base
+    con.close()

@@ -50,7 +50,7 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
 
     from bigdata_project_spark import registry
-    from bigdata_project_spark.session import get_spark
+    from bigdata_project_spark.session import get_spark, stop_spark
 
     spark = get_spark("dump_plans")
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
@@ -73,6 +73,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(text)
         print(f"wrote {path} ({len(text)} bytes)")
+    stop_spark(spark)
 
 
 if __name__ == "__main__":

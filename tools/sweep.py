@@ -140,7 +140,7 @@ def main() -> None:
     conf = dict(kv.split("=", 1) for kv in args.conf)
 
     from bigdata_project_spark import registry
-    from bigdata_project_spark.session import get_spark
+    from bigdata_project_spark.session import get_spark, stop_spark
 
     queries = registry.queries()
     names = args.names or list(queries)
@@ -172,7 +172,7 @@ def main() -> None:
                 print(f"{name} {rec.get('median_s', rec.get('error'))}", flush=True)
     finally:
         counters.close()
-        spark.stop()
+        stop_spark(spark)
 
 
 if __name__ == "__main__":
