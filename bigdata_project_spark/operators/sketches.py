@@ -149,7 +149,9 @@ def query_sketch_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from bigdata_project_spark.functions.text import word_hash32
 
-    ev = load_table(spark, sf_dir, "events").select(
+    # NULL users are not counted, as in COUNT(DISTINCT user_id): md5(NULL)
+    # would count a phantom NULL register in m_present
+    ev = load_table(spark, sf_dir, "events").where("user_id IS NOT NULL").select(
         F.to_date("ts").alias("day"), "user_id"
     )
     regs = (
@@ -216,11 +218,11 @@ def hll_finalize(regs: DataFrame, exact: DataFrame, key: str) -> DataFrame:
 
 
 def _hll_oracle_sql(key: str, source: str) -> str:
-    """The DuckDB HLL estimate per ``key`` over ``source``'s user_ids,
-    as CTEs and a final select."""
+    """The DuckDB HLL estimate per ``key`` over ``source``'s non-NULL
+    user_ids, as CTEs and a final select."""
     h32 = WORD_HASH32_SQL.format(w="CAST(user_id AS VARCHAR)")
     return f"""h AS (
-    SELECT {key}, {h32} AS h FROM {source}
+    SELECT {key}, {h32} AS h FROM {source} WHERE user_id IS NOT NULL
 ),
 rho AS (
     SELECT {key}, h % {HLL_M} AS register,

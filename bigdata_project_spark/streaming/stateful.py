@@ -162,7 +162,8 @@ def _emit_hll_increments(m: int):
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            for uid in pd.unique(pdf["user_id"]):
+            # NULL users are not counted, as in COUNT(DISTINCT user_id)
+            for uid in pd.unique(pdf["user_id"].dropna()):
                 r, rho = _hll_rho32(int(uid), m)
                 if rho > new[r]:
                     new[r] = rho

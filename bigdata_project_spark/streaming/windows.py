@@ -17,9 +17,14 @@ exactly-once sinks.
 
 from __future__ import annotations
 
+import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from bigdata_project_spark.plans.event_windows import (
     ORACLE_INTERVAL_JOIN_CLICKS,
@@ -42,21 +47,60 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
-def ephemeral_checkpoint_dir(prefix: str = "stream_ckpt_") -> str:
+#: Hadoop ``FileSystem`` checkpoint manager. Spark's default goes through
+#: ``FileContext``, whose local rename resolves each path's link status
+#: by running a ``readlink`` process.
+FS_CHECKPOINT_MANAGER = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def ephemeral_checkpoint_dir() -> str:
     """Checkpoint dir for a DRAINED verification query — one that runs to
-    completion in-process and is never resumed. Durability buys nothing
-    for these (the dir is deleted with the query), so prefer tmpfs
-    (``/dev/shm``) over disk: the micro-batch commit protocol is many
-    small file creates+renames per batch, and tmpfs shaves ~0.2-0.3 s
-    per drained stream. Production streams that must survive a restart
-    pass a real, durable ``checkpointLocation`` instead — this helper is
-    only for run-to-completion checks (the kill-and-resume test uses a
+    completion in-process and is never resumed, so the dir is deleted
+    with the query. It prefers tmpfs (``/dev/shm``) over disk: on an
+    interleaved A/B (10 pairs, 4 cores, sf0.01) ``stream_tumbling`` took
+    0.88 s against 0.97 s from the default temp dir on ext4, lower in 7
+    of 10 pairs, a gap inside the runs' own spread. Production streams
+    that must survive a restart pass a real, durable
+    ``checkpointLocation`` instead (the kill-and-resume test uses a
     durable dir on purpose)."""
     import os
     import tempfile
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    return tempfile.mkdtemp(prefix="stream_ckpt_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
+
+
+@contextmanager
+def ephemeral_query(writer: DataStreamWriter) -> Iterator[StreamingQuery]:
+    """Start ``writer`` on a fresh :func:`ephemeral_checkpoint_dir` and
+    yield the query; on exit, always stop it and remove the dir.
+
+    The query starts on :data:`FS_CHECKPOINT_MANAGER`. On a local file
+    system ``rename(2)`` is already atomic, so it gives the same
+    guarantee as Spark's ``FileContext`` default there, without the
+    ``readlink`` processes of every offset, commit and state-store
+    rename (112 per warm ``stream_tumbling`` at sf0.01, 0 here). The
+    conf is set on the session only around ``start()``: a query clones
+    its session at start, so every micro-batch keeps the manager, and
+    the session, and any durable checkpoint started later on it, keep
+    their own."""
+    conf, ckpt = writer._spark.conf, ephemeral_checkpoint_dir()
+    try:
+        before = conf.get(CHECKPOINT_MANAGER_CONF, None)
+        conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)
+        try:
+            q = writer.option("checkpointLocation", ckpt).start()
+        finally:
+            if before is None:
+                conf.unset(CHECKPOINT_MANAGER_CONF)
+            else:
+                conf.set(CHECKPOINT_MANAGER_CONF, before)
+        try:
+            yield q
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def drain(stream_df: DataFrame, mode: str) -> DataFrame:
@@ -80,6 +124,12 @@ def drain(stream_df: DataFrame, mode: str) -> DataFrame:
       15.37 s, ``stream_transitions`` 6.87 s, ``stream_hll_users``
       6.09 s.
 
+    Those figures were taken on Spark's ``FileContext`` checkpoint
+    manager, where most of a state commit was Hadoop starting
+    ``readlink`` processes for each rename of a state file (one file per
+    partition per commit); :func:`ephemeral_query` now starts every
+    drain on the FileSystem manager, which renames without them.
+
     On a large host the session's count grows with the cores; the old
     note that 32 partitions cost 4-5× what 8 did on a 32-core host is
     unverified here. An A/B passes ``--conf
@@ -90,26 +140,13 @@ def drain(stream_df: DataFrame, mode: str) -> DataFrame:
     and the sink's temp view is dropped once its rows are materialized.
     Every drained query goes through here, so this is the one place to
     read per-batch ``recentProgress``."""
-    import shutil
     import uuid
 
     spark = stream_df.sparkSession
     name = f"drain_{uuid.uuid4().hex[:8]}"
-    ckpt = ephemeral_checkpoint_dir()
-    try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    writer = stream_df.writeStream.outputMode(mode).format("memory").queryName(name)
+    with ephemeral_query(writer) as q:
+        q.processAllAvailable()
     rows = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return rows
@@ -170,14 +207,15 @@ def join_clicks_purchases(events: DataFrame) -> DataFrame:
     ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
 
 
-def upsert_sink(stream_df: DataFrame, table: str, keys: list[str], checkpoint: str):
+def upsert_sink(stream_df: DataFrame, table: str, keys: list[str]) -> DataStreamWriter:
     """Streaming upsert: foreachBatch MERGE into a catalog table — the
     streaming form of the reference's idempotent bronze MERGE re-ingest
     (bronze/utils.py:348-366). Each micro-batch is merged keyed, so
     replayed batches (at-least-once sources, restarts from the
     checkpoint) converge to exactly-once table contents.
 
-    Returns the started StreamingQuery; caller manages lifecycle."""
+    Returns the unstarted writer: the caller names its checkpoint and
+    manages the query's lifecycle."""
     from bigdata_project_spark.operators.merge import merge_keyed
     from bigdata_project_spark.sources.sinks import replace_table
 
@@ -191,12 +229,7 @@ def upsert_sink(stream_df: DataFrame, table: str, keys: list[str], checkpoint: s
             merged = batch_df.dropDuplicates(keys)
         replace_table(merged, table)
 
-    return (
-        stream_df.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(merge_batch)
-        .start()
-    )
+    return stream_df.writeStream.outputMode("update").foreachBatch(merge_batch)
 
 
 def query_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,13 +246,11 @@ def query_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ingest (bronze/utils.py:348-366). ``ts`` stays out of the output:
     replay-convergence is about row identity, pinned by the unique key +
     value columns."""
-    import shutil
     import tempfile
 
     from bigdata_project_spark.sources.sinks import drop_table_and_orphan_location
 
     src = tempfile.mkdtemp(prefix="stream_upsert_src_")
-    ckpt = ephemeral_checkpoint_dir("stream_upsert_ckpt_")
     table = "stream_upsert_sink_tbl"
     try:
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/batch0.parquet")
@@ -232,17 +263,13 @@ def query_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "event_type", "value")
         )
         drop_table_and_orphan_location(spark, table)
-        q = upsert_sink(stream, table, ["event_id"], ckpt)
-        try:
+        with ephemeral_query(upsert_sink(stream, table, ["event_id"])) as q:
             q.processAllAvailable()
-        finally:
-            q.stop()
         # materialize before dropping the backing table
         return spark.table(table).localCheckpoint(eager=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 ORACLE_STREAM_UPSERT = """

@@ -99,3 +99,47 @@ def test_null_recent_order_custkey_matches_oracle(spark, sf_dir, tmp_path):
         assert not problems, "; ".join(problems)
     finally:
         con.close()
+
+
+def test_null_users_are_not_counted_by_the_hll_sketches(spark, sf_dir, tmp_path):
+    """Every 20th event with a NULL ``user_id``: the streaming and batch
+    HLL sketches match their oracles, and equal the result with those
+    rows deleted, as ``COUNT(DISTINCT user_id)`` ignores NULL users."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from bigdata_project_spark.operators import sketches
+    from bigdata_project_spark.oracle_check import canonicalize, duckdb_connection
+    from bigdata_project_spark.sources.readers import TESTDATA_TABLES
+    from bigdata_project_spark.streaming import stateful
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    keep = pa.array([i % 20 != 0 for i in range(events.num_rows)])
+    i = events.schema.get_field_index("user_id")
+    nulled = events.set_column(
+        i, "user_id", pc.if_else(keep, events["user_id"], pa.scalar(None, pa.int64()))
+    )
+    dirs = {}
+    for tag, table in (("nulls", nulled), ("deleted", events.filter(keep))):
+        d = tmp_path / tag
+        d.mkdir()
+        for t in TESTDATA_TABLES:
+            if t != "events":
+                os.symlink(f"{sf_dir}/{t}.parquet", d / f"{t}.parquet")
+        pq.write_table(table, d / "events.parquet")
+        dirs[tag] = str(d)
+
+    queries = {**stateful.QUERIES, **sketches.QUERIES}
+    con = duckdb_connection(dirs["nulls"])
+    try:
+        for name in ("stream_hll_users", "sketch_hll_rollup"):
+            fn, sql = queries[name]
+            problems = compare_one(spark, con, name, fn, sql, dirs["nulls"])
+            assert not problems, f"{name}: " + "; ".join(problems)
+            with_nulls, deleted = (fn(spark, d).toPandas() for d in dirs.values())
+            assert canonicalize(with_nulls).equals(canonicalize(deleted)), name
+    finally:
+        con.close()

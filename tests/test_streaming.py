@@ -117,6 +117,58 @@ def test_plain_int64_nanos_read_alike_by_batch_and_stream(spark, tmp_path):
         assert sorted(tuple(r) for r in got) == want
 
 
+def _checkpoint_manager(q) -> str:
+    return q._jsq.streamingQuery().offsetLog().fileManager().getClass().getSimpleName()
+
+
+@pytest.mark.parametrize(
+    "preset",
+    [
+        None,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    ],
+)
+def test_ephemeral_query_scopes_the_checkpoint_manager_to_its_start(
+    spark, sf_dir, preset
+):
+    """A query started through ``ephemeral_query`` writes its checkpoint
+    through the FileSystem manager, and the session's own setting is
+    what it was before, whether ``start()`` returned or raised (a second
+    query under an active query's name raises at start)."""
+    from bigdata_project_spark.streaming.windows import (
+        CHECKPOINT_MANAGER_CONF,
+        ephemeral_query,
+    )
+
+    def writer():
+        return (
+            read_event_stream(spark, sf_dir)
+            .select("event_id")
+            .writeStream.format("memory")
+            .queryName("scoped_manager")
+        )
+
+    if preset is None:
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
+    else:
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, preset)
+    try:
+        with ephemeral_query(writer()) as q:
+            q.processAllAvailable()
+            assert _checkpoint_manager(q) == "FileSystemBasedCheckpointFileManager"
+            assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) == preset
+            with pytest.raises(Exception, match="already active"):
+                with ephemeral_query(writer()):
+                    pass
+            assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) == preset
+        assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) == preset
+        assert spark.streams.active == []
+    finally:
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
+        spark.catalog.dropTempView("scoped_manager")
+
+
 def test_stream_upsert_sink_exactly_once(spark, sf_dir, tmp_path):
     """Duplicated input stream + keyed foreachBatch MERGE → exactly-once
     table contents."""
@@ -129,9 +181,12 @@ def test_stream_upsert_sink_exactly_once(spark, sf_dir, tmp_path):
     # duplicate the source: every event arrives twice
     stream = read_event_stream(spark, sf_dir)
     doubled = stream.unionByName(stream)
-    q = upsert_sink(doubled, table, keys=["event_id"], checkpoint=str(tmp_path / "ckpt"))
+    writer = upsert_sink(doubled, table, keys=["event_id"])
+    q = writer.option("checkpointLocation", str(tmp_path / "ckpt")).start()
     try:
         q.processAllAvailable()
+        # a durable checkpoint keeps Spark's default manager
+        assert _checkpoint_manager(q) == "FileContextBasedCheckpointFileManager"
     finally:
         q.stop()
     try:

@@ -32,6 +32,7 @@ def test_sweep_records_timings_and_spark_counters(sf_dir, tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     header, *lines = [json.loads(line) for line in out.read_text().splitlines()]
     assert header["cores"] >= 1 and header["host.floor_ms"] > 0 and header["runs"] == 2
+    assert "quiet host" in header["host.processes"]
     assert [r["query"] for r in lines] == names
     for rec in lines:
         assert len(rec["samples_s"]) == 2
@@ -41,6 +42,8 @@ def test_sweep_records_timings_and_spark_counters(sf_dir, tmp_path):
         assert rec["plan.nodes"], rec["query"]
         calls = rec["build.py4j_calls"]
         assert isinstance(calls, int) and calls > 0, f"{rec['query']}: build.py4j_calls = {calls}"
+        spawned = rec["host.processes"]
+        assert isinstance(spawned, int) and spawned >= 0, f"{rec['query']}: host.processes = {spawned}"
     assert lines[0]["plan.nodes"].get("FileSourceScanExec", 0) >= 1
     assert lines[1]["stream.batches"] >= 1
     # the count is deterministic: two builds of one query make the same calls

@@ -15,6 +15,10 @@ stream progress. ``plan.nodes`` counts each operator class in the executed
 plan of the traced noop write. ``build.py4j_calls`` counts the py4j commands
 of one more build call with no action (``session.py4j_calls``); a stream's
 builder drains it, so a stream runs once more for this count.
+``host.processes`` is the rise of ``/proc/stat``'s ``processes`` counter
+over that build and one noop write of its frame: every process and thread
+the host started meanwhile, so it belongs to this query only on a quiet
+host.
 
 The first line is a header: cores, inputs, Spark conf, commit and the host
 calibration of ``run.noop_floor_ms`` and ``run.python_loop_ms``. Each line
@@ -97,6 +101,12 @@ def git_commit() -> tuple[str, bool]:
     return git("rev-parse", "--short", "HEAD"), bool(git("status", "--porcelain", "--untracked-files=no"))
 
 
+def processes_started() -> int:
+    """Processes and threads the host has started since boot (all users)."""
+    with open("/proc/stat") as f:
+        return next(int(line.split()[1]) for line in f if line.startswith("processes "))
+
+
 def sweep_one(spark, name: str, fn, sf_dir: str, runs: int, counters: _Counters) -> dict:
     queries, tally = {name: fn}, stats.Tally()
     run.timed_passes(spark, [name], queries, sf_dir, 0, tally, n_min=1)  # warm-up
@@ -105,8 +115,11 @@ def sweep_one(spark, name: str, fn, sf_dir: str, runs: int, counters: _Counters)
         per_op = run.traced_pass(spark, [name], queries, sf_dir, counters, layers.Tracer(), tally)
     if tally.failed:
         return {"query": name, "error": "; ".join(tally.problems[name])}
+    spawned = processes_started()
     with py4j_calls() as calls:
-        fn(spark, sf_dir)
+        df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    spawned = processes_started() - spawned
     rec = per_op[0]
     del rec["op"]
     nodes = Counter()
@@ -114,7 +127,8 @@ def sweep_one(spark, name: str, fn, sf_dir: str, runs: int, counters: _Counters)
         layers._walk(qe.executedPlan(), lambda cls, _node: nodes.update([cls]))
     samples = latencies[name]
     return {"query": name, "median_s": stats.median(samples), "samples_s": samples,
-            **rec, "build.py4j_calls": calls.n, "plan.nodes": dict(sorted(nodes.items()))}
+            **rec, "build.py4j_calls": calls.n, "host.processes": spawned,
+            "plan.nodes": dict(sorted(nodes.items()))}
 
 
 def append_line(out, rec: dict) -> None:
@@ -165,6 +179,8 @@ def main() -> None:
                 "src": os.path.abspath(args.sf), "replicas": args.replicas,
                 "runs": args.runs, "conf": conf,
                 "host.floor_ms": run.noop_floor_ms(spark), "host.py_ms": run.python_loop_ms(),
+                "host.processes": "system-wide processes and threads started over one "
+                                  "untimed build+execute per query; valid only on a quiet host",
             })
             for name in names:
                 rec = sweep_one(spark, name, queries[name], sf_dir, args.runs, counters)
